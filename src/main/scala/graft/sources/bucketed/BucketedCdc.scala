@@ -351,7 +351,7 @@ class CdcPartitionReader(p: CdcInputPartition, baseSchema: StructType, fetchSize
       // positions are irrelevant to a diff — the fetch already folded
       // any merge-on-read state, so the diff sees LOGICAL rows and a
       // DV commit nets to exactly its deletes/updates
-      try rows.map(pr => toDeclared(pr._1)).toIndexedSeq
+      try rows.map(toDeclared).toIndexedSeq
       finally ConnectionPool.release(conn)
     }
 

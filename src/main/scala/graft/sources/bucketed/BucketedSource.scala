@@ -643,21 +643,24 @@ object TopNSpec {
 
   /** Row ordering matching the requested sort (ascending = "first"). */
   def ordering(spec: TopNSpec, schema: StructType): Ordering[Row] = {
-    val idx = spec.keys.map(k => (schema.fieldIndex(k.col), k.desc, k.nullsFirst)).toArray
+    val cols = spec.keys.map(k => schema.fieldIndex(k.col)).toArray
+    val desc = spec.keys.map(_.desc).toArray
+    val nullsFirst = spec.keys.map(_.nullsFirst).toArray
+    val ords = spec.keys.map(k => FilterEval.columnOrdering(schema(k.col).dataType)).toArray
     new Ordering[Row] {
       def compare(a: Row, b: Row): Int = {
         var i = 0
-        while (i < idx.length) {
-          val (j, desc, nullsFirst) = idx(i)
+        while (i < cols.length) {
+          val j = cols(i)
           val an = a.isNullAt(j)
           val bn = b.isNullAt(j)
           val c =
             if (an && bn) 0
-            else if (an) { if (nullsFirst) -1 else 1 }
-            else if (bn) { if (nullsFirst) 1 else -1 }
+            else if (an) { if (nullsFirst(i)) -1 else 1 }
+            else if (bn) { if (nullsFirst(i)) 1 else -1 }
             else {
-              val raw = FilterEval.cmp(a.get(j), b.get(j))
-              if (desc) -raw else raw
+              val raw = ords(i).compare(a.get(j), b.get(j))
+              if (desc(i)) -raw else raw
             }
           if (c != 0) return c
           i += 1
@@ -1246,86 +1249,22 @@ class BucketedAggPartitionReader(p: BucketInputPartition, spec: AggSpec,
       }
     }
     val range = ClusterSlice.from(filters, BucketStore.lexClusterColsOf(table.clusterCol))
-    val (c, paged) =
+    val (c, rows) =
       if (p.prunedEmpty) // planner proved no row matches: emit the
-        (null, Iterator.empty[(Row, Int)]) // empty aggregate, read nothing
+        (null, RowCursor.over(Iterator.empty)) // empty aggregate, read nothing
       else BucketReaderSupport.openWithFailover(p, fetchSize, range, blockFilters = filters)
     conn = c
-    val rows = paged.map(_._1) // a pushed aggregate never needs row ids
-    val filtered = rows.filter(FilterEval.compile(fullSchema, filters))
-    aggregateRows(filtered, fullSchema)
+    aggregateRows(rows.filter(FilterEval.compile(fullSchema, filters)), fullSchema)
   }
 
   /** Fold `rows` (already filtered, at `schema` arity) into the pushed
     * partials — shared by the connection path (full schema) and the
     * cold projected path (aggregate input columns only).
     */
-  private def aggregateRows(rows: Iterator[Row],
-      schema: StructType): Iterator[Row] = {
-    val gIdx = spec.groupCols.map(schema.fieldIndex).toArray
-    // group key -> one accumulator slot per agg (count: Long; min/max: Any)
-    val acc = new scala.collection.mutable.LinkedHashMap[Seq[Any], Array[Any]]
-    val init: () => Array[Any] = () => spec.aggs.map {
-      case PCountStar | PCount(_) => 0L: Any
-      case PMin(_) | PMax(_) | PSum(_) => null: Any
-    }.toArray
-    // partial-sum accumulation type per agg (true = Double, else Long)
-    val sumIsFloating: Array[Boolean] = spec.aggs.map {
-      case PSum(c) => AggSpec.sumResultType(schema(c).dataType) ==
-        org.apache.spark.sql.types.DoubleType
-      case _ => false
-    }.toArray
-    if (spec.groupCols.isEmpty) acc(Nil) = init()
-    // column index per aggregate, resolved ONCE — not a per-row,
-    // per-agg schema hash lookup in the tightest loop of the pushed
-    // path (−1 = COUNT(*), no column)
-    val aggCol: Array[Int] = spec.aggs.map {
-      case PCountStar => -1
-      case PCount(c) => schema.fieldIndex(c)
-      case PMin(c) => schema.fieldIndex(c)
-      case PMax(c) => schema.fieldIndex(c)
-      case PSum(c) => schema.fieldIndex(c)
-    }.toArray
-    val aggArr = spec.aggs.toArray
-    rows.foreach { r =>
-      val key = gIdx.toIndexedSeq.map(r.get)
-      val slots = acc.getOrElseUpdate(key, init())
-      var i = 0
-      while (i < aggArr.length) {
-        val j = aggCol(i)
-        aggArr(i) match {
-          case PCountStar => slots(i) = slots(i).asInstanceOf[Long] + 1L
-          case PCount(_) =>
-            if (!r.isNullAt(j)) slots(i) = slots(i).asInstanceOf[Long] + 1L
-          case PMin(_) =>
-            if (!r.isNullAt(j)) {
-              val v = r.get(j)
-              if (slots(i) == null || FilterEval.cmp(v, slots(i)) < 0) slots(i) = v
-            }
-          case PMax(_) =>
-            if (!r.isNullAt(j)) {
-              val v = r.get(j)
-              if (slots(i) == null || FilterEval.cmp(v, slots(i)) > 0) slots(i) = v
-            }
-          case PSum(_) =>
-            if (!r.isNullAt(j)) {
-              val n = r.get(j).asInstanceOf[Number]
-              // SUM over zero non-null rows stays NULL (Spark's sum
-              // semantics); integral adds wrap like Spark's non-ANSI sum
-              slots(i) =
-                if (sumIsFloating(i)) {
-                  val d = n.doubleValue()
-                  if (slots(i) == null) d else slots(i).asInstanceOf[Double] + d
-                } else {
-                  val l = n.longValue()
-                  if (slots(i) == null) l else slots(i).asInstanceOf[Long] + l
-                }
-            }
-        }
-        i += 1
-      }
-    }
-    acc.iterator.map { case (key, slots) => Row.fromSeq(key ++ slots.toIndexedSeq) }
+  private def aggregateRows(rows: Iterator[Row], schema: StructType): Iterator[Row] = {
+    val fold = new PartialFold(spec, schema)
+    rows.foreach(fold.add)
+    fold.result
   }
 
   private var current: InternalRow = _
@@ -1354,6 +1293,161 @@ object BucketedAggPartitionReader {
     * result depends on any of them).
     */
   val statsServedCount = new java.util.concurrent.atomic.AtomicLong()
+}
+
+/** The pushed partial aggregate of one bucket, compiled once per scan:
+  * one typed updater per aggregate, resolved before the first row (no
+  * per-row match on the aggregate kind), and groups keyed the way
+  * Spark groups them ([[PartialFold.groupKey]]), so a bucket emits
+  * exactly one partial per group.
+  */
+private[bucketed] final class PartialFold(spec: AggSpec, schema: StructType) {
+  import AggSpec._
+  import org.apache.spark.sql.types.DoubleType
+
+  private val aggs = spec.aggs.toArray
+  private val n = aggs.length
+
+  /** One group's state: COUNT and integral SUM in `longs`, floating SUM
+    * in `doubles`, MIN/MAX in `values`; `summed(i)` marks a SUM that met
+    * a non-null value (a SUM over none is NULL). `key` holds the group
+    * columns' first-seen values, the ones emitted.
+    */
+  private final class Acc(val key: Array[Any]) {
+    val longs = new Array[Long](n)
+    val doubles = new Array[Double](n)
+    val values = new Array[Any](n)
+    val summed = new Array[Boolean](n)
+  }
+
+  private trait Update { def apply(g: Acc, r: Row): Unit }
+
+  private val sumIsDouble: Array[Boolean] = aggs.map {
+    case PSum(c) => AggSpec.sumResultType(schema(c).dataType) == DoubleType
+    case _ => false
+  }
+
+  private def update(a: PushedAgg, i: Int): Update = a match {
+    case PCountStar => (g, _) => g.longs(i) += 1
+    case PCount(c) =>
+      val j = schema.fieldIndex(c)
+      (g, r) => if (!r.isNullAt(j)) g.longs(i) += 1
+    case PMin(c) => extreme(c, i, -1)
+    case PMax(c) => extreme(c, i, 1)
+    // SUM over zero non-null rows stays NULL (Spark's sum semantics);
+    // integral adds wrap like Spark's non-ANSI sum
+    case PSum(c) if sumIsDouble(i) =>
+      val j = schema.fieldIndex(c)
+      (g, r) => {
+        val v = r.get(j)
+        if (v != null) {
+          val d = v.asInstanceOf[Number].doubleValue
+          g.doubles(i) = if (g.summed(i)) g.doubles(i) + d else d
+          g.summed(i) = true
+        }
+      }
+    case PSum(c) =>
+      val j = schema.fieldIndex(c)
+      (g, r) => {
+        val v = r.get(j)
+        if (v != null) {
+          g.longs(i) += v.asInstanceOf[Number].longValue
+          g.summed(i) = true
+        }
+      }
+  }
+
+  /** MIN (`sign` -1) or MAX (`sign` 1) under the column's ordering. */
+  private def extreme(c: String, i: Int, sign: Int): Update = {
+    val j = schema.fieldIndex(c)
+    val ord = FilterEval.columnOrdering(schema(j).dataType)
+    (g, r) => {
+      val v = r.get(j)
+      if (v != null && (g.values(i) == null || ord.compare(v, g.values(i)) * sign > 0)) g.values(i) = v
+    }
+  }
+
+  private val updates: Array[Update] = Array.tabulate(n)(i => update(aggs(i), i))
+
+  private val gIdx = spec.groupCols.map(schema.fieldIndex).toArray
+  private val canon: Array[Any => Any] = gIdx.map(j => PartialFold.groupKey(schema(j).dataType))
+  private val groups = new java.util.LinkedHashMap[Any, Acc]()
+  // no GROUP BY: one group, emitted even for an empty bucket
+  private val global: Acc = if (gIdx.isEmpty) new Acc(Array.empty) else null
+
+  def add(r: Row): Unit = {
+    val g = if (global != null) global else group(r)
+    var i = 0
+    while (i < n) { updates(i)(g, r); i += 1 }
+  }
+
+  private def group(r: Row): Acc = {
+    val key: Any =
+      if (gIdx.length == 1) canon(0)(r.get(gIdx(0)))
+      else java.util.Arrays.asList(Array.tabulate[AnyRef](gIdx.length)(k =>
+        canon(k)(r.get(gIdx(k))).asInstanceOf[AnyRef]): _*) // element-wise Java equality
+    var g = groups.get(key)
+    if (g == null) {
+      g = new Acc(gIdx.map(r.get))
+      groups.put(key, g)
+    }
+    g
+  }
+
+  /** One row per group: the group columns, then one partial per aggregate. */
+  def result: Iterator[Row] = {
+    val gs = if (global != null) Iterator.single(global) else groups.values.iterator.asScala
+    gs.map { g =>
+      val out = new Array[Any](g.key.length + n)
+      Array.copy(g.key, 0, out, 0, g.key.length)
+      var i = 0
+      while (i < n) {
+        out(g.key.length + i) = aggs(i) match {
+          case PCountStar | PCount(_) => g.longs(i)
+          case PMin(_) | PMax(_) => g.values(i)
+          case PSum(_) if !g.summed(i) => null
+          case PSum(_) => if (sumIsDouble(i)) g.doubles(i) else g.longs(i)
+        }
+        i += 1
+      }
+      Row.fromSeq(scala.collection.immutable.ArraySeq.unsafeWrapArray(out))
+    }
+  }
+}
+
+object PartialFold {
+  import org.apache.spark.sql.types._
+
+  private val ZeroD = java.lang.Double.valueOf(0.0)
+  private val NaND = java.lang.Double.valueOf(Double.NaN)
+  private val ZeroF = java.lang.Float.valueOf(0.0f)
+  private val NaNF = java.lang.Float.valueOf(Float.NaN)
+
+  /** A group column's values in the form whose Java equality is Spark's
+    * grouping equality, whatever map holds them: every NaN is one group
+    * and -0.0 groups with 0.0 (`java.lang.Double.equals` splits the
+    * zeros, Scala's `==` splits every NaN), and binary compares by
+    * content (an array compares by reference).
+    */
+  private[bucketed] def groupKey(dt: DataType): Any => Any = dt match {
+    case DoubleType => {
+      case d: java.lang.Double =>
+        val x = d.doubleValue
+        if (x == 0.0) ZeroD else if (x.isNaN) NaND else d
+      case other => other
+    }
+    case FloatType => {
+      case f: java.lang.Float =>
+        val x = f.floatValue
+        if (x == 0.0f) ZeroF else if (x.isNaN) NaNF else f
+      case other => other
+    }
+    case BinaryType => {
+      case b: Array[Byte] => java.nio.ByteBuffer.wrap(b)
+      case other => other
+    }
+    case _ => identity
+  }
 }
 
 /** Conservative bucket pruning from pushed filters.
@@ -1424,15 +1518,15 @@ case class BucketInputPartition(table: String, bucket: Int, hosts: Array[String]
 
 /** Open-time replica failover shared by the row and aggregate readers:
   * dial the split's replica chain (primary first), twice around (one
-  * bounded retry round, C9), return the first live host's paged
-  * iterator plus its borrowed connection (caller releases on close).
+  * bounded retry round, C9), return the first live host's page cursor
+  * plus its borrowed connection (caller releases on close).
   */
 private[bucketed] object BucketReaderSupport {
   def openWithFailover(p: BucketInputPartition, fetchSize: Int,
       range: Option[ClusterSlice] = None,
       reverse: Boolean = false,
-      blockFilters: Array[Filter] = Array.empty): (HostConnection, Iterator[(Row, Int)]) = {
-    var opened: Iterator[(Row, Int)] = null
+      blockFilters: Array[Filter] = Array.empty): (HostConnection, RowCursor) = {
+    var opened: RowCursor = null
     var conn: HostConnection = null
     var lastErr: java.io.IOException = null
     val attempts = (p.hosts ++ p.hosts).iterator // replicas in order, one retry round
@@ -1478,10 +1572,12 @@ class BucketedReaderFactory(required: StructType, filters: Array[Filter], fetchS
     new BucketedPartitionReader(p, required, filters, fetchSize, limit, topN, sample)
   }
 
-  /** Columnar handoff (round 11, measured): only when the session opts
-    * in AND every projected type has a vector filler. See
-    * [[BucketedColumnarPartitionReader]] for why this is opt-in rather
-    * than the default here.
+  /** Columnar handoff (round 11, measured): the DEFAULT
+    * ([[ConnectorOptions]]`.columnar`; `option("columnar", "false")`
+    * turns it off), taken when every projected type has a vector
+    * filler. A projected type without one falls back to the row reader
+    * for the whole scan, never mid-stream. See
+    * [[BucketedColumnarPartitionReader]] for the measurements.
     */
   override def supportColumnarReads(partition: InputPartition): Boolean =
     columnar && required.fields.forall(f =>
@@ -1507,7 +1603,7 @@ class BucketedReaderFactory(required: StructType, filters: Array[Filter], fetchS
   * hand-rolled mid-stream resume.
   */
 /** The shared open→slice→sample→filter→top-n/limit pipeline over one
-  * bucket split, yielding (row, physical position): both the row
+  * bucket split, yielding rows with their physical positions: both the row
   * reader and the columnar reader consume exactly this stream, so the
   * two paths cannot diverge on pushdown semantics.
   */
@@ -1544,7 +1640,10 @@ private[bucketed] final class BucketRowStream(p: BucketInputPartition,
     }
   }
 
-  val it: Iterator[(Row, Int)] = {
+  /** The bucket's kept rows in output order; `it.pos` names each one's
+    * physical position.
+    */
+  val it: RowCursor = {
     // clustered-index slice: provable cluster-key bounds narrow the
     // fetch to the qualifying run of the sorted bucket (pages moved ∝
     // answer); every row is still filter-checked below, so the slice
@@ -1555,33 +1654,35 @@ private[bucketed] final class BucketRowStream(p: BucketInputPartition,
     conn = c
     // pushed TABLESAMPLE evaluates here, before limit/top-N, so both
     // apply to the sampled stream (the plan order they replaced)
-    val keyIdx = fullSchema.fieldIndex(table.keyCol)
-    val sampled = sample match {
-      case Some(s) => rows.filter { case (r, _) =>
-        s.keep(if (r.isNullAt(keyIdx)) null else r.get(keyIdx)) }
-      case None => rows
+    val pred = FilterEval.compile(fullSchema, filters)
+    val keep: Row => Boolean = sample match {
+      case Some(s) =>
+        val keyIdx = fullSchema.fieldIndex(table.keyCol)
+        r => s.keep(r.get(keyIdx)) && pred(r)
+      case None => pred
     }
-    val keep = FilterEval.compile(fullSchema, filters)
-    val filtered = sampled.filter { case (r, _) => keep(r) }
     topN match {
       case Some(spec) if indexOrderedReverse.isDefined =>
-        filtered.take(spec.n)
+        new KeptRows(rows, keep, spec.n)
       case Some(spec) =>
         // bounded heap: one pass, O(n) memory — keep the n first rows
-        // under the requested ordering (max-heap evicts the current
-        // worst keeper). The global Sort+Limit above re-ranks the
+        // under the requested ordering (the max-heap's head is the
+        // current worst keeper, and only a row ranking strictly before
+        // it displaces it). The global Sort+Limit above re-ranks the
         // buckets' n-row survivors.
-        val ord = TopNSpec.ordering(spec, fullSchema).on[(Row, Int)](_._1)
-        val heap = new scala.collection.mutable.PriorityQueue[(Row, Int)]()(ord)
-        filtered.foreach { pr =>
-          heap.enqueue(pr)
-          if (heap.size > spec.n) { heap.dequeue(); () }
+        val rowOrd = TopNSpec.ordering(spec, fullSchema)
+        val heap = new scala.collection.mutable.PriorityQueue[(Row, Int)]()(rowOrd.on(_._1))
+        val kept = new KeptRows(rows, keep, Int.MaxValue)
+        while (kept.hasNext) {
+          val r = kept.next()
+          if (heap.size < spec.n) heap += ((r, kept.pos))
+          else if (rowOrd.lt(r, heap.head._1)) { heap.dequeue(); heap += ((r, kept.pos)) }
         }
-        heap.dequeueAll.reverseIterator
+        RowCursor.over(heap.dequeueAll.reverseIterator)
       case None =>
-        // take() is lazy: page fetches stop once n rows have passed the
-        // pushed filters — a LIMIT 10 never drains the bucket's pages
-        limit.map(filtered.take).getOrElse(filtered)
+        // the limit is lazy: page fetches stop once n rows have passed
+        // the pushed filters
+        new KeptRows(rows, keep, limit.getOrElse(Int.MaxValue))
     }
   }
 
@@ -1596,34 +1697,46 @@ class BucketedPartitionReader(p: BucketInputPartition, required: StructType,
 
   private val stream = new BucketRowStream(p, filters, fetchSize, limit, topN, sample)
 
-  /** Per-output-column getters over (row, physical position): data
-    * columns read the fetched row; the `_bucket`/`_pos` METADATA
-    * columns ([[BucketedTable.MetaBucket]]) synthesize the row id the
-    * delta DML path addresses — requested only by row-level rewrites
-    * (or an explicit SELECT), absent from ordinary scans.
+  /** One converter per output column, from the fetched row and its
+    * physical position straight to the column's Catalyst value: data
+    * columns convert the fetched row's value; the `_bucket`/`_pos`
+    * METADATA columns ([[BucketedTable.MetaBucket]]) synthesize the row
+    * id the delta DML path addresses — requested only by row-level
+    * rewrites (or an explicit SELECT), absent from ordinary scans.
     */
-  private val getters: Array[(Row, Int) => Any] = required.fieldNames.map {
-    case BucketedTable.MetaBucket => (_: Row, _: Int) => p.bucket
-    case BucketedTable.MetaPos => (_: Row, pos: Int) => pos
-    case n =>
-      val i = stream.fullSchema.fieldIndex(n)
-      (r: Row, _: Int) => r.get(i)
-  }
-  private val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
-    .createToCatalystConverter(required)
+  private def column(f: org.apache.spark.sql.types.StructField): BucketedPartitionReader.Cell =
+    f.name match {
+      case BucketedTable.MetaBucket => (_, _) => p.bucket
+      case BucketedTable.MetaPos => (_, pos) => pos
+      case n =>
+        val i = stream.fullSchema.fieldIndex(n)
+        val toCatalyst = org.apache.spark.sql.catalyst.CatalystTypeConverters
+          .createToCatalystConverter(f.dataType)
+        (r, _) => toCatalyst(r.get(i))
+    }
+
+  private val columns = required.fields.map(column)
 
   private var current: InternalRow = _
 
   override def next(): Boolean =
     if (stream.it.hasNext) {
-      val (r, pos) = stream.it.next()
-      val projected = Row.fromSeq(getters.toIndexedSeq.map(g => g(r, pos)))
-      current = toCatalyst(projected).asInstanceOf[InternalRow]
+      val r = stream.it.next()
+      val pos = stream.it.pos
+      val values = new Array[Any](columns.length)
+      var c = 0
+      while (c < columns.length) { values(c) = columns(c)(r, pos); c += 1 }
+      current = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(values)
       true
     } else false
 
   override def get(): InternalRow = current
   override def close(): Unit = stream.close()
+}
+
+object BucketedPartitionReader {
+  /** One output column's value from a fetched row at physical `pos`. */
+  private[bucketed] trait Cell { def apply(r: Row, pos: Int): Any }
 }
 
 /** COLUMNAR read path (round 11, the DEFAULT): the same
@@ -1751,30 +1864,34 @@ class BucketedColumnarPartitionReader(p: BucketInputPartition, required: StructT
   private lazy val batch = new ColumnarBatch(
     vectors.map(_.asInstanceOf[org.apache.spark.sql.vectorized.ColumnVector]))
 
-  /** One filler per output column: (vector, row, physicalPos, slot). */
-  private lazy val fillers: Array[(OnHeapColumnVector, Row, Int, Int) => Unit] =
-    required.fields.map { f =>
-      f.name match {
-        case BucketedTable.MetaBucket =>
-          (v: OnHeapColumnVector, _: Row, _: Int, slot: Int) => v.putInt(slot, p.bucket)
-        case BucketedTable.MetaPos =>
-          (v: OnHeapColumnVector, _: Row, pos: Int, slot: Int) => v.putInt(slot, pos)
-        case n =>
-          val i = stream.fullSchema.fieldIndex(n)
-          val put = BucketedColumnarPartitionReader.filler(f.dataType)
-          (v: OnHeapColumnVector, r: Row, _: Int, slot: Int) =>
-            if (i >= r.size || r.isNullAt(i)) v.putNull(slot) else put(v, slot, r.get(i))
-      }
+  /** One filler per output column, writing a fetched row (at its
+    * physical position) into a vector slot.
+    */
+  private def fill(f: org.apache.spark.sql.types.StructField): BucketedColumnarPartitionReader.Fill =
+    f.name match {
+      case BucketedTable.MetaBucket => (v, _, _, slot) => v.putInt(slot, p.bucket)
+      case BucketedTable.MetaPos => (v, _, pos, slot) => v.putInt(slot, pos)
+      case n =>
+        val i = stream.fullSchema.fieldIndex(n)
+        val put = BucketedColumnarPartitionReader.filler(f.dataType)
+        (v, r, _, slot) => {
+          val x = if (i < r.size) r.get(i) else null
+          if (x == null) v.putNull(slot) else put(v, slot, x)
+        }
     }
+
+  private lazy val fillers = required.fields.map(fill)
 
   override def next(): Boolean = vectorized match {
     case Some(v) => v.nextBatch()
     case None =>
-      if (!stream.it.hasNext) return false
+      val it = stream.it
+      if (!it.hasNext) return false
       var n = 0
       vectors.foreach(_.reset())
-      while (n < batchSize && stream.it.hasNext) {
-        val (r, pos) = stream.it.next()
+      while (n < batchSize && it.hasNext) {
+        val r = it.next()
+        val pos = it.pos
         var c = 0
         while (c < fillers.length) { fillers(c)(vectors(c), r, pos, n); c += 1 }
         n += 1
@@ -2465,6 +2582,13 @@ object BucketedColumnarPartitionReader {
   import org.apache.spark.sql.types._
   import org.apache.spark.sql.catalyst.util.DateTimeUtils
 
+  /** Writes one output column of a fetched row at physical `pos` into
+    * vector slot `slot`.
+    */
+  private[bucketed] trait Fill {
+    def apply(v: OnHeapColumnVector, r: Row, pos: Int, slot: Int): Unit
+  }
+
   /** Types with a direct vector filler — anything else falls back to
     * the row reader at `supportColumnarReads` time (never mid-scan).
     * DecimalType joined in round 18: TPC-H-shaped corpora carry
@@ -2532,21 +2656,38 @@ object BucketedColumnarPartitionReader {
 
 /** Exact evaluation of the pushed-down filter subset over external
   * rows: comparisons on int/long/double/string/timestamp, null checks,
-  * IN, string predicates, AND/OR/NOT. `supports` and `eval3` must stay
-  * in lockstep — a filter is only claimed if it is fully enforced here.
+  * IN, string predicates, AND/OR/NOT. [[compile]] is the one row
+  * evaluator: a filter is claimed (`supports`) only if `compile` has a
+  * case for it, and `compile` throws on any other shape.
   *
-  * Evaluation is TRI-STATE (`Option[Boolean]`, `None` = SQL unknown)
-  * with Kleene connective semantics, because Spark trusts a claimed
-  * filter completely — there is no residual Filter re-check above this
-  * scan (that absence is exactly what the q27 plan audit asserts). A
-  * boolean evaluator here silently broke `NOT` over NULLs:
+  * Evaluation is TRI-STATE (`True`, `False`, `Unknown` = SQL
+  * unknown) with Kleene connective semantics, because Spark trusts a
+  * claimed filter completely — there is no residual Filter re-check
+  * above this scan (that absence is exactly what the q27 plan audit
+  * asserts). A boolean evaluator here silently broke `NOT` over NULLs:
   * `Not(EqualTo(c, v))` on a NULL `c` evaluated `!false = true` and
-  * EMITTED the row, where SQL's unknown must DROP it. Now unknown
+  * EMITTED the row, where SQL's unknown must DROP it. Unknown
   * propagates through NOT (¬unknown = unknown), AND (false dominates),
-  * and OR (true dominates), and only a final `Some(true)` keeps a row.
+  * and OR (true dominates), and only a final `True` keeps a row.
+  *
+  * Each leaf resolves its column index and its comparator once, when
+  * the scan compiles its filters; a row then runs with no name lookup
+  * and no allocation. Comparisons keep [[cmp]]'s answers exactly: a
+  * value of the column's own external class against a literal of that
+  * class takes `cmp`'s same-class case directly ([[columnOrdering]]),
+  * and every other pairing calls `cmp`.
   */
 object FilterEval {
   import org.apache.spark.sql.catalyst.util.DateTimeUtils
+  import org.apache.spark.sql.types._
+
+  // outcomes of a compiled predicate (VectorFilterEval.Pred's encoding)
+  private final val True = 1
+  private final val False = 0
+  private final val Unknown = -1
+
+  /** A compiled three-valued predicate over one external row. */
+  private trait Pred3 { def apply(r: Row): Int }
 
   def supports(schema: StructType, f: Filter): Boolean = f match {
     case EqualTo(c, v) => comparable(schema, c, v)
@@ -2584,78 +2725,158 @@ object FilterEval {
       schema(c).dataType == org.apache.spark.sql.types.StringType
 
   /** True iff the filter definitely holds: SQL WHERE keeps a row only
-    * when the predicate is true, so unknown (None) drops it.
+    * when the predicate is true, so unknown drops it.
     */
   def eval(schema: StructType, f: Filter, row: Row): Boolean =
-    eval3(schema, f, row).contains(true)
+    compile(schema, Array(f))(row)
 
-  /** Pre-compiled conjunction for a per-row loop (round 19): `In`
-    * literal lists convert ONCE into a sorted canonical-key array /
-    * hash set (the external-value flavor of
-    * [[VectorFilterEval.inProbe]]) instead of paying [[cmp]]'s
-    * per-literal dispatch — and, on the Number/Number path, TWO
-    * BigDecimal constructions — per row. Hot/loaded blocks and MoR
-    * delta filtering go through here; semantics are [[eval3]]'s
-    * exactly (same three-valued logic, same [[cmp]] equality:
-    * -0.0 == 0.0, NaN == NaN, scale-insensitive decimals).
+  /** The conjunction of `filters`, compiled once for a per-row loop: a
+    * row passes only when every conjunct is true.
     */
   def compile(schema: StructType, filters: Array[Filter]): Row => Boolean = {
-    if (filters.isEmpty) return _ => true
-    val fs: Array[Row => Option[Boolean]] = filters.map(compile3(schema, _))
-    if (fs.length == 1) { val f0 = fs(0); r => f0(r).contains(true) }
-    else { r =>
-      var i = 0
-      var ok = true
-      while (ok && i < fs.length) { ok = fs(i)(r).contains(true); i += 1 }
-      ok
+    val fs = filters.map(compileOne(schema, _))
+    fs.length match {
+      case 0 => _ => true
+      case 1 => val f0 = fs(0); r => f0(r) == True
+      case n => r => {
+        var i = 0
+        while (i < n && fs(i)(r) == True) i += 1
+        i == n
+      }
     }
   }
 
-  private def compile3(schema: StructType, f: Filter): Row => Option[Boolean] = f match {
-    case In(c, vs) if vs.length > 4 => // tiny lists: dispatch cost ≈ probe cost
-      inProbeExternal(schema, c, vs).getOrElse(r => eval3(schema, f, r))
+  // a comparison operator is the mask of the comparison signs it admits
+  private final val Lt = 1
+  private final val Eq = 2
+  private final val Gt = 4
+
+  private def signBit(c: Int): Int = if (c < 0) Lt else if (c == 0) Eq else Gt
+
+  private def bool(b: Boolean): Int = if (b) True else False
+
+  private def compileOne(schema: StructType, f: Filter): Pred3 = f match {
+    case EqualTo(c, v) => comparison(schema, c, v, Eq, nullSafe = false)
+    // <=> is the one comparison that is never unknown: NULL <=> x is
+    // definitively false (true only if the literal were null, which
+    // Catalyst rewrites to IsNull before pushdown)
+    case EqualNullSafe(c, v) => comparison(schema, c, v, Eq, nullSafe = true)
+    case GreaterThan(c, v) => comparison(schema, c, v, Gt, nullSafe = false)
+    case GreaterThanOrEqual(c, v) => comparison(schema, c, v, Gt | Eq, nullSafe = false)
+    case LessThan(c, v) => comparison(schema, c, v, Lt, nullSafe = false)
+    case LessThanOrEqual(c, v) => comparison(schema, c, v, Lt | Eq, nullSafe = false)
+    case IsNull(c) =>
+      val i = schema.fieldIndex(c)
+      r => bool(r.isNullAt(i))
+    case IsNotNull(c) =>
+      val i = schema.fieldIndex(c)
+      r => bool(!r.isNullAt(i))
+    case In(c, vs) => in(schema, c, vs)
+    case StringStartsWith(c, v) => string(schema, c)(_.startsWith(v))
+    case StringEndsWith(c, v) => string(schema, c)(_.endsWith(v))
+    case StringContains(c, v) => string(schema, c)(_.contains(v))
+    case AlwaysTrue() => _ => True
+    case AlwaysFalse() => _ => False
     case And(l, r) =>
-      val lf = compile3(schema, l); val rf = compile3(schema, r)
-      row => (lf(row), rf(row)) match {
-        case (Some(false), _) | (_, Some(false)) => Some(false)
-        case (Some(true), Some(true)) => Some(true)
-        case _ => None
+      val lf = compileOne(schema, l)
+      val rf = compileOne(schema, r)
+      row => {
+        val a = lf(row)
+        if (a == False) False
+        else {
+          val b = rf(row)
+          if (b == False) False else if (a == True && b == True) True else Unknown
+        }
       }
     case Or(l, r) =>
-      val lf = compile3(schema, l); val rf = compile3(schema, r)
-      row => (lf(row), rf(row)) match {
-        case (Some(true), _) | (_, Some(true)) => Some(true)
-        case (Some(false), Some(false)) => Some(false)
-        case _ => None
+      val lf = compileOne(schema, l)
+      val rf = compileOne(schema, r)
+      row => {
+        val a = lf(row)
+        if (a == True) True
+        else {
+          val b = rf(row)
+          if (b == True) True else if (a == False && b == False) False else Unknown
+        }
       }
     case Not(x) =>
-      val xf = compile3(schema, x)
-      row => xf(row).map(!_)
-    case other => r => eval3(schema, other, r)
+      val xf = compileOne(schema, x)
+      row => { val a = xf(row); if (a == Unknown) Unknown else True - a }
+    case _ => throw new IllegalStateException(s"unsupported pushed filter $f")
+  }
+
+  /** `c op v`; a NULL `c` is unknown, or false under `nullSafe` (<=>). */
+  private def comparison(schema: StructType, c: String, v: Any, op: Int,
+      nullSafe: Boolean): Pred3 = {
+    val i = schema.fieldIndex(c)
+    val holds = valueTest(schema(i).dataType, v, op)
+    val onNull = if (nullSafe) False else Unknown
+    r => { val x = r.get(i); if (x == null) onNull else bool(holds(x)) }
+  }
+
+  /** `x op v` for the non-null values `x` of a column of type `dt`. */
+  private def valueTest(dt: DataType, v: Any, op: Int): Any => Boolean = v match {
+    // String.equals decides equality exactly as the code-point compare does
+    case s: String if op == Eq && dt == StringType => {
+      case x: String => x.equals(s)
+      case x => cmp(x, v) == 0
+    }
+    case _ =>
+      val ord = columnOrdering(dt)
+      x => (signBit(ord.compare(x, v)) & op) != 0
+  }
+
+  /** SQL IN: true if any literal matches; if none match but the column
+    * was null, unknown. An empty list is false on every row.
+    */
+  private def in(schema: StructType, c: String, vs: Array[Any]): Pred3 = {
+    val i = schema.fieldIndex(c)
+    val dt = schema(i).dataType
+    // tiny lists: dispatch cost ≈ probe cost
+    (if (vs.length > 4) inProbeExternal(dt, i, vs) else None) match {
+      case Some(probe) => probe
+      case None if vs.isEmpty => _ => False
+      case None =>
+        val tests = vs.map(valueTest(dt, _, Eq))
+        r => {
+          val x = r.get(i)
+          if (x == null) Unknown
+          else {
+            var k = 0
+            while (k < tests.length && !tests(k)(x)) k += 1
+            bool(k < tests.length)
+          }
+        }
+    }
+  }
+
+  private def string(schema: StructType, c: String)(p: String => Boolean): Pred3 = {
+    val i = schema.fieldIndex(c)
+    r => { val x = r.get(i); if (x == null) Unknown else bool(p(x.asInstanceOf[String])) }
   }
 
   /** External-value membership probe over a pre-converted canonical
-    * key set, or None when any literal/type pairing falls outside the
-    * canonicalizer — the per-row [[eval3]] fallback keeps exactness.
-    * Canonical keys mirror [[cmp]] equality: dates/timestamps through
-    * epoch days/micros (both external flavors), floats through
-    * [[VectorFilterEval.canonicalBits]], compact decimals through the
-    * unscaled long at the column scale (an unrepresentable literal
-    * matches nothing and simply leaves the set).
+    * key set (round 19), the external-value flavor of
+    * [[VectorFilterEval.inProbe]]: `In` literal lists convert ONCE into
+    * a sorted canonical-key array / hash set instead of paying [[cmp]]'s
+    * per-literal dispatch — and, on the Number/Number path, TWO
+    * BigDecimal constructions — per row. None when any literal/type
+    * pairing falls outside the canonicalizer; the per-literal test keeps
+    * exactness then. Canonical keys mirror [[cmp]] equality: dates/
+    * timestamps through epoch days/micros (both external flavors),
+    * floats through [[VectorFilterEval.canonicalBits]] (-0.0 == 0.0,
+    * NaN == NaN), compact decimals through the unscaled long at the
+    * column scale (an unrepresentable literal matches nothing and
+    * simply leaves the set).
     */
-  private def inProbeExternal(schema: StructType, c: String, vs: Array[Any])
-      : Option[Row => Option[Boolean]] = {
-    import org.apache.spark.sql.types._
-    if (!schema.fieldNames.contains(c)) return None
-    val i = schema.fieldIndex(c)
-
-    def longProbe(lit: Any => Option[Long], get: Row => Long): Option[Row => Option[Boolean]] = {
+  private def inProbeExternal(dt: DataType, i: Int, vs: Array[Any]): Option[Pred3] = {
+    def longProbe(lit: Any => Option[Long], get: Row => Long): Option[Pred3] = {
       val conv = vs.map(lit)
       if (conv.contains(None)) None
       else {
         val arr: Array[Long] = conv.map(_.get).distinct.sorted
-        Some(r => if (r.isNullAt(i)) None
-        else Some(java.util.Arrays.binarySearch(arr, get(r)) >= 0))
+        Some(r => if (r.isNullAt(i)) Unknown
+        else bool(java.util.Arrays.binarySearch(arr, get(r)) >= 0))
       }
     }
     val integral: Any => Option[Long] = {
@@ -2665,13 +2886,13 @@ object FilterEval {
       case x: java.lang.Long => Some(x.longValue)
       case _ => None // fractional literals keep cmp's BigDecimal exactness
     }
-    schema(i).dataType match {
+    dt match {
       case ByteType | ShortType | IntegerType | LongType =>
         longProbe(integral, r => r.get(i).asInstanceOf[Number].longValue)
       // literal width must MATCH the column width: cmp's toString→
       // BigDecimal equality can rate a Float literal equal to a Double
       // value the canonical bits would reject (0.1f vs 0.1d) — the
-      // mixed-width pairing stays on the exact per-row path
+      // mixed-width pairing stays on the exact per-literal path
       case DoubleType => longProbe({
         case x: java.lang.Double => Some(VectorFilterEval.canonicalBits(x.doubleValue))
         case _ => None
@@ -2708,8 +2929,8 @@ object FilterEval {
         if (conv.contains(None)) None
         else {
           val arr: Array[Long] = conv.flatMap(_.get).distinct.sorted
-          Some(r => if (r.isNullAt(i)) None
-          else Some(
+          Some(r => if (r.isNullAt(i)) Unknown
+          else bool(
             // heap/delta rows can carry a FINER scale than the column
             // declares (the cold path normalizes, the heap path does
             // not): a value whose rescale to the column scale is
@@ -2723,8 +2944,8 @@ object FilterEval {
         }
       case _: DecimalType =>
         // FLBA precisions (> 18): value-canonical set membership, the
-        // row twin of the vector probe — still O(1) per row where
-        // eval3's In was O(|list|) BigDecimal compares
+        // row twin of the vector probe — still O(1) per row where the
+        // per-literal test is O(|list|) BigDecimal compares
         val setD = new java.util.HashSet[java.math.BigDecimal](vs.length * 2)
         var okD = true
         vs.foreach {
@@ -2733,8 +2954,8 @@ object FilterEval {
           case _ => okD = false
         }
         if (!okD) None
-        else Some(r => if (r.isNullAt(i)) None
-        else Some(setD.contains(r.getDecimal(i).stripTrailingZeros())))
+        else Some(r => if (r.isNullAt(i)) Unknown
+        else bool(setD.contains(r.getDecimal(i).stripTrailingZeros())))
       case StringType =>
         val set = new java.util.HashSet[String](vs.length * 2)
         var ok = true
@@ -2743,69 +2964,41 @@ object FilterEval {
           case _ => ok = false
         }
         if (!ok) None
-        else Some(r => if (r.isNullAt(i)) None else Some(set.contains(r.getString(i))))
+        else Some(r => if (r.isNullAt(i)) Unknown else bool(set.contains(r.getString(i))))
       case _ => None
     }
   }
 
-  /** SQL three-valued evaluation: None = unknown (a NULL operand). */
-  private[bucketed] def eval3(schema: StructType, f: Filter, row: Row): Option[Boolean] = f match {
-    case EqualTo(c, v) => cmpNullable(row, schema, c, v).map(_ == 0)
-    case EqualNullSafe(c, v) =>
-      // <=> is the one comparison that is never unknown: NULL <=> x is
-      // definitively false (true only if the literal were null, which
-      // Catalyst rewrites to IsNull before pushdown)
-      Some(cmpNullable(row, schema, c, v).exists(_ == 0))
-    case GreaterThan(c, v) => cmpNullable(row, schema, c, v).map(_ > 0)
-    case GreaterThanOrEqual(c, v) => cmpNullable(row, schema, c, v).map(_ >= 0)
-    case LessThan(c, v) => cmpNullable(row, schema, c, v).map(_ < 0)
-    case LessThanOrEqual(c, v) => cmpNullable(row, schema, c, v).map(_ <= 0)
-    case IsNull(c) => Some(row.isNullAt(schema.fieldIndex(c)))
-    case IsNotNull(c) => Some(!row.isNullAt(schema.fieldIndex(c)))
-    case In(c, vs) =>
-      // SQL IN: true if any element matches; if none match but the
-      // column was null, unknown. Short-circuits on the first match
-      // and allocates nothing per row — a large pushed ID list used
-      // to build a full Option array per row before deciding.
-      var unknown = false
-      var i = 0
-      while (i < vs.length) {
-        cmpNullable(row, schema, c, vs(i)) match {
-          case Some(0) => return Some(true)
-          case None => unknown = true
-          case _ => ()
-        }
-        i += 1
-      }
-      if (unknown) None else Some(false)
-    case StringStartsWith(c, v) => stringNullable(row, schema, c).map(_.startsWith(v))
-    case StringEndsWith(c, v) => stringNullable(row, schema, c).map(_.endsWith(v))
-    case StringContains(c, v) => stringNullable(row, schema, c).map(_.contains(v))
-    case AlwaysTrue() => Some(true)
-    case AlwaysFalse() => Some(false)
-    case And(l, r) => (eval3(schema, l, row), eval3(schema, r, row)) match {
-      case (Some(false), _) | (_, Some(false)) => Some(false)
-      case (Some(true), Some(true)) => Some(true)
-      case _ => None
-    }
-    case Or(l, r) => (eval3(schema, l, row), eval3(schema, r, row)) match {
-      case (Some(true), _) | (_, Some(true)) => Some(true)
-      case (Some(false), Some(false)) => Some(false)
-      case _ => None
-    }
-    case Not(x) => eval3(schema, x, row).map(!_)
-    case _ => throw new IllegalStateException(s"unsupported pushed filter $f")
-  }
-
-  /** None when the row value is null (SQL three-valued logic). */
-  private def cmpNullable(row: Row, schema: StructType, c: String, v: Any): Option[Int] = {
-    val i = schema.fieldIndex(c)
-    if (row.isNullAt(i)) None else Some(cmp(row.get(i), v))
-  }
-
-  private def stringNullable(row: Row, schema: StructType, c: String): Option[String] = {
-    val i = schema.fieldIndex(c)
-    if (row.isNullAt(i)) None else Some(row.getString(i))
+  /** [[cmp]] for the values of one column type, resolved once: a pair
+    * of the column's own external class takes that class's case of
+    * `cmp` directly, and any other pair calls `cmp`, so every answer is
+    * `cmp`'s. The row predicate's comparisons, the pushed MIN/MAX fold
+    * and the pushed TopN heap order values through it.
+    */
+  private[bucketed] def columnOrdering(dt: DataType): Ordering[Any] = dt match {
+    // isInstanceOf tests, not a `(a, b) match`: scalac allocates the
+    // scrutinee tuple, once per compare
+    case LongType => (a, b) =>
+      if (a.isInstanceOf[java.lang.Long] && b.isInstanceOf[java.lang.Long])
+        java.lang.Long.compare(a.asInstanceOf[Long], b.asInstanceOf[Long])
+      else cmp(a, b)
+    case IntegerType => (a, b) =>
+      if (a.isInstanceOf[java.lang.Integer] && b.isInstanceOf[java.lang.Integer])
+        Integer.compare(a.asInstanceOf[Int], b.asInstanceOf[Int])
+      else cmp(a, b)
+    case DoubleType => (a, b) =>
+      if (a.isInstanceOf[java.lang.Double] && b.isInstanceOf[java.lang.Double])
+        VectorFilterEval.cmpDouble(a.asInstanceOf[Double], b.asInstanceOf[Double])
+      else cmp(a, b)
+    case StringType => (a, b) =>
+      if (a.isInstanceOf[String] && b.isInstanceOf[String])
+        cmpCodePoints(a.asInstanceOf[String], b.asInstanceOf[String])
+      else cmp(a, b)
+    case _: DecimalType => (a, b) =>
+      if (a.isInstanceOf[java.math.BigDecimal] && b.isInstanceOf[java.math.BigDecimal])
+        a.asInstanceOf[java.math.BigDecimal].compareTo(b.asInstanceOf[java.math.BigDecimal])
+      else cmp(a, b)
+    case _ => (a, b) => cmp(a, b)
   }
 
   private[bucketed] def cmp(a: Any, b: Any): Int = (a, b) match {

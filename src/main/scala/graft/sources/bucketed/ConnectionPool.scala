@@ -68,8 +68,9 @@ object BucketServers {
 /** One dialed connection. `fetchBucket` streams a bucket's rows in
   * pages of `fetchSize` (the C8 `fetchsize` option — the analog of the
   * reference's JDBC fetch size, JDBCOptions.java:15-32): each page is
-  * one simulated server round trip, checked against host liveness, so
-  * per-connection memory is bounded by the page, never the bucket.
+  * one simulated server round trip, checked against host liveness at
+  * the page's first row. The cursor holds an index into the bucket,
+  * never a copy of a page.
   * The fetch names the snapshot `version` it reads — the server side
   * of MVCC: a scan that pinned v at planning reads v even if the
   * table republished mid-scan (loud failure if v left the retention
@@ -89,16 +90,19 @@ final class HostConnection private[bucketed] (val host: String) {
     *
     * The fetch serves the bucket's FOLDED view ([[BucketStore.folded]]
     * — merge-on-read deletion vectors applied, delta rows merged in
-    * cluster order) and tags every row with its PHYSICAL position, the
-    * row id the delta DML path addresses deletes/updates by. Clean
-    * buckets pay nothing for either (identity fold, position = index).
+    * cluster order) and names every row's PHYSICAL position
+    * ([[RowCursor.pos]]), the row id the delta DML path addresses
+    * deletes/updates by. Clean buckets pay nothing for either (identity
+    * fold, position = index).
     */
   def fetchBucket(table: String, bucket: Int, version: Long, fetchSize: Int,
       slice: Option[ClusterSlice] = None, reverse: Boolean = false,
-      blockFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty): Iterator[(Row, Int)] = {
+      blockFilters: Array[org.apache.spark.sql.sources.Filter] = Array.empty): RowCursor = {
+    require(fetchSize > 0, s"fetchSize must be positive, got $fetchSize")
     val t = BucketStore.snapshot(table, version)
     val f = BucketStore.folded(t, bucket)
     val rows = f.rows
+    val width = t.schema.length
     val clusterCols = BucketStore.lexClusterColsOf(t.clusterCol)
     val (start, end) = slice match {
       // honor only a slice matching this table's layout PREFIX — a
@@ -128,20 +132,95 @@ final class HostConnection private[bucketed] (val host: String) {
           else { HostConnection.blocksSkippedCount.incrementAndGet(); None }
         }
       }
-    val sliced =
-      if (reverse) spans.reverseIterator.flatMap { case (s, e) =>
-        Iterator.range(e - 1, s - 1, -1).map(i => (rows(i), f.posOf(i))) }
-      else spans.iterator.flatMap { case (s, e) =>
-        Iterator.range(s, e).map(i => (rows(i), f.posOf(i))) }
-    sliced.grouped(fetchSize).flatMap { page =>
-      if (!BucketServers.isUp(host))
-        throw new IOException(s"connection to $host lost mid-stream (task retry will re-plan)")
-      HostConnection.roundTripCount.incrementAndGet()
-      // rows written before an ADD COLUMN are shorter than this
-      // snapshot's schema: serve them NULL-padded (stored form never
-      // rewritten)
-      page.map { case (r, p) => (BucketStore.pad(r, t.schema.length), p) }
+    val served = if (reverse) spans.reverse else spans
+    // An index cursor over the served spans: pages of `fetchSize` rows
+    // run across span boundaries, and each page start is one simulated
+    // server round trip, checked against host liveness.
+    new RowCursor {
+      private var nextSpan = 0
+      private var at = 0 // next row index to serve (reverse: one past it)
+      private var stop = 0 // the open span's end (reverse: its start)
+      private var pageLeft = 0
+      private var p = -1
+
+      def pos: Int = p
+
+      def hasNext: Boolean = {
+        while (at == stop && nextSpan < served.length) {
+          val (s, e) = served(nextSpan)
+          nextSpan += 1
+          if (s < e) { if (reverse) { at = e; stop = s } else { at = s; stop = e } }
+        }
+        at != stop
+      }
+
+      def next(): Row = {
+        if (!hasNext) throw new NoSuchElementException(s"bucket $bucket of $table is exhausted")
+        if (pageLeft == 0) {
+          if (!BucketServers.isUp(host))
+            throw new IOException(s"connection to $host lost mid-stream (task retry will re-plan)")
+          HostConnection.roundTripCount.incrementAndGet()
+          pageLeft = fetchSize
+        }
+        pageLeft -= 1
+        val i = if (reverse) { at -= 1; at } else { at += 1; at - 1 }
+        p = f.posOf(i)
+        // rows written before an ADD COLUMN are shorter than this
+        // snapshot's schema: serve them NULL-padded (stored form never
+        // rewritten)
+        BucketStore.pad(rows(i), width)
+      }
     }
+  }
+}
+
+/** A forward-only stream of one bucket's rows that also names each
+  * row's PHYSICAL position ([[BucketStore.FoldedBucket.posOf]]), the
+  * row id the delta DML path addresses: `pos` is the position of the
+  * row the last `next()` returned.
+  */
+abstract class RowCursor extends Iterator[Row] {
+  def pos: Int
+}
+
+object RowCursor {
+  /** A cursor over already materialized (row, position) pairs. */
+  def over(pairs: Iterator[(Row, Int)]): RowCursor = new RowCursor {
+    private var p = -1
+    def pos: Int = p
+    def hasNext: Boolean = pairs.hasNext
+    def next(): Row = { val (r, q) = pairs.next(); p = q; r }
+  }
+}
+
+/** The rows of `in` that pass `keep`, at most `limit` of them. It pulls
+  * from `in` only as far as the next kept row, so a reached limit stops
+  * the page fetches: a LIMIT 10 never drains the bucket's pages.
+  */
+private[bucketed] final class KeptRows(in: RowCursor, keep: Row => Boolean, limit: Int)
+  extends RowCursor {
+  private var left = limit
+  private var head: Row = _
+  private var headPos = -1
+  private var p = -1
+
+  def pos: Int = p
+
+  def hasNext: Boolean = {
+    while (head == null && left > 0 && in.hasNext) {
+      val r = in.next()
+      if (keep(r)) { head = r; headPos = in.pos }
+    }
+    head != null
+  }
+
+  def next(): Row = {
+    if (!hasNext) throw new NoSuchElementException("no further kept row")
+    val r = head
+    head = null
+    p = headPos
+    left -= 1
+    r
   }
 }
 

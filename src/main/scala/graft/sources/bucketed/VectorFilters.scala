@@ -21,7 +21,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * filter's referenced columns are ever decoded.
   *
   * Three-valued SQL semantics, byte-for-byte consistent with the row
-  * path's [[FilterEval.eval3]]: a NULL operand yields UNKNOWN and a
+  * path's compiled predicate ([[FilterEval.compile]], the same
+  * true/false/unknown encoding): a NULL operand yields UNKNOWN and a
   * row is kept only when every conjunct is definitely true. String
   * order is UTF8String's byte order = code-point order — the same
   * order [[FilterEval.cmp]] implements on external strings. A filter

@@ -112,28 +112,58 @@ object GraftProps extends Properties("graft") {
 
   // ——— FilterEval three-valued logic ≡ Spark's own WHERE semantics ———
 
-  private val fe3Schema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.IntegerType, nullable = false),
-    org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.StringType, nullable = true),
-    org.apache.spark.sql.types.StructField("w", org.apache.spark.sql.types.IntegerType, nullable = true)))
+  private val fe3Schema = {
+    import org.apache.spark.sql.types._
+    StructType(Seq(
+      StructField("id", IntegerType, nullable = false),
+      StructField("v", StringType, nullable = true),
+      StructField("w", IntegerType, nullable = true),
+      StructField("d", DoubleType, nullable = true),
+      StructField("l", LongType, nullable = true)))
+  }
+
+  // U+FF21 sorts above the surrogates of U+1F600 in UTF-16 code units
+  // but below U+1F600 in code points (Spark's UTF-8 byte order)
+  private val fe3Strs = Gen.oneOf("a", "ab", "b", "zz", "\uFF21", "\uD83D\uDE00", "a\uD83D\uDE00")
+  private val fe3Doubles = Gen.oneOf(Double.NaN, 0.0, -0.0, Double.PositiveInfinity,
+    Double.NegativeInfinity, 1.5, -2.5)
+  // past 2^53 a long and its nearest double part: only an exact
+  // compare tells 2^53 + 1 from 2^53
+  private val fe3Longs = Gen.oneOf(Long.MinValue, -1L, 3L, 9007199254740991L, 9007199254740992L,
+    9007199254740993L, Long.MaxValue)
+  private val fe3Ints = Gen.choose(-2, 4)
+  // a LONG column meets both INT literals (a mixed-class pair, which
+  // takes FilterEval.cmp's exact path) and LONG literals
+  private val fe3LongLits: Gen[Any] =
+    Gen.frequency(1 -> fe3Ints.map(i => i: Any), 2 -> fe3Longs.map(l => l: Any))
 
   private val genLeaf: Gen[org.apache.spark.sql.sources.Filter] = {
     import org.apache.spark.sql.sources._
-    val strs = Gen.oneOf("a", "ab", "b", "zz")
-    val ints = Gen.choose(-2, 4)
     Gen.oneOf[Filter](
-      strs.map(EqualTo("v", _)),
-      ints.map(EqualTo("w", _)),
-      ints.map(GreaterThan("w", _)),
-      ints.map(LessThan("w", _)),
-      ints.map(GreaterThanOrEqual("w", _)),
-      strs.map(EqualNullSafe("v", _)),
+      fe3Strs.map(EqualTo("v", _)),
+      fe3Strs.map(GreaterThan("v", _)),
+      fe3Strs.map(LessThanOrEqual("v", _)),
+      fe3Ints.map(EqualTo("w", _)),
+      fe3Ints.map(GreaterThan("w", _)),
+      fe3Ints.map(LessThan("w", _)),
+      fe3Ints.map(GreaterThanOrEqual("w", _)),
+      fe3Strs.map(EqualNullSafe("v", _)),
+      fe3Doubles.map(EqualTo("d", _)),
+      fe3Doubles.map(EqualNullSafe("d", _)),
+      fe3Doubles.map(GreaterThan("d", _)),
+      fe3Doubles.map(LessThanOrEqual("d", _)),
+      fe3LongLits.map(EqualTo("l", _)),
+      fe3LongLits.map(GreaterThanOrEqual("l", _)),
+      fe3LongLits.map(LessThan("l", _)),
       Gen.const(IsNull("v")), Gen.const(IsNotNull("v")),
-      Gen.const(IsNull("w")),
-      Gen.listOfN(2, strs).map(vs => In("v", vs.toArray[Any])),
-      Gen.listOfN(3, ints).map(vs => In("w", vs.toArray[Any])),
-      strs.map(StringStartsWith("v", _)),
-      strs.map(StringContains("v", _)),
+      Gen.const(IsNull("w")), Gen.const(IsNotNull("d")), Gen.const(IsNull("l")),
+      Gen.listOfN(2, fe3Strs).map(vs => In("v", vs.toArray[Any])),
+      Gen.listOfN(3, fe3Ints).map(vs => In("w", vs.toArray[Any])),
+      Gen.listOfN(3, fe3Doubles).map(vs => In("d", vs.toArray[Any])),
+      Gen.listOfN(6, fe3Doubles).map(vs => In("d", vs.toArray[Any])),
+      Gen.listOfN(3, fe3LongLits).map(vs => In("l", vs.toArray[Any])),
+      fe3Strs.map(StringStartsWith("v", _)),
+      fe3Strs.map(StringContains("v", _)),
       Gen.const(AlwaysTrue()), Gen.const(AlwaysFalse()))
   }
 
@@ -172,31 +202,35 @@ object GraftProps extends Properties("graft") {
     }
   }
 
-  private val genRow: Gen[(Int, Option[String], Option[Int])] = for {
+  private val genRow: Gen[org.apache.spark.sql.Row] = for {
     id <- Gen.choose(0, 1000000)
-    v <- Gen.oneOf(Some("a"), Some("ab"), Some("b"), Some("zz"), None)
-    w <- Gen.oneOf(Gen.const(None), Gen.choose(-2, 4).map(Some(_)))
-  } yield (id, v, w)
+    v <- Gen.option(fe3Strs)
+    w <- Gen.option(fe3Ints)
+    d <- Gen.option(fe3Doubles)
+    l <- Gen.option(fe3Longs)
+  } yield org.apache.spark.sql.Row(id, v.orNull, w.map(Int.box).orNull,
+    d.map(Double.box).orNull, l.map(Long.box).orNull)
 
   /** The pushdown evaluator must agree with Spark's own WHERE on every
     * filter tree over NULL-bearing rows — the three-valued-logic
     * contract that lets the DSv2 source CLAIM filters (Spark plans no
-    * residual re-check above a claimed filter).
+    * residual re-check above a claimed filter). The columns cover every
+    * comparator the compiled predicate picks: strings past the BMP,
+    * doubles holding NaN, ±0.0 and ±Inf, and a long column compared
+    * with int and long literals. Each case checks ten filters.
     */
   property("FilterEval 3VL equals Spark WHERE semantics") =
-    forAll(genFilter(2), Gen.listOfN(12, genRow)) { (f, rows) =>
-      import org.apache.spark.sql.Row
-      val distinctRows = rows.distinctBy(_._1)
-      val df = spark.createDataFrame(
-        spark.sparkContext.parallelize(distinctRows.map(r => Row(r._1, r._2.orNull, r._3.map(Int.box).orNull)), 2),
-        fe3Schema)
-      val sparkKept = df.filter(filterToColumn(f))
-        .select("id").collect().map(_.getInt(0)).toSet
-      val feKept = distinctRows
-        .filter(r => graft.sources.bucketed.FilterEval.eval(
-          fe3Schema, f, Row(r._1, r._2.orNull, r._3.map(Int.box).orNull)))
-        .map(_._1).toSet
-      sparkKept == feKept
+    forAll(Gen.listOfN(10, genFilter(2)), Gen.listOfN(12, genRow)) { (fs, rows) =>
+      val distinctRows = rows.distinctBy(_.getInt(0))
+      val df = spark.createDataFrame(spark.sparkContext.parallelize(distinctRows, 2), fe3Schema)
+      fs.forall { f =>
+        val sparkKept = df.filter(filterToColumn(f))
+          .select("id").collect().map(_.getInt(0)).toSet
+        val keep = graft.sources.bucketed.FilterEval.compile(fe3Schema, Array(f))
+        val feKept = distinctRows.filter(keep).map(_.getInt(0)).toSet
+        if (sparkKept != feKept) println(s"DIVERGE f=$f spark=$sparkKept compiled=$feKept")
+        sparkKept == feKept
+      }
     }
 
   // — pushed TopN vs Spark's own sort (null orderings, NaN/Inf, ties) —

@@ -147,8 +147,9 @@ object VectorFilterProps extends Properties("graft.vectorfilter") {
         case None => true // inexpressible pairings fall back to the row path by design
         case Some(fn) =>
           val batch = toBatch(rows)
+          val rowFn = FilterEval.compile(schema, Array(f))
           try rows.indices.forall { r =>
-            val row = FilterEval.eval(schema, f, rows(r))
+            val row = rowFn(rows(r))
             val vec = fn(batch, r)
             if (row != vec) println(s"DIVERGE f=$f row=${rows(r)} rowEval=$row vecEval=$vec")
             row == vec
@@ -177,20 +178,31 @@ object VectorFilterProps extends Properties("graft.vectorfilter") {
     }
 
   /** The ROW path's compiled conjunction (round 19 — In literal sets
-    * pre-converted once, the external-value probe) must agree with
-    * the per-row eval loop it replaced, on every composed shape
-    * including large In lists over every column type.
+    * pre-converted once, the external-value probe) must agree with the
+    * same filters compiled one by one with every In spelled as an OR of
+    * equalities, which takes the per-literal comparison path and never
+    * the probe — on every composed shape, including large In lists over
+    * every column type.
     */
   private val genBigIn: Gen[Filter] =
     genCol.flatMap(c => Gen.listOfN(300, lit(c)).map(vs => In(c, vs.toArray): Filter))
+
+  private def perLiteral(f: Filter): Filter = f match {
+    case In(c, vs) if vs.nonEmpty => vs.map(v => EqualTo(c, v): Filter).reduceLeft(Or(_, _))
+    case And(l, r) => And(perLiteral(l), perLiteral(r))
+    case Or(l, r) => Or(perLiteral(l), perLiteral(r))
+    case Not(x) => Not(perLiteral(x))
+    case other => other
+  }
 
   property("FilterEval.compile == per-row eval on composed shapes and large In lists") =
     forAll(Gen.nonEmptyListOf(genRow),
       Gen.listOfN(2, Gen.frequency(3 -> genFilter(2), 2 -> genBigIn))) { (rows, filters) =>
       val fs = filters.filter(FilterEval.supports(schema, _)).toArray
       val compiled = FilterEval.compile(schema, fs)
+      val oneByOne = fs.map(f => FilterEval.compile(schema, Array(perLiteral(f))))
       rows.forall { r =>
-        val want = fs.forall(f => FilterEval.eval(schema, f, r))
+        val want = oneByOne.forall(_(r))
         val got = compiled(r)
         if (want != got) println(s"DIVERGE fs=${fs.toSeq} row=$r want=$want got=$got")
         want == got

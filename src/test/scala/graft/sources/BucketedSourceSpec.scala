@@ -202,6 +202,46 @@ class BucketedSourceSpec extends SparkSuite {
       df.filter(col("d") > 1.0).select(col("id")).as[Int].collect().toSet)
   }
 
+  test("pushed aggregate groups keys as Spark does: one partial per NaN, ±0.0 and binary group") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("id", IntegerType, nullable = false),
+      StructField("d", DoubleType), StructField("b", BinaryType), StructField("w", LongType)))
+    // two NaN bit patterns, both zeros, and a fresh array per binary key
+    val ds = Seq(Double.NaN, java.lang.Double.longBitsToDouble(0x7ff8000000000123L), -0.0, 0.0, 1.5)
+    val rows = (0 until 60).map(i =>
+      Row(i, ds(i % ds.length), Array[Byte]((i % 3).toByte, 7), (i * 10).toLong))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+    BucketStore.load(spark, "agg_keys", df, "id", 2)
+    val t = BucketStore.get("agg_keys")
+    val s = spark.read.format("graft-buckets").option("table", "agg_keys").load()
+    def render(q: org.apache.spark.sql.DataFrame): Seq[String] =
+      q.collect().toSeq.map(_.toSeq.map {
+        case a: Array[Byte] => a.mkString("[", ",", "]")
+        case x => String.valueOf(x)
+      }.mkString("|")).sorted
+    Seq("d", "b").foreach { key =>
+      // per bucket: the partials emitted equal Spark's groups among the
+      // bucket's own rows
+      (0 until 2).foreach { bucket =>
+        val spec = AggSpec(Seq(AggSpec.PCountStar, AggSpec.PSum("w")), Seq(key), t.schema)
+        val reader = new BucketedAggPartitionReader(
+          BucketInputPartition("agg_keys", bucket, BucketStore.hostsFor(bucket, 4).toArray, t.version),
+          spec, Array.empty, 1000)
+        var partials = 0
+        try while (reader.next()) partials += 1 finally reader.close()
+        val own = BucketStore.folded(t, bucket).rows.toSeq
+        val groups = spark.createDataFrame(spark.sparkContext.parallelize(own, 1), t.schema)
+          .groupBy(key).count().count()
+        assert(partials.toLong === groups, s"bucket $bucket keyed by $key")
+      }
+      val q = s.groupBy(key).agg(count(lit(1)).as("n"), sum(col("w")).as("sw"))
+      val plan = q.queryExecution.executedPlan.toString
+      assert(plan.contains(s"groupBy=[$key]"), plan)
+      assert(render(q) === render(df.groupBy(key).agg(count(lit(1)), sum(col("w")))))
+    }
+  }
+
   test("empty bucket-prune × global aggregate returns 0, not NULL") {
     import org.apache.spark.sql.sources.EqualTo
     import spark.implicits._
@@ -510,6 +550,39 @@ class BucketedSourceSpec extends SparkSuite {
     assert(mismatch.getMessage.contains("bucket-pinned") ||
       mismatch.getCause != null && mismatch.getCause.getMessage.contains("bucket-pinned"),
       mismatch.getMessage)
+  }
+
+  test("C8 mid-stream host loss: the page after a kill fails; a drain costs ⌈rows/fetchsize⌉ trips") {
+    import spark.implicits._
+    BucketStore.load(spark, "midstream_t", (1 to 40).map(i => (i, s"v$i")).toDF("id", "v"), "id", 4)
+    val t = BucketStore.get("midstream_t")
+    def reader(bucket: Int) = new BucketedPartitionReader(
+      BucketInputPartition("midstream_t", bucket, Array("host-0"), t.version), t.schema,
+      Array.empty, fetchSize = 2)
+    (0 until 4).foreach { bucket =>
+      val n = BucketStore.folded(t, bucket).rows.length
+      val before = HostConnection.roundTripCount.get()
+      val r = reader(bucket)
+      var read = 0
+      try while (r.next()) read += 1 finally r.close()
+      assert(read === n)
+      assert(HostConnection.roundTripCount.get() - before === (n + 1) / 2,
+        s"bucket $bucket: $n rows in pages of 2")
+    }
+    val bucket = (0 until 4).find(BucketStore.folded(t, _).rows.length >= 3).get
+    val r = reader(bucket)
+    try {
+      val before = HostConnection.roundTripCount.get()
+      assert(r.next() && r.next(), "the first page holds two rows")
+      assert(HostConnection.roundTripCount.get() - before === 1)
+      BucketServers.kill("host-0")
+      val ex = intercept[java.io.IOException](r.next())
+      assert(ex.getMessage.contains("lost mid-stream"), ex.getMessage)
+      assert(HostConnection.roundTripCount.get() - before === 1, "a failed page is no round trip")
+    } finally {
+      BucketServers.revive("host-0")
+      r.close()
+    }
   }
 
   test("C8 fetchsize: rows stream in pages of the configured size") {
