@@ -24,7 +24,7 @@ import org.apache.spark.sql.types._
   *
   * Skipping is CONSERVATIVE by construction: the sketch has no false
   * negatives (a contained value always probes true), min/max bounds
-  * use the same [[FilterEval.cmp]] total order the row filter uses
+  * use the column type's [[KeyOrder]], the order the row filter uses
   * (NaN-as-largest, exact mixed-width numerics), three-valued-logic
   * filters prune only when the predicate is definitely-not-true for
   * every row. A false positive merely opens a bucket whose rows the
@@ -54,7 +54,7 @@ import org.apache.spark.sql.types._
 object BucketSkip {
 
   /** Column statistics for one bucket. `min`/`max` are stored-type
-    * values under [[FilterEval.cmp]]; null ⇔ the bucket has no
+    * values under the column's [[KeyOrder]]; null ⇔ the bucket has no
     * non-null value in the column. `bloom` null ⇔ the type is not
     * sketchable (exact-equality types: integrals, strings, and — from
     * round 19 — decimals, hashed value-canonically).
@@ -146,9 +146,10 @@ object BucketSkip {
     cols.foreach { c =>
       if (schema.fieldNames.contains(c)) {
         statsFor(schema, rows, c)
-        if (rows.length > BlockRows)
-          (0 to (rows.length - 1) / BlockRows).foreach(k => statsForBlock(schema, rows, k, c))
-        ()
+        if (rows.length > BlockRows) {
+          val slots = blockSlots(rows, c)
+          (0 until slots.length).foreach(blockStats(schema, rows, slots, _, c))
+        }
       }
     }
 
@@ -158,47 +159,86 @@ object BucketSkip {
     */
   val BlockRows: Int = 128
 
-  /** (rows-array identity, block ordinal, column) → block stats; same
-    * identity/weak-key discipline as the bucket-level cache, so COW-
-    * shared buckets keep their block maps across versions too.
+  /** One column's block stats, by block ordinal; a slot is null until
+    * built. `Some(Seq(stats))` is stored ready for [[mayMatch]], so a
+    * probe allocates nothing.
+    */
+  private type BlockSlots = java.util.concurrent.atomic.AtomicReferenceArray[Option[Seq[ColSkip]]]
+
+  /** rows-array identity → column → block stats; same identity/weak-
+    * key discipline as the bucket-level cache, so COW-shared buckets
+    * keep their block maps across versions too.
     */
   private val blockCache =
-    new java.util.WeakHashMap[Array[Row], scala.collection.concurrent.TrieMap[(Int, String), Option[ColSkip]]]()
+    new java.util.WeakHashMap[Array[Row], java.util.concurrent.ConcurrentHashMap[String, BlockSlots]]()
 
   /** Block-granularity stat passes actually executed — the spec hook
     * proving commit-time warming covers the block grid as well.
     */
   val blockBuildCount = new java.util.concurrent.atomic.AtomicLong()
 
-  private[bucketed] def statsForBlock(schema: StructType, rows: Array[Row], block: Int,
-      c: String): Option[ColSkip] = {
-    val perKey = blockCache.synchronized {
+  /** One column's block stats in the block map of one rows array —
+    * the map lookup is the only step under the cache's monitor.
+    */
+  private def blockSlots(rows: Array[Row], c: String): BlockSlots = {
+    val map = blockCache.synchronized {
       var e = blockCache.get(rows)
-      if (e == null) { e = scala.collection.concurrent.TrieMap.empty; blockCache.put(rows, e) }
+      if (e == null) { e = new java.util.concurrent.ConcurrentHashMap(); blockCache.put(rows, e) }
       e
     }
-    perKey.getOrElseUpdate((block, c), {
-      val from = block * BlockRows
-      val until = math.min(rows.length, from + BlockRows)
-      if (from >= until || !schema.fieldNames.contains(c)) None
-      else {
-        blockBuildCount.incrementAndGet()
-        buildRange(schema, rows, from, until, c)
-      }
-    })
+    map.computeIfAbsent(c, _ => new BlockSlots((rows.length + BlockRows - 1) / BlockRows))
   }
 
-  /** May any row of block `block` of this rows array satisfy `f`?
-    * Same conservative contract as the bucket-level [[mayMatch]];
-    * consulted by [[HostConnection.fetchBucket]] so a pruned block's
-    * pages never cross the (simulated) wire.
+  /** Block `block`'s stats for column `c`, built on first use. Two
+    * threads may both build one slot; the first to store it wins.
     */
-  def mayMatchBlock(schema: StructType, rows: Array[Row], block: Int, f: Filter): Boolean =
-    mayMatch(schema, (c: String) => statsForBlock(schema, rows, block, c).map(Seq(_)), f)
+  private def blockStats(schema: StructType, rows: Array[Row], slots: BlockSlots, block: Int,
+      c: String): Option[Seq[ColSkip]] = {
+    val cached = if (block < slots.length) slots.get(block) else None
+    if (cached != null) cached
+    else {
+      val from = block * BlockRows
+      val until = math.min(rows.length, from + BlockRows)
+      val built =
+        if (from >= until || !hasField(schema, c)) None
+        else {
+          blockBuildCount.incrementAndGet()
+          buildRange(schema, rows, from, until, c).map(Seq(_))
+        }
+      if (slots.compareAndSet(block, null, built)) built else slots.get(block)
+    }
+  }
+
+  /** May any row of block `k` of this rows array satisfy every one of
+    * `filters`? Same conservative contract as the bucket-level
+    * [[mayMatch]]; consulted by [[HostConnection.fetchBucket]] so a
+    * pruned block's pages never cross the (simulated) wire. The block
+    * maps of the filters' columns are resolved once, here, so a probe
+    * takes no monitor and allocates no key. One probe serves one
+    * thread.
+    */
+  def blockProbe(schema: StructType, rows: Array[Row], filters: Array[Filter]): Int => Boolean = {
+    val cols = filters.flatMap(_.references).distinct
+    val slots = cols.map(blockSlots(rows, _))
+    var block = 0
+    val statsOf: String => Option[Seq[ColSkip]] = c => {
+      val k = cols.indexOf(c)
+      if (k < 0) None else blockStats(schema, rows, slots(k), block, c)
+    }
+    val test: Filter => Boolean = mayMatch(schema, statsOf, _)
+    k => { block = k; filters.forall(test) }
+  }
+
+  private def hasField(schema: StructType, c: String): Boolean = {
+    val fs = schema.fields
+    var i = 0
+    while (i < fs.length && fs(i).name != c) i += 1
+    i < fs.length
+  }
 
   private def comparableType(dt: DataType): Boolean = dt match {
-    // NTZ joined round 19 (its externals compare via FilterEval.cmp's
-    // LocalDateTime case and round-trip in the manifest stat codec),
+    // NTZ joined round 19 (its externals compare in KeyOrder and
+    // round-trip in the manifest stat codec),
     // so z-clustering on an NTZ column prunes like any timestamp
     case _: NumericType | StringType | TimestampType | DateType | TimestampNTZType => true
     case _ => false
@@ -224,7 +264,7 @@ object BucketSkip {
     * stats: exactly one column decodes and the block is never faulted
     * into the heap cache. `values` are 1-ary rows (the projected
     * column at index 0); `n` is the file's exact row count from the
-    * manifest. Same formula, same loop, same `FilterEval.cmp` order
+    * manifest. Same formula, same loop, same [[KeyOrder]] order
     * as [[buildRange]] — the resulting ColSkip is value-identical to
     * the array build over the same data (spec-pinned), so committed
     * manifests agree regardless of which path produced them.
@@ -237,6 +277,7 @@ object BucketSkip {
       if (!sketchableType(field.dataType)) 0
       else math.min(1 << 22, math.max(64, Integer.highestOneBit(n * 8 - 1) << 1))
     val bloom = if (nbits > 0) new java.util.BitSet(nbits) else null
+    val ord = KeyOrder.of(field.dataType)
     var nulls = 0
     var min: Any = null
     var max: Any = null
@@ -246,8 +287,8 @@ object BucketSkip {
       if (r.size < 1 || r.isNullAt(0)) nulls += 1
       else {
         val v = r.get(0)
-        if (min == null || FilterEval.cmp(v, min) < 0) min = v
-        if (max == null || FilterEval.cmp(v, max) > 0) max = v
+        if (min == null || ord.compare(v, min) < 0) min = v
+        if (max == null || ord.compare(v, max) > 0) max = v
         if (bloom != null) sketchHash(v).foreach(h => setBits(bloom, nbits, h))
       }
       seen += 1
@@ -272,6 +313,7 @@ object BucketSkip {
       if (!sketchableType(dt)) 0
       else math.min(1 << 22, math.max(64, Integer.highestOneBit(n * 8 - 1) << 1))
     val bloom = if (nbits > 0) new java.util.BitSet(nbits) else null
+    val ord = KeyOrder.of(dt)
     var nulls = 0
     var min: Any = null
     var max: Any = null
@@ -283,8 +325,8 @@ object BucketSkip {
       if (i >= r.size || r.isNullAt(i)) nulls += 1
       else {
         val v = r.get(i)
-        if (min == null || FilterEval.cmp(v, min) < 0) min = v
-        if (max == null || FilterEval.cmp(v, max) > 0) max = v
+        if (min == null || ord.compare(v, min) < 0) min = v
+        if (max == null || ord.compare(v, max) > 0) max = v
         if (bloom != null) sketchHash(v).foreach(h => setBits(bloom, nbits, h))
       }
       j += 1
@@ -314,7 +356,7 @@ object BucketSkip {
     case _ => None
   }
 
-  /** VALUE-canonical decimal hash: [[FilterEval.cmp]]-equal decimals
+  /** VALUE-canonical decimal hash: [[KeyOrder]]-equal decimals
     * (scale-insensitive) must hash identically whatever scale their
     * representation carries — strip trailing zeros, then hash the
     * (unscaled, scale) pair. Compact unscaled values mix the long
@@ -369,31 +411,31 @@ object BucketSkip {
   def mayMatch(schema: StructType, statsOf: String => Option[Seq[ColSkip]],
       f: Filter): Boolean = {
     def stats(c: String): Option[Seq[ColSkip]] =
-      if (!schema.fieldNames.contains(c)) None else statsOf(c)
-    def eqOne(s: ColSkip, v: Any): Boolean =
+      if (!hasField(schema, c)) None else statsOf(c)
+    def ord(c: String): Ordering[Any] = KeyOrder.of(schema(c).dataType)
+    def eqOne(c: String, s: ColSkip, v: Any): Boolean =
       if (v == null || s.min == null) false
-      else if (FilterEval.cmp(s.min, v) > 0 || FilterEval.cmp(s.max, v) < 0) false
+      else if (ord(c).compare(s.min, v) > 0 || ord(c).compare(s.max, v) < 0) false
       else s.bloom == null ||
         sketchHash(v, s.hashV).forall(testBits(s.bloom, s.bloomBits, _))
-    def eqMay(so: Option[Seq[ColSkip]], v: Any): Boolean = so.forall(_.exists(eqOne(_, v)))
-    // exists non-null value with pred(cmp(value, v)): the witness is
-    // max for >-shaped predicates, min for <-shaped ones
-    def boundMay(so: Option[Seq[ColSkip]], v: Any, useMax: Boolean,
-        pred: Int => Boolean): Boolean =
-      so.forall(_.exists(s => s.min != null &&
-        pred(FilterEval.cmp(if (useMax) s.max else s.min, v))))
+    def eqMay(c: String, v: Any): Boolean = stats(c).forall(_.exists(eqOne(c, _, v)))
+    // exists non-null value with pred(compare(value, v)): the witness
+    // is max for >-shaped predicates, min for <-shaped ones
+    def boundMay(c: String, v: Any, useMax: Boolean, pred: Int => Boolean): Boolean =
+      stats(c).forall(_.exists(s => s.min != null &&
+        pred(ord(c).compare(if (useMax) s.max else s.min, v))))
     def go(f: Filter): Boolean = f match {
-      case EqualTo(c, v) => eqMay(stats(c), v)
+      case EqualTo(c, v) => eqMay(c, v)
       case EqualNullSafe(c, null) => stats(c).forall(_.exists(_.nullCount > 0))
-      case EqualNullSafe(c, v) => eqMay(stats(c), v)
+      case EqualNullSafe(c, v) => eqMay(c, v)
       case In(c, vs) => stats(c) match {
         case None => true
-        case Some(parts) => vs != null && vs.exists(v => parts.exists(eqOne(_, v)))
+        case Some(parts) => vs != null && vs.exists(v => parts.exists(eqOne(c, _, v)))
       }
-      case GreaterThan(c, v) => boundMay(stats(c), v, useMax = true, _ > 0)
-      case GreaterThanOrEqual(c, v) => boundMay(stats(c), v, useMax = true, _ >= 0)
-      case LessThan(c, v) => boundMay(stats(c), v, useMax = false, _ < 0)
-      case LessThanOrEqual(c, v) => boundMay(stats(c), v, useMax = false, _ <= 0)
+      case GreaterThan(c, v) => boundMay(c, v, useMax = true, _ > 0)
+      case GreaterThanOrEqual(c, v) => boundMay(c, v, useMax = true, _ >= 0)
+      case LessThan(c, v) => boundMay(c, v, useMax = false, _ < 0)
+      case LessThanOrEqual(c, v) => boundMay(c, v, useMax = false, _ <= 0)
       case IsNull(c) => stats(c).forall(_.exists(_.nullCount > 0))
       case IsNotNull(c) => stats(c).forall(_.exists(_.nonNullCount > 0))
       case AlwaysFalse() => false
@@ -422,7 +464,7 @@ object BucketSkip {
     * (false = "cannot prove", never "does not hold"). SQL three-valued
     * logic makes NULL operands not-true, so every comparison proof
     * additionally requires a null-free column (`nullCount == 0`).
-    * Bounds proofs use the same [[FilterEval.cmp]] total order the
+    * Bounds proofs use the same [[KeyOrder]] total order the
     * row-level filter uses — NaN-as-largest included — so a proof here
     * can never disagree with [[FilterEval.eval]] on any row.
     *
@@ -435,23 +477,23 @@ object BucketSkip {
   def mustMatchAll(schema: StructType, statsOf: String => Option[Seq[ColSkip]],
       f: Filter): Boolean = {
     def stats(c: String): Option[Seq[ColSkip]] =
-      if (!schema.fieldNames.contains(c)) None else statsOf(c)
+      if (!hasField(schema, c)) None else statsOf(c)
+    def ord(c: String): Ordering[Any] = KeyOrder.of(schema(c).dataType)
     def all(so: Option[Seq[ColSkip]])(p: ColSkip => Boolean): Boolean =
       so.exists(_.forall(s => s.rowCount == 0 || p(s)))
-    def bound(so: Option[Seq[ColSkip]], v: Any, useMin: Boolean,
-        pred: Int => Boolean): Boolean =
-      v != null && all(so)(s => s.nullCount == 0 && s.min != null &&
-        pred(FilterEval.cmp(if (useMin) s.min else s.max, v)))
+    def bound(c: String, v: Any, useMin: Boolean, pred: Int => Boolean): Boolean =
+      v != null && all(stats(c))(s => s.nullCount == 0 && s.min != null &&
+        pred(ord(c).compare(if (useMin) s.min else s.max, v)))
     def go(f: Filter): Boolean = f match {
       case EqualTo(c, v) => v != null && all(stats(c))(s => s.nullCount == 0 &&
-        s.min != null && FilterEval.cmp(s.min, v) == 0 && FilterEval.cmp(s.max, v) == 0)
+        s.min != null && ord(c).compare(s.min, v) == 0 && ord(c).compare(s.max, v) == 0)
       case EqualNullSafe(c, null) => all(stats(c))(s => s.nullCount == s.rowCount)
       case EqualNullSafe(c, v) => go(EqualTo(c, v))
-      // every non-null value > v ⇔ min > v (cmp is total; NaN largest)
-      case GreaterThan(c, v) => bound(stats(c), v, useMin = true, _ > 0)
-      case GreaterThanOrEqual(c, v) => bound(stats(c), v, useMin = true, _ >= 0)
-      case LessThan(c, v) => bound(stats(c), v, useMin = false, _ < 0)
-      case LessThanOrEqual(c, v) => bound(stats(c), v, useMin = false, _ <= 0)
+      // every non-null value > v ⇔ min > v (the order is total; NaN largest)
+      case GreaterThan(c, v) => bound(c, v, useMin = true, _ > 0)
+      case GreaterThanOrEqual(c, v) => bound(c, v, useMin = true, _ >= 0)
+      case LessThan(c, v) => bound(c, v, useMin = false, _ < 0)
+      case LessThanOrEqual(c, v) => bound(c, v, useMin = false, _ <= 0)
       case IsNull(c) => all(stats(c))(s => s.nullCount == s.rowCount)
       case IsNotNull(c) => all(stats(c))(_.nullCount == 0)
       case In(c, vs) => vs != null && vs.exists(v => go(EqualTo(c, v)))

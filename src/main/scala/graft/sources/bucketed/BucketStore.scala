@@ -5,7 +5,7 @@ import java.util.concurrent.ConcurrentHashMap
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** In-JVM model of an external bucket-partitioned row store — the
   * stand-in for the reference's SnappyData server cluster
@@ -903,48 +903,6 @@ object BucketStore {
   def lexClusterColsOf(clusterCol: Option[String]): Seq[String] =
     if (isZOrder(clusterCol)) Seq.empty else clusterColsOf(clusterCol)
 
-  /** Row → compound cluster key, short (pre-ALTER) rows reading the
-    * key columns as NULL — the single extraction every sort, merge,
-    * and fold comparator shares.
-    */
-  private def clusterKeyOf(schema: StructType, clusterCol: Option[String]): Row => Array[Any] = {
-    val idxs = clusterColsOf(clusterCol).map(schema.fieldIndex).toArray
-    r => idxs.map(i => if (i >= r.size || r.isNullAt(i)) null else r.get(i))
-  }
-
-  /** Lexicographic compare over compound keys, nulls first per
-    * component — the total order [[ClusterRange.sliceSortedCompound]]
-    * binary-searches.
-    */
-  private def cmpClusterKeys(a: Array[Any], b: Array[Any]): Int = {
-    var k = 0
-    while (k < a.length) {
-      val c = ClusterRange.cmpNullsFirst(a(k), b(k))
-      if (c != 0) return c
-      k += 1
-    }
-    0
-  }
-
-  /** The layout's row comparator: lexicographic over the compound key
-    * (nulls first — the order [[ClusterRange.sliceSortedCompound]]
-    * binary-searches) or unsigned Morton-code compare for a
-    * `zorder(...)` key ([[ZOrder.cmp]] — searched by nothing; it
-    * exists to make block zone maps tight). Every sort, merge, and
-    * fold shares this one dispatch, so the maintained invariant is
-    * identical across load/append/DML/recluster.
-    */
-  private def clusterRowCmp(schema: StructType, clusterCol: Option[String],
-      zBounds: Option[Array[Array[Long]]],
-      zKeyVersion: Int = ZOrder.KEY_VERSION): (Row, Row) => Int =
-    if (isZOrder(clusterCol)) {
-      val zk = zKeyFn(schema, clusterCol, zBounds, zKeyVersion)
-      (a, b) => ZOrder.cmp(zk(a), zk(b))
-    } else {
-      val key = clusterKeyOf(schema, clusterCol)
-      (a, b) => cmpClusterKeys(key(a), key(b))
-    }
-
   /** The effective Morton key of a z-layout: rank-normalized when the
     * table's boundaries are frozen ([[ZOrder.keyRanked]] — narrow and
     * wide dimensions weigh equally on the curve), raw bit interleave
@@ -968,12 +926,16 @@ object BucketStore {
   def zKeyOf(t: BucketTable): Row => Array[Long] =
     zKeyFn(t.schema, t.clusterCol, t.zBounds, t.zKeyVersion)
 
-  /** (key extractor, key comparator) for the layout — the keyed twin
-    * of [[clusterRowCmp]], for the sort/merge paths that compute each
-    * row's key ONCE and compare keys after (per-COMPARISON extraction
-    * allocated a fresh key array on both sides of every compare —
-    * ~2·n·log n allocations per bucket sort, the dominant driver-side
-    * cost of a clustered load before round 21).
+  /** The layout's order as (key extractor, key comparator), for the
+    * sort/merge paths that compute each row's key ONCE and compare keys
+    * after: a `zorder(...)` key is the row's Morton code, compared
+    * unsigned ([[ZOrder.cmp]] — searched by nothing; it exists to make
+    * block zone maps tight); a lexicographic key is the row itself
+    * under [[KeyOrder.rows]] (nulls first — the order
+    * [[ClusterRange.sliceSortedCompound]] binary-searches), which reads
+    * the key cells in place. Every sort, merge, and fold shares this
+    * one dispatch, so the maintained invariant is identical across
+    * load/append/DML/recluster.
     */
   private def clusterKeyedCmp(schema: StructType, clusterCol: Option[String],
       zBounds: Option[Array[Array[Long]]],
@@ -983,9 +945,8 @@ object BucketStore {
       (r => zk(r),
         (x, y) => ZOrder.cmp(x.asInstanceOf[Array[Long]], y.asInstanceOf[Array[Long]]))
     } else {
-      val key = clusterKeyOf(schema, clusterCol)
-      (r => key(r),
-        (x, y) => cmpClusterKeys(x.asInstanceOf[Array[Any]], y.asInstanceOf[Array[Any]]))
+      val ord = KeyOrder.rows(schema, clusterColsOf(clusterCol).map(schema.fieldIndex).toArray)
+      (r => r, (x, y) => ord.compare(x.asInstanceOf[Row], y.asInstanceOf[Row]))
     }
 
   /** Keep a bucket's rows sorted on the cluster key — the ordering the
@@ -1815,6 +1776,7 @@ object BucketStore {
     val nHosts = t.hosts.iterator.flatten
       .map(_.stripPrefix("host-").toInt).max + 1
     val keyIdx = t.schema.fieldIndex(t.keyCol)
+    val keyType = t.schema(keyIdx).dataType
     def keyOf(r: Row): Any =
       if (keyIdx >= r.size || r.isNullAt(keyIdx)) null else r.get(keyIdx)
     val buckets: Array[Array[Row]] =
@@ -1833,7 +1795,7 @@ object BucketStore {
         val lost = Array.fill(t.buckets.length)(false)
         t.buckets.indices.foreach { src =>
           effectiveRows(t, src).foreach { r =>
-            val b = routeBucket(None, numBuckets, keyOf(r), hrw = true)
+            val b = routeBucket(None, keyType, numBuckets, keyOf(r), hrw = true)
             if (b == src) kept(b) += r
             else {
               if (src < numBuckets) lost(src) = true
@@ -1856,7 +1818,7 @@ object BucketStore {
         // full-table shuffle — one-off cost, paid under MVCC
         val byBucket = Array.fill(numBuckets)(Vector.newBuilder[Row])
         t.buckets.indices.foreach(src => effectiveRows(t, src).foreach { r =>
-          byBucket(routeBucket(None, numBuckets, keyOf(r), hrw)) += r
+          byBucket(routeBucket(None, keyType, numBuckets, keyOf(r), hrw)) += r
         })
         byBucket.map(v => clusterSort(t.schema, t.clusterCol, v.result().toArray, t.zBounds,
           t.zKeyVersion))
@@ -1894,17 +1856,18 @@ object BucketStore {
   }
 
   /** Owning bucket under a RANGE layout: binary search of the sorted
-    * boundary array with the scan comparator ([[FilterEval.cmp]], so
-    * routing and zone-map pruning can never disagree). Nulls sort
-    * first → bucket 0.
+    * boundary array in the key type's [[KeyOrder]], the order scans
+    * prune by, so routing and zone-map pruning can never disagree.
+    * Nulls sort first → bucket 0.
     */
-  def rangeBucketFor(bounds: Array[Any], v: Any): Int = {
+  def rangeBucketFor(bounds: Array[Any], keyType: DataType, v: Any): Int = {
     if (v == null) return 0
+    val ord = KeyOrder.of(keyType)
     var lo = 0
     var hi = bounds.length
     while (lo < hi) {
       val mid = (lo + hi) >>> 1
-      if (FilterEval.cmp(v, bounds(mid)) <= 0) hi = mid else lo = mid + 1
+      if (ord.compare(v, bounds(mid)) <= 0) hi = mid else lo = mid + 1
     }
     lo
   }
@@ -1915,14 +1878,14 @@ object BucketStore {
     * route through here, so a layout's ownership rule has exactly one
     * definition.
     */
-  def routeBucket(rangeBounds: Option[Array[Any]], numBuckets: Int, v: Any,
+  def routeBucket(rangeBounds: Option[Array[Any]], keyType: DataType, numBuckets: Int, v: Any,
       hrw: Boolean = false): Int =
     rangeBounds match {
       case Some(bounds) =>
         require(bounds.length == numBuckets - 1,
           s"range layout has ${bounds.length} boundaries for $numBuckets buckets — " +
             "the table was re-laid-out between write planning and execution")
-        rangeBucketFor(bounds, v)
+        rangeBucketFor(bounds, keyType, v)
       case None if hrw => hrwBucketFor(v, numBuckets).getOrElse(
         throw new UnsupportedOperationException(
           s"bucket key value $v is not hash-bucketable"))
@@ -2000,7 +1963,9 @@ object BucketStore {
       .flatMap(effectiveRows(t, _)).map(keyOf).filter(_ != null).toArray
     require(keys.nonEmpty,
       s"repartition_range('$name'): cannot derive range boundaries from an empty table")
-    val sorted = keys.sortWith((a, b) => FilterEval.cmp(a, b) < 0)
+    val keyType = t.schema(keyIdx).dataType
+    val ord = KeyOrder.of(keyType)
+    val sorted = keys.sortWith((a, b) => ord.compare(a, b) < 0)
     // boundary = LAST element of each quantile block (upper bounds are
     // inclusive), so an exactly-divisible distribution splits evenly
     val bounds: Array[Any] = Array.tabulate(numBuckets - 1) { i =>
@@ -2009,7 +1974,7 @@ object BucketStore {
     }
     val byBucket = Array.fill(numBuckets)(Vector.newBuilder[Row])
     t.buckets.indices.foreach(src => effectiveRows(t, src).foreach(r =>
-      byBucket(routeBucket(Some(bounds), numBuckets, keyOf(r))) += r))
+      byBucket(routeBucket(Some(bounds), keyType, numBuckets, keyOf(r))) += r))
     val nHosts = t.hosts.iterator.flatten
       .map(_.stripPrefix("host-").toInt).max + 1
     val buckets = byBucket.map(v => clusterSort(t.schema, Some(t.keyCol), v.result().toArray))

@@ -185,6 +185,7 @@ class BucketedDeltaWriter(schema: StructType, keyCol: String, numBuckets: Int,
   private val fieldConverters = schema.fields.map(f =>
     org.apache.spark.sql.catalyst.CatalystTypeConverters.createToScalaConverter(f.dataType))
   private val keyIdx = schema.fieldIndex(keyCol)
+  private val keyType = schema(keyIdx).dataType
   private val dels = Array.fill(numBuckets)(Vector.newBuilder[Int])
   private val ins = Array.fill(numBuckets)(Vector.newBuilder[Row])
 
@@ -217,7 +218,7 @@ class BucketedDeltaWriter(schema: StructType, keyCol: String, numBuckets: Int,
 
   override def insert(row: InternalRow): Unit = {
     val r = toRow(row)
-    ins(BucketStore.routeBucket(rangeBounds, numBuckets, hrw = hrw, v =
+    ins(BucketStore.routeBucket(rangeBounds, keyType, numBuckets, hrw = hrw, v =
       if (r.isNullAt(keyIdx)) null else r.get(keyIdx))) += r
   }
 

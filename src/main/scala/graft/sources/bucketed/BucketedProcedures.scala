@@ -456,8 +456,9 @@ object BucketedProcedures {
         val parts = BucketStore.skipStatParts(t, b, t.keyCol).getOrElse(Seq.empty)
         val mins = parts.map(_.min).filter(_ != null)
         val maxs = parts.map(_.max).filter(_ != null)
-        val mn = mins.reduceOption((a, x) => if (FilterEval.cmp(x, a) < 0) x else a).orNull
-        val mx = maxs.reduceOption((a, x) => if (FilterEval.cmp(x, a) > 0) x else a).orNull
+        val ord = KeyOrder.of(t.schema(t.keyCol).dataType)
+        val mn = mins.reduceOption((a, x) => if (ord.compare(x, a) < 0) x else a).orNull
+        val mx = maxs.reduceOption((a, x) => if (ord.compare(x, a) > 0) x else a).orNull
         def str(v: Any) =
           if (v == null) null
           else org.apache.spark.unsafe.types.UTF8String.fromString(v.toString)

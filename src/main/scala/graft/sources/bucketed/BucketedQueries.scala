@@ -34,18 +34,16 @@ object BucketedQueries {
           s"graft_sink_ckpt_${spark.sparkContext.applicationId}_")
       else java.nio.file.Files
         .createTempDirectory(s"graft_sink_ckpt_${spark.sparkContext.applicationId}_")
-    // AvailableNow by default, exactly as StreamOps.runToMemory (one
-    // shot, engine-terminated; GRAFT_TRIGGER=processing for A/B)
-    val useAvailableNow = !sys.env.get("GRAFT_TRIGGER").contains("processing")
-    val w = df.writeStream
+    // AvailableNow, exactly as StreamOps.runToMemory (one shot,
+    // engine-terminated)
+    val q = df.writeStream
       .outputMode(outputMode)
       .option("checkpointLocation", ckpt.toString)
       .options(options)
-    val q = (if (useAvailableNow)
-      w.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()) else w)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       .toTable(tableFqn)
     try {
-      if (useAvailableNow) q.awaitTermination() else q.processAllAvailable()
+      q.awaitTermination()
     } finally {
       q.stop()
       try {
@@ -805,7 +803,7 @@ object BucketedQueries {
     * column span the whole time range. On the z-order layout the
     * curve keeps ts-locality regardless of position in the column
     * list, so the fetch-side block zone maps
-    * ([[HostConnection.fetchBucket]], [[BucketSkip.mayMatchBlock]])
+    * ([[HostConnection.fetchBucket]], [[BucketSkip.blockProbe]])
     * skip the blocks outside the window — ZOrderSpec pins that skip
     * count against the lexicographic twin. This is OPTIMIZE ZORDER's
     * reason to exist: multi-column pruning without committing to one

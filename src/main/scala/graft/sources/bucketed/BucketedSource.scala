@@ -601,7 +601,7 @@ object BucketedScanBuilder {
 }
 
 /** A pushed ORDER BY … LIMIT: sort keys restricted to single orderable
-  * columns (the [[FilterEval.cmp]] domain, NaN-safe), with explicit
+  * columns (ordered by [[KeyOrder]], NaN-safe), with explicit
   * direction and null ordering so the per-bucket heap reproduces
   * Spark's sort semantics exactly.
   */
@@ -619,7 +619,8 @@ object TopNSpec {
   import org.apache.spark.sql.connector.expressions.{NamedReference, NullOrdering, SortDirection, SortOrder}
   import org.apache.spark.sql.types._
 
-  private def orderableType(dt: DataType): Boolean = dt match {
+  /** The types a pushed ORDER BY key or MIN/MAX may have. */
+  private[bucketed] def orderableType(dt: DataType): Boolean = dt match {
     case _: IntegerType | _: LongType | _: ShortType | _: ByteType | _: DoubleType |
          _: FloatType | _: DecimalType | _: StringType | _: DateType | _: TimestampType => true
     case _ => false
@@ -642,33 +643,9 @@ object TopNSpec {
   }
 
   /** Row ordering matching the requested sort (ascending = "first"). */
-  def ordering(spec: TopNSpec, schema: StructType): Ordering[Row] = {
-    val cols = spec.keys.map(k => schema.fieldIndex(k.col)).toArray
-    val desc = spec.keys.map(_.desc).toArray
-    val nullsFirst = spec.keys.map(_.nullsFirst).toArray
-    val ords = spec.keys.map(k => FilterEval.columnOrdering(schema(k.col).dataType)).toArray
-    new Ordering[Row] {
-      def compare(a: Row, b: Row): Int = {
-        var i = 0
-        while (i < cols.length) {
-          val j = cols(i)
-          val an = a.isNullAt(j)
-          val bn = b.isNullAt(j)
-          val c =
-            if (an && bn) 0
-            else if (an) { if (nullsFirst(i)) -1 else 1 }
-            else if (bn) { if (nullsFirst(i)) 1 else -1 }
-            else {
-              val raw = ords(i).compare(a.get(j), b.get(j))
-              if (desc(i)) -raw else raw
-            }
-          if (c != 0) return c
-          i += 1
-        }
-        0
-      }
-    }
-  }
+  def ordering(spec: TopNSpec, schema: StructType): Ordering[Row] =
+    KeyOrder.rows(schema, spec.keys.map(k => schema.fieldIndex(k.col)).toArray,
+      spec.keys.map(_.desc).toArray, spec.keys.map(_.nullsFirst).toArray)
 }
 
 /** The pushed-aggregate subset the per-bucket reader evaluates exactly:
@@ -728,12 +705,9 @@ object AggSpec {
     case _ => None
   }
 
-  /** MIN/MAX only on types [[FilterEval.cmp]] orders exactly. */
-  private def orderable(schema: StructType, c: String): Boolean = schema(c).dataType match {
-    case _: IntegerType | _: LongType | _: ShortType | _: ByteType | _: DoubleType |
-         _: FloatType | _: DecimalType | _: StringType | _: DateType | _: TimestampType => true
-    case _ => false
-  }
+  /** MIN/MAX only on types [[KeyOrder]] orders exactly. */
+  private def orderable(schema: StructType, c: String): Boolean =
+    TopNSpec.orderableType(schema(c).dataType)
 
   /** SUM only where the partial is exactly mergeable by Spark's final
     * `Sum` over the partial column: integrals widen to Long (Spark's
@@ -837,8 +811,9 @@ class BucketedScan(name: String, required: StructType, filters: Array[Filter], v
     // surface the clustered-index slice in the plan (audit hook):
     // provable bounds on the cluster key mean the fetch will
     // binary-search the sorted run instead of streaming the bucket
-    val cluster = ClusterSlice.from(filters,
-        BucketStore.lexClusterColsOf(BucketStore.snapshotWithRetry(name, version).clusterCol))
+    val snap = BucketStore.snapshotWithRetry(name, version)
+    val cluster = ClusterSlice
+      .from(filters, snap.schema, BucketStore.lexClusterColsOf(snap.clusterCol))
       .map(s => s" clusterSlice=${s.describe}")
       .getOrElse("")
     s"graft-buckets:$name pushed=[${filters.mkString(", ")}] cols=[${required.fieldNames.mkString(",")}]$extra$cluster"
@@ -1059,7 +1034,7 @@ class BucketedAggPartitionReader(p: BucketInputPartition, spec: AggSpec,
     * unfiltered, ungrouped COUNT/COUNT(c)/MIN/MAX partial over a clean
     * (no merge-on-read state) bucket is answered from the SAME
     * commit-time zone maps pruning consults — manifest row counts,
-    * per-part null counts, min/max under [[FilterEval.cmp]] — without
+    * per-part null counts, min/max under [[KeyOrder]] — without
     * opening the bucket at all. On a reopened 100 TB table,
     * `SELECT min(ts), max(ts), count(*) FROM t` touches ZERO blocks
     * (spec-pinned via [[BucketedAggPartitionReader.statsServedCount]]
@@ -1090,19 +1065,21 @@ class BucketedAggPartitionReader(p: BucketInputPartition, spec: AggSpec,
           }
           case PMin(c) => parts(c) match {
             case Some(ps) =>
+              val ord = KeyOrder.of(table.schema(c).dataType)
               val vs = ps.flatMap(s => Option(s.min))
               slots(i) =
                 if (vs.isEmpty) null
-                else vs.reduce((x, y) => if (FilterEval.cmp(x, y) <= 0) x else y)
+                else vs.reduce((x, y) => if (ord.compare(x, y) <= 0) x else y)
               true
             case None => false
           }
           case PMax(c) => parts(c) match {
             case Some(ps) =>
+              val ord = KeyOrder.of(table.schema(c).dataType)
               val vs = ps.flatMap(s => Option(s.max))
               slots(i) =
                 if (vs.isEmpty) null
-                else vs.reduce((x, y) => if (FilterEval.cmp(x, y) >= 0) x else y)
+                else vs.reduce((x, y) => if (ord.compare(x, y) >= 0) x else y)
               true
             case None => false
           }
@@ -1248,7 +1225,8 @@ class BucketedAggPartitionReader(p: BucketInputPartition, spec: AggSpec,
         }
       }
     }
-    val range = ClusterSlice.from(filters, BucketStore.lexClusterColsOf(table.clusterCol))
+    val range =
+      ClusterSlice.from(filters, table.schema, BucketStore.lexClusterColsOf(table.clusterCol))
     val (c, rows) =
       if (p.prunedEmpty) // planner proved no row matches: emit the
         (null, RowCursor.over(Iterator.empty)) // empty aggregate, read nothing
@@ -1360,7 +1338,7 @@ private[bucketed] final class PartialFold(spec: AggSpec, schema: StructType) {
   /** MIN (`sign` -1) or MAX (`sign` 1) under the column's ordering. */
   private def extreme(c: String, i: Int, sign: Int): Update = {
     val j = schema.fieldIndex(c)
-    val ord = FilterEval.columnOrdering(schema(j).dataType)
+    val ord = KeyOrder.of(schema(j).dataType)
     (g, r) => {
       val v = r.get(j)
       if (v != null && (g.values(i) == null || ord.compare(v, g.values(i)) * sign > 0)) g.values(i) = v
@@ -1648,7 +1626,8 @@ private[bucketed] final class BucketRowStream(p: BucketInputPartition,
     // fetch to the qualifying run of the sorted bucket (pages moved ∝
     // answer); every row is still filter-checked below, so the slice
     // is never load-bearing for correctness
-    val range = ClusterSlice.from(filters, BucketStore.lexClusterColsOf(table.clusterCol))
+    val range =
+      ClusterSlice.from(filters, table.schema, BucketStore.lexClusterColsOf(table.clusterCol))
     val (c, rows) = BucketReaderSupport.openWithFailover(p, fetchSize, range,
       reverse = indexOrderedReverse.contains(true), blockFilters = filters)
     conn = c
@@ -1937,13 +1916,10 @@ private[bucketed] final class VectorizedColdScan(
     delta: Iterator[Row] = Iterator.empty,
     // non-null ⇔ SORTED-MERGE mode (clustered table with live delta):
     // delta rows interleave into the base stream at their cluster-key
-    // positions instead of appending. `mergeKeyIdx` are readStruct
-    // indices of the key components; `mergeCmp`/`mergeConv` come from
-    // [[VectorizedColdScan.mergeSupport]]. Ties emit base first —
-    // exactly [[BucketStore.folded]]'s merge.
-    mergeKeyIdx: Array[Int] = null,
-    mergeCmp: Array[(org.apache.spark.sql.vectorized.ColumnarBatch, Int, Any) => Int] = null,
-    mergeConv: Array[Any => Any] = null,
+    // positions instead of appending: `mergeKey` compares a base row
+    // with the pending delta row in the cluster order. Ties emit base
+    // first — exactly [[BucketStore.folded]]'s merge.
+    mergeKey: KeyOrder.BatchKey = null,
     // non-null ⇔ Z-ORDER SORTED-MERGE mode (round 18): the serving
     // order is the rank-normalized Morton curve, so base rows key
     // through [[VectorizedColdScan.zBatchKey]] straight off the
@@ -1993,7 +1969,7 @@ private[bucketed] final class VectorizedColdScan(
     }
 
   def nextBatch(): Boolean = {
-    if (mergeKeyIdx != null || zBaseKey != null) return mergedBatch()
+    if (mergeKey != null || zBaseKey != null) return mergedBatch()
     if (!inDelta) {
       if (baseBatch()) return true
       inDelta = true
@@ -2006,7 +1982,6 @@ private[bucketed] final class VectorizedColdScan(
   private var curSelLen = 0
   private var curSelPos = 0
   private var pendingDelta: Row = _
-  private var pendingKey: Array[Any] = _
   private var pendingZ: Array[Long] = _
   private var deltaInit = false
 
@@ -2053,34 +2028,8 @@ private[bucketed] final class VectorizedColdScan(
       } else pendingDelta = null
     } else if (delta.hasNext) {
       pendingDelta = delta.next()
-      if (pendingKey == null) pendingKey = new Array[Any](mergeKeyIdx.length)
-      var k = 0
-      while (k < mergeKeyIdx.length) {
-        val v = pendingDelta.get(mergeKeyIdx(k))
-        pendingKey(k) = if (v == null) null else mergeConv(k)(v)
-        k += 1
-      }
+      mergeKey.set(pendingDelta)
     } else pendingDelta = null
-  }
-
-  /** Lexicographic compare of the base survivor at `r` against the
-    * pending delta key: nulls first per component, then the typed
-    * comparator — [[ClusterRange.cmpNullsFirst]]'s outcomes.
-    */
-  private def cmpBaseDelta(r: Int): Int = {
-    var k = 0
-    while (k < mergeKeyIdx.length) {
-      val vecNull = curIn.column(mergeKeyIdx(k)).isNullAt(r)
-      val dv = pendingKey(k)
-      val c =
-        if (vecNull && dv == null) 0
-        else if (vecNull) -1
-        else if (dv == null) 1
-        else mergeCmp(k)(curIn, r, dv)
-      if (c != 0) return c
-      k += 1
-    }
-    0
   }
 
   /** Emit one merged batch: base survivors and live delta rows
@@ -2103,7 +2052,7 @@ private[bucketed] final class VectorizedColdScan(
         def baseFirst: Boolean = {
           val r = sel(curSelPos)
           val c = if (zBaseKey != null) ZOrder.cmp(zBaseKey(curIn, r), pendingZ)
-                  else cmpBaseDelta(r)
+                  else mergeKey.compare(curIn, r)
           c <= 0 // ties: base first, the fold's stable-sort order
         }
         if (haveBase && (pendingDelta == null || baseFirst)) {
@@ -2241,7 +2190,7 @@ private[bucketed] object VectorizedColdScan {
       overlay: Option[(java.util.BitSet, Iterator[Row])] = None,
       // non-empty ⇔ SORTED-MERGE mode: the bucket's serving order is
       // the lexicographic cluster order over these columns (nulls
-      // first, FilterEval.cmp per component — the fold's comparator),
+      // first, [[KeyOrder]] per component — the fold's comparator),
       // so live delta rows interleave into the base stream instead of
       // appending. Columns join the read schema; an unsupported
       // cluster type falls back to the fold path (None).
@@ -2280,18 +2229,15 @@ private[bucketed] object VectorizedColdScan {
           s"filters=${filters.mkString(",")} required=${required.fieldNames.mkString(",")}")
       return None
     }
-    // sorted-merge machinery: per merge-key component, a vector-vs-
-    // converted-external comparator and the external→internal
-    // converter. Any component outside the supported set falls back
-    // to the fold path before a reader is opened.
+    // sorted-merge machinery: the cluster order between a base row's
+    // vectors and a delta row. A key column without a vector compare
+    // falls back to the fold path before a reader is opened.
     val mergeIdx: Array[Int] =
       if (mergeCols.isEmpty) null
       else if (!mergeCols.forall(readStruct.fieldNames.contains)) return None
       else mergeCols.map(readStruct.fieldIndex).toArray
-    val mergeParts =
-      if (mergeIdx == null) null
-      else mergeIdx.map(ci => mergeSupport(readStruct(ci).dataType, ci))
-    if (mergeParts != null && mergeParts.exists(_.isEmpty)) return None
+    if (mergeIdx != null &&
+      !mergeIdx.forall(ci => KeyOrder.vectorOrderable(readStruct(ci).dataType))) return None
     // z-order merge machinery: the batch-side Morton key over the z
     // columns at their readStruct positions. A dimension type without
     // a vector key falls back to the fold path before a reader opens.
@@ -2329,21 +2275,12 @@ private[bucketed] object VectorizedColdScan {
       else overlay.map { case (_, it) =>
         val idx = readStruct.fieldNames.map(fullSchema.fieldIndex).toIndexedSeq
         val projected = it.map(dr => Row.fromSeq(idx.map(i => if (i < dr.size) dr.get(i) else null)))
-        if (mergeCols.isEmpty) projected
+        if (mergeIdx == null) projected
         else {
-          val kIdx = mergeCols.map(readStruct.fieldIndex).toArray
-          def cmpRows(a: Row, b: Row): Int = {
-            var k = 0
-            while (k < kIdx.length) {
-              val c = ClusterRange.cmpNullsFirst(a.get(kIdx(k)), b.get(kIdx(k)))
-              if (c != 0) return c
-              k += 1
-            }
-            0
-          }
+          val ord = KeyOrder.rows(readStruct, mergeIdx)
           // policy-bounded materialization: the delta is heap-resident
           // by construction (≤ autoCompactRatioPct of the base)
-          projected.toArray.sortWith((a, b) => cmpRows(a, b) < 0).iterator
+          projected.toArray.sortWith((a, b) => ord.compare(a, b) < 0).iterator
         }
       }.getOrElse(Iterator.empty)
     var r: org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader = null
@@ -2370,9 +2307,7 @@ private[bucketed] object VectorizedColdScan {
       Some(new VectorizedColdScan(r, readStruct, required, filterFn, batchSize, limit,
         deleted = overlay.map(_._1).filterNot(_.isEmpty).orNull,
         delta = deltaProjected,
-        mergeKeyIdx = mergeIdx,
-        mergeCmp = if (mergeParts == null) null else mergeParts.map(_.get._1),
-        mergeConv = if (mergeParts == null) null else mergeParts.map(_.get._2),
+        mergeKey = if (mergeIdx == null) null else new KeyOrder.BatchKey(readStruct, mergeIdx),
         zBaseKey = zBase.orNull,
         zDelta = zDeltaSorted))
     } catch {
@@ -2391,77 +2326,6 @@ private[bucketed] object VectorizedColdScan {
 
   private[bucketed] def copierSupported(t: org.apache.spark.sql.types.DataType): Boolean =
     BucketedColumnarPartitionReader.supported(t)
-
-  /** (vector-vs-converted-external comparator, external→internal
-    * converter) for ONE sorted-merge key component at readStruct index
-    * `ci` — the same outcomes as the fold's per-component comparator
-    * ([[ClusterRange.cmpNullsFirst]] → [[FilterEval.cmp]] on external
-    * values; null handling lives in the caller): UTF8String byte order
-    * IS code-point order, non-finite doubles order through IEEE
-    * compare with NaN largest, -0.0 == 0.0. None for a type outside
-    * the vector-supported set (the fold path serves it). BooleanType
-    * is deliberately absent — the fold's own comparator refuses
-    * booleans, so no clustered layout can exist on one.
-    */
-  private def mergeSupport(t: org.apache.spark.sql.types.DataType, ci: Int)
-      : Option[((org.apache.spark.sql.vectorized.ColumnarBatch, Int, Any) => Int, Any => Any)] = {
-    import org.apache.spark.sql.types._
-    import org.apache.spark.sql.catalyst.util.DateTimeUtils
-    import org.apache.spark.sql.vectorized.ColumnarBatch
-    import org.apache.spark.unsafe.types.UTF8String
-    type Cmp = (ColumnarBatch, Int, Any) => Int
-    t match {
-      case LongType => Some((
-        ((b, r, v) => java.lang.Long.compare(b.column(ci).getLong(r), v.asInstanceOf[Long])): Cmp,
-        identity[Any] _))
-      case IntegerType => Some((
-        ((b, r, v) => Integer.compare(b.column(ci).getInt(r), v.asInstanceOf[Int])): Cmp,
-        identity[Any] _))
-      case ShortType => Some((
-        ((b, r, v) => java.lang.Short.compare(b.column(ci).getShort(r), v.asInstanceOf[Short])): Cmp,
-        identity[Any] _))
-      case ByteType => Some((
-        ((b, r, v) => java.lang.Byte.compare(b.column(ci).getByte(r), v.asInstanceOf[Byte])): Cmp,
-        identity[Any] _))
-      case DoubleType => Some((
-        ((b, r, v) => VectorFilterEval.cmpDouble(b.column(ci).getDouble(r),
-          v.asInstanceOf[Double])): Cmp,
-        identity[Any] _))
-      case FloatType => Some((
-        ((b, r, v) => VectorFilterEval.cmpDouble(b.column(ci).getFloat(r).toDouble,
-          v.asInstanceOf[Float].toDouble)): Cmp,
-        identity[Any] _))
-      case StringType => Some((
-        ((b, r, v) => b.column(ci).getUTF8String(r).compareTo(v.asInstanceOf[UTF8String])): Cmp,
-        ((v: Any) => UTF8String.fromString(v.asInstanceOf[String])): Any => Any))
-      case TimestampType => Some((
-        ((b, r, v) => java.lang.Long.compare(b.column(ci).getLong(r), v.asInstanceOf[Long])): Cmp,
-        ((v: Any) => v match {
-          case x: java.sql.Timestamp => DateTimeUtils.fromJavaTimestamp(x)
-          case x: java.time.Instant => DateTimeUtils.instantToMicros(x)
-        }): Any => Any))
-      case TimestampNTZType => Some((
-        ((b, r, v) => java.lang.Long.compare(b.column(ci).getLong(r), v.asInstanceOf[Long])): Cmp,
-        ((v: Any) => DateTimeUtils.localDateTimeToMicros(
-          v.asInstanceOf[java.time.LocalDateTime])): Any => Any))
-      case DateType => Some((
-        ((b, r, v) => Integer.compare(b.column(ci).getInt(r), v.asInstanceOf[Int])): Cmp,
-        ((v: Any) => v match {
-          case x: java.sql.Date => DateTimeUtils.fromJavaDate(x)
-          case x: java.time.LocalDate => DateTimeUtils.localDateToDays(x)
-        }): Any => Any))
-      case dt: org.apache.spark.sql.types.DecimalType => Some((
-        // BigDecimal.compareTo is scale-insensitive — the same
-        // outcomes as the fold's FilterEval.cmp on external decimals
-        ((b, r, v) => b.column(ci).getDecimal(r, dt.precision, dt.scale)
-          .toJavaBigDecimal.compareTo(v.asInstanceOf[java.math.BigDecimal])): Cmp,
-        ((v: Any) => v match {
-          case x: java.math.BigDecimal => x
-          case x: scala.math.BigDecimal => x.bigDecimal
-        }): Any => Any))
-      case _ => None
-    }
-  }
 
   /** Per-dimension Morton raw key from VECTOR values (round 18 — the
     * z-order sorted-merge's base side): must produce the SAME unsigned
@@ -2672,10 +2536,8 @@ object BucketedColumnarPartitionReader {
   *
   * Each leaf resolves its column index and its comparator once, when
   * the scan compiles its filters; a row then runs with no name lookup
-  * and no allocation. Comparisons keep [[cmp]]'s answers exactly: a
-  * value of the column's own external class against a literal of that
-  * class takes `cmp`'s same-class case directly ([[columnOrdering]]),
-  * and every other pairing calls `cmp`.
+  * and no allocation. Comparisons are the column type's
+  * [[KeyOrder.of]], the order the store sorts and prunes by.
   */
 object FilterEval {
   import org.apache.spark.sql.catalyst.util.DateTimeUtils
@@ -2815,15 +2677,16 @@ object FilterEval {
   }
 
   /** `x op v` for the non-null values `x` of a column of type `dt`. */
-  private def valueTest(dt: DataType, v: Any, op: Int): Any => Boolean = v match {
-    // String.equals decides equality exactly as the code-point compare does
-    case s: String if op == Eq && dt == StringType => {
-      case x: String => x.equals(s)
-      case x => cmp(x, v) == 0
+  private def valueTest(dt: DataType, v: Any, op: Int): Any => Boolean = {
+    val ord = KeyOrder.of(dt)
+    v match {
+      // String.equals decides equality exactly as the code-point compare does
+      case s: String if op == Eq => {
+        case x: String => x.equals(s)
+        case x => ord.compare(x, v) == 0
+      }
+      case _ => x => (signBit(ord.compare(x, v)) & op) != 0
     }
-    case _ =>
-      val ord = columnOrdering(dt)
-      x => (signBit(ord.compare(x, v)) & op) != 0
   }
 
   /** SQL IN: true if any literal matches; if none match but the column
@@ -2858,12 +2721,12 @@ object FilterEval {
   /** External-value membership probe over a pre-converted canonical
     * key set (round 19), the external-value flavor of
     * [[VectorFilterEval.inProbe]]: `In` literal lists convert ONCE into
-    * a sorted canonical-key array / hash set instead of paying [[cmp]]'s
-    * per-literal dispatch — and, on the Number/Number path, TWO
-    * BigDecimal constructions — per row. None when any literal/type
-    * pairing falls outside the canonicalizer; the per-literal test keeps
-    * exactness then. Canonical keys mirror [[cmp]] equality: dates/
-    * timestamps through epoch days/micros (both external flavors),
+    * a sorted canonical-key array / hash set instead of paying a
+    * per-literal compare — and, for a mixed-width pair, TWO BigDecimal
+    * constructions — per row. None when any literal/type pairing falls
+    * outside the canonicalizer; the per-literal test keeps exactness
+    * then. Canonical keys mirror [[KeyOrder]] equality: dates/
+    * timestamps through epoch days/micros ([[KeyOrder.internal]]),
     * floats through [[VectorFilterEval.canonicalBits]] (-0.0 == 0.0,
     * NaN == NaN), compact decimals through the unscaled long at the
     * column scale (an unrepresentable literal matches nothing and
@@ -2884,48 +2747,28 @@ object FilterEval {
       case x: java.lang.Short => Some(x.longValue)
       case x: java.lang.Integer => Some(x.longValue)
       case x: java.lang.Long => Some(x.longValue)
-      case _ => None // fractional literals keep cmp's BigDecimal exactness
+      case _ => None // fractional literals keep the order's BigDecimal exactness
+    }
+    // the probe key of a vector form: floats by their canonical bits
+    def key(n: Any): Long = n match {
+      case d: java.lang.Double => VectorFilterEval.canonicalBits(d)
+      case f: java.lang.Float => VectorFilterEval.canonicalBits(f.toDouble)
+      case x => x.asInstanceOf[Number].longValue
     }
     dt match {
       case ByteType | ShortType | IntegerType | LongType =>
         longProbe(integral, r => r.get(i).asInstanceOf[Number].longValue)
-      // literal width must MATCH the column width: cmp's toString→
-      // BigDecimal equality can rate a Float literal equal to a Double
-      // value the canonical bits would reject (0.1f vs 0.1d) — the
-      // mixed-width pairing stays on the exact per-literal path
-      case DoubleType => longProbe({
-        case x: java.lang.Double => Some(VectorFilterEval.canonicalBits(x.doubleValue))
-        case _ => None
-      }, r => VectorFilterEval.canonicalBits(r.get(i).asInstanceOf[Number].doubleValue))
-      case FloatType => longProbe({
-        case x: java.lang.Float => Some(VectorFilterEval.canonicalBits(x.doubleValue))
-        case _ => None
-      }, r => VectorFilterEval.canonicalBits(r.get(i).asInstanceOf[Number].doubleValue))
-      case DateType =>
-        val days: Any => Option[Long] = {
-          case d: java.sql.Date => Some(DateTimeUtils.fromJavaDate(d).toLong)
-          case d: java.time.LocalDate => Some(DateTimeUtils.localDateToDays(d).toLong)
-          case _ => None
-        }
-        longProbe(days, r => days(r.get(i)).get)
-      case TimestampType =>
-        val micros: Any => Option[Long] = {
-          case t: java.sql.Timestamp => Some(DateTimeUtils.fromJavaTimestamp(t))
-          case t: java.time.Instant => Some(DateTimeUtils.instantToMicros(t))
-          case _ => None
-        }
-        longProbe(micros, r => micros(r.get(i)).get)
-      case TimestampNTZType => longProbe({
-        case t: java.time.LocalDateTime => Some(DateTimeUtils.localDateTimeToMicros(t))
-        case _ => None
-      }, r => DateTimeUtils.localDateTimeToMicros(r.get(i).asInstanceOf[java.time.LocalDateTime]))
+      // literal width must MATCH the column width (KeyOrder.internal has
+      // no form for another width): the exact order can rate a Float
+      // literal equal to a Double value the canonical bits would reject
+      // (0.1f vs 0.1d) — the mixed-width pairing stays on the exact
+      // per-literal path
+      case DoubleType | FloatType | DateType | TimestampType | TimestampNTZType =>
+        longProbe(v => Option(KeyOrder.internal(dt, v)).map(key),
+          r => key(KeyOrder.internal(dt, r.get(i))))
       case dt: DecimalType if dt.precision <= Decimal.MAX_LONG_DIGITS =>
-        val lit: Any => Option[Option[Long]] = {
-          case x: java.math.BigDecimal => Some(VectorFilterEval.unscaledExact(x, dt.scale))
-          case x: scala.math.BigDecimal => Some(VectorFilterEval.unscaledExact(x.bigDecimal, dt.scale))
-          case _ => None
-        }
-        val conv = vs.map(lit)
+        val conv = vs.map(v => Option(KeyOrder.internal(dt, v)).map(x =>
+          KeyOrder.unscaledExact(x.asInstanceOf[java.math.BigDecimal], dt.scale)))
         if (conv.contains(None)) None
         else {
           val arr: Array[Long] = conv.flatMap(_.get).distinct.sorted
@@ -2935,7 +2778,7 @@ object FilterEval {
             // declares (the cold path normalizes, the heap path does
             // not): a value whose rescale to the column scale is
             // inexact — or whose unscaled overflows a long — is not
-            // representable at that scale, so it cannot cmp-equal any
+            // representable at that scale, so it cannot equal any
             // of the (exactly rescaled) list members: definitively
             // false, never an exception
             try java.util.Arrays.binarySearch(arr,
@@ -2967,115 +2810,5 @@ object FilterEval {
         else Some(r => if (r.isNullAt(i)) Unknown else bool(set.contains(r.getString(i))))
       case _ => None
     }
-  }
-
-  /** [[cmp]] for the values of one column type, resolved once: a pair
-    * of the column's own external class takes that class's case of
-    * `cmp` directly, and any other pair calls `cmp`, so every answer is
-    * `cmp`'s. The row predicate's comparisons, the pushed MIN/MAX fold
-    * and the pushed TopN heap order values through it.
-    */
-  private[bucketed] def columnOrdering(dt: DataType): Ordering[Any] = dt match {
-    // isInstanceOf tests, not a `(a, b) match`: scalac allocates the
-    // scrutinee tuple, once per compare
-    case LongType => (a, b) =>
-      if (a.isInstanceOf[java.lang.Long] && b.isInstanceOf[java.lang.Long])
-        java.lang.Long.compare(a.asInstanceOf[Long], b.asInstanceOf[Long])
-      else cmp(a, b)
-    case IntegerType => (a, b) =>
-      if (a.isInstanceOf[java.lang.Integer] && b.isInstanceOf[java.lang.Integer])
-        Integer.compare(a.asInstanceOf[Int], b.asInstanceOf[Int])
-      else cmp(a, b)
-    case DoubleType => (a, b) =>
-      if (a.isInstanceOf[java.lang.Double] && b.isInstanceOf[java.lang.Double])
-        VectorFilterEval.cmpDouble(a.asInstanceOf[Double], b.asInstanceOf[Double])
-      else cmp(a, b)
-    case StringType => (a, b) =>
-      if (a.isInstanceOf[String] && b.isInstanceOf[String])
-        cmpCodePoints(a.asInstanceOf[String], b.asInstanceOf[String])
-      else cmp(a, b)
-    case _: DecimalType => (a, b) =>
-      if (a.isInstanceOf[java.math.BigDecimal] && b.isInstanceOf[java.math.BigDecimal])
-        a.asInstanceOf[java.math.BigDecimal].compareTo(b.asInstanceOf[java.math.BigDecimal])
-      else cmp(a, b)
-    case _ => (a, b) => cmp(a, b)
-  }
-
-  private[bucketed] def cmp(a: Any, b: Any): Int = (a, b) match {
-    // Spark compares strings as UTF8String = UTF-8 BYTE order = code
-    // POINT order; Java's String.compareTo is UTF-16 code-UNIT order,
-    // which disagrees once supplementary characters (surrogate pairs)
-    // meet BMP chars in [U+E000, U+FFFF]. The store's sort, zone maps,
-    // range slices, and the reported output ordering must all use
-    // Spark's order or an ordering claim would lie for non-BMP text.
-    case (x: String, y: String) => cmpCodePoints(x, y)
-    case (x: java.sql.Timestamp, y: java.sql.Timestamp) => x.compareTo(y)
-    case (x: java.sql.Date, y: java.sql.Date) => x.compareTo(y)
-    case (x: java.time.LocalDateTime, y: java.time.LocalDateTime) => x.compareTo(y)
-    case (x: java.time.Instant, y: java.time.Instant) => x.compareTo(y)
-    case (x: java.time.LocalDate, y: java.time.LocalDate) => x.compareTo(y)
-    // a session flipping datetime.java8API mid-run mixes the external
-    // shapes of one instant — normalize through epoch micros/days
-    case (x: java.time.Instant, y: java.sql.Timestamp) =>
-      java.lang.Long.compare(DateTimeUtils.instantToMicros(x), DateTimeUtils.fromJavaTimestamp(y))
-    case (x: java.sql.Timestamp, y: java.time.Instant) =>
-      java.lang.Long.compare(DateTimeUtils.fromJavaTimestamp(x), DateTimeUtils.instantToMicros(y))
-    case (x: java.time.LocalDate, y: java.sql.Date) =>
-      Integer.compare(DateTimeUtils.localDateToDays(x), DateTimeUtils.fromJavaDate(y))
-    case (x: java.sql.Date, y: java.time.LocalDate) =>
-      Integer.compare(DateTimeUtils.fromJavaDate(x), DateTimeUtils.localDateToDays(y))
-    // SAME-CLASS primitives first (round 19): cluster sorts, zone-map
-    // min/max folds, and range slices compare millions of same-typed
-    // values — the generic Number path below costs TWO string→
-    // BigDecimal round-trips per compare. Outcomes are bit-identical:
-    // shortest-repr toString is injective per value, BigDecimal("-0.0")
-    // equals BigDecimal("0.0") (cmpDouble's x == y), and non-finite
-    // doubles take the same Double.compare order either way.
-    case (x: java.lang.Long, y: java.lang.Long) =>
-      java.lang.Long.compare(x.longValue, y.longValue)
-    case (x: java.lang.Integer, y: java.lang.Integer) =>
-      Integer.compare(x.intValue, y.intValue)
-    case (x: java.lang.Short, y: java.lang.Short) =>
-      java.lang.Short.compare(x.shortValue, y.shortValue)
-    case (x: java.lang.Byte, y: java.lang.Byte) =>
-      java.lang.Byte.compare(x.byteValue, y.byteValue)
-    case (x: java.lang.Double, y: java.lang.Double) =>
-      VectorFilterEval.cmpDouble(x.doubleValue, y.doubleValue)
-    case (x: java.lang.Float, y: java.lang.Float) =>
-      VectorFilterEval.cmpDouble(x.floatValue.toDouble, y.floatValue.toDouble)
-    case (x: java.math.BigDecimal, y: java.math.BigDecimal) => x.compareTo(y)
-    case (x: Number, y: Number) =>
-      // NaN/Infinity cannot round-trip through BigDecimal (it throws
-      // NumberFormatException on legal input), and BigDecimal could not
-      // reproduce Spark's NaN-as-largest ordering anyway — route any
-      // non-finite float through IEEE compare (Double.compare orders
-      // -Inf < finite < +Inf < NaN, exactly Spark's ordering). Finite
-      // mixed-width numbers keep the exact BigDecimal path (doubleValue
-      // would lose precision on longs past 2^53).
-      if (nonFinite(x) || nonFinite(y))
-        java.lang.Double.compare(x.doubleValue(), y.doubleValue())
-      else new java.math.BigDecimal(x.toString).compareTo(new java.math.BigDecimal(y.toString))
-    case _ => throw new IllegalStateException(
-      s"incomparable filter operands: ${a.getClass} vs ${b.getClass}")
-  }
-
-  /** UTF-8-byte-equivalent string order (code points), allocation-free. */
-  private def cmpCodePoints(x: String, y: String): Int = {
-    var i = 0
-    var j = 0
-    while (i < x.length && j < y.length) {
-      val cx = x.codePointAt(i)
-      val cy = y.codePointAt(j)
-      if (cx != cy) return Integer.compare(cx, cy)
-      i += Character.charCount(cx)
-      j += Character.charCount(cy)
-    }
-    Integer.compare(x.length - i, y.length - j)
-  }
-
-  private def nonFinite(n: Number): Boolean = n match {
-    case d: java.lang.Double => d.isNaN || d.isInfinite
-    case f: java.lang.Float => f.isNaN || f.isInfinite
-    case _ => false
   }
 }

@@ -476,6 +476,7 @@ class BucketedDataWriter(schema: StructType, keyCol: String, numBuckets: Int,
   private val fieldConverters = schema.fields.map(f =>
     org.apache.spark.sql.catalyst.CatalystTypeConverters.createToScalaConverter(f.dataType))
   private val keyIdx = schema.fieldIndex(keyCol)
+  private val keyType = schema(keyIdx).dataType
   private val buf = Array.fill(numBuckets)(Vector.newBuilder[Row])
   // CHECK constraint, compiled task-side from the string (expressions
   // never serialize; the parser and registry are executor-local)
@@ -518,7 +519,7 @@ class BucketedDataWriter(schema: StructType, keyCol: String, numBuckets: Int,
           s"CHECK constraint violation on '$tableName': (${checkExpr.get}) is false for row " +
             row.toString.take(200))
     }
-    buf(BucketStore.routeBucket(rangeBounds, numBuckets, row.get(keyIdx), hrw)) += row
+    buf(BucketStore.routeBucket(rangeBounds, keyType, numBuckets, row.get(keyIdx), hrw)) += row
   }
 
   override def commit(): WriterCommitMessage = BucketWriteCommit(buf.map(_.result().toArray))

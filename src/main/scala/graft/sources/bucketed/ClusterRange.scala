@@ -2,7 +2,7 @@ package graft.sources.bucketed
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.sources._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, NullType, StructType}
 
 /** Range bounds on a clustered column, provable from a scan's pushed
   * conjuncts — the fetch-side companion of [[BucketPruning]]: where
@@ -32,46 +32,39 @@ final case class ClusterRange(lo: Option[(Any, Boolean)], hi: Option[(Any, Boole
 
 object ClusterRange {
 
-  /** Total order with SQL sort semantics: null sorts FIRST (before
-    * every value), matching the clustered layout [[BucketStore]]
-    * maintains. Non-null comparisons delegate to [[FilterEval.cmp]].
+  /** Bounds on `col` provable from the pushed conjuncts, compared in
+    * the column's [[KeyOrder]]. Only top-level comparisons participate
+    * (the filter array is an AND); anything else is ignored —
+    * conservative by construction.
     */
-  private[bucketed] def cmpNullsFirst(a: Any, b: Any): Int =
-    if (a == null && b == null) 0
-    else if (a == null) -1
-    else if (b == null) 1
-    else FilterEval.cmp(a, b)
-
-  /** Bounds on `col` provable from the pushed conjuncts. Only
-    * top-level comparisons participate (the filter array is an AND);
-    * anything else is ignored — conservative by construction.
-    */
-  def from(filters: Array[Filter], col: String): ClusterRange =
+  def from(filters: Array[Filter], col: String, ord: Ordering[Any]): ClusterRange =
     filters.foldLeft(ClusterRange(None, None)) { (acc, f) =>
       f match {
-        case GreaterThan(c, v) if c == col && v != null => tightenLo(acc, v, incl = false)
-        case GreaterThanOrEqual(c, v) if c == col && v != null => tightenLo(acc, v, incl = true)
-        case LessThan(c, v) if c == col && v != null => tightenHi(acc, v, incl = false)
-        case LessThanOrEqual(c, v) if c == col && v != null => tightenHi(acc, v, incl = true)
+        case GreaterThan(c, v) if c == col && v != null => tightenLo(ord, acc, v, incl = false)
+        case GreaterThanOrEqual(c, v) if c == col && v != null => tightenLo(ord, acc, v, incl = true)
+        case LessThan(c, v) if c == col && v != null => tightenHi(ord, acc, v, incl = false)
+        case LessThanOrEqual(c, v) if c == col && v != null => tightenHi(ord, acc, v, incl = true)
         case EqualTo(c, v) if c == col && v != null =>
-          tightenHi(tightenLo(acc, v, incl = true), v, incl = true)
+          tightenHi(ord, tightenLo(ord, acc, v, incl = true), v, incl = true)
         case _ => acc
       }
     }
 
-  private def tightenLo(r: ClusterRange, v: Any, incl: Boolean): ClusterRange = r.lo match {
+  private def tightenLo(ord: Ordering[Any], r: ClusterRange, v: Any,
+      incl: Boolean): ClusterRange = r.lo match {
     case None => r.copy(lo = Some((v, incl)))
     case Some((cur, curIncl)) =>
-      val c = cmpNullsFirst(v, cur)
+      val c = ord.compare(v, cur)
       if (c > 0) r.copy(lo = Some((v, incl)))
       else if (c == 0) r.copy(lo = Some((cur, curIncl && incl)))
       else r
   }
 
-  private def tightenHi(r: ClusterRange, v: Any, incl: Boolean): ClusterRange = r.hi match {
+  private def tightenHi(ord: Ordering[Any], r: ClusterRange, v: Any,
+      incl: Boolean): ClusterRange = r.hi match {
     case None => r.copy(hi = Some((v, incl)))
     case Some((cur, curIncl)) =>
-      val c = cmpNullsFirst(v, cur)
+      val c = ord.compare(v, cur)
       if (c < 0) r.copy(hi = Some((v, incl)))
       else if (c == 0) r.copy(hi = Some((cur, curIncl && incl)))
       else r
@@ -84,8 +77,8 @@ object ClusterRange {
     * predicate); with only an upper bound the nulls stay in the slice
     * and [[FilterEval]] drops them per row (conservative, simple).
     */
-  def sliceSorted(rows: Array[Row], i: Int, range: ClusterRange): (Int, Int) =
-    sliceSortedCompound(rows, Array(i), Seq(range))
+  def sliceSorted(rows: Array[Row], schema: StructType, i: Int, range: ClusterRange): (Int, Int) =
+    sliceSortedCompound(rows, schema, Array(i), Seq(range))
 
   /** The per-column bounds a COMPOUND cluster key can actually use:
     * the composite-index prefix rule. A lexicographic sort on
@@ -96,13 +89,15 @@ object ClusterRange {
     * scattered across every c1 run) and are left to the row filter.
     * Returns one [[ClusterRange]] per usable column, possibly empty.
     */
-  def compoundFrom(filters: Array[Filter], cols: Seq[String]): Seq[ClusterRange] = {
+  def compoundFrom(filters: Array[Filter], schema: StructType, cols: Seq[String]): Seq[ClusterRange] = {
     val out = Seq.newBuilder[ClusterRange]
     var open = true
     for (c <- cols if open) {
-      val r = from(filters, c)
+      // a column the schema lacks has no pushed bound, so no compare
+      val ord = KeyOrder.of(schema.find(_.name == c).fold[DataType](NullType)(_.dataType))
+      val r = from(filters, c, ord)
       val exact = (r.lo, r.hi) match {
-        case (Some((lv, true)), Some((hv, true))) => cmpNullsFirst(lv, hv) == 0
+        case (Some((lv, true)), Some((hv, true))) => ord.compare(lv, hv) == 0
         case _ => false
       }
       if (exact) out += r
@@ -121,23 +116,9 @@ object ClusterRange {
     * search over the bound TUPLE — the tuple's last component carries
     * the only open inclusivity; everything before it is an equality.
     */
-  def sliceSortedCompound(rows: Array[Row], idxs: Array[Int], ranges: Seq[ClusterRange]): (Int, Int) = {
+  def sliceSortedCompound(rows: Array[Row], schema: StructType, idxs: Array[Int],
+      ranges: Seq[ClusterRange]): (Int, Int) = {
     if (ranges.isEmpty) return (0, rows.length)
-    def valueAt(m: Int, i: Int): Any = {
-      val r = rows(m)
-      // pre-ALTER short rows read added columns as NULL (fetch-path padding)
-      if (i >= r.size || r.isNullAt(i)) null else r.get(i)
-    }
-    // row's key prefix vs bound tuple, lexicographic
-    def cmpRow(m: Int, bound: IndexedSeq[Any]): Int = {
-      var k = 0
-      while (k < bound.length) {
-        val c = cmpNullsFirst(valueAt(m, idxs(k)), bound(k))
-        if (c != 0) return c
-        k += 1
-      }
-      0
-    }
     // first index where keep(m) is true (keep monotone over the sort)
     def lowerBound(keep: Int => Boolean): Int = {
       var lo = 0
@@ -150,24 +131,30 @@ object ClusterRange {
     }
     // the bound tuple for one side: bounds up to the first missing one
     // (equality columns always carry both sides; only the trailing
-    // range column can be one-sided). Inclusivity = the tuple's LAST
-    // component's — earlier components are exact matches.
-    def tuple(side: ClusterRange => Option[(Any, Boolean)]): (IndexedSeq[Any], Boolean) = {
+    // range column can be one-sided), as a row holding them at the key
+    // columns, with the cluster order over that key prefix.
+    // Inclusivity = the tuple's LAST component's — earlier components
+    // are exact matches.
+    val width = if (idxs.isEmpty) 0 else idxs.max + 1
+    def tuple(side: ClusterRange => Option[(Any, Boolean)]): (Ordering[Row], Row, Boolean) = {
       val defined = ranges.map(side).takeWhile(_.isDefined).map(_.get)
-      (defined.map(_._1).toIndexedSeq, defined.lastOption.forall(_._2))
+      val bound = new Array[Any](width)
+      defined.indices.foreach(k => bound(idxs(k)) = defined(k)._1)
+      (if (defined.isEmpty) null else KeyOrder.rows(schema, idxs.take(defined.length)),
+        Row.fromSeq(bound.toSeq), defined.lastOption.forall(_._2))
     }
-    val (loT, loIncl) = tuple(_.lo)
-    val (hiT, hiIncl) = tuple(_.hi)
+    val (loOrd, loRow, loIncl) = tuple(_.lo)
+    val (hiOrd, hiRow, hiIncl) = tuple(_.hi)
     // bound values are non-null by construction (from() requires it),
     // so a row with NULL in a bounded component compares < and the
     // null prefix falls outside a defined lower bound — matching the
     // single-column contract
     val start =
-      if (loT.isEmpty) 0
-      else lowerBound(m => { val c = cmpRow(m, loT); if (loIncl) c >= 0 else c > 0 })
+      if (loOrd == null) 0
+      else lowerBound(m => { val c = loOrd.compare(rows(m), loRow); if (loIncl) c >= 0 else c > 0 })
     val end =
-      if (hiT.isEmpty) rows.length
-      else lowerBound(m => { val c = cmpRow(m, hiT); if (hiIncl) c > 0 else c >= 0 })
+      if (hiOrd == null) rows.length
+      else lowerBound(m => { val c = hiOrd.compare(rows(m), hiRow); if (hiIncl) c > 0 else c >= 0 })
     (start, math.max(start, end))
   }
 }
@@ -186,8 +173,8 @@ object ClusterSlice {
   /** The slice provable from `filters` over cluster columns `cols` —
     * None when no usable bound exists (fetch streams the bucket).
     */
-  def from(filters: Array[Filter], cols: Seq[String]): Option[ClusterSlice] = {
-    val ranges = ClusterRange.compoundFrom(filters, cols)
+  def from(filters: Array[Filter], schema: StructType, cols: Seq[String]): Option[ClusterSlice] = {
+    val ranges = ClusterRange.compoundFrom(filters, schema, cols)
     if (ranges.isEmpty) None else Some(ClusterSlice(cols.take(ranges.length), ranges))
   }
 }

@@ -110,13 +110,13 @@ final class HostConnection private[bucketed] (val host: String) {
       // mis-slice (z-order layouts have no lexicographic prefix, so
       // they never slice)
       case Some(s) if s.cols.nonEmpty && clusterCols.startsWith(s.cols) =>
-        ClusterRange.sliceSortedCompound(rows,
+        ClusterRange.sliceSortedCompound(rows, t.schema,
           s.cols.map(t.schema.fieldIndex).toArray, s.ranges)
       case _ => (0, rows.length)
     }
     // block-level zone maps: within the slice, serve only the blocks
     // whose per-block statistics admit the scan's pushed conjuncts
-    // ([[BucketSkip.mayMatchBlock]] — strictly conservative; every
+    // ([[BucketSkip.blockProbe]] — strictly conservative; every
     // served row is still filter-checked reader-side). The row-group
     // skip of a real format, at the store's own block grid: pages
     // moved ∝ matching blocks. Buckets at or below one block gain
@@ -126,8 +126,9 @@ final class HostConnection private[bucketed] (val host: String) {
         IndexedSeq((start, end))
       else {
         val B = BucketSkip.BlockRows
+        val probe = BucketSkip.blockProbe(t.schema, rows, blockFilters)
         (start / B to (end - 1) / B).flatMap { k =>
-          if (blockFilters.forall(BucketSkip.mayMatchBlock(t.schema, rows, k, _)))
+          if (probe(k))
             Some((math.max(start, k * B), math.min(end, (k + 1) * B)))
           else { HostConnection.blocksSkippedCount.incrementAndGet(); None }
         }

@@ -1,0 +1,368 @@
+package graft.sources.bucketed
+
+import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
+import org.apache.spark.sql.types._
+import org.apache.spark.sql.vectorized.ColumnarBatch
+import org.apache.spark.unsafe.types.UTF8String
+
+/** The store's one value order. Every part of the store that sorts,
+  * slices, prunes, routes or merges by value — the cluster sort and
+  * merges, [[ClusterRange]] slicing, [[BucketSkip]] zone maps, range
+  * routing, the row predicate ([[FilterEval]]), the pushed MIN/MAX and
+  * TopN, and the vectorized scan's filters and sorted merge — takes
+  * its comparator from here, resolved once per column type, so all of
+  * them agree by construction. The order is Spark's own
+  * (`PhysicalDataType(dt).ordering` over Catalyst values, pinned by
+  * the `KeyOrder.of equals Spark's ordering` property):
+  *
+  *  - NULL is outside [[of]]: the row orders ([[rows]]) place it first
+  *    or last per column, and a row shorter than a column index (a row
+  *    stored before an ADD COLUMN) reads that column as NULL.
+  *  - Floating point: NaN is the largest value and equals itself;
+  *    −0.0 equals 0.0; −Inf < finite < +Inf ([[compareDoubles]]).
+  *  - Strings compare by code point, which is UTF-8 byte order, the
+  *    order of Spark's `UTF8String` — not Java's UTF-16 code-unit
+  *    order, which disagrees once a supplementary character meets one
+  *    in U+E000–U+FFFF.
+  *  - Decimals compare by value: scale does not matter (1.0 == 1.00).
+  *  - Dates compare by epoch day and timestamps by epoch micros, so
+  *    the `java.sql` and `java.time` externals of one instant (a
+  *    session flipping `datetime.java8API`) compare equal.
+  *  - A literal of another numeric class than the column's (an Int
+  *    literal on a LONG column, a decimal on an integral one) compares
+  *    exactly: integral widths by their long value, finite mixes by
+  *    decimal value, a non-finite float by IEEE order.
+  *
+  * Types outside this list (booleans, binary, nested types) have no
+  * order here: comparing two of their values throws.
+  */
+object KeyOrder {
+
+  /** The order of the non-null external values of a `dt` column, and of
+    * the literals compared with them.
+    */
+  def of(dt: DataType): Ordering[Any] = dt match {
+    case LongType | IntegerType | ShortType | ByteType => Integral
+    case DoubleType | FloatType => Floating
+    case _: DecimalType => Decimals
+    case _: StringType => Strings
+    case DateType => Dates
+    case TimestampType => Timestamps
+    case TimestampNTZType => LocalDateTimes
+    case _ => Unordered
+  }
+
+  // Each ordering tests its column's own external class first; only a
+  // mixed pair reaches the slower cross-class path. isInstanceOf tests,
+  // never a `(a, b) match`, which would allocate a tuple per compare.
+
+  private val Integral: Ordering[Any] = (a, b) =>
+    if (a.isInstanceOf[java.lang.Long] && b.isInstanceOf[java.lang.Long])
+      java.lang.Long.compare(a.asInstanceOf[Long], b.asInstanceOf[Long])
+    else if (a.isInstanceOf[java.lang.Integer] && b.isInstanceOf[java.lang.Integer])
+      Integer.compare(a.asInstanceOf[Int], b.asInstanceOf[Int])
+    else numbers(a, b)
+
+  private val Floating: Ordering[Any] = (a, b) =>
+    if (a.isInstanceOf[java.lang.Double] && b.isInstanceOf[java.lang.Double])
+      compareDoubles(a.asInstanceOf[Double], b.asInstanceOf[Double])
+    else numbers(a, b)
+
+  private val Decimals: Ordering[Any] = (a, b) =>
+    if (a.isInstanceOf[java.math.BigDecimal] && b.isInstanceOf[java.math.BigDecimal])
+      a.asInstanceOf[java.math.BigDecimal].compareTo(b.asInstanceOf[java.math.BigDecimal])
+    else numbers(a, b)
+
+  private val Strings: Ordering[Any] = (a, b) =>
+    if (a.isInstanceOf[String] && b.isInstanceOf[String])
+      compareStrings(a.asInstanceOf[String], b.asInstanceOf[String])
+    else incomparable(a, b)
+
+  private val Dates: Ordering[Any] = (a, b) =>
+    if (a.isInstanceOf[java.sql.Date] && b.isInstanceOf[java.sql.Date])
+      a.asInstanceOf[java.sql.Date].compareTo(b.asInstanceOf[java.sql.Date])
+    else if (a.isInstanceOf[java.time.LocalDate] && b.isInstanceOf[java.time.LocalDate])
+      a.asInstanceOf[java.time.LocalDate].compareTo(b.asInstanceOf[java.time.LocalDate])
+    else Integer.compare(epochDay(a, b), epochDay(b, a))
+
+  private val Timestamps: Ordering[Any] = (a, b) =>
+    if (a.isInstanceOf[java.sql.Timestamp] && b.isInstanceOf[java.sql.Timestamp])
+      a.asInstanceOf[java.sql.Timestamp].compareTo(b.asInstanceOf[java.sql.Timestamp])
+    else if (a.isInstanceOf[java.time.Instant] && b.isInstanceOf[java.time.Instant])
+      a.asInstanceOf[java.time.Instant].compareTo(b.asInstanceOf[java.time.Instant])
+    else java.lang.Long.compare(epochMicros(a, b), epochMicros(b, a))
+
+  private val LocalDateTimes: Ordering[Any] = (a, b) =>
+    if (a.isInstanceOf[java.time.LocalDateTime] && b.isInstanceOf[java.time.LocalDateTime])
+      a.asInstanceOf[java.time.LocalDateTime].compareTo(b.asInstanceOf[java.time.LocalDateTime])
+    else incomparable(a, b)
+
+  private val Unordered: Ordering[Any] = (a, b) => incomparable(a, b)
+
+  private def incomparable(a: Any, b: Any): Nothing = throw new IllegalStateException(
+    s"incomparable filter operands: ${classOf(a)} vs ${classOf(b)}")
+
+  private def classOf(v: Any): Any = if (v == null) null else v.getClass
+
+  private def epochDay(v: Any, other: Any): Int = v match {
+    case d: java.sql.Date => DateTimeUtils.fromJavaDate(d)
+    case d: java.time.LocalDate => DateTimeUtils.localDateToDays(d)
+    case _ => incomparable(v, other)
+  }
+
+  private def epochMicros(v: Any, other: Any): Long = v match {
+    case t: java.sql.Timestamp => DateTimeUtils.fromJavaTimestamp(t)
+    case t: java.time.Instant => DateTimeUtils.instantToMicros(t)
+    case _ => incomparable(v, other)
+  }
+
+  /** Two numbers of any classes, exactly: integral widths by their long
+    * value, two floats of one width by [[compareDoubles]], a non-finite
+    * float against anything by IEEE order (BigDecimal has no NaN or
+    * infinity), and every other pair by decimal value — never through a
+    * double, which would merge longs past 2^53.
+    */
+  private def numbers(a: Any, b: Any): Int = a match {
+    case x: Number => b match {
+      case y: Number =>
+        if (integral(x) && integral(y)) java.lang.Long.compare(x.longValue, y.longValue)
+        else if ((x.isInstanceOf[java.lang.Double] || x.isInstanceOf[java.lang.Float]) &&
+            (x.getClass eq y.getClass)) compareDoubles(x.doubleValue, y.doubleValue)
+        else if (nonFinite(x) || nonFinite(y))
+          java.lang.Double.compare(x.doubleValue, y.doubleValue)
+        else exact(x).compareTo(exact(y))
+      case _ => incomparable(a, b)
+    }
+    case _ => incomparable(a, b)
+  }
+
+  private def integral(n: Number): Boolean =
+    n.isInstanceOf[java.lang.Long] || n.isInstanceOf[java.lang.Integer] ||
+      n.isInstanceOf[java.lang.Short] || n.isInstanceOf[java.lang.Byte]
+
+  private def nonFinite(n: Number): Boolean = n match {
+    case d: java.lang.Double => d.isNaN || d.isInfinite
+    case f: java.lang.Float => f.isNaN || f.isInfinite
+    case _ => false
+  }
+
+  /** A finite number's decimal value: a float by its shortest decimal
+    * form, the one `toString` prints.
+    */
+  private def exact(n: Number): java.math.BigDecimal = n match {
+    case d: java.math.BigDecimal => d
+    case _ => new java.math.BigDecimal(n.toString)
+  }
+
+  /** IEEE compare with SQL equality: −0.0 == 0.0 (primitive `==`), and
+    * `Double.compare` — reached only when an operand is NaN — makes NaN
+    * the largest value and equal to itself.
+    */
+  def compareDoubles(x: Double, y: Double): Int =
+    if (x < y) -1 else if (x > y) 1 else if (x == y) 0 else java.lang.Double.compare(x, y)
+
+  /** Code-point (UTF-8 byte) order of two strings, allocation-free. */
+  def compareStrings(x: String, y: String): Int = {
+    var i = 0
+    var j = 0
+    while (i < x.length && j < y.length) {
+      val cx = x.codePointAt(i)
+      val cy = y.codePointAt(j)
+      if (cx != cy) return Integer.compare(cx, cy)
+      i += Character.charCount(cx)
+      j += Character.charCount(cy)
+    }
+    Integer.compare(x.length - i, y.length - j)
+  }
+
+  /** The cluster order of rows over the columns at `idxs`:
+    * lexicographic, ascending, nulls first.
+    */
+  def rows(schema: StructType, idxs: Array[Int]): Ordering[Row] =
+    rows(schema, idxs, new Array[Boolean](idxs.length), Array.fill(idxs.length)(true))
+
+  /** Lexicographic order of rows over the columns at `idxs`, each
+    * column descending where `desc` says so and with its NULLs first
+    * or last as `nullsFirst` says (independent of the direction, as in
+    * SQL). A row shorter than an index reads that column as NULL.
+    */
+  def rows(schema: StructType, idxs: Array[Int], desc: Array[Boolean],
+      nullsFirst: Array[Boolean]): Ordering[Row] = {
+    val ords = idxs.map(i => of(schema(i).dataType))
+    new Ordering[Row] {
+      def compare(a: Row, b: Row): Int = {
+        var k = 0
+        while (k < idxs.length) {
+          val i = idxs(k)
+          val x = if (i < a.length) a.get(i) else null
+          val y = if (i < b.length) b.get(i) else null
+          val c =
+            if (x == null) { if (y == null) 0 else if (nullsFirst(k)) -1 else 1 }
+            else if (y == null) { if (nullsFirst(k)) 1 else -1 }
+            else if (desc(k)) -ords(k).compare(x, y)
+            else ords(k).compare(x, y)
+          if (c != 0) return c
+          k += 1
+        }
+        0
+      }
+    }
+  }
+
+  /** The vector form of a non-null external value or literal for a `dt`
+    * column — the representation a `ColumnarBatch` holds it in: epoch
+    * days for dates, epoch micros for timestamps (both external
+    * flavors), `UTF8String` for strings, the `java.math.BigDecimal` for
+    * decimals (whose compact vectors then take the unscaled long at the
+    * column's scale, [[unscaledExact]]), and the value itself for the
+    * other numerics. Null when `v` is not of the class a `dt` value
+    * has, so no vector compare of the same width exists.
+    */
+  def internal(dt: DataType, v: Any): Any = dt match {
+    case IntegerType => if (v.isInstanceOf[java.lang.Integer]) v else null
+    case LongType => if (v.isInstanceOf[java.lang.Long]) v else null
+    case ShortType => if (v.isInstanceOf[java.lang.Short]) v else null
+    case ByteType => if (v.isInstanceOf[java.lang.Byte]) v else null
+    case DoubleType => if (v.isInstanceOf[java.lang.Double]) v else null
+    case FloatType => if (v.isInstanceOf[java.lang.Float]) v else null
+    case StringType => v match {
+      case s: String => UTF8String.fromString(s)
+      case _ => null
+    }
+    case DateType => v match {
+      case d: java.sql.Date => DateTimeUtils.fromJavaDate(d)
+      case d: java.time.LocalDate => DateTimeUtils.localDateToDays(d)
+      case _ => null
+    }
+    case TimestampType => v match {
+      case t: java.sql.Timestamp => DateTimeUtils.fromJavaTimestamp(t)
+      case t: java.time.Instant => DateTimeUtils.instantToMicros(t)
+      case _ => null
+    }
+    case TimestampNTZType => v match {
+      case t: java.time.LocalDateTime => DateTimeUtils.localDateTimeToMicros(t)
+      case _ => null
+    }
+    case _: DecimalType => v match {
+      case x: java.math.BigDecimal => x
+      case x: scala.math.BigDecimal => x.bigDecimal
+      case _ => null
+    }
+    case _ => null
+  }
+
+  /** A decimal's unscaled long at `scale`, or None when the value is
+    * not exactly representable there (extra fractional digits, or an
+    * unscaled value past Long) — such a value equals no value of a
+    * compact decimal column.
+    */
+  def unscaledExact(x: java.math.BigDecimal, scale: Int): Option[Long] =
+    try Some(x.setScale(scale).unscaledValue().longValueExact())
+    catch { case _: ArithmeticException => None }
+
+  /** Allocation-free unscaled-long read of a COMPACT decimal vector:
+    * the precision dispatch `WritableColumnVector.getDecimal` performs
+    * internally (int storage ≤ 9 digits, long ≤ 18) without the per-row
+    * `Decimal` wrapper. Every batch the store compares comes from the
+    * vectorized parquet reader or the merge fillers, which both store
+    * compact decimals that way.
+    */
+  def unscaledGetter(i: Int, dt: DecimalType): (ColumnarBatch, Int) => Long =
+    if (dt.precision <= Decimal.MAX_INT_DIGITS) (b, r) => b.column(i).getInt(r).toLong
+    else (b, r) => b.column(i).getLong(r)
+
+  /** The sign of (non-null cell `i` of a batch row) compared with `v`,
+    * in this order, as a closure over primitive reads: `v` is converted
+    * once to the [[internal]] form. A compact decimal compares unscaled
+    * longs — `v` floored to the column's scale, an inexact `v` sitting
+    * strictly above its floor. None when `v`'s class has no vector
+    * compare for the column's type (a literal of another width).
+    */
+  def cell(dt: DataType, i: Int, v: Any): Option[(ColumnarBatch, Int) => Int] = {
+    val n = internal(dt, v)
+    if (n == null) None
+    else dt match {
+      case IntegerType =>
+        val l = n.asInstanceOf[Int]; Some((b, r) => Integer.compare(b.column(i).getInt(r), l))
+      case LongType =>
+        val l = n.asInstanceOf[Long]; Some((b, r) => java.lang.Long.compare(b.column(i).getLong(r), l))
+      case ShortType =>
+        val l = n.asInstanceOf[Short]; Some((b, r) => java.lang.Short.compare(b.column(i).getShort(r), l))
+      case ByteType =>
+        val l = n.asInstanceOf[Byte]; Some((b, r) => java.lang.Byte.compare(b.column(i).getByte(r), l))
+      case DoubleType =>
+        val l = n.asInstanceOf[Double]; Some((b, r) => compareDoubles(b.column(i).getDouble(r), l))
+      case FloatType =>
+        val l = n.asInstanceOf[Float].toDouble
+        Some((b, r) => compareDoubles(b.column(i).getFloat(r).toDouble, l))
+      case StringType =>
+        val l = n.asInstanceOf[UTF8String]; Some((b, r) => b.column(i).getUTF8String(r).compareTo(l))
+      case DateType =>
+        val l = n.asInstanceOf[Int]; Some((b, r) => Integer.compare(b.column(i).getInt(r), l))
+      case TimestampType | TimestampNTZType =>
+        val l = n.asInstanceOf[Long]; Some((b, r) => java.lang.Long.compare(b.column(i).getLong(r), l))
+      case dt: DecimalType =>
+        val x = n.asInstanceOf[java.math.BigDecimal]
+        val fast: Option[(ColumnarBatch, Int) => Int] =
+          if (dt.precision > Decimal.MAX_LONG_DIGITS) None
+          else try {
+            val floored = x.setScale(dt.scale, java.math.RoundingMode.FLOOR)
+            val f = floored.unscaledValue().longValueExact()
+            val exact = x.compareTo(floored) == 0
+            val get = unscaledGetter(i, dt)
+            Some { (b, r) =>
+              val c = java.lang.Long.compare(get(b, r), f)
+              if (c == 0 && !exact) -1 else c
+            }
+          } catch { case _: ArithmeticException => None } // past Long: compare BigDecimals
+        fast.orElse(Some((b, r) =>
+          b.column(i).getDecimal(r, dt.precision, dt.scale).toJavaBigDecimal.compareTo(x)))
+      case _ => None
+    }
+  }
+
+  /** The vector side of the cluster order: a batch row's cells at
+    * `idxs` against one external key row of the same layout, nulls
+    * first per column, non-null pairs through [[cell]] — the outcomes
+    * [[rows]] gives the same values as externals. [[set]] compiles one
+    * key; [[compare]] then reads the batch with no allocation.
+    */
+  final class BatchKey(schema: StructType, idxs: Array[Int]) {
+    private val cells = new Array[(ColumnarBatch, Int) => Int](idxs.length)
+
+    def set(key: Row): Unit = {
+      var k = 0
+      while (k < idxs.length) {
+        val v = key.get(idxs(k))
+        cells(k) =
+          if (v == null) null
+          else cell(schema(idxs(k)).dataType, idxs(k), v).getOrElse(
+            throw new IllegalStateException(
+              s"no vector compare for ${v.getClass} in column ${schema(idxs(k)).name}"))
+        k += 1
+      }
+    }
+
+    def compare(b: ColumnarBatch, r: Int): Int = {
+      var k = 0
+      while (k < idxs.length) {
+        val xNull = b.column(idxs(k)).isNullAt(r)
+        val c =
+          if (cells(k) == null) { if (xNull) 0 else 1 }
+          else if (xNull) -1
+          else cells(k)(b, r)
+        if (c != 0) return c
+        k += 1
+      }
+      0
+    }
+  }
+
+  /** Does [[cell]] compare this type on a batch? */
+  def vectorOrderable(dt: DataType): Boolean = dt match {
+    case IntegerType | LongType | ShortType | ByteType | DoubleType | FloatType |
+         DateType | TimestampType | TimestampNTZType | StringType | _: DecimalType => true
+    case _ => false
+  }
+}

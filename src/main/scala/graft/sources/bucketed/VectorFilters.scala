@@ -1,6 +1,5 @@
 package graft.sources.bucketed
 
-import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.ColumnarBatch
@@ -23,9 +22,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * Three-valued SQL semantics, byte-for-byte consistent with the row
   * path's compiled predicate ([[FilterEval.compile]], the same
   * true/false/unknown encoding): a NULL operand yields UNKNOWN and a
-  * row is kept only when every conjunct is definitely true. String
-  * order is UTF8String's byte order = code-point order — the same
-  * order [[FilterEval.cmp]] implements on external strings. A filter
+  * row is kept only when every conjunct is definitely true. Every
+  * comparison is [[KeyOrder.cell]], the vector side of the store's one
+  * value order (UTF8String's byte order is the code-point order
+  * [[KeyOrder]] gives external strings). A filter
   * shape or literal/column type pairing this compiler can't express
   * returns None and the scan falls back to the row path — eligibility
   * is decided at open, never mid-stream.
@@ -131,136 +131,72 @@ private[bucketed] object VectorFilterEval {
     if (schema.fieldNames.contains(c)) Some(schema.fieldIndex(c)) else None
 
   /** Type-specialized membership probe over a PRE-CONVERTED literal
-    * set for `In`: primitive-backed types probe a sorted primitive
-    * array (binary search, zero boxing), strings probe a UTF8String
-    * hash set. None when any literal fails the exact conversion the
-    * scalar [[cmpFn]] would demand — the caller's per-literal closure
-    * fallback (and ultimately the row path) keeps the semantics.
-    * Floating point probes by [[canonicalBits]] so membership matches
-    * [[cmpDouble]] equality exactly: -0.0 == 0.0 and NaN == NaN.
+    * set for `In`: primitive-backed types probe a sorted long array
+    * (binary search, zero boxing) of the literals' [[KeyOrder.internal]]
+    * forms, strings probe a UTF8String hash set. None when any literal
+    * has no internal form — the caller's per-literal closure fallback
+    * (and ultimately the row path) keeps the semantics. Floating point
+    * probes by [[canonicalBits]] so membership matches
+    * [[KeyOrder.compareDoubles]] equality exactly: -0.0 == 0.0 and
+    * NaN == NaN.
     */
   private def inProbe(schema: StructType, i: Int, vs: Array[Any])
       : Option[(ColumnarBatch, Int) => Boolean] = {
-    import java.util.Arrays
-    def intSet(lit: PartialFunction[Any, Int], get: (ColumnarBatch, Int) => Int)
+    val dt = schema(i).dataType
+    val lits = vs.map(KeyOrder.internal(dt, _))
+    def longSet(key: Any => Long, get: (ColumnarBatch, Int) => Long)
         : Option[(ColumnarBatch, Int) => Boolean] = {
-      val conv = vs.map(lit.lift)
-      if (conv.contains(None)) None
-      else {
-        val arr: Array[Int] = conv.map(_.get).distinct.sorted
-        Some((b, r) => Arrays.binarySearch(arr, get(b, r)) >= 0)
-      }
+      val arr: Array[Long] = lits.map(key).distinct.sorted
+      Some((b, r) => java.util.Arrays.binarySearch(arr, get(b, r)) >= 0)
     }
-    def longSet(lit: PartialFunction[Any, Long], get: (ColumnarBatch, Int) => Long)
-        : Option[(ColumnarBatch, Int) => Boolean] = {
-      val conv = vs.map(lit.lift)
-      if (conv.contains(None)) None
-      else {
-        val arr: Array[Long] = conv.map(_.get).distinct.sorted
-        Some((b, r) => Arrays.binarySearch(arr, get(b, r)) >= 0)
-      }
-    }
-    schema(i).dataType match {
-      case IntegerType =>
-        intSet({ case x: java.lang.Integer => x.intValue }, (b, r) => b.column(i).getInt(r))
-      case ShortType =>
-        intSet({ case x: java.lang.Short => x.intValue }, (b, r) => b.column(i).getShort(r).toInt)
-      case ByteType =>
-        intSet({ case x: java.lang.Byte => x.intValue }, (b, r) => b.column(i).getByte(r).toInt)
-      case DateType => intSet({
-        case d: java.sql.Date => DateTimeUtils.fromJavaDate(d)
-        case d: java.time.LocalDate => DateTimeUtils.localDateToDays(d)
-      }, (b, r) => b.column(i).getInt(r))
-      case LongType =>
-        longSet({ case x: java.lang.Long => x.longValue }, (b, r) => b.column(i).getLong(r))
-      case TimestampType => longSet({
-        case t: java.sql.Timestamp => DateTimeUtils.fromJavaTimestamp(t)
-        case t: java.time.Instant => DateTimeUtils.instantToMicros(t)
-      }, (b, r) => b.column(i).getLong(r))
-      case TimestampNTZType => longSet({
-        case t: java.time.LocalDateTime => DateTimeUtils.localDateTimeToMicros(t)
-      }, (b, r) => b.column(i).getLong(r))
-      case DoubleType => longSet({
-        case x: java.lang.Double => canonicalBits(x.doubleValue)
-      }, (b, r) => canonicalBits(b.column(i).getDouble(r)))
-      case FloatType => longSet({
-        case x: java.lang.Float => canonicalBits(x.floatValue.toDouble)
-      }, (b, r) => canonicalBits(b.column(i).getFloat(r).toDouble))
+    val integral: Any => Long = _.asInstanceOf[Number].longValue
+    if (lits.contains(null)) None
+    else dt match {
+      case IntegerType | DateType => longSet(integral, (b, r) => b.column(i).getInt(r).toLong)
+      case ShortType => longSet(integral, (b, r) => b.column(i).getShort(r).toLong)
+      case ByteType => longSet(integral, (b, r) => b.column(i).getByte(r).toLong)
+      case LongType | TimestampType | TimestampNTZType =>
+        longSet(integral, (b, r) => b.column(i).getLong(r))
+      case DoubleType => longSet(v => canonicalBits(v.asInstanceOf[Double]),
+        (b, r) => canonicalBits(b.column(i).getDouble(r)))
+      case FloatType => longSet(v => canonicalBits(v.asInstanceOf[Float].toDouble),
+        (b, r) => canonicalBits(b.column(i).getFloat(r).toDouble))
       case StringType =>
         val set = new java.util.HashSet[UTF8String](vs.length * 2)
-        var ok = true
-        vs.foreach {
-          case s: String => set.add(UTF8String.fromString(s)); ()
-          case _ => ok = false
-        }
-        if (!ok) None
-        else Some((b, r) => set.contains(b.column(i).getUTF8String(r)))
+        lits.foreach(l => set.add(l.asInstanceOf[UTF8String]))
+        Some((b, r) => set.contains(b.column(i).getUTF8String(r)))
       case dt: DecimalType if dt.precision <= Decimal.MAX_LONG_DIGITS =>
         // probe the UNSCALED long at the column's fixed scale (round
         // 19 — `dec IN (...)` was the one In shape left at O(|list|)
         // BigDecimal compares per row). A literal that does not
         // rescale EXACTLY can equal no column value: DROPPED from the
         // probe set (semantically exact), never a reason to bail.
-        // Non-BigDecimal literals bail to the closure fallback.
-        val conv: Array[Option[Long]] = vs.map {
-          case x: java.math.BigDecimal => unscaledExact(x, dt.scale)
-          case x: scala.math.BigDecimal => unscaledExact(x.bigDecimal, dt.scale)
-          case _ => null
-        }
-        if (conv.contains(null)) None
-        else {
-          val arr: Array[Long] = conv.flatten.distinct.sorted
-          val get = unscaledGetter(i, dt)
-          Some((b, r) => Arrays.binarySearch(arr, get(b, r)) >= 0)
-        }
+        val arr: Array[Long] = lits
+          .flatMap(l => KeyOrder.unscaledExact(l.asInstanceOf[java.math.BigDecimal], dt.scale))
+          .distinct.sorted
+        val get = KeyOrder.unscaledGetter(i, dt)
+        Some((b, r) => java.util.Arrays.binarySearch(arr, get(b, r)) >= 0)
       case dt: DecimalType =>
         // FLBA-backed precisions (> 18, round 20): no unscaled-long
-        // space to probe in, but cmp-equality is still exact set
+        // space to probe in, but equality is still exact set
         // membership over VALUE-canonical (stripTrailingZeros'd)
         // BigDecimals — `big_money IN (...)` stays vectorized instead
         // of demoting the scan. Row-group pruning stays off for FLBA
         // (parquet's FLBA comparator pitfalls); this is membership
         // only.
         val set = new java.util.HashSet[java.math.BigDecimal](vs.length * 2)
-        var okD = true
-        vs.foreach {
-          case x: java.math.BigDecimal => set.add(x.stripTrailingZeros()); ()
-          case x: scala.math.BigDecimal => set.add(x.bigDecimal.stripTrailingZeros()); ()
-          case _ => okD = false
-        }
-        if (!okD) None
-        else Some((b, r) => set.contains(
+        lits.foreach(l => set.add(l.asInstanceOf[java.math.BigDecimal].stripTrailingZeros()))
+        Some((b, r) => set.contains(
           b.column(i).getDecimal(r, dt.precision, dt.scale)
             .toJavaBigDecimal.stripTrailingZeros()))
       case _ => None
     }
   }
 
-  /** Literal → unscaled long at `scale`, or None when the value is not
-    * exactly representable there (extra fractional digits, or an
-    * unscaled value past Long) — such a literal can never equal a
-    * compact decimal column value.
-    */
-  private[bucketed] def unscaledExact(x: java.math.BigDecimal, scale: Int): Option[Long] =
-    try Some(x.setScale(scale).unscaledValue().longValueExact())
-    catch { case _: ArithmeticException => None }
-
-  /** Allocation-free unscaled-long read for a COMPACT decimal vector:
-    * the exact precision dispatch `WritableColumnVector.getDecimal`
-    * performs internally (int storage ≤ 9 digits, long ≤ 18) without
-    * the per-row `Decimal` wrapper (~1.5× on the probe, InProbeBench).
-    * Every batch this evaluator sees comes from the vectorized parquet
-    * reader or the merge fillers — both store compact decimals that
-    * way.
-    */
-  private def unscaledGetter(i: Int, dt: DecimalType): (ColumnarBatch, Int) => Long =
-    if (dt.precision <= Decimal.MAX_INT_DIGITS) (b, r) => b.column(i).getInt(r).toLong
-    else (b, r) => b.column(i).getLong(r)
-
   /** doubleToLongBits with ±0.0 folded to one key, so bit-equality of
-    * the keys matches [[cmpDouble]]'s equality outcomes exactly:
-    * -0.0 == 0.0 (folded) and NaN == NaN (doubleToLongBits already
-    * canonicalizes every NaN payload to one pattern).
+    * the keys matches [[KeyOrder.compareDoubles]]'s equality outcomes
+    * exactly: -0.0 == 0.0 (folded) and NaN == NaN (doubleToLongBits
+    * already canonicalizes every NaN payload to one pattern).
     */
   private[bucketed] def canonicalBits(d: Double): Long =
     java.lang.Double.doubleToLongBits(if (d == 0.0) 0.0 else d)
@@ -281,105 +217,14 @@ private[bucketed] object VectorFilterEval {
     }
 
   /** Sign-of-comparison closure for a non-null vector value against a
-    * pre-converted literal, or None when the (column type, literal
-    * class) pairing has no exact primitive comparison — mixed-width
-    * numeric literals keep the row path's BigDecimal semantics by
-    * falling back entirely.
+    * literal ([[KeyOrder.cell]]), or None when the (column type,
+    * literal class) pairing has no exact primitive comparison —
+    * mixed-width numeric literals keep the row path's exact semantics
+    * by falling back entirely.
     */
-  private def cmpFn(schema: StructType, c: String, v: Any): Option[(ColumnarBatch, Int) => Int] = {
-    if (v == null || !schema.fieldNames.contains(c)) return None
-    val i = schema.fieldIndex(c)
-    schema(i).dataType match {
-      case IntegerType => v match {
-        case x: java.lang.Integer =>
-          val l = x.intValue; Some((b, r) => Integer.compare(b.column(i).getInt(r), l))
-        case _ => None
-      }
-      case LongType => v match {
-        case x: java.lang.Long =>
-          val l = x.longValue; Some((b, r) => java.lang.Long.compare(b.column(i).getLong(r), l))
-        case _ => None
-      }
-      case ShortType => v match {
-        case x: java.lang.Short =>
-          val l = x.shortValue; Some((b, r) => java.lang.Short.compare(b.column(i).getShort(r), l))
-        case _ => None
-      }
-      case ByteType => v match {
-        case x: java.lang.Byte =>
-          val l = x.byteValue; Some((b, r) => java.lang.Byte.compare(b.column(i).getByte(r), l))
-        case _ => None
-      }
-      case DoubleType => v match {
-        case x: java.lang.Double =>
-          val l = x.doubleValue; Some((b, r) => cmpDouble(b.column(i).getDouble(r), l))
-        case _ => None
-      }
-      case FloatType => v match {
-        case x: java.lang.Float =>
-          val l = x.floatValue; Some((b, r) => cmpDouble(b.column(i).getFloat(r).toDouble, l.toDouble))
-        case _ => None
-      }
-      case StringType => v match {
-        case s: String =>
-          val lit = UTF8String.fromString(s)
-          Some((b, r) => b.column(i).getUTF8String(r).compareTo(lit))
-        case _ => None
-      }
-      case DateType =>
-        val days: Option[Int] = v match {
-          case d: java.sql.Date => Some(DateTimeUtils.fromJavaDate(d))
-          case d: java.time.LocalDate => Some(DateTimeUtils.localDateToDays(d))
-          case _ => None
-        }
-        days.map(d => (b, r) => Integer.compare(b.column(i).getInt(r), d))
-      case TimestampType =>
-        val micros: Option[Long] = v match {
-          case t: java.sql.Timestamp => Some(DateTimeUtils.fromJavaTimestamp(t))
-          case t: java.time.Instant => Some(DateTimeUtils.instantToMicros(t))
-          case _ => None
-        }
-        micros.map(m => (b, r) => java.lang.Long.compare(b.column(i).getLong(r), m))
-      case TimestampNTZType => v match {
-        case t: java.time.LocalDateTime =>
-          val m = DateTimeUtils.localDateTimeToMicros(t)
-          Some((b, r) => java.lang.Long.compare(b.column(i).getLong(r), m))
-        case _ => None
-      }
-      case dt: DecimalType => v match {
-        case x: java.math.BigDecimal =>
-          // compact precisions compare on the UNSCALED long (round 19):
-          // floor the literal to the column's scale once; an INEXACT
-          // literal sits strictly between floor and floor+1, so a
-          // column value equal to the floor is strictly BELOW it —
-          // break the tie to -1. No per-row BigDecimal.
-          val fast: Option[(ColumnarBatch, Int) => Int] =
-            if (dt.precision > Decimal.MAX_LONG_DIGITS) None
-            else try {
-              val floored = x.setScale(dt.scale, java.math.RoundingMode.FLOOR)
-              val f = floored.unscaledValue().longValueExact()
-              val exact = x.compareTo(floored) == 0
-              val get = unscaledGetter(i, dt)
-              Some { (b, r) =>
-                val c = java.lang.Long.compare(get(b, r), f)
-                if (c == 0 && !exact) -1 else c
-              }
-            } catch { case _: ArithmeticException => None } // literal beyond Long: exact path
-          fast.orElse(Some((b, r) =>
-            b.column(i).getDecimal(r, dt.precision, dt.scale).toJavaBigDecimal.compareTo(x)))
-        case _ => None
-      }
-      case _ => None
-    }
-  }
-
-  /** IEEE-with-SQL-equality compare, same outcomes as
-    * [[FilterEval.cmp]]'s finite BigDecimal path plus its non-finite
-    * Double.compare path: -0.0 == 0.0 (primitive ==), NaN largest
-    * (Double.compare fallthrough — reached only when an operand is NaN).
-    */
-  private[bucketed] def cmpDouble(x: Double, y: Double): Int =
-    if (x < y) -1 else if (x > y) 1 else if (x == y) 0 else java.lang.Double.compare(x, y)
+  private def cmpFn(schema: StructType, c: String, v: Any): Option[(ColumnarBatch, Int) => Int] =
+    if (v == null) None
+    else fieldIdx(schema, c).flatMap(i => KeyOrder.cell(schema(i).dataType, i, v))
 }
 
 /** Conservative parquet row-group/page pruning predicates from pushed
@@ -457,22 +302,14 @@ private[bucketed] object ParquetPruning {
 
   private def ops(schema: StructType, c: String): Option[Ops] = {
     if (c.contains('.') || !schema.fieldNames.contains(c)) return None
-    schema(c).dataType match {
-      case IntegerType => Some(intOps(c, { case x: java.lang.Integer => x }))
-      case ShortType => Some(intOps(c, { case x: java.lang.Short => Int.box(x.intValue) }))
-      case ByteType => Some(intOps(c, { case x: java.lang.Byte => Int.box(x.intValue) }))
-      case DateType => Some(intOps(c, {
-        case d: java.sql.Date => Int.box(DateTimeUtils.fromJavaDate(d))
-        case d: java.time.LocalDate => Int.box(DateTimeUtils.localDateToDays(d))
-      }))
-      case LongType => Some(longOps(c, { case x: java.lang.Long => x }))
-      case TimestampType => Some(longOps(c, {
-        case t: java.sql.Timestamp => Long.box(DateTimeUtils.fromJavaTimestamp(t))
-        case t: java.time.Instant => Long.box(DateTimeUtils.instantToMicros(t))
-      }))
-      case TimestampNTZType => Some(longOps(c, {
-        case t: java.time.LocalDateTime => Long.box(DateTimeUtils.localDateTimeToMicros(t))
-      }))
+    val dt = schema(c).dataType
+    // a literal's stats-comparable physical value: its vector form
+    def internal(v: Any): Option[Number] = Option(KeyOrder.internal(dt, v).asInstanceOf[Number])
+    dt match {
+      case IntegerType | ShortType | ByteType | DateType =>
+        Some(intOps(c, internal(_).map(n => Int.box(n.intValue))))
+      case LongType | TimestampType | TimestampNTZType =>
+        Some(longOps(c, internal(_).map(n => Long.box(n.longValue))))
       case dt: DecimalType if dt.precision <= Decimal.MAX_LONG_DIGITS =>
         // parquet physical for compact decimals (ParquetWriteSupport,
         // non-legacy — [[FileStore.writeBlock]]'s writer): UNSCALED
@@ -481,11 +318,8 @@ private[bucketed] object ParquetPruning {
         // literal ONCE, exactly; a scale-mismatched literal bails that
         // conjunct (conservative — the batch evaluator enforces it).
         // FLBA-backed precisions (> 18) take no row-group pruning.
-        def unscaled(v: Any): Option[Long] = v match {
-          case x: java.math.BigDecimal => VectorFilterEval.unscaledExact(x, dt.scale)
-          case x: scala.math.BigDecimal => VectorFilterEval.unscaledExact(x.bigDecimal, dt.scale)
-          case _ => None
-        }
+        def unscaled(v: Any): Option[Long] =
+          internal(v).flatMap(x => KeyOrder.unscaledExact(x.asInstanceOf[java.math.BigDecimal], dt.scale))
         if (dt.precision <= Decimal.MAX_INT_DIGITS)
           // the int32 narrowing must be provable, not contingent:
           // Spark's analysis casts pushable comparison literals to the
@@ -494,12 +328,11 @@ private[bucketed] object ParquetPruning {
           // literal whose rescaled unscaled value leaves Int range
           // BAILS the conjunct instead of wrapping into a predicate
           // that could prune matching row groups
-          Some(intOps(c, Function.unlift((v: Any) =>
-            unscaled(v).collect {
-              case l if l >= Int.MinValue && l <= Int.MaxValue => Int.box(l.toInt)
-            })))
+          Some(intOps(c, unscaled(_).collect {
+            case l if l >= Int.MinValue && l <= Int.MaxValue => Int.box(l.toInt)
+          }))
         else
-          Some(longOps(c, Function.unlift((v: Any) => unscaled(v).map(Long.box))))
+          Some(longOps(c, unscaled(_).map(Long.box)))
       case DoubleType => Some(new Ops {
         private val col = FilterApi.doubleColumn(c)
         private def v2(v: Any): Option[java.lang.Double] = v match {
@@ -573,9 +406,8 @@ private[bucketed] object ParquetPruning {
     }
   }
 
-  private def intOps(c: String, conv: PartialFunction[Any, java.lang.Integer]): Ops = new Ops {
+  private def intOps(c: String, v2: Any => Option[java.lang.Integer]): Ops = new Ops {
     private val col = FilterApi.intColumn(c)
-    private def v2(v: Any): Option[java.lang.Integer] = conv.lift(v)
     def eq(v: Any) = v2(v).map(FilterApi.eq(col, _))
     def gt(v: Any) = v2(v).map(FilterApi.gt(col, _))
     def gtEq(v: Any) = v2(v).map(FilterApi.gtEq(col, _))
@@ -594,9 +426,8 @@ private[bucketed] object ParquetPruning {
     }
   }
 
-  private def longOps(c: String, conv: PartialFunction[Any, java.lang.Long]): Ops = new Ops {
+  private def longOps(c: String, v2: Any => Option[java.lang.Long]): Ops = new Ops {
     private val col = FilterApi.longColumn(c)
-    private def v2(v: Any): Option[java.lang.Long] = conv.lift(v)
     def eq(v: Any) = v2(v).map(FilterApi.eq(col, _))
     def gt(v: Any) = v2(v).map(FilterApi.gt(col, _))
     def gtEq(v: Any) = v2(v).map(FilterApi.gtEq(col, _))

@@ -9,7 +9,7 @@ import org.apache.spark.sql.Row
   * `"zorder(c1,c2)"` keeps each bucket sorted by the interleaved-bit
   * Morton code of the columns, so rows close in ANY clustered
   * dimension land close in storage — and the block-level zone maps
-  * ([[BucketSkip.mayMatchBlock]], [[HostConnection.fetchBucket]])
+  * ([[BucketSkip.blockProbe]], [[HostConnection.fetchBucket]])
   * become tight on every clustered column at once. A range predicate
   * on c2 alone, useless to the lexicographic layout, now skips most
   * blocks of every bucket.
@@ -98,7 +98,7 @@ object ZOrder {
 
   /** One dimension value → unsigned 64-bit key, order-preserving
     * within the column's type family (the same families
-    * [[FilterEval.cmp]] orders): integrals shift by Long.MinValue,
+    * [[KeyOrder]] orders): integrals shift by Long.MinValue,
     * floats use the IEEE total-order bit trick, timestamps map through
     * epoch millis (NTZ through its session-independent micros), dates
     * through epoch days, strings take their first 8 UTF-8
@@ -189,7 +189,7 @@ object ZOrder {
   /** IEEE-754 total order as unsigned: negative floats reverse
     * (~bits), non-negative set the top bit — the standard radix-sort
     * key for doubles (NaN lands above +Inf, matching
-    * [[FilterEval.cmp]]'s NaN-as-largest).
+    * [[KeyOrder]]'s NaN-as-largest).
     */
   private[bucketed] def floatingKey(bits: Long): Long =
     if (bits < 0) ~bits else bits | Long.MinValue

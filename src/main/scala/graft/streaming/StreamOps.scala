@@ -167,26 +167,21 @@ object StreamOps {
       else None
     }
     try {
-      // Trigger.AvailableNow is the DEFAULT for these one-shot gate
-      // drives (r22): same batches, same watermark-close no-data batch,
-      // same results as processAllAvailable on the default trigger —
-      // but the engine stops itself instead of the driver polling a
-      // continuous-trigger query and tearing it down, which measured
-      // −18% on the streaming family (53.2 → 43.8 s, 28 queries).
+      // Trigger.AvailableNow drives these one-shot gate runs (r22):
+      // same batches, same watermark-close no-data batch, same results
+      // as processAllAvailable on the default trigger — but the engine
+      // stops itself instead of the driver polling a continuous-trigger
+      // query and tearing it down, which measured −18% on the
+      // streaming family (53.2 → 43.8 s, 28 queries; OPTIMIZATION_r22.md).
       // Every source involved implements SupportsTriggerAvailableNow
       // (file source natively; the bucket feeds via BucketAvailableNow —
       // see its scaladoc for why the single-batch fallback would be
-      // WRONG, not just slow). GRAFT_TRIGGER=processing restores the
-      // old drive for A/B.
-      val useAvailableNow = !sys.env.get("GRAFT_TRIGGER").contains("processing")
+      // WRONG, not just slow).
       val writer0 = df.writeStream.outputMode(outputMode).format("memory").queryName(name)
       val writer = ckptDir.fold(writer0)(p => writer0.option("checkpointLocation", p.toString))
-      val q =
-        if (useAvailableNow)
-          writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-        else writer.start()
+      val q = writer.trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
       try {
-        if (useAvailableNow) q.awaitTermination() else q.processAllAvailable()
+        q.awaitTermination()
         // The memory sink APPENDS each batch's emission. In update mode
         // a key re-emitted across batches would therefore appear twice
         // in the sink table — correct streaming semantics, wrong as a

@@ -37,73 +37,12 @@ object PlanDump {
     names.foreach { n =>
       val txt =
         try
-          if (n.startsWith("superstep_r21:")) r21Superstep(spark, sfDir, n.stripPrefix("superstep_r21:"))
-          else SparkEntry.queries(n)(spark, sfDir).queryExecution.explainString(FormattedMode)
+          SparkEntry.queries(n)(spark, sfDir).queryExecution.explainString(FormattedMode)
         catch { case e: Throwable => s"FAILED: ${e.getMessage}" }
       Files.write(outDir.resolve(s"${n.replace(':', '_')}_$mode.txt"),
         txt.getBytes(StandardCharsets.UTF_8)): Unit
       println(s"[plandump] wrote ${n.replace(':', '_')}_$mode.txt (${txt.length} chars)")
     }
     spark.stop()
-  }
-
-  /** Reproduce the ROUND-21 shape of one graph superstep for the plan
-    * audit — the r22 restructure changed the loop body itself, so no
-    * runtime config can reconstruct the old plan. This is a faithful
-    * inline copy of the r21 loop body (git 191a047^ Graph.scala),
-    * dumping the first round's iterate BEFORE its localCheckpoint.
-    */
-  private def r21Superstep(spark: SparkSession, sfDir: String, which: String): String = {
-    import org.apache.spark.sql.functions._
-    import graft.tables.Tables
-    val scale = 1000000000000L
-    which match {
-      case "pagerank" =>
-        // q156's edge derivation, verbatim (Graph.pageRankQuery)
-        val scnt = broadcast(Tables.supplier(spark, sfDir).agg(count(lit(1)).as("n_supp")))
-        val edgesIn = Tables.lineitem(spark, sfDir).crossJoin(scnt)
-          .select(col("l_suppkey").as("src"), (col("l_partkey") % col("n_supp") + 1).as("dst"))
-        val edges = edgesIn.select(col("src"), col("dst")).distinct().localCheckpoint(true)
-        val nodes = edges.select(explode(array(col("src"), col("dst"))).as("id"))
-          .distinct().localCheckpoint(true)
-        val outd = edges.groupBy(col("src")).agg(count(lit(1)).as("deg")).localCheckpoint(true)
-        val nAgg = broadcast(nodes.agg(count(lit(1)).as("n_nodes")))
-        val r = nodes.crossJoin(nAgg)
-          .select(col("id"), expr(s"$scale div n_nodes").as("u"))
-          .localCheckpoint(true)
-        val sums = r.join(edges, col("id") === col("src"))
-          .join(outd, Seq("src"))
-          .select(col("dst"), expr("u div deg").as("c"))
-          .groupBy(col("dst")).agg(sum(col("c")).as("s"))
-        nodes.join(sums, col("id") === col("dst"), "left")
-          .crossJoin(nAgg)
-          .select(col("id"), expr(
-            s"(15 * ($scale div n_nodes)) div 100 + (85 * coalesce(s, cast(0 as bigint))) div 100")
-            .as("u"))
-          .queryExecution.explainString(FormattedMode)
-      case "labelprop" =>
-        import org.apache.spark.sql.expressions.Window
-        // q215's edge derivation, verbatim (Graph.labelPropagationQuery)
-        val emb = Tables.embeddings(spark, sfDir).select(col("vec_id"), col("embedding"))
-        val edgesIn = graft.operators.Similarity.knnGraph(emb, "vec_id", "embedding",
-          nlist = 16, k = 5, kmeansIters = 1)
-        val sym = edgesIn.select(col("src"), col("dst"))
-          .union(edgesIn.select(col("dst").as("src"), col("src").as("dst")))
-          .distinct()
-          .localCheckpoint(true)
-        val labels = emb.select(col("vec_id").as("id"))
-          .select(col("id"), col("id").as("label")).localCheckpoint(true)
-        val votes = sym
-          .join(labels.select(col("id").as("dst"), col("label")), "dst")
-          .groupBy(col("src"), col("label")).agg(count(lit(1)).as("c"))
-          .withColumn("rn", row_number().over(
-            Window.partitionBy(col("src")).orderBy(col("c").desc, col("label").asc)))
-          .filter(col("rn") === 1)
-          .select(col("src").as("id"), col("label").as("nlbl"))
-        labels.join(votes, Seq("id"), "left")
-          .select(col("id"), coalesce(col("nlbl"), col("label")).as("label"))
-          .queryExecution.explainString(FormattedMode)
-      case other => s"FAILED: unknown superstep '$other'"
-    }
   }
 }

@@ -67,14 +67,6 @@ object Profile {
       .builder("graft-profile", s"local[$cpus]", shufflePartitions = cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // GRAFT_BEFORE=1 reconstructs the round-20 planner settings at
-    // runtime (same knobs as PlanDump's before mode) so per-job task
-    // counts can be compared across the AQE-floor / rule-exclusion
-    // change without a checkout
-    if (sys.env.contains("GRAFT_BEFORE")) {
-      spark.conf.set("spark.sql.optimizer.excludedRules", "")
-      spark.conf.set("spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m")
-    }
     val log = new JobLog
     spark.sparkContext.addSparkListener(log)
     // warmup: session init, codegen compiler, parquet footers

@@ -133,7 +133,7 @@ object GraftProps extends Properties("graft") {
     9007199254740993L, Long.MaxValue)
   private val fe3Ints = Gen.choose(-2, 4)
   // a LONG column meets both INT literals (a mixed-class pair, which
-  // takes FilterEval.cmp's exact path) and LONG literals
+  // takes KeyOrder's exact cross-class path) and LONG literals
   private val fe3LongLits: Gen[Any] =
     Gen.frequency(1 -> fe3Ints.map(i => i: Any), 2 -> fe3Longs.map(l => l: Any))
 
@@ -320,50 +320,214 @@ object GraftProps extends Properties("graft") {
       got == exp && pushed
     }
 
+  // ——— the store's one value order ≡ Spark's own ordering (pure) ———
+
+  import org.apache.spark.sql.types.{DataType => SqlType}
+
+  /** Catalyst's value and its order for one column type: the reference
+    * every store order is checked against.
+    */
+  private def sparkValue(dt: SqlType): Any => Any =
+    org.apache.spark.sql.catalyst.CatalystTypeConverters.createToCatalystConverter(dt)
+
+  private def sparkRowOrder(dt: SqlType, desc: Boolean, nullsFirst: Boolean) = {
+    import org.apache.spark.sql.catalyst.expressions._
+    new InterpretedOrdering(Seq(SortOrder(BoundReference(0, dt, nullable = true),
+      if (desc) Descending else Ascending, if (nullsFirst) NullsFirst else NullsLast, Seq.empty)))
+  }
+
+  private def sign(c: Int): Int = Integer.signum(c)
+
+  // U+E000–U+FFFF sort above the surrogates of a supplementary char in
+  // UTF-16 code units, below it in code points (Spark's UTF-8 order)
+  private val koStrs: Gen[Any] = Gen.oneOf("", "a", "ab", "b", "zz", "\uE000", "\uFF21",
+    "\uFFFF", "\uD83D\uDE00", "a\uD83D\uDE00", "\uD800\uDC00", "\uFF21a")
+  private val koDoubles: Gen[Double] = Gen.frequency(
+    3 -> Gen.oneOf(Double.NaN, 0.0, -0.0, Double.PositiveInfinity, Double.NegativeInfinity,
+      Double.MinPositiveValue, 9007199254740993.0),
+    4 -> Gen.choose(-20, 20).map(_ / 4.0))
+  // past 2^53 a long and its nearest double part: only an exact
+  // compare tells 2^53 + 1 from 2^53
+  private val koLongs: Gen[Long] = Gen.frequency(
+    3 -> Gen.oneOf(Long.MinValue, Long.MaxValue, -1L, 0L, 1L, (1L << 53) - 1, 1L << 53,
+      (1L << 53) + 1, -(1L << 53) - 1),
+    2 -> Gen.choose(-5L, 5L))
+  // one decimal value at several scales: 1.5, 1.50, 1.500 are equal
+  private val koDecimals: Gen[Any] = for {
+    u <- Gen.choose(-300L, 300L)
+    s <- Gen.choose(0, 3)
+    widen <- Gen.choose(0, 3 - s)
+  } yield JBigDecimal.valueOf(u, s).setScale(s + widen)
+  private val koDays: Gen[Long] = Gen.choose(-800L, 30000L)
+  private val koMicros: Gen[Long] = Gen.choose(-3000000000000L, 4000000000000000L)
+
+  /** Every type [[graft.sources.bucketed.KeyOrder]] orders, with value
+    * generators that mix both external classes of a date or timestamp.
+    */
+  private val koTypes: Seq[(SqlType, Gen[Any])] = {
+    import org.apache.spark.sql.types._
+    def instant(us: Long) = java.time.Instant.EPOCH.plus(us, java.time.temporal.ChronoUnit.MICROS)
+    Seq(
+      ByteType -> Gen.choose(Byte.MinValue, Byte.MaxValue).map(b => b: Any),
+      ShortType -> Gen.choose(Short.MinValue, Short.MaxValue).map(v => v: Any),
+      IntegerType -> Gen.oneOf(Gen.oneOf(Int.MinValue, Int.MaxValue), Gen.choose(-5, 5)).map(v => v: Any),
+      LongType -> koLongs.map(v => v: Any),
+      FloatType -> koDoubles.map(d => d.toFloat: Any),
+      DoubleType -> koDoubles.map(d => d: Any),
+      DecimalType(10, 3) -> koDecimals,
+      DecimalType(30, 3) -> koDecimals,
+      StringType -> koStrs,
+      DateType -> koDays.flatMap(d => Gen.oneOf[Any](java.time.LocalDate.ofEpochDay(d),
+        java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(d)))),
+      TimestampType -> koMicros.flatMap(us => Gen.oneOf[Any](instant(us),
+        java.sql.Timestamp.from(instant(us)))),
+      TimestampNTZType -> koMicros.map(us =>
+        java.time.LocalDateTime.ofInstant(instant(us), java.time.ZoneOffset.UTC): Any))
+  }
+
+  private val genKeyOrderCase: Gen[Seq[(SqlType, List[Any], Boolean, Boolean)]] =
+    Gen.sequence[Seq[(SqlType, List[Any], Boolean, Boolean)], (SqlType, List[Any], Boolean, Boolean)](
+      koTypes.map { case (dt, gv) =>
+        for {
+          vs <- Gen.listOfN(14, Gen.frequency(6 -> gv, 1 -> Gen.const(null)))
+          desc <- Gen.oneOf(true, false)
+          nullsFirst <- Gen.oneOf(true, false)
+        } yield (dt, vs, desc, nullsFirst)
+      })
+
+  /** `KeyOrder.of(dt)` on every pair of non-null externals, and the
+    * row order over one column (either direction, nulls either end) on
+    * every pair including nulls, give Spark's answer on the Catalyst
+    * values: `PhysicalDataType(dt).ordering` and `InterpretedOrdering`.
+    * Every case covers every orderable type.
+    */
+  property("KeyOrder.of equals Spark's ordering for every comparable type") =
+    forAll(genKeyOrderCase) { cases =>
+      import graft.sources.bucketed.KeyOrder
+      import org.apache.spark.sql.Row
+      import org.apache.spark.sql.catalyst.InternalRow
+      import org.apache.spark.sql.types.{StructField, StructType}
+      cases.forall { case (dt, vs, desc, nullsFirst) =>
+        val conv = sparkValue(dt)
+        val spark = org.apache.spark.sql.catalyst.types.PhysicalDataType.ordering(dt)
+        val ord = KeyOrder.of(dt)
+        val rowOrd = KeyOrder.rows(StructType(Seq(StructField("c", dt))), Array(0),
+          Array(desc), Array(nullsFirst))
+        val sparkRows = sparkRowOrder(dt, desc, nullsFirst)
+        vs.forall(a => vs.forall { b =>
+          (a == null || b == null ||
+            sign(ord.compare(a, b)) == sign(spark.compare(conv(a), conv(b)))) &&
+          sign(rowOrd.compare(Row(a), Row(b))) ==
+            sign(sparkRows.compare(InternalRow(conv(a)), InternalRow(conv(b))))
+        })
+      }
+    }
+
+  /** The cross-class pairs a column type meets — integral literals of
+    * every width and decimal literals on an integral column,
+    * `Timestamp` beside `Instant`, `java.sql.Date` beside `LocalDate` —
+    * against an exact decimal or epoch reference.
+    */
+  property("KeyOrder's cross-class pairs equal an exact decimal or epoch reference") = {
+    import org.apache.spark.sql.types._
+    // one value in every class that can hold it, so equal and adjacent
+    // values meet across classes — past 2^53 too, where a double merges
+    // neighbours
+    val past53 = Gen.oneOf(1L << 53, (1L << 53) + 1, -(1L << 53), -(1L << 53) - 1)
+    val integral: Gen[Any] = Gen.frequency(1 -> koDecimals, 4 -> (for {
+      v <- Gen.oneOf(past53, koLongs, Gen.choose(-3L, 3L))
+      cls <- Gen.choose(0, 5)
+      scale <- Gen.choose(0, 2)
+    } yield cls match {
+      case 0 if v.isValidByte => v.toByte
+      case 1 if v.isValidShort => v.toShort
+      case 2 if v.isValidInt => v.toInt
+      case 3 | 4 => JBigDecimal.valueOf(v).setScale(scale)
+      case _ => v
+    }))
+    val dates: Gen[(Any, Long)] = koDays.flatMap(d => Gen.oneOf[(Any, Long)](
+      (java.time.LocalDate.ofEpochDay(d), d),
+      (java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(d)), d)))
+    val stamps: Gen[(Any, java.time.Instant)] = koMicros.flatMap { us =>
+      val i = java.time.Instant.EPOCH.plus(us, java.time.temporal.ChronoUnit.MICROS)
+      Gen.oneOf[(Any, java.time.Instant)]((i, i), (java.sql.Timestamp.from(i), i))
+    }
+    forAll(Gen.listOfN(60, Gen.zip(integral, integral)), Gen.listOfN(30, Gen.zip(dates, dates)),
+        Gen.listOfN(30, Gen.zip(stamps, stamps))) { (ns, ds, ts) =>
+      import graft.sources.bucketed.KeyOrder
+      def exact(v: Any) = new JBigDecimal(v.toString)
+      ns.forall { case (a, b) =>
+        sign(KeyOrder.of(LongType).compare(a, b)) == sign(exact(a).compareTo(exact(b))) &&
+          sign(KeyOrder.of(IntegerType).compare(a, b)) == sign(exact(a).compareTo(exact(b)))
+      } &&
+      ds.forall { case ((a, da), (b, db)) =>
+        sign(KeyOrder.of(DateType).compare(a, b)) == sign(java.lang.Long.compare(da, db))
+      } &&
+      ts.forall { case ((a, ia), (b, ib)) =>
+        sign(KeyOrder.of(TimestampType).compare(a, b)) == sign(ia.compareTo(ib))
+      }
+    }
+  }
+
   // ——— clustered-bucket range slice (pure, no Spark) ———
 
-  private val genBound: Gen[Option[(Long, Boolean)]] = Gen.option(for {
-    v <- Gen.choose(-20L, 20L)
-    incl <- Gen.oneOf(true, false)
-  } yield (v, incl))
+  /** The sliceable column types: integral, floating point with its
+    * IEEE specials, and strings beyond the BMP.
+    */
+  private val sliceTypes: Seq[(SqlType, Gen[Any])] = {
+    import org.apache.spark.sql.types._
+    Seq(
+      LongType -> Gen.choose(-20L, 20L).map(v => v: Any),
+      DoubleType -> koDoubles.map(d => d: Any),
+      StringType -> koStrs)
+  }
 
-  private val genSliceCase = for {
-    n <- Gen.choose(0, 80)
-    vals <- Gen.listOfN(n, Gen.frequency(
-      (6, Gen.choose(-20L, 20L).map(Option(_))),
-      (1, Gen.const(Option.empty[Long]))))
-    lo <- genBound
-    hi <- genBound
-  } yield (vals, lo, hi)
+  private type SliceCase = (SqlType, List[Any], Option[(Any, Boolean)], Option[(Any, Boolean)])
+
+  private val genSliceCase: Gen[Seq[SliceCase]] =
+    Gen.sequence[Seq[SliceCase], SliceCase](sliceTypes.map { case (dt, gv) =>
+      for {
+        n <- Gen.choose(0, 80)
+        vals <- Gen.listOfN(n, Gen.frequency(6 -> gv, 1 -> Gen.const(null)))
+        lo <- Gen.option(Gen.zip(gv, Gen.oneOf(true, false)))
+        hi <- Gen.option(Gen.zip(gv, Gen.oneOf(true, false)))
+      } yield (dt, vals, lo, hi)
+    })
 
   /** The binary-searched slice must MISS NOTHING: every row outside
     * [start, end) must fail the range (the slice may conservatively
     * include extra rows — FilterEval re-checks them — but a dropped
     * qualifying row is silent data loss). Random (rows, bounds)
-    * layouts, nulls sorted first like the store's cluster order.
+    * layouts per column type, sorted — and the range decided — by
+    * Spark's own ordering (nulls first, the store's cluster order),
+    * not by the code under test.
     */
   property("cluster-range slice never drops a qualifying row") =
-    forAll(genSliceCase) { case (vals, lo, hi) =>
+    forAll(genSliceCase) { cases =>
       import graft.sources.bucketed.ClusterRange
       import org.apache.spark.sql.Row
-      val sorted = vals.sortWith {
-        case (None, None) => false // strict: lt(x, x) must be false (TimSort contract)
-        case (None, _) => true
-        case (_, None) => false
-        case (Some(a), Some(b)) => a < b
+      import org.apache.spark.sql.catalyst.InternalRow
+      import org.apache.spark.sql.types.{StructField, StructType}
+      cases.forall { case (dt, vals, lo, hi) =>
+        val conv = sparkValue(dt)
+        val spark = org.apache.spark.sql.catalyst.types.PhysicalDataType.ordering(dt)
+        val sparkRows = sparkRowOrder(dt, desc = false, nullsFirst = true)
+        val sorted = vals.sortWith((a, b) =>
+          sparkRows.compare(InternalRow(conv(a)), InternalRow(conv(b))) < 0)
+        val rows = sorted.map(v => Row(v)).toArray
+        val (start, end) = ClusterRange.sliceSorted(rows, StructType(Seq(StructField("c", dt))),
+          0, ClusterRange(lo, hi))
+        def satisfies(v: Any): Boolean = v != null && {
+          def c(b: Any) = spark.compare(conv(v), conv(b))
+          lo.forall { case (b, incl) => if (incl) c(b) >= 0 else c(b) > 0 } &&
+          hi.forall { case (b, incl) => if (incl) c(b) <= 0 else c(b) < 0 }
+        }
+        val inBounds = 0 <= start && start <= end && end <= rows.length
+        val missedNone = sorted.zipWithIndex.forall { case (v, i) =>
+          !satisfies(v) || (i >= start && i < end)
+        }
+        inBounds && missedNone
       }
-      val rows = sorted.map(v => Row(v.orNull)).toArray
-      val range = ClusterRange(lo, hi)
-      val (start, end) = ClusterRange.sliceSorted(rows, 0, range)
-      def satisfies(v: Option[Long]): Boolean = v.exists { x =>
-        lo.forall { case (b, incl) => if (incl) x >= b else x > b } &&
-        hi.forall { case (b, incl) => if (incl) x <= b else x < b }
-      }
-      val inBounds = 0 <= start && start <= end && end <= rows.length
-      val missedNone = sorted.zipWithIndex.forall { case (v, i) =>
-        !satisfies(v) || (i >= start && i < end)
-      }
-      inBounds && missedNone
     }
 
   // ——— CDC multiset diff (pure, no Spark) ———
@@ -573,13 +737,14 @@ object GraftProps extends Properties("graft") {
       import graft.sources.bucketed.BucketStore
       val bounds: Array[Any] = bs.sorted.distinct.map(Long.box).toArray
       val n = bounds.length + 1
-      val got = BucketStore.rangeBucketFor(bounds, Long.box(v))
+      import org.apache.spark.sql.types.LongType
+      val got = BucketStore.rangeBucketFor(bounds, LongType, Long.box(v))
       val linear = bounds.indexWhere(b => v <= b.asInstanceOf[Long]) match {
         case -1 => bounds.length
         case i => i
       }
       got >= 0 && got < n && got == linear &&
-        BucketStore.rangeBucketFor(bounds, null) == 0
+        BucketStore.rangeBucketFor(bounds, LongType, null) == 0
     }
 
   /** q200: dHash is invariant under a global brightness shift (no

@@ -57,8 +57,8 @@ object InProbeBench {
     batch.close()
 
     // ROW-PATH flavor (round 19): FilterEval.compile's external-value
-    // probe vs a per-row loop comparing each literal through
-    // FilterEval.cmp (the pre-round-19 shape), over external Rows —
+    // probe vs a per-row loop comparing each literal through the
+    // column's KeyOrder (the pre-round-19 shape), over external Rows —
     // what hot/loaded blocks and MoR delta filtering pay
     val rows: Array[Row] = Array.tabulate(n)(r => Row(Long.box((r * 37L) % 5000L)))
     val keep = FilterEval.compile(schema, Array(f))
@@ -68,7 +68,8 @@ object InProbeBench {
       hits
     }
     time("row-probe", 20000)(runRows(keep))
-    time("row-literals", 20)(runRows(r => lits.exists(FilterEval.cmp(r.get(0), _) == 0)))
+    val ord = KeyOrder.of(schema(0).dataType)
+    time("row-literals", 20)(runRows(r => lits.exists(ord.compare(r.get(0), _) == 0)))
 
     // DECIMAL flavor (round 19): the unscaled-long set probe via
     // getDecimal().toUnscaledLong vs a raw getLong read — quantifies

@@ -216,7 +216,7 @@ class BucketedWriteSpec extends SparkSuite {
     // the CURRENT layout and present the current epoch
     val t = BucketStore.get("w_layout")
     val routed = Array.fill(4)(Vector.newBuilder[Row])
-    routed(BucketStore.routeBucket(t.rangeBounds, 4, 100L)) += Row(100L, "y")
+    routed(BucketStore.routeBucket(t.rangeBounds, t.schema(t.keyCol).dataType, 4, 100L)) += Row(100L, "y")
     BucketStore.commitWrite("w_layout", routed.map(_.result().toArray),
       truncate = false, t.layoutEpoch)
     assert(BucketStore.get("w_layout").buckets.map(_.length).sum === 21)

@@ -166,7 +166,7 @@ class ClusteredScanSpec extends SparkSuite {
     val rt = BucketStore.get("range_app")
     val bounds = rt.rangeBounds.get
     rt.buckets.zipWithIndex.foreach { case (rows, b) =>
-      rows.foreach(r => assert(BucketStore.routeBucket(Some(bounds), 4, r.get(0)) === b,
+      rows.foreach(r => assert(BucketStore.routeBucket(Some(bounds), rt.schema("k").dataType, 4, r.get(0)) === b,
         s"appended row k=${r.get(0)} violates boundary ownership of bucket $b"))
       val ks = rows.map(_.getLong(0))
       assert(ks.sameElements(ks.sorted), "range bucket lost key order after append")

@@ -314,9 +314,9 @@ class ColumnarScanSpec extends SparkSuite {
   test("vectorized merge over an IEEE-specials Double cluster key matches the fold exactly") {
     // NaN (largest), ±Infinity, -0.0 == 0.0, and nulls-first all hit
     // the merge comparator — the fold sorts these through
-    // FilterEval.cmp (BigDecimal finite / IEEE non-finite), the merge
-    // through cmpDouble; this pins their agreement with live delta
-    // rows interleaving among the specials
+    // KeyOrder.rows over external doubles, the merge through
+    // KeyOrder.BatchKey over the vectors; this pins their agreement
+    // with live delta rows interleaving among the specials
     spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     BucketStore.drop("colr_ieee")
     val specials = Array(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,

@@ -24,11 +24,12 @@ class RangeLayoutSpec extends SparkSuite {
     val t = BucketStore.get(name)
     val bounds = t.rangeBounds.get
     val keyIdx = t.schema.fieldIndex(t.keyCol)
+    val keyType = t.schema(keyIdx).dataType
     t.buckets.zipWithIndex.foreach { case (rows, b) =>
       rows.foreach { r =>
         val v = if (r.isNullAt(keyIdx)) null else r.get(keyIdx)
-        assert(BucketStore.rangeBucketFor(bounds, v) === b,
-          s"key $v stored in bucket $b, owned by ${BucketStore.rangeBucketFor(bounds, v)}")
+        assert(BucketStore.rangeBucketFor(bounds, keyType, v) === b,
+          s"key $v stored in bucket $b, owned by ${BucketStore.rangeBucketFor(bounds, keyType, v)}")
       }
     }
   }

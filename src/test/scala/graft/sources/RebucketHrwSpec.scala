@@ -158,7 +158,7 @@ class RebucketHrwSpec extends SparkSuite {
     // deterministic: the null owner is a pure function of the count
     assert(BucketStore.hrwBucketFor(null, 12) === owner)
     // and routeBucket agrees with the function (the single choke point)
-    assert(BucketStore.routeBucket(None, 12, null, hrw = true) === owner.get)
+    assert(BucketStore.routeBucket(None, org.apache.spark.sql.types.LongType, 12, null, hrw = true) === owner.get)
   }
 
   test("plain rebucket on an HRW table converts back to mod-hash (documented full shuffle)") {
