@@ -8,6 +8,14 @@ and float near-misses separately so determinism bugs are visible before
 the driver's round gate runs.
 
 Usage: python3 scripts/oracle_check.py [sfdir] [outdir] [--skip-verify]
+
+The `java` it starts inherits this process's environment, and SparkConf
+reads `spark.*` system properties, so a session setting can be forced
+without an option here. The forced-shuffle run, which takes the shuffle
+side of every statistics-driven broadcast decision:
+
+    JAVA_TOOL_OPTIONS=-Dspark.sql.autoBroadcastJoinThreshold=-1 \
+        python3 scripts/oracle_check.py /root/testdata/sf0.01
 """
 import json, math, struct, subprocess, sys, glob, os
 from decimal import Decimal

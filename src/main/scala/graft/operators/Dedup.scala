@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.GraftMaterialize.{broadcastable, materialize, rowCount}
 import org.apache.spark.sql.functions._
 
 import graft.tables.Tables
@@ -125,22 +126,18 @@ object Dedup {
       .groupBy(col("shingle")).agg(count(lit(1)).as("df"))
       .filter(col("df") > maxDf)
 
-  /** Materialize `result` eagerly (localCheckpoint: computed once,
+  /** Materialize `result` eagerly ([[materialize]]: computed once,
     * blocks on executors) and release the upstream caches it consumed.
     * Pair results are tiny (near-dup pairs, not the corpus), so the
     * checkpoint is cheap — and without this, every invocation of a
     * pair pipeline left its shingle-array cache resident for the rest
     * of the session (bench reps and long sessions accumulated executor
     * storage until eviction pressure). Cluster note: like
-    * [[connectedComponents]]' default, localCheckpoint blocks don't
+    * [[connectedComponents]]' default, local checkpoint blocks don't
     * survive executor loss; rerun the query if that happens mid-job.
     */
   private[operators] def materializeAndRelease(result: DataFrame, cached: DataFrame*): DataFrame = {
-    // plan-evidence hook: the checkpoint below truncates this frame's
-    // plan to a Scan ExistingRDD stub, so dump the REAL plan first
-    // (no-op unless GRAFT_PLAN_CAPTURE_DIR is set)
-    graft.tools.PlanCapture.maybeDump("pairs", result)
-    val out = result.localCheckpoint(true)
+    val out = materialize(result, "pairs")
     cached.foreach(_.unpersist())
     out
   }
@@ -287,8 +284,8 @@ object Dedup {
       .select(col("doc_id"), explode(array_distinct(expr(
         "transform(sequence(0, size(__w) - 3), i -> array_join(slice(__w, i + 1, 3), ' '))")))
         .as("s"))
-    val pairs = pairArtifact(spark, dir).select(col("id_a"), col("id_b"))
-      .localCheckpoint(true)
+    val pairs = materialize(pairArtifact(spark, dir).select(col("id_a"), col("id_b")),
+      "pair_explain_pairs")
     val candIds = pairs.select(col("id_a").as("doc_id"))
       .union(pairs.select(col("id_b").as("doc_id"))).distinct()
     val shC = sh.join(candIds, Seq("doc_id"), "left_semi").cache()
@@ -296,13 +293,13 @@ object Dedup {
     val shared = shC.select(col("doc_id").as("id_a"), col("s"))
       .join(shC.select(col("doc_id").as("id_b"), col("s")), Seq("s"))
       .join(pairs, Seq("id_a", "id_b"), "left_semi")
-    val out = shared.join(dfq, Seq("s"))
+    val out = materialize(shared.join(dfq, Seq("s"))
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window.partitionBy(col("id_a"), col("id_b"))
           .orderBy(col("df").asc, col("s").asc)))
       .filter(col("rn") <= 3)
-      .select(col("id_a"), col("id_b"), col("rn"), col("s").as("shingle"), col("df"))
-      .localCheckpoint(true)
+      .select(col("id_a"), col("id_b"), col("rn"), col("s").as("shingle"), col("df")),
+      "pair_explain")
     shC.unpersist()
     out
   }
@@ -763,7 +760,7 @@ object Dedup {
   }
 
   /** The un-materialized incremental pipeline — split out so specs can
-    * audit the pair plan (the public entry localCheckpoints, which
+    * audit the pair plan (the public entry materializes, which
     * hides the joins from `executedPlan`). Returns (pairs, caches to
     * release after materialization).
     */
@@ -807,11 +804,11 @@ object Dedup {
     // batch signatures are batch-sized and consumed twice (vs-index
     // and vs-self) — materialize them ONCE, eagerly, instead of
     // recomputing the shingle+minhash pipeline per consumer
-    val batchBanded =
+    val batchBanded = materialize(
       bandedRows(minHashSignatures(batchSh, numHashes), numHashes, bands)
         .select(xxhash64(col("band"), col("bsig")).as("bkey"),
-          col("id"), col("band"), col("bsig"))
-        .localCheckpoint(true)
+          col("id"), col("band"), col("bsig")),
+      "incremental_batch_banded")
     // new-vs-history: equi-join on the LSH bucket key (bkey carries
     // the whole join entropy; band+bsig re-checked exactly), bucket-
     // co-located with the stored index's layout
@@ -826,30 +823,26 @@ object Dedup {
           col("x.id") < col("y.id"))
       .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
     // candidates are near-dup-pair-sized (tiny next to the corpus) and
-    // consumed three times below — eager localCheckpoint. NOTE this
+    // consumed three times below — materialized eagerly. NOTE this
     // union mixes a branch carrying the store's simulated host
     // preferences (the index scan) with no-preference branches; in
     // local mode that stage shape starves under delay scheduling
     // unless spark.locality.wait=0 (set by GraftSession/SparkSuite —
     // see GraftSession for the full story).
-    val candidates = newOld.union(newNew).distinct().localCheckpoint(true)
-    // the checkpoint above ERASED statistics, so every semi-join below
-    // against the candidate set planned as a sort-merge join that
-    // shuffled the big probe side — the raw docs parquet, the df store
-    // table, the exploded shingle stream — to meet kilobytes (observed
-    // in plans/r22/q134_*: SortMergeJoin LeftSemi over Exchange(Scan
-    // parquet)). Candidates are near-dup-pair-sized by construction:
-    // broadcast them and their derived id set under a runtime size
-    // gate (the same pattern as the graph loops and the CC fast path);
-    // past the gate the planner's shuffle plans stand unchanged.
-    val nCand = candidates.count()
-    val smallCand = nCand <= 2000000L
-    def bcastIf(df: DataFrame): DataFrame = if (smallCand) broadcast(df) else df
-    // exact verify over candidate documents only — identical scoring
-    // to the one-shot path (shared scoreJaccard), corpus touched via
-    // semi-join
-    val candIds = bcastIf(candidates.select(col("id_a").as("id"))
-      .union(candidates.select(col("id_b").as("id"))).distinct())
+    val candidates = materialize(newOld.union(newNew).distinct(), "incremental_candidates")
+    // Join strategy for the verify stage: every semi-join below probes
+    // a big side — the raw docs parquet, the df store table, the
+    // exploded shingle stream — against a candidate-sized set, which
+    // must be broadcast rather than meet the probe in a sort-merge join
+    // that shuffles it (plans/r22/q134_*). Materialized sides (the
+    // candidates, the candidate shingles) carry their recorded sizes and
+    // the planner decides; so it does for the candidate id set, a
+    // distinct union of projections of the candidates, which the
+    // planner sizes from their recorded bytes. Exact verify runs over
+    // candidate documents only — identical scoring to the one-shot path
+    // (shared scoreJaccard), the corpus touched via semi-join.
+    val candIds = candidates.select(col("id_a").as("id"))
+      .union(candidates.select(col("id_b").as("id"))).distinct()
     // semi-join the RAW docs before shingling — filtering after
     // shingleArrays would shingle the whole corpus first and only then
     // drop non-candidates, making the verify pass ∝ corpus instead of
@@ -866,31 +859,31 @@ object Dedup {
     // intersection counting, exactly like q16's one-shot path. The
     // inner cap in [[intersections]] then never binds more tightly
     // (candidate-scoped df ≤ corpus df ≤ maxDf for every survivor).
-    // the candidate shingle set gates the df-store semi-join: its size
-    // is ∝ candidate DOCS × shingles/doc (not ∝ pairs), so it gets its
-    // OWN materialize-count-broadcast gate — broadcast keeps the
-    // bucket-partitioned df store scan in place instead of shuffling
-    // it into a sort-merge semi-join
-    val candShingles0 = sh.select(col("shingle")).distinct().localCheckpoint(true)
-    val shBcast = candShingles0.count() <= 4000000L
-    val candShingles = if (shBcast) broadcast(candShingles0) else candShingles0
+    // the candidate shingle set (∝ candidate DOCS × shingles/doc, not
+    // ∝ pairs) is materialized: its recorded size lets the planner
+    // broadcast it into the df-store semi-join, keeping the
+    // bucket-partitioned store scan in place
+    val candShingles = materialize(sh.select(col("shingle")).distinct(),
+      "incremental_cand_shingles")
     val dfHist = spark.read.format("graft-buckets").option("table", dfName).load()
       .join(candShingles, Seq("shingle"), "left_semi")
       .groupBy(col("shingle")).agg(sum(col("df")).as("df_hist"))
     val dfBatch = batchSh
       .groupBy(col("shingle")).agg(count(lit(1)).as("df_b"))
-    val overCap0 = candShingles0
+    val overCap0 = candShingles
       .join(dfHist, Seq("shingle"), "left")
       .join(dfBatch, Seq("shingle"), "left")
       .filter(coalesce(col("df_hist"), lit(0L)) + coalesce(col("df_b"), lit(0L)) > maxDf)
       .select(col("shingle"))
-    // over-cap shingles ⊆ candidate shingles — the same gate covers the
-    // anti join (without the hint the checkpoint-rooted lineage has no
-    // stats and the anti join would shuffle the full shingle stream)
-    val overCap = if (shBcast) broadcast(overCap0) else overCap0
+    // over-cap shingles ⊆ candidate shingles, one row each: they
+    // broadcast into the anti join when the candidate shingles fit
+    // (the planner's own estimate of this join output is the product
+    // of its inputs, and the anti join would shuffle the full shingle
+    // stream)
+    val overCap = if (broadcastable(candShingles)) broadcast(overCap0) else overCap0
     val shOk = sh.join(overCap, Seq("shingle"), "left_anti")
     val pairShingles = intersections(shOk, maxDf)
-      .join(bcastIf(candidates), Seq("id_a", "id_b"), "left_semi")
+      .join(candidates, Seq("id_a", "id_b"), "left_semi")
     val pairs = scoreJaccard(pairShingles
       .join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
       .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n_sh", "n_b"), "id_b"),
@@ -1031,7 +1024,7 @@ object Dedup {
     * failure mode; the same permuted chain closes in a handful of
     * passes, and DedupSpec pins ≤10 via `maxIters = 10`.
     *
-    * Two Spark jobs per pass (one localCheckpoint per phase, cutting
+    * Two Spark jobs per pass (one materialize per phase, cutting
     * lineage): convergence is read from an accumulator filled DURING
     * each phase's materialization — a `chg` column records whether an
     * emitted edge differs from the edge it replaces, aggregated
@@ -1044,7 +1037,7 @@ object Dedup {
     *
     * `maxIters` bounds a non-converging graph defensively: exceeding
     * it throws rather than looping silently. Fault
-    * tolerance: `localCheckpoint` trades recoverability for speed —
+    * tolerance: a local checkpoint trades recoverability for speed —
     * blocks live on executors only, so an executor loss mid-loop is
     * unrecoverable. That is the right trade in local mode and for
     * short jobs; on a multi-tenant cluster where executor loss is
@@ -1074,10 +1067,10 @@ object Dedup {
     if (!longIds || reliableCheckpoint)
       return connectedComponentsWithRounds(pairs, maxIters, reliableCheckpoint)._1
     // materialize the pair set once (the star loop would checkpoint it
-    // as `sym` anyway) so the size probe never re-runs the upstream
-    // pair pipeline
-    val p = pairs.select(col("id_a"), col("id_b")).localCheckpoint(true)
-    if (p.count() > MaxDriverCcEdges)
+    // as `sym` anyway): its recorded row count sizes the union-find
+    // gate, and the upstream pair pipeline never re-runs
+    val p = materialize(pairs.select(col("id_a"), col("id_b")), "cc_pairs")
+    if (rowCount(p) > MaxDriverCcEdges)
       return connectedComponentsWithRounds(p, maxIters, reliableCheckpoint)._1
     val rows = p.collect()
     // union-find, component root = MIN id (path-compressing find; the
@@ -1114,8 +1107,7 @@ object Dedup {
     */
   private[graft] def connectedComponentsWithRounds(pairs: DataFrame, maxIters: Int = 50,
       reliableCheckpoint: Boolean = false): (DataFrame, Int) = {
-    def cut(df: DataFrame): DataFrame =
-      if (reliableCheckpoint) df.checkpoint(true) else df.localCheckpoint(true)
+    def cut(df: DataFrame): DataFrame = materialize(df, "cc_star", reliableCheckpoint)
     // symmetrize in ONE pass: a union of two selects over `pairs`
     // would compute the whole upstream pair pipeline twice (Spark does
     // no cross-branch common-subexpression sharing)
@@ -1577,7 +1569,7 @@ object Dedup {
     // returned frame is lazy, so without an eager materialization
     // there is no release point and every invocation would pin the
     // hash set in executor storage for the session lifetime.
-    // localCheckpoint(eager) computes the single output row, then the
+    // materialize computes the single output row, then the
     // cache drops — the pairExplainQuery discipline.
     materializeAndRelease(out, hashes)
   }

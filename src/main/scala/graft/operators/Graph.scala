@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.GraftMaterialize.{broadcastable, materialize, rowCount}
 import org.apache.spark.sql.functions._
 
 import graft.tables.Tables
@@ -15,7 +16,7 @@ import graft.tables.Tables
   * drop-list machinery, PageRank powers graph-signal QUALITY WEIGHTING
   * (rank a link/citation graph, weight documents by the rank of their
   * source — the classic web-corpus curation signal). Same execution
-  * hygiene as CC: per-iteration `localCheckpoint` lineage cuts, a
+  * hygiene as CC: per-iteration `materialize` lineage cuts, a
   * fixed iteration count (power iteration converges geometrically;
   * production runs pick 10-50 and stop), and per-iteration cost =
   * one shuffle of the edge table by src + one by dst — linear in
@@ -38,56 +39,44 @@ object Graph {
   private val Scale = 1000000000000L
   private val Iters = 5
 
-  /** Rank/label/vote tables up to this many rows ride the supersteps
-    * as BROADCAST build sides (~2 longs/row → ≤ ~300 MB built): a
-    * checkpointed iterate has no catalog statistics, so the planner
-    * sort-merge-joined a 1000-row rank table against the cached edge
-    * table EVERY round — re-shuffling and re-sorting |E| per superstep
-    * to move kilobytes (guide §3.1: broadcast the side that fits,
-    * §2.4: remove shuffles outright). Past the cap the loop falls back
-    * to the shuffle join — at that node count the per-round shuffle is
-    * real work, not overhead.
-    */
-  private val MaxBroadcastRankRows = 4000000L
-
   /** Fixed-point PageRank over an edge list (`src`, `dst` long
     * columns). Returns (node, rank_units).
+    *
+    * Join strategy: the edge and rank tables are materialized frames,
+    * so the planner broadcasts whichever fits
+    * `spark.sql.autoBroadcastJoinThreshold` from their recorded sizes.
+    * The per-node `sums` are computed through the edge join, whose
+    * estimate is the product of its inputs; they are bounded by the
+    * rank table (one row per node at most, same width) and ride as a
+    * broadcast exactly when it would.
     */
   def pageRank(edgesIn: DataFrame, iters: Int = Iters): DataFrame = {
     // the edge table is reused every superstep — cut its lineage once
-    val edges0 = edgesIn.select(col("src"), col("dst")).distinct().localCheckpoint(true)
-    val nodes = edges0.select(explode(array(col("src"), col("dst"))).as("id"))
-      .distinct().localCheckpoint(true)
+    val edges0 = materialize(edgesIn.select(col("src"), col("dst")).distinct(), "pagerank_edges")
+    val nodes = materialize(
+      edges0.select(explode(array(col("src"), col("dst"))).as("id")).distinct(), "pagerank_nodes")
     // out-degree is a pure function of the edge table — fold it into
     // the edge rows ONCE instead of re-joining `outd` every superstep
     // (the old shape paid that join, shuffle included, per round)
-    val edges = edges0
-      .join(edges0.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src")
-      .localCheckpoint(true)
-    // one bounded driver scalar (a count of the checkpointed node set,
-    // the same sanctioned pattern as the triangle broadcast gate): it
-    // sizes the broadcast decision and turns the per-round
-    // crossJoin(nAgg) into literals — same integer arithmetic, one
+    val edges = materialize(
+      edges0.join(edges0.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src"),
+      "pagerank_edges_deg")
+    // N is the node table's recorded row count: the per-round
+    // crossJoin(nAgg) becomes literals — same integer arithmetic, one
     // fewer join per superstep
-    val nNodes = nodes.count()
-    val bcast = nNodes <= MaxBroadcastRankRows
-    def side(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
-    val nn = math.max(nNodes, 1L) // empty graph: r is empty, value unused
+    val nn = math.max(rowCount(nodes), 1L) // empty graph: r is empty, value unused
     val init = Scale / nn
     val base = (15L * init) / 100L
-    var r = nodes.select(col("id"), lit(init).as("u")).localCheckpoint(true)
+    var r = materialize(nodes.select(col("id"), lit(init).as("u")), "pagerank_init")
     for (_ <- 1 to iters) {
-      val sums = edges.join(side(r), col("id") === col("src"))
+      val sums = edges.join(r, col("id") === col("src"))
         .select(col("dst"), expr("u div deg").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("s"))
-      r = nodes.join(side(sums), col("id") === col("dst"), "left")
+      val sumsSide = if (broadcastable(r)) broadcast(sums) else sums
+      r = materialize(nodes.join(sumsSide, col("id") === col("dst"), "left")
         .select(col("id"), expr(
           s"$base + (85 * coalesce(s, cast(0 as bigint))) div 100")
-          .as("u"))
-      // plan evidence for the superstep (no-op unless the env is set):
-      // the checkpoint below stubs the plan
-      graft.tools.PlanCapture.maybeDump("pagerank_superstep", r)
-      r = r.localCheckpoint(true)
+          .as("u")), "pagerank_superstep")
     }
     r.select(col("id").as("node"), col("u").as("rank_units"))
   }
@@ -164,15 +153,15 @@ object Graph {
     */
   def triangleCounts(edgesIn: DataFrame): DataFrame = {
     // canonical undirected simple graph
-    val und = edgesIn
+    val und = materialize(edgesIn
       .select(least(col("src"), col("dst")).as("a"), greatest(col("src"), col("dst")).as("b"))
-      .where(col("a") =!= col("b")).distinct().localCheckpoint(true)
+      .where(col("a") =!= col("b")).distinct(), "triangle_undirected")
     val deg = und.select(explode(array(col("a"), col("b"))).as("id"))
       .groupBy(col("id")).agg(count(lit(1)).as("deg"))
     // total order: (degree, id) — orient low → high; the dst rides as
     // a (d, id) struct so wedge ordering and the closing probe compare
     // under the SAME key with no relabeling pass
-    val oriented = und
+    val oriented = materialize(und
       .join(deg.select(col("id").as("a"), col("deg").as("da")), "a")
       .join(deg.select(col("id").as("b"), col("deg").as("db")), "b")
       .select(when(
@@ -180,8 +169,8 @@ object Graph {
           struct(col("a").as("sid"), struct(col("db").as("d"), col("b").as("id")).as("dk")))
         .otherwise(
           struct(col("b").as("sid"), struct(col("da").as("d"), col("a").as("id")).as("dk"))).as("e"))
-      .select(col("e.sid").as("src"), col("e.dk").as("dk"))
-      .localCheckpoint(true)
+      .select(col("e.sid").as("src"), col("e.dk").as("dk")),
+      "triangle_oriented")
     // wedges at the common source: unordered out-neighbor pairs
     val wedges = oriented.select(col("src").as("u"), col("dk").as("v"))
       .join(oriented.select(col("src").as("u"), col("dk").as("w")), "u")
@@ -189,25 +178,17 @@ object Graph {
     // Close each wedge with the oriented edge v → w. The wedge table
     // is the algorithm's Σ C(outdeg, 2) blow-up — orders of magnitude
     // wider than the edge table — so the closing join must never
-    // shuffle IT: when the (deduped, oriented) edge table fits a
-    // broadcast, ship the edges to the wedges (on a dense sf0.1
-    // co-purchase graph this is 300 M wedges vs 1.2 M edges — the
-    // broadcast variant cuts the q175 time ~10×); past the broadcast
-    // budget, fall back to the general shuffle join.
+    // shuffle IT. The closing edges are the materialized oriented
+    // table: its recorded size lets the planner broadcast it to the
+    // wedges whenever it fits the broadcast threshold (on a dense
+    // sf0.1 co-purchase graph, 300 M wedges vs 1.2 M edges — the
+    // broadcast cuts the q175 time ~10×), and past it the planner's
+    // shuffle join stands.
     val closing = oriented.select(col("src").as("vsrc"), col("dk").as("wdk"))
-    val closingSide =
-      if (edgeCount(oriented) <= MaxBroadcastEdges) broadcast(closing) else closing
-    wedges.join(closingSide, col("vsrc") === col("v.id") && col("wdk") === col("w"))
+    wedges.join(closing, col("vsrc") === col("v.id") && col("wdk") === col("w"))
       .select(explode(array(col("u"), col("v.id"), col("w.id"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("n_tri"))
   }
-
-  /** Broadcast budget for the closing-edge table: ~24 bytes/edge →
-    * 20 M edges ≈ 0.5 GB, the conventional executor broadcast ceiling.
-    */
-  private val MaxBroadcastEdges = 20000000L
-
-  private def edgeCount(oriented: DataFrame): Long = oriented.count()
 
   /** q175 gate: the co-purchase graph (parts appearing in the same
     * order) → per-part triangle counts. Edge generation is an
@@ -262,21 +243,21 @@ object Graph {
     * Scale: per round one equi-join of the symmetrized edge list
     * against the label table (shuffle by dst), one (src, label) count,
     * one per-src window — linear in |E| per round, the CC/PageRank
-    * execution hygiene (localCheckpoint lineage cuts, no driver
+    * execution hygiene (materialize lineage cuts, no driver
     * state). The edge build itself is q182's IVF-bucketed kNN graph —
     * never all-pairs.
     */
   def labelPropagation(edges: DataFrame, nodes: DataFrame, rounds: Int): DataFrame = {
-    val sym = edges.select(col("src"), col("dst"))
+    val sym = materialize(edges.select(col("src"), col("dst"))
       .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint(true)
-    var labels = nodes.select(col("id"), col("id").as("label")).localCheckpoint(true)
-    // same broadcast gate as pageRank: the label/vote tables are one
-    // row per node; checkpointed iterates have no stats, so without
-    // the hint every round sort-merge-joined |E| against kilobytes
-    val bcast = labels.count() <= MaxBroadcastRankRows
-    def side(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
+      .distinct(), "labelprop_sym")
+    var labels = materialize(nodes.select(col("id"), col("id").as("label")), "labelprop_init")
+    // the label table is a materialized frame, so the planner sizes its
+    // joins from its recorded size (the community-size join included).
+    // The per-node votes are computed through a join, which the planner
+    // estimates as the product of its inputs; one row per node at most
+    // and no wider than a label row, they broadcast exactly when the
+    // label table would
     (1 to rounds).foreach { _ =>
       // plurality winner per src = argmax over (count, -label): a
       // plain two-phase aggregate (partial agg on both steps) instead
@@ -285,18 +266,17 @@ object Graph {
       // Node ids are non-negative (every caller feeds vec_id/doc_id
       // keys), so -label inverts the tie-break order losslessly.
       val votes = sym
-        .join(side(labels.select(col("id").as("dst"), col("label"))), "dst")
+        .join(labels.select(col("id").as("dst"), col("label")), "dst")
         .groupBy(col("src"), col("label")).agg(count(lit(1)).as("c"))
         .groupBy(col("src"))
         .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("w"))
         .select(col("src").as("id"), (-col("w.nl")).as("nlbl"))
-      labels = labels.join(side(votes), Seq("id"), "left")
-        .select(col("id"), coalesce(col("nlbl"), col("label")).as("label"))
-      graft.tools.PlanCapture.maybeDump("labelprop_round", labels)
-      labels = labels.localCheckpoint(true)
+      val votesSide = if (broadcastable(labels)) broadcast(votes) else votes
+      labels = materialize(labels.join(votesSide, Seq("id"), "left")
+        .select(col("id"), coalesce(col("nlbl"), col("label")).as("label")), "labelprop_round")
     }
     val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("csize"))
-    labels.join(side(sizes), "label")
+    labels.join(sizes, "label")
       .select(col("id"), col("label").as("community"), col("csize"))
   }
 

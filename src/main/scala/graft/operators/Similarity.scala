@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.GraftMaterialize.materialize
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -57,19 +58,18 @@ object Similarity {
       k: Int, fetchK: Int, lambda: Double): DataFrame = {
     val data = emb.select(col(idCol).as("cand_id"), col(vecCol).cast("array<double>").as("cv"))
     val q = queries.select(col("query_id"), col("qv").cast("array<double>").as("qv"))
-    val top = data.join(broadcast(q), col("query_id") =!= col("cand_id"))
+    val top = materialize(data.join(broadcast(q), col("query_id") =!= col("cand_id"))
       .withColumn("sim", round(GraftFunctions.cosine(col("qv"), col("cv")), 6))
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("cand_id").asc)))
       .filter(col("rn") <= fetchK)
-      .select(col("query_id"), col("cand_id"), col("sim"), col("cv"))
-      .localCheckpoint(true)
-    var selected = top
+      .select(col("query_id"), col("cand_id"), col("sim"), col("cv")), "mmr_top")
+    var selected = materialize(top
       .withColumn("pick", row_number().over(
         Window.partitionBy(col("query_id")).orderBy(col("sim").desc, col("cand_id").asc)))
       .filter(col("pick") === 1)
-      .select(col("query_id"), col("cand_id"), col("sim"), col("cv"), lit(1).as("rank"))
-      .localCheckpoint(true)
+      .select(col("query_id"), col("cand_id"), col("sim"), col("cv"), lit(1).as("rank")),
+      "mmr_first")
     var r = 1
     while (r < k) {
       r += 1
@@ -87,7 +87,7 @@ object Similarity {
         .filter(col("prn") === 1)
         .select(col("query_id"), col("cand_id"), col("sim"), col("cv"),
           lit(r).as("rank"))
-      selected = selected.union(pick).localCheckpoint(true)
+      selected = materialize(selected.union(pick), "mmr_round")
     }
     selected.select(col("query_id"), col("cand_id"), col("sim"), col("rank"))
   }
@@ -358,7 +358,7 @@ object Similarity {
       .select(col("query_id"), col("cand_id"), col("rn").as("t_rn"))
     val approx = lshKnnQuery(spark, dir).filter(col("query_id") < 10)
       .select(col("query_id"), col("cand_id"), col("rn").as("a_rn"))
-    val hits = truth.join(approx, Seq("query_id", "cand_id")).localCheckpoint(true)
+    val hits = materialize(truth.join(approx, Seq("query_id", "cand_id")), "retrieval_hits")
     val perQ = truth.select(col("query_id")).distinct()
       .join(hits.groupBy(col("query_id")).agg(count(lit(1)).as("hits")),
         Seq("query_id"), "left")
@@ -419,7 +419,7 @@ object Similarity {
           .filter(col("query_id") < 10)
           .select(lit("store").as("index_name"), col("query_id"), col("cand_id"),
             col("rn").as("a_rn")))
-    val hits = truth.join(approx, Seq("query_id", "cand_id")).localCheckpoint(true)
+    val hits = materialize(truth.join(approx, Seq("query_id", "cand_id")), "retrieval_hits")
     val base = truth.select(col("query_id")).distinct()
       .crossJoin(Seq("lsh", "ivf", "store").toDF("index_name"))
     val perQ = hits.groupBy(col("index_name"), col("query_id"))
@@ -1701,14 +1701,14 @@ object Similarity {
     val assigned = ivfAssign(emb, idCol, vecCol, centroids).cache()
     try {
       val w = Window.partitionBy(col("src")).orderBy(col("sim").desc, col("dst"))
-      assigned.as("a").join(assigned.as("b"),
+      materialize(assigned.as("a").join(assigned.as("b"),
           col("a.cent_id") === col("b.cent_id") && col("a.id") =!= col("b.id"))
         .select(col("a.id").as("src"), col("b.id").as("dst"),
           round(graft.functions.GraftFunctions.cosine(col("a.vec"), col("b.vec")), 6).as("sim"))
         .withColumn("rn", row_number().over(w).cast("int"))
-        .filter(col("rn") <= k)
+        .filter(col("rn") <= k),
         // materialized before the cache under it is released
-        .localCheckpoint(true)
+        "knn_graph")
     } finally assigned.unpersist()
   }
 

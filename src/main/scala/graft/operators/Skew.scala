@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.GraftMaterialize.{broadcastable, materialize}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
@@ -146,7 +147,8 @@ object Skew {
     *
     *   - no key reaches `shareThreshold` → plain shuffle join, zero
     *     overhead added;
-    *   - hot keys exist and their build rows fit `maxBroadcastHotRows`
+    *   - hot keys exist and their build rows — materialized once, so
+    *     their size is measured — fit `spark.sql.autoBroadcastJoinThreshold`
     *     → SPLIT join: the hot slice joins against a BROADCAST of just
     *     the hot build rows (hot probe rows never shuffle at all — the
     *     strongest skew fix, better than any salt factor), the cold
@@ -158,22 +160,21 @@ object Skew {
     * The result is plan-independent — identical rows whichever branch
     * the statistics pick (inner-join semantics drop NULL probe keys on
     * every path). At 100 TB the two stat jobs read one column of the
-    * probe; AQE's skew-join split solves the same problem only for
-    * sort-merge partitions, not for the broadcast-vs-salt choice or
-    * aggregation feeding the join.
+    * probe, and the hot build rows are computed once for both the
+    * size decision and the join; AQE's skew-join split solves the same
+    * problem only for sort-merge partitions, not for the
+    * broadcast-vs-salt choice or aggregation feeding the join.
     */
   def adaptiveJoin(probe: DataFrame, build: DataFrame, probeKey: String, buildKey: String,
-      shareThreshold: Double = 0.1, maxBroadcastHotRows: Long = 4000000L,
-      saltCol: Option[Column] = None): DataFrame =
+      shareThreshold: Double = 0.1, saltCol: Option[Column] = None): DataFrame =
     adaptiveJoinWith(probe, build, probeKey, buildKey,
-      analyzeSkew(probe, col(probeKey), shareThreshold), maxBroadcastHotRows, saltCol)
+      analyzeSkew(probe, col(probeKey), shareThreshold), saltCol)
 
   /** [[adaptiveJoin]] with the decision supplied — the spec hook that
     * makes the chosen branch observable and reproducible.
     */
   def adaptiveJoinWith(probe: DataFrame, build: DataFrame, probeKey: String, buildKey: String,
-      decision: SkewDecision, maxBroadcastHotRows: Long = 4000000L,
-      saltCol: Option[Column] = None): DataFrame = {
+      decision: SkewDecision, saltCol: Option[Column] = None): DataFrame = {
     def plain(p: DataFrame, b: DataFrame): DataFrame = {
       val j = p.join(b, p(probeKey) === b(buildKey))
       if (probeKey == buildKey) j.drop(b(buildKey)) else j
@@ -184,10 +185,11 @@ object Skew {
     // NULL probe keys evaluate `!isin` to NULL and drop — exactly the
     // rows an inner equi-join discards anyway
     val probeCold = probe.filter(!col(probeKey).isin(hot: _*))
-    val buildHot = build.filter(col(buildKey).isin(hot: _*))
+    val buildHot = materialize(build.filter(col(buildKey).isin(hot: _*)), "skew_build_hot")
     val hotJoined =
-      if (buildHot.count() <= maxBroadcastHotRows) {
-        val j = probeHot.join(broadcast(buildHot), probeHot(probeKey) === buildHot(buildKey))
+      if (broadcastable(buildHot)) {
+        // a materialized side: the planner broadcasts it by its recorded size
+        val j = probeHot.join(buildHot, probeHot(probeKey) === buildHot(buildKey))
         if (probeKey == buildKey) j.drop(buildHot(buildKey)) else j
       } else saltedJoin(probeHot, buildHot, probeKey, buildKey, decision.salts, saltCol)
     hotJoined.unionByName(plain(probeCold, build))

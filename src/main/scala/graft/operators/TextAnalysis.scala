@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.GraftMaterialize.materialize
 import org.apache.spark.sql.functions._
 
 import graft.functions.Fingerprint64
@@ -852,11 +853,10 @@ object TextAnalysis {
     val spark = wordFreq.sparkSession
     val Sep = "\u001f"
     val T = rounds
-    val words = wordFreq
+    val words = materialize(wordFreq
       .select(col("freq"),
         expr(s"array_join(transform(sequence(1, length(w)), i -> substring(w, i, 1)), '$Sep')")
-          .as("seg"))
-      .localCheckpoint(true)
+          .as("seg")), "bpe_words")
     var cur = words
     val learned = scala.collection.mutable.ListBuffer.empty[(Int, String, String, Long, Long)]
     var exhausted = false
@@ -883,13 +883,12 @@ object TextAnalysis {
       val best = bestRows(0)
       val (x, y, c) = (best.getString(0), best.getString(1), best.getLong(2))
       val xl = lit(x); val yl = lit(y)
-      cur = cur.select(col("freq"),
+      cur = materialize(cur.select(col("freq"),
         aggregate(split(col("seg"), Sep), lit(""), (acc, e) =>
           when(acc === lit(""), e)
             .when((acc === xl || acc.endsWith(concat(lit(Sep), xl))) && e === yl,
               concat(acc, e))
-            .otherwise(concat(acc, lit(Sep), e))).as("seg"))
-        .localCheckpoint(true)
+            .otherwise(concat(acc, lit(Sep), e))).as("seg")), "bpe_round")
       // the apply path (bpeTrainState) discards the merge list, so it
       // must not pay one extra full aggregation job per round for it
       val tokensAfter = if (trackTokens) cur

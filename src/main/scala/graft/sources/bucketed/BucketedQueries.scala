@@ -46,11 +46,7 @@ object BucketedQueries {
       q.awaitTermination()
     } finally {
       q.stop()
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(ckpt).iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p))
-      } catch { case _: Throwable => () }
+      graft.streaming.StreamOps.deleteTree(ckpt)
     }
   }
 

@@ -2571,16 +2571,13 @@ object FilterEval {
     case _ => false
   }
 
+  /** A comparison is claimed only when the column's order compares the
+    * literal: the column TYPE decides as much as the literal's class (an
+    * Int literal on a BOOLEAN, BINARY or STRING column stays with
+    * Spark's post-scan Filter).
+    */
   private def comparable(schema: StructType, c: String, v: Any): Boolean =
-    schema.fieldNames.contains(c) && (v match {
-      case _: Int | _: Long | _: Double | _: Float | _: Short | _: Byte | _: String |
-           _: java.sql.Timestamp | _: java.sql.Date | _: java.math.BigDecimal => true
-      // the java.time externals: TIMESTAMP_NTZ literals are ALWAYS
-      // LocalDateTime; Instant/LocalDate appear when the session runs
-      // with datetime.java8API.enabled
-      case _: java.time.LocalDateTime | _: java.time.Instant | _: java.time.LocalDate => true
-      case _ => false
-    })
+    schema.fieldNames.contains(c) && KeyOrder.compares(schema(c).dataType, v)
 
   private def stringCol(schema: StructType, c: String): Boolean =
     schema.fieldNames.contains(c) &&

@@ -53,6 +53,26 @@ object KeyOrder {
     case _ => Unordered
   }
 
+  /** Whether [[of]]`(dt)` orders the literal `v` against a `dt` column's
+    * values: any number (its Java boxed class or `java.math.BigDecimal`)
+    * on a numeric column, a `String` on a string column, and on a
+    * date/time column that type's `java.sql` or `java.time` external
+    * (TIMESTAMP_NTZ literals are always `LocalDateTime`; `Instant` and
+    * `LocalDate` appear when the session runs with
+    * `datetime.java8API.enabled`). Every other pairing — and every
+    * literal on a boolean, binary or nested column — would throw.
+    */
+  def compares(dt: DataType, v: Any): Boolean = (dt, v) match {
+    case (_: NumericType, _: java.lang.Long | _: java.lang.Integer | _: java.lang.Short |
+        _: java.lang.Byte | _: java.lang.Double | _: java.lang.Float | _: java.math.BigDecimal) =>
+      true
+    case (_: StringType, _: String) => true
+    case (DateType, _: java.sql.Date | _: java.time.LocalDate) => true
+    case (TimestampType, _: java.sql.Timestamp | _: java.time.Instant) => true
+    case (TimestampNTZType, _: java.time.LocalDateTime) => true
+    case _ => false
+  }
+
   // Each ordering tests its column's own external class first; only a
   // mixed pair reaches the slower cross-class path. isInstanceOf tests,
   // never a `(a, b) match`, which would allocate a tuple per compare.

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import java.io.{IOException, UncheckedIOException}
+import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -65,26 +67,34 @@ object StreamOps {
     * seconds, an hour-old entry is orphaned.
     */
   lazy val sweepStaleEphemeralCheckpoints: Unit = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    if (java.nio.file.Files.isDirectory(shm) && java.nio.file.Files.isWritable(shm)) {
-      val cutoff = System.currentTimeMillis() - 60L * 60 * 1000
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.list(shm).iterator().asScala
-          .filter { p =>
-            val n = p.getFileName.toString
-            (n.startsWith("graft-ckpt-") || n.startsWith("graft_sink_ckpt_")) &&
-              (try java.nio.file.Files.getLastModifiedTime(p).toMillis < cutoff
-              catch { case _: Throwable => false })
-          }
-          .foreach { p =>
-            try java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-              .iterator().asScala.foreach(f => java.nio.file.Files.deleteIfExists(f))
-            catch { case _: Throwable => () }
-          }
-      } catch { case _: Throwable => () }
-    }
+    val shm = Paths.get("/dev/shm")
+    val cutoff = System.currentTimeMillis() - 60L * 60 * 1000
+    if (Files.isDirectory(shm) && Files.isWritable(shm)) try {
+      val entries = Files.list(shm)
+      try entries.forEach { p =>
+        val n = p.getFileName.toString
+        // an entry that vanishes meanwhile is skipped
+        if ((n.startsWith("graft-ckpt-") || n.startsWith("graft_sink_ckpt_")) &&
+            (try Files.getLastModifiedTime(p).toMillis < cutoff
+            catch { case _: IOException => false }))
+          deleteTree(p)
+      } finally entries.close()
+    } catch { case _: IOException | _: UncheckedIOException => () }
   }
+
+  /** Best-effort delete of the checkpoint tree at `root`, deepest
+    * entries first. An I/O failure (an entry vanishing under a
+    * concurrent delete, a permission) leaves the rest for the next
+    * [[sweepStaleEphemeralCheckpoints]]; it is caught so that cleanup
+    * in a `finally` never masks the failure that ended the run. Nothing
+    * else is caught.
+    */
+  private[graft] def deleteTree(root: Path): Unit =
+    try {
+      val tree = Files.walk(root)
+      try tree.sorted(java.util.Comparator.reverseOrder()).forEach { p => Files.deleteIfExists(p); () }
+      finally tree.close()
+    } catch { case _: IOException | _: UncheckedIOException => () }
 
   /** Stateful-operator count of the most recent [[runToMemory]] query
     * (read from its final progress) — lets tests assert streaming-plan
@@ -93,22 +103,6 @@ object StreamOps {
     */
   @volatile var lastStateOperatorCount: Int = -1
 
-  /** Run a streaming DataFrame to completion into a memory sink and
-    * return the collected result as a batch DataFrame. `outputMode`
-    * follows the query shape: "append" for watermarked aggregations
-    * and joins (reference parity: emit once the watermark closes the
-    * window, late rows dropped — W6/W7).
-    *
-    * Stateful streaming shuffles are planned with `statePartitions`
-    * (pinned into the checkpoint at first start, as in any Spark
-    * deployment): state-store count should track key cardinality and
-    * commit IO, not CPU count — 32 stores × per-batch delta files
-    * dominated wall-clock for these queries, and a 1/2/4/8 sweep at
-    * sf0.1 put 2 ahead on every multi-stateful-operator query (each
-    * extra store is another per-batch delta file + commit). The
-    * session's shuffle setting is restored afterwards so batch
-    * queries are unaffected.
-    */
   /** Serializes every streaming run in the session: runToMemory (and
     * the conf-juggling wrappers around it) save/restore session-global
     * configuration, so two overlapping runs would pin each other's
@@ -138,14 +132,30 @@ object StreamOps {
     }
   }
 
-  def runToMemory(df: DataFrame, outputMode: String,
-      statePartitions: Int = sys.env.getOrElse("GRAFT_STATE_PARTITIONS", "2").toInt): DataFrame =
-      harnessLock.synchronized {
+  private val StatePartitions = 2
+
+  /** Run a streaming DataFrame to completion into a memory sink and
+    * return the collected result as a batch DataFrame. `outputMode`
+    * follows the query shape: "append" for watermarked aggregations
+    * and joins (reference parity: emit once the watermark closes the
+    * window, late rows dropped — W6/W7).
+    *
+    * Stateful streaming shuffles are planned with [[StatePartitions]]
+    * (pinned into the checkpoint at first start, as in any Spark
+    * deployment): state-store count should track key cardinality and
+    * commit IO, not CPU count — 32 stores × per-batch delta files
+    * dominated wall-clock for these queries, and a 1/2/4/8 sweep at
+    * sf0.1 put 2 ahead on every multi-stateful-operator query (each
+    * extra store is another per-batch delta file + commit). The
+    * session's shuffle setting is restored afterwards so batch
+    * queries are unaffected.
+    */
+  def runToMemory(df: DataFrame, outputMode: String): DataFrame = harnessLock.synchronized {
     val spark = df.sparkSession
     val name = s"graft_sink_${sinkId.incrementAndGet()}"
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    spark.conf.set(key, statePartitions.toString)
+    spark.conf.set(key, StatePartitions.toString)
     // the duplicate guard below counts data batches from recentProgress,
     // whose ring buffer defaults to 100 entries — raise it so a
     // many-batch source cannot silently rotate early batches out and
@@ -160,9 +170,9 @@ object StreamOps {
     // a production writeStream names a DURABLE checkpointLocation and
     // none of this applies.
     sweepStaleEphemeralCheckpoints
-    val ckptDir: Option[java.nio.file.Path] = {
-      val shm = java.nio.file.Paths.get("/dev/shm")
-      if (java.nio.file.Files.isWritable(shm))
+    val ckptDir: Option[Path] = {
+      val shm = Paths.get("/dev/shm")
+      if (Files.isWritable(shm))
         Some(shm.resolve(s"graft-ckpt-$name-${java.util.UUID.randomUUID}"))
       else None
     }
@@ -202,25 +212,12 @@ object StreamOps {
       } finally {
         lastStateOperatorCount = q.recentProgress.lastOption
           .map(p => Option(p.stateOperators).map(_.length).getOrElse(0)).getOrElse(-1)
-        if (sys.env.contains("GRAFT_STREAM_DEBUG")) {
-          q.recentProgress.foreach { p =>
-            System.err.println(s"[stream] $name batch=${p.batchId} rows=${p.numInputRows} " +
-              s"ms=${p.durationMs} state=${Option(p.stateOperators).map(_.length)}")
-          }
-        }
         q.stop()
       }
     } finally {
       spark.conf.set(key, prev)
       // best-effort cleanup of the throwaway tmpfs checkpoint
-      ckptDir.foreach { p =>
-        try {
-          import scala.jdk.CollectionConverters._
-          if (java.nio.file.Files.exists(p))
-            java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-              .iterator().asScala.foreach(f => java.nio.file.Files.deleteIfExists(f))
-        } catch { case _: Throwable => () }
-      }
+      ckptDir.foreach(deleteTree)
     }
     spark.table(name)
   }

@@ -18,4 +18,14 @@ trait SparkSuite extends AnyFunSuite {
     .getOrCreate()
 
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Run `body` with the session's `spark.sql.autoBroadcastJoinThreshold`
+    * set to `v` ("-1": no join broadcasts by size), restoring it after.
+    */
+  def withBroadcastThreshold[A](v: String)(body: => A): A = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, v)
+    try body finally spark.conf.set(key, prev)
+  }
 }

@@ -52,6 +52,25 @@ class DedupSpec extends SparkSuite {
     assert(got.nonEmpty, "sf0.001 should plant at least one batch-touching near-dup")
   }
 
+  test("incremental dedup: identical pairs with the candidate sets broadcast and shuffled") {
+    val d = graft.tables.Tables.documents(spark, sf)
+    val idx = s"minhash_idx_sides@$sf"
+    graft.sources.bucketed.BucketStore.drop(idx)
+    def run(): (String, Set[(Long, Long, Double)]) = {
+      val (q, caches) = Dedup.incrementalDedupFrames(spark, d, "doc_id", "text", idx,
+        col("doc_id") % 10 === 0, 3, 32, 16, 0.8)
+      val plan = q.queryExecution.executedPlan.toString
+      val pairs = q.select("id_a", "id_b", "jaccard").as[(Long, Long, Double)].collect().toSet
+      caches.foreach(_.unpersist())
+      (plan, pairs)
+    }
+    val (bPlan, broadcastPairs) = run()
+    val (sPlan, shuffledPairs) = withBroadcastThreshold("-1")(run())
+    assert(!bPlan.contains("SortMergeJoin"), "candidate-sized sides must broadcast")
+    assert(!sPlan.contains("BroadcastHashJoin"), "at -1 every join must shuffle")
+    assert(broadcastPairs.nonEmpty && broadcastPairs === shuffledPairs)
+  }
+
   test("incremental dedup reuses the persisted index: second run publishes no new version") {
     val d = graft.tables.Tables.documents(spark, sf)
     val idx = s"minhash_idx_reuse@$sf"

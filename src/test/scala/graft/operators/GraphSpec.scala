@@ -1,5 +1,8 @@
 package graft.operators
 
+import org.apache.spark.sql.catalyst.plans.logical.{Join, JoinHint}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
@@ -95,5 +98,60 @@ class GraphSpec extends SparkSuite {
     assert(byId(1L) !== byId(10L), "distinct cliques must keep distinct communities")
     assert(byId(99L) === 99L, "isolated node must keep its own label")
     assert(got.find(_._1 == 1L).get._3 === 4L, "community size must be the clique size")
+  }
+
+  // ——— both sides of every broadcast decision ———
+
+  /** `run` under the default broadcast threshold and with every size-
+    * driven broadcast off (-1: each join the statistics would broadcast
+    * shuffles instead).
+    */
+  private def bothSides[A](run: => A): (A, A) = (run, withBroadcastThreshold("-1")(run))
+
+  private lazy val cyclic =
+    (0L until 80L).map(i => (i % 13, (i * 7 + 3) % 17)).toDF("src", "dst")
+
+  test("pageRank: identical ranks with the rank-table joins broadcast and shuffled") {
+    val (b, s) = bothSides(Graph.pageRank(cyclic).as[(Long, Long)].collect().sorted.toSeq)
+    assert(b.nonEmpty && b === s)
+  }
+
+  test("triangles: identical counts with the closing join broadcast and shuffled") {
+    val wheel = ((1L to 6L).map(i => (i, if (i == 6L) 1L else i + 1)) ++
+      (1L to 6L).map(i => (0L, i)) ++ Seq((0L, 7L), (7L, 1L))).toDF("src", "dst")
+    Seq(wheel, cyclic).foreach { edges =>
+      val (b, s) = bothSides(Graph.triangleCounts(edges).as[(Long, Long)].collect().sorted.toSeq)
+      assert(b.nonEmpty && b === s)
+    }
+  }
+
+  test("label propagation: identical communities with the vote joins broadcast and shuffled") {
+    def clique(ids: Seq[Long]) = for (a <- ids; b <- ids if a < b) yield (a, b)
+    val edges = (clique(1L to 5L) ++ clique(20L to 23L) ++ Seq((5L, 20L))).toDF("src", "dst")
+    val nodes = ((1L to 5L) ++ (20L to 23L) :+ 99L).toDF("id")
+    val (b, s) = bothSides(Graph.labelPropagation(edges, nodes, rounds = 4)
+      .select("id", "community", "csize").as[(Long, Long, Long)].collect().sorted.toSeq)
+    assert(b.size === 10 && b === s)
+  }
+
+  test("triangles: the closing join broadcasts the oriented edges by their recorded size, no hint") {
+    val k4 = (for { a <- 0L to 3L; b <- 0L to 3L if a < b } yield (a, b)).toDF("src", "dst")
+    def closingJoins(): (Seq[SparkPlan], Seq[Join]) = {
+      val qe = Graph.triangleCounts(k4).queryExecution
+      val hinted = qe.optimizedPlan.collect { case j: Join if j.hint != JoinHint.NONE => j }
+      // the closing join is the one keyed on the closing edge's source
+      val closing = qe.sparkPlan.collect {
+        case j: BroadcastHashJoinExec if (j.leftKeys ++ j.rightKeys)
+            .exists(_.references.exists(_.name == "vsrc")) => j
+        case j: SortMergeJoinExec if (j.leftKeys ++ j.rightKeys)
+            .exists(_.references.exists(_.name == "vsrc")) => j
+      }
+      (closing, hinted)
+    }
+    val (closing, hinted) = closingJoins()
+    assert(hinted.isEmpty, s"no join may carry a hint: $hinted")
+    assert(closing.size === 1 && closing.head.isInstanceOf[BroadcastHashJoinExec], closing)
+    val (shuffled, _) = withBroadcastThreshold("-1")(closingJoins())
+    assert(shuffled.size === 1 && shuffled.head.isInstanceOf[SortMergeJoinExec], shuffled)
   }
 }

@@ -82,14 +82,31 @@ class SkewSpec extends SparkSuite {
     val build = ((1 to 40).map(i => ("hot", s"H$i")) ++ Seq(("k1", "A"), ("k2", "B")))
       .toDF("bk", "tag")
     val decision = Skew.analyzeSkew(skewed, col("k"))
-    val adaptive = Skew.adaptiveJoinWith(skewed, build, "k", "bk", decision,
-      maxBroadcastHotRows = 10L)
+    // 40 hot build rows measure ~1.3 KB: a 100-byte threshold refuses them
+    val adaptive = withBroadcastThreshold("100") {
+      Skew.adaptiveJoinWith(skewed, build, "k", "bk", decision)
+    }
+    assert(adaptive.queryExecution.executedPlan.toString.contains("__bsalt"),
+      "the hot slice must take the salted join")
     val plain = skewed.join(build, col("k") === col("bk"))
       .select("k", "v", "tag").as[(String, Double, String)].collect().sorted.toSeq
     val got = adaptive.select("k", "v", "tag")
       .as[(String, Double, String)].collect().sorted.toSeq
     assert(got === plain)
     assert(got.count(_._1 == "hot") === 900 * 40, "many-to-many hot slice must survive salting")
+  }
+
+  test("adaptiveJoin: identical rows on the split (broadcast) and salted (shuffle) sides") {
+    val build = Seq(("hot", "H"), ("hot", "H2"), ("k1", "A"), ("k2", "B")).toDF("bk", "tag")
+    def run(): (String, Seq[(String, Double, String)]) = {
+      val j = Skew.adaptiveJoin(skewed, build, "k", "bk")
+      (j.queryExecution.executedPlan.toString,
+        j.select("k", "v", "tag").as[(String, Double, String)].collect().sorted.toSeq)
+    }
+    val (splitPlan, split) = run()
+    val (saltedPlan, salted) = withBroadcastThreshold("-1")(run())
+    assert(!splitPlan.contains("__bsalt") && saltedPlan.contains("__bsalt"))
+    assert(split.size === 1802 && split === salted)
   }
 
   test("adaptiveJoin without skew takes the plain join and matches it") {

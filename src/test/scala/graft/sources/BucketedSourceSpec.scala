@@ -450,6 +450,45 @@ class BucketedSourceSpec extends SparkSuite {
     assert(!e(Not(StringEndsWith("v", "c")), row))
   }
 
+  test("FilterEval claims a comparison only when the column's type orders the literal") {
+    import org.apache.spark.sql.sources._
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("id", LongType), StructField("b", BooleanType),
+      StructField("bin", BinaryType), StructField("s", StringType),
+      StructField("arr", ArrayType(LongType)), StructField("d", DateType),
+      StructField("ts", TimestampType)))
+    val claimed = Seq[Filter](EqualTo("id", 1), GreaterThan("id", 2.5),
+      LessThan("id", new java.math.BigDecimal("3")), In("id", Array(1, 2L)), EqualTo("s", "x"),
+      GreaterThan("d", java.sql.Date.valueOf("2020-01-01")),
+      LessThan("ts", java.time.Instant.EPOCH), IsNull("b"), IsNotNull("arr"))
+    claimed.foreach(f => assert(FilterEval.supports(schema, f), s"$f must be claimed"))
+    // each of these compiled predicates would throw on its first row
+    val refused = Seq[Filter](EqualTo("b", 1), EqualTo("b", true), EqualTo("bin", 1),
+      EqualTo("bin", Array[Byte](1)), EqualTo("s", 1), In("s", Array("a", 1)),
+      EqualTo("arr", 1), EqualTo("id", "1"),
+      GreaterThan("d", java.sql.Timestamp.valueOf("2020-01-01 00:00:00")),
+      Not(EqualTo("b", 1)), Or(EqualTo("id", 1), EqualTo("b", 1)))
+    refused.foreach(f => assert(!FilterEval.supports(schema, f), s"$f must not be claimed"))
+  }
+
+  test("an unclaimed comparison stays with Spark's post-scan Filter and returns the right rows") {
+    import spark.implicits._
+    import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan}
+    val df = (1 to 40).map(i => (i.toLong, i % 3 == 0, s"s$i")).toDF("id", "flag", "s")
+    BucketStore.load(spark, "unclaimed_t", df, "id", 4)
+    val builder = new BucketedScanBuilder("unclaimed_t")
+    val onBool: Filter = EqualTo("flag", 1)
+    val onString: Filter = EqualTo("s", 7)
+    val claimed: Filter = GreaterThan("id", 30L)
+    assert(builder.pushFilters(Array(onBool, onString, claimed)).toSeq === Seq(onBool, onString))
+    assert(builder.pushedFilters().toSeq === Seq(claimed))
+    val t = spark.read.format("graft-buckets").option("table", "unclaimed_t").load()
+    val got = t.filter(col("flag") === true && col("id") > 30L).select("id").as[Long]
+      .collect().sorted.toSeq
+    assert(got === Seq(33L, 36L, 39L))
+    assert(t.filter(col("s") === "s7").select("id").as[Long].collect().toSeq === Seq(7L))
+  }
+
   test("MVCC: a reader pinned to an unretained version fails loudly, never reads another snapshot") {
     val t = BucketStore.get(s"lineitem@$sf")
     // a version below the table's first retained snapshot (global
