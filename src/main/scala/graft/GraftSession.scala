@@ -83,6 +83,10 @@ object GraftSession {
       // key only forces a needless Exchange
       .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
       .config("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
+      // StreamOps.runToMemory's update-mode guard counts data batches
+      // in recentProgress, a ring of 100 entries by default: a larger
+      // ring keeps a many-batch source from rotating early batches out
+      .config("spark.sql.streaming.numRecentProgressUpdates", "10000")
       // The bucket store's splits advertise their owning hosts
       // (`host-N` — the simulated cluster's names) as preferred
       // locations. In local mode no executor ever matches them, and

@@ -23,10 +23,11 @@ object BucketedQueries {
       options: Map[String, String] = Map.empty): Unit = {
     val spark = df.sparkSession
     graft.streaming.StreamOps.sweepStaleEphemeralCheckpoints
-    // scratch checkpoint on tmpfs when available: the per-batch
-    // offset/commit logs and state deltas of this ONE-SHOT drive pay
-    // fsync latency for durability nothing ever reads back (the dir is
-    // deleted below); a production stream names a durable location
+    // scratch checkpoint on tmpfs when available: this ONE-SHOT
+    // drive's offset/commit logs and state deltas are never read back
+    // (the dir is deleted below); a production stream names a durable
+    // location. Their per-batch cost was Hadoop forking `readlink`/
+    // `chmod` per file, not fsync (see StreamOps.runToMemory).
     val shm = java.nio.file.Paths.get("/dev/shm")
     val ckpt =
       if (java.nio.file.Files.isWritable(shm))
@@ -46,6 +47,7 @@ object BucketedQueries {
       q.awaitTermination()
     } finally {
       q.stop()
+      org.apache.spark.sql.GraftStreamState.unload(q)
       graft.streaming.StreamOps.deleteTree(ckpt)
     }
   }

@@ -148,7 +148,9 @@ object StreamOps {
     * sf0.1 put 2 ahead on every multi-stateful-operator query (each
     * extra store is another per-batch delta file + commit). The
     * session's shuffle setting is restored afterwards so batch
-    * queries are unaffected.
+    * queries are unaffected. The run leaves nothing behind: the sink's
+    * temp view is dropped and its state-store providers are unloaded
+    * (`GraftStreamState.unload`); the returned frame holds the rows.
     */
   def runToMemory(df: DataFrame, outputMode: String): DataFrame = harnessLock.synchronized {
     val spark = df.sparkSession
@@ -156,19 +158,15 @@ object StreamOps {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
     spark.conf.set(key, StatePartitions.toString)
-    // the duplicate guard below counts data batches from recentProgress,
-    // whose ring buffer defaults to 100 entries — raise it so a
-    // many-batch source cannot silently rotate early batches out and
-    // defeat the guard
-    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "10000")
     // A memory-sink gate run's checkpoint is EPHEMERAL by contract
-    // (Spark itself creates and deletes a temp dir for it) — but the
-    // default temp dir sits on disk, and the per-batch offset/commit
-    // logs and state-store delta files pay real fsync latency there
-    // (~1s per streaming query on this ext4). Point the throwaway
-    // checkpoint at tmpfs when available and delete it after the run;
-    // a production writeStream names a DURABLE checkpointLocation and
-    // none of this applies.
+    // (Spark itself creates and deletes a temp dir for it), so it goes
+    // to tmpfs when available and is deleted after the run; a
+    // production writeStream names a DURABLE checkpointLocation and
+    // none of this applies. The per-batch cost of the offset/commit
+    // logs and state-store delta files was never fsync: it was Hadoop's
+    // local filesystem forking `readlink` per rename and `chmod` per
+    // create, ~174 processes per windowed word count (q37), which
+    // graft.io.ForkFreeRawLocalFileSystem removes.
     sweepStaleEphemeralCheckpoints
     val ckptDir: Option[Path] = {
       val shm = Paths.get("/dev/shm")
@@ -199,6 +197,8 @@ object StreamOps {
         // a batching change (maxFilesPerTrigger, a second file in the
         // glob, byte-limited AvailableNow) ever splits them, fail
         // loudly here instead of silently returning duplicate rows.
+        // (recentProgress holds GraftSession's numRecentProgressUpdates
+        // entries.)
         if (outputMode == "update") {
           val dataBatches = q.recentProgress.count(_.numInputRows > 0)
           // 0 batches (an empty source) cannot duplicate anything —
@@ -213,13 +213,18 @@ object StreamOps {
         lastStateOperatorCount = q.recentProgress.lastOption
           .map(p => Option(p.stateOperators).map(_.length).getOrElse(0)).getOrElse(-1)
         q.stop()
+        org.apache.spark.sql.GraftStreamState.unload(q)
       }
+      // The frame is analysed here, so it holds the sink itself and
+      // stays readable after the view is dropped below; the dropped
+      // view keeps the catalog from pinning every finished run's rows.
+      spark.table(name)
     } finally {
       spark.conf.set(key, prev)
+      spark.catalog.dropTempView(name)
       // best-effort cleanup of the throwaway tmpfs checkpoint
       ckptDir.foreach(deleteTree)
     }
-    spark.table(name)
   }
 
   /** W1/W2 + A2: tumbling 1-hour event-time windows with a 0-second
