@@ -10,8 +10,10 @@ import org.apache.spark.sql.Row
   * touch), so a scan of a larger-than-budget table completes in
   * bounded heap instead of accreting the whole table. Blocks are
   * charged at an ESTIMATED HEAP size (round 17): a 64-row sample of
-  * the loaded array, extrapolated — so the budget bounds what it
-  * claims to bound. File-size charging under-protected exactly when
+  * the loaded array, with the row shells and unshared values
+  * extrapolated and the values the decoders share across rows charged
+  * once ([[heapSizeEstimate]]) — so the budget bounds what it claims
+  * to bound. File-size charging under-protected exactly when
   * compression was best (a heap-relative default charged in snappy'd
   * bytes); the heap estimate tracks the decoded arrays the budget
   * actually protects the JVM from.
@@ -80,28 +82,50 @@ object BlockCache {
     }
   }
 
-  /** Estimated JVM heap footprint of a loaded row array: a 64-row
-    * sample (evenly strided) extrapolated to the array's length.
-    * External `Row`s hold boxed values, so the constants model object
-    * headers + boxing, not encoded widths — intentionally a HEAP
-    * model, which is what the budget protects. Deterministic, so a
+  /** Estimated JVM heap footprint of a loaded row array, from a
+    * 64-row sample (evenly strided). External `Row`s hold boxed
+    * values, so the constants model object headers + boxing, not
+    * encoded widths — intentionally a HEAP model, which is what the
+    * budget protects. The decoders share equal immutable values across
+    * rows ([[ValueSharing]]), so a value INSTANCE that recurs within
+    * the sample is charged once; the row shells and the instances seen
+    * once are extrapolated to the array's length. Deterministic, so a
     * block's charge is stable across reloads.
     */
   private[bucketed] def heapSizeEstimate(rows: Array[Row]): Long = {
     if (rows.isEmpty) return 0L
     val sample = math.min(rows.length, 64)
     val step = math.max(1, rows.length / sample)
-    var bytes = 0L
+    // sampled value instance → whether it recurs within the sample
+    val recurs = new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]()
+    var perRow = 0L
     var n = 0
     var i = 0
     while (i < rows.length && n < sample) {
-      bytes += rowBytes(rows(i)); n += 1; i += step
+      val r = rows(i)
+      perRow += rowShellBytes(r)
+      var j = 0
+      while (j < r.length) {
+        if (!r.isNullAt(j)) {
+          val v = r.get(j).asInstanceOf[AnyRef]
+          recurs.put(v, java.lang.Boolean.valueOf(recurs.containsKey(v)))
+        }
+        j += 1
+      }
+      n += 1; i += step
     }
-    math.round(bytes.toDouble / n * rows.length)
+    var shared = 0L
+    recurs.forEach { (v, again) =>
+      if (again) shared += valueBytes(v) else perRow += valueBytes(v)
+    }
+    math.round(perRow.toDouble / n * rows.length) + shared
   }
 
+  // GenericRow + its value ref array
+  private def rowShellBytes(r: Row): Long = 32L + 8L * r.length
+
   private def rowBytes(r: Row): Long = {
-    var b = 32L + 8L * r.length // GenericRow + its value ref array
+    var b = rowShellBytes(r)
     var j = 0
     while (j < r.length) {
       if (!r.isNullAt(j)) b += valueBytes(r.get(j))
@@ -140,6 +164,58 @@ object BlockCache {
   }
 }
 
+/** Decode-scoped value sharing. The store's two row decoders
+  * ([[RowPayloadCodec.read]] and [[FileStore.readBlock]]) pass every
+  * decoded value through one of these, column by column, so equal
+  * values of an immutable type become ONE instance across the rows of
+  * that decode. Five distinct flag strings, ~2.5k ship dates or a few
+  * dozen distinct quantities then cost one object each, not one per
+  * row.
+  *
+  * Shared: `String`, `LocalDateTime`, `LocalDate`, `Instant`,
+  * `java.math.BigDecimal` (its `equals` tells `1.0` from `1.00`) and
+  * boxed integral, `Float` and `Double` values (boxed `equals`
+  * compares bits, so `-0.0` and `0.0` stay apart). NaN is never
+  * shared: boxed `equals` folds NaN payloads together. The mutable
+  * `java.sql.Timestamp`, `java.sql.Date` and `Array[Byte]` values and
+  * nested values are never shared. A column whose dictionary passes
+  * [[ValueSharing.MaxEntries]] stops sharing for the rest of the
+  * decode, so high-cardinality keys pay only a short probe. Nothing
+  * outlives the decode: no global state, no lock.
+  */
+private[bucketed] final class ValueSharing(arity: Int) {
+  private val dicts = Array.fill(arity)(new java.util.HashMap[AnyRef, AnyRef]())
+
+  /** `v`, or the equal instance column `col` already holds. */
+  def apply(col: Int, v: Any): Any = {
+    val dict = dicts(col)
+    if (dict == null || !ValueSharing.shareable(v)) v
+    else {
+      val x = v.asInstanceOf[AnyRef]
+      val prior = dict.putIfAbsent(x, x)
+      if (prior != null) prior
+      else {
+        if (dict.size > ValueSharing.MaxEntries) dicts(col) = null
+        x
+      }
+    }
+  }
+}
+
+private[bucketed] object ValueSharing {
+  /** Distinct values one column may collect before it stops sharing. */
+  val MaxEntries = 4096
+
+  private def shareable(v: Any): Boolean = v match {
+    case _: String | _: java.lang.Long | _: java.lang.Integer | _: java.math.BigDecimal |
+         _: java.time.LocalDateTime | _: java.time.LocalDate | _: java.time.Instant |
+         _: java.lang.Short | _: java.lang.Byte => true
+    case d: java.lang.Double => !d.isNaN
+    case f: java.lang.Float => !f.isNaN
+    case _ => false
+  }
+}
+
 /** One bucket's base payload: in-heap rows, optionally backed by an
   * immutable parquet file ([[FileStore]]). The block is the unit of
   * copy-on-write sharing across MVCC snapshots — an untouched bucket
@@ -157,6 +233,12 @@ object BlockCache {
   *     exactly the buckets it opens. This is the state every block of
   *     a table opened from disk ([[BucketStore.openFromDisk]]) starts
   *     in: the driver holds file REFERENCES, never the table.
+  *
+  * Values in a block's rows may be shared with other rows, of this
+  * block and of others decoded from the same payload: both decoders
+  * hand out one instance per distinct immutable value
+  * ([[ValueSharing]]). Stored rows and their values are never mutated;
+  * a commit builds new rows.
   */
 final class BucketBlock private (
     @volatile private var mem: Array[Row],

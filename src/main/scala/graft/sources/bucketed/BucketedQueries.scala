@@ -3,6 +3,8 @@ package graft.sources.bucketed
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import scala.util.control.NonFatal
+
 /** Oracle-gated queries driving the graft-buckets DSv2 source
   * end-to-end: load the table into the bucket store (modeling the
   * external cluster already holding it), read back through
@@ -11,6 +13,16 @@ import org.apache.spark.sql.functions._
   * (timezone-free compare).
   */
 object BucketedQueries {
+  /** `e` and its cause chain. The queries that provoke an expected
+    * failure catch only that failure, found here (`case NonFatal(e) if
+    * isWriteConflict(e)`); any other error propagates with its
+    * original stack.
+    */
+  private def causes(e: Throwable): Iterator[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+
+  private def isWriteConflict(e: Throwable): Boolean =
+    causes(e).exists(_.isInstanceOf[BucketStore.ConcurrentWriteException])
 
   val NumBuckets = 16
 
@@ -1615,11 +1627,7 @@ object BucketedQueries {
     val update3 = s"UPDATE graft.`$name` SET c_acctbal = c_acctbal + 100 WHERE c_custkey = 3"
     val conflicted =
       try { spark.sql(update3); false }
-      catch {
-        case e: Throwable =>
-          Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-            .exists(_.isInstanceOf[BucketStore.ConcurrentWriteException])
-      }
+      catch { case NonFatal(e) if isWriteConflict(e) => true }
     require(conflicted, "a same-bucket interleave must fail the statement, not lose the update")
     spark.sql(update3) // retry re-plans against the current snapshot and lands
 
@@ -1678,11 +1686,7 @@ object BucketedQueries {
     spark.sql(s"DELETE FROM graft.`$name` WHERE doc_id = 1") // main commit lands
     val conflicted =
       try { spark.sql(s"CALL graft.publish_branch('$name', 'late')"); false }
-      catch {
-        case e: Throwable =>
-          Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-            .exists(_.isInstanceOf[BucketStore.ConcurrentWriteException])
-      }
+      catch { case NonFatal(e) if isWriteConflict(e) => true }
     require(conflicted, "publishing a branch after main moved must refuse, not discard")
     spark.sql(s"CALL graft.drop_branch('$name', 'late')")
 
@@ -1774,11 +1778,7 @@ object BucketedQueries {
     spark.sql(s"DELETE FROM graft.`$name` WHERE p_partkey = 2") // main moves, disjoint
     val conflicted =
       try { spark.sql(s"CALL graft.publish_branch('$name', 'fix')"); false }
-      catch {
-        case e: Throwable =>
-          Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-            .exists(_.isInstanceOf[BucketStore.ConcurrentWriteException])
-      }
+      catch { case NonFatal(e) if isWriteConflict(e) => true }
     require(conflicted, "publish after main moved must refuse before the rebase")
     spark.sql(s"CALL graft.rebase_branch('$name', 'fix')")
     spark.sql(s"CALL graft.publish_branch('$name', 'fix')") // now fast-forwards
@@ -2164,11 +2164,7 @@ object BucketedQueries {
     val del = s"DELETE FROM graft.`$name` WHERE c_custkey = 7"
     val conflicted =
       try { spark.sql(del); false }
-      catch {
-        case e: Throwable =>
-          Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-            .exists(_.isInstanceOf[BucketStore.ConcurrentWriteException])
-      }
+      catch { case NonFatal(e) if isWriteConflict(e) => true }
     require(conflicted, "the local commit must lose the race loudly, never clobber")
     require(BucketStore.currentVersion(name) == foreignV,
       "the loser must absorb the foreign head before the retry")
@@ -3147,12 +3143,8 @@ object BucketedQueries {
           "SELECT o_orderkey + 10000000, o_custkey, o_orderstatus, -o_totalprice FROM chk_src")
         false
       } catch {
-        case e: Throwable =>
-          val msgs = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
-            .map(_.getMessage).mkString(" | ")
-          require(msgs.contains("CHECK constraint violation"),
-            s"violating insert failed for the wrong reason: $msgs")
-          true
+        case NonFatal(e) if causes(e).exists(c =>
+          c.getMessage != null && c.getMessage.contains("CHECK constraint violation")) => true
       }
     require(rejected, "violating INSERT was accepted by a CHECK-constrained table")
     require(BucketStore.get(name).version == versionBefore,

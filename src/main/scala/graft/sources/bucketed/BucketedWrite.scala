@@ -284,6 +284,13 @@ object BucketWriteCommit {
   * exactly the external-Row representations
   * [[BucketedDataWriter.toRow]]'s converters produce; anything else
   * (array/map/struct columns, java-8 time objects) takes marker 2.
+  * Doubles and floats travel as their raw bits, so a NaN keeps its
+  * payload (the streams' own `writeDouble` canonicalizes it).
+  *
+  * [[read]] shares values across the rows it decodes
+  * ([[ValueSharing]]): equal immutable values come back as ONE
+  * instance, so a decoded row's values may be held by other rows too.
+  * Stored values are never mutated, which is what makes that safe.
   */
 private[bucketed] object RowPayloadCodec {
   import org.apache.spark.sql.catalyst.util.DateTimeUtils
@@ -306,8 +313,8 @@ private[bucketed] object RowPayloadCodec {
     def byte(b: Int): Unit = o.writeByte(b)
     def int(i: Int): Unit = o.writeInt(i)
     def long(l: Long): Unit = o.writeLong(l)
-    def double(d: Double): Unit = o.writeDouble(d)
-    def float(f: Float): Unit = o.writeFloat(f)
+    def double(d: Double): Unit = o.writeLong(java.lang.Double.doubleToRawLongBits(d))
+    def float(f: Float): Unit = o.writeInt(java.lang.Float.floatToRawIntBits(f))
     def bytes(a: Array[Byte]): Unit = { o.writeInt(a.length); o.write(a) }
     def string(s: String): Unit = bytes(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     def obj(x: AnyRef): Unit = o.writeObject(x)
@@ -316,8 +323,8 @@ private[bucketed] object RowPayloadCodec {
     def byte(): Byte = i.readByte()
     def int(): Int = i.readInt()
     def long(): Long = i.readLong()
-    def double(): Double = i.readDouble()
-    def float(): Float = i.readFloat()
+    def double(): Double = java.lang.Double.longBitsToDouble(i.readLong())
+    def float(): Float = java.lang.Float.intBitsToFloat(i.readInt())
     def bytes(n: Int): Array[Byte] = { val a = new Array[Byte](n); i.readFully(a); a }
     def string(): String = new String(bytes(int()), java.nio.charset.StandardCharsets.UTF_8)
     def obj(): AnyRef = i.readObject()
@@ -327,8 +334,8 @@ private[bucketed] object RowPayloadCodec {
     def byte(b: Int): Unit = o.writeByte(b)
     def int(i: Int): Unit = o.writeInt(i)
     def long(l: Long): Unit = o.writeLong(l)
-    def double(d: Double): Unit = o.writeDouble(d)
-    def float(f: Float): Unit = o.writeFloat(f)
+    def double(d: Double): Unit = o.writeLong(java.lang.Double.doubleToRawLongBits(d))
+    def float(f: Float): Unit = o.writeInt(java.lang.Float.floatToRawIntBits(f))
     def bytes(a: Array[Byte]): Unit = { o.writeInt(a.length); o.writeBytes(a) }
     def string(s: String): Unit = o.writeString(s)
     def obj(x: AnyRef): Unit = k.writeClassAndObject(o, x)
@@ -338,8 +345,8 @@ private[bucketed] object RowPayloadCodec {
     def byte(): Byte = i.readByte()
     def int(): Int = i.readInt()
     def long(): Long = i.readLong()
-    def double(): Double = i.readDouble()
-    def float(): Float = i.readFloat()
+    def double(): Double = java.lang.Double.longBitsToDouble(i.readLong())
+    def float(): Float = java.lang.Float.intBitsToFloat(i.readInt())
     def bytes(n: Int): Array[Byte] = i.readBytes(n)
     def string(): String = i.readString()
     def obj(): AnyRef = k.readClassAndObject(i)
@@ -393,6 +400,7 @@ private[bucketed] object RowPayloadCodec {
     val schema = schemaCache.computeIfAbsent(json,
       j => DataType.fromJson(j).asInstanceOf[StructType])
     val types = schema.fields.map(_.dataType)
+    val share = new ValueSharing(types.length)
     Array.tabulate(n) { _ =>
       val count = in.int()
       val rows = new Array[Row](count)
@@ -400,7 +408,7 @@ private[bucketed] object RowPayloadCodec {
       while (i < count) {
         val vals = new Array[Any](types.length)
         var f = 0
-        while (f < types.length) { vals(f) = readValue(in, types(f)); f += 1 }
+        while (f < types.length) { vals(f) = share(f, readValue(in, types(f))); f += 1 }
         rows(i) = new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(vals, schema)
         i += 1
       }

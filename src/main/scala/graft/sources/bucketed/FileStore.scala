@@ -13,6 +13,7 @@ import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetWriteSupport}
 import org.apache.spark.sql.internal.{LegacyBehaviorPolicy, SQLConf}
@@ -231,11 +232,6 @@ object FileStore {
     conf
   }
 
-  /** Read a block file back into rows, using the Spark schema the file
-    * itself carries (footer metadata) — self-describing, so a file
-    * written under an older (narrower) schema reads back in its stored
-    * short form and the fetch path pads, like heap always did.
-    */
   /** Raised when a block read touches a file that no longer exists on
     * disk: this reader's snapshot is STALE and its files were
     * garbage-collected by a concurrent vacuum in another process. The
@@ -255,6 +251,13 @@ object FileStore {
   private def requirePresent(f: BlockFile): Unit =
     if (!Files.exists(Paths.get(f.path))) throw new VacuumedFilesException(f.path)
 
+  /** Read a block file back into rows, using the Spark schema the file
+    * itself carries (footer metadata) — self-describing, so a file
+    * written under an older (narrower) schema reads back in its stored
+    * short form and the fetch path pads, like heap always did. Equal
+    * immutable values come back as one instance across the block's
+    * rows ([[ValueSharing]]), as they do from the commit payload.
+    */
   private[bucketed] def readBlock(f: BlockFile): Array[Row] = {
     if (f.rows == 0 || f.path.isEmpty) return Array.empty[Row]
     if (sys.props.contains("graft.debug.read"))
@@ -270,14 +273,19 @@ object FileStore {
     val support = new ParquetReadSupport(None, enableVectorizedReader = false,
       corrected, corrected)
     val reader = ParquetReader.builder[InternalRow](support, hp).withConf(conf).build()
-    val toScala = CatalystTypeConverters.createToScalaConverter(schema)
+    val types = schema.fields.map(_.dataType)
+    val toScala = types.map(CatalystTypeConverters.createToScalaConverter)
+    val share = new ValueSharing(types.length)
     val out = new Array[Row](f.rows)
     try {
       var i = 0
       var r = reader.read()
       while (r != null) {
         require(i < out.length, s"block ${f.path} holds more rows than its manifest count ${f.rows}")
-        out(i) = toScala(r).asInstanceOf[Row]
+        val vals = new Array[Any](types.length)
+        var c = 0
+        while (c < types.length) { vals(c) = share(c, toScala(c)(r.get(c, types(c)))); c += 1 }
+        out(i) = new GenericRowWithSchema(vals, schema)
         i += 1
         r = reader.read()
       }

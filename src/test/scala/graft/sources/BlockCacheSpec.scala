@@ -81,12 +81,13 @@ class BlockCacheSpec extends SparkSuite {
   test("heap charging: a compressible wide-row table is bounded by HEAP bytes, not file bytes") {
     val name = "bc_wide"
     BucketStore.drop(name)
-    // 2000 identical chars per row: parquet dictionary + snappy crush
-    // the FILE ~100x while the decoded heap array keeps every char —
-    // exactly the shape where file-size charging admitted the whole
-    // table under a budget it was actually blowing through
+    // ~2000 chars per row, distinct per row (the decoders share equal
+    // strings) but nearly all one repeated char: snappy crushes the
+    // FILE while the decoded heap array keeps every char — exactly the
+    // shape where file-size charging admitted the whole table under a
+    // budget it was actually blowing through
     BucketStore.load(spark, name,
-      (1 to 4000).map(i => (i.toLong, "x" * 2000)).toDF("k", "pad"), "k", 8)
+      (1 to 4000).map(i => (i.toLong, "x" * 1990 + i)).toDF("k", "pad"), "k", 8)
     // collect, not count: a pushed count(*) is stats-served and never
     // touches a block — the cache's client is the row reader
     val want = rowScan(name).collect().length
@@ -112,6 +113,32 @@ class BlockCacheSpec extends SparkSuite {
       assert(BlockCache.loadedBytes <= budget + heaps.max)
     } finally BlockCache.budgetBytes = defaultBudget
     BucketStore.drop(name)
+  }
+
+  test("the heap estimate stays within 2x of SizeEstimator, shared and all-distinct blocks") {
+    val shared = "bc_est_shared"
+    val distinct = "bc_est_distinct"
+    Seq(shared, distinct).foreach(BucketStore.drop)
+    // lineitem's shape: a distinct key, low-cardinality flags, a few
+    // dozen quantities and dates the decoders share across rows
+    BucketStore.load(spark, shared,
+      (1 to 4000).map(i => (i.toLong, s"F${i % 3}", (i % 50).toDouble,
+        java.time.LocalDateTime.of(2024, 1, 1, 0, 0).plusDays(i % 40))).toDF("k", "f", "q", "d"),
+      "k", 4)
+    BucketStore.load(spark, distinct,
+      (1 to 4000).map(i => (i.toLong, s"distinct-$i-${"y" * 20}", i * 1.5 + 0.1))
+        .toDF("k", "s", "v"), "k", 4)
+    Seq(shared, distinct).foreach { name =>
+      val t = BucketStore.get(name)
+      (0 until t.buckets.length).foreach { b =>
+        val rows = t.buckets(b)
+        val est = BlockCache.heapSizeEstimate(rows).toDouble
+        val real = org.apache.spark.util.SizeEstimator.estimate(rows).toDouble
+        assert(est <= 2 * real && real <= 2 * est,
+          s"$name bucket $b: estimate $est B against SizeEstimator $real B")
+      }
+    }
+    Seq(shared, distinct).foreach(BucketStore.drop)
   }
 
   test("under the default budget nothing evicts at test scale (bench fold stays flat)") {
