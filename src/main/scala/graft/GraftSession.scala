@@ -16,6 +16,22 @@ import org.apache.spark.sql.SparkSession
   * at first start) — see SCALE.md "Sizing state partitions at 100×"
   * before taking `StreamOps.runToMemory`'s local default of 2 to a
   * cluster.
+  *
+  * The query bodies read these settings and never set them, so a
+  * session built WITHOUT this builder must set, at birth:
+  *   - `spark.sql.catalog.graft` = [[graft.sources.bucketed.BucketedCatalog]]
+  *     (every `graft.`-qualified bucket-store table);
+  *   - `spark.sql.legacy.parquet.nanosAsLong` = true (events.parquet's
+  *     TIMESTAMP(NANOS) `ts`, see [[graft.tables.Tables.events]]);
+  *   - `spark.sql.sources.v2.bucketing.enabled` = true,
+  *     `spark.sql.sources.v2.bucketing.pushPartValues.enabled` = true
+  *     and `spark.sql.requireAllClusterKeysForCoPartition` = false
+  *     (storage-partitioned joins over the store);
+  *   - `spark.sql.session.timeZone` = UTC (the oracle's timestamps);
+  *   - `spark.sql.streaming.numRecentProgressUpdates` ≥ the batches of
+  *     one `StreamOps.runToMemory` run;
+  *   - `spark.locality.wait` = 0s in local mode (see below).
+  * The rest (AQE floor, excluded rule, Kryo) are speed settings.
   */
 object GraftSession {
 

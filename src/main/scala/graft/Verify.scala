@@ -6,9 +6,11 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    // optional extra args: restrict to the named queries (debug aid;
-    // the driver's two-arg invocation runs everything)
-    val only = args.drop(2).toSet
+    // optional extra args: run only the named queries, in the order
+    // given (an unknown name counts as failed); the driver's two-arg
+    // invocation runs everything
+    val queries = SparkEntry.queries
+    val names = if (args.length > 2) args.drop(2).toSeq else queries.keys.toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
     val spark = GraftSession
       .builder("graft-verify", s"local[$cpus]", shufflePartitions = cpus)
@@ -16,10 +18,8 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.ListBuffer.empty[String]
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only.contains(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+    names.foreach { name =>
+      try queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -49,7 +49,7 @@ object Verify {
     // can prove queries ⊆ green-checked set (a registered query with
     // no output — round 4's q91 — must fail the gate, not vanish).
     Files.writeString(Paths.get(s"$outDir/queries.json"),
-      SparkEntry.queries.keys.toSeq.sorted.map(q).mkString("[", ",", "]"))
+      queries.keys.toSeq.sorted.map(q).mkString("[", ",", "]"))
     spark.stop()
     if (failed.nonEmpty) {
       System.err.println(s"[verify] FAILED queries: ${failed.mkString(", ")}")

@@ -160,10 +160,7 @@ object AsOfJoin {
     * in the plan. Same oracle as q38 (DuckDB ASOF LEFT JOIN).
     */
   def eventAsOfBucketedQuery(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.bucketed.{BucketStore, BucketedCatalog}
-    // idempotent re-assert for sessions not built via GraftSession
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
+    import graft.sources.bucketed.BucketStore
     BucketStore.ensureLoaded(spark, s"events@$dir", dir, "events", "user_id", 16)
     val ev = spark.table(s"graft.`events@$dir`")
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"),

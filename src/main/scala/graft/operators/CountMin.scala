@@ -96,7 +96,6 @@ object CountMin {
     */
   def streamCmsQuery(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types._
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),

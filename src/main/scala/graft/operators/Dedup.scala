@@ -436,8 +436,7 @@ object Dedup {
     * never a rebuild.
     */
   def pairArtifactExtendQuery(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.bucketed.{BucketStore, BucketedCatalog}
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
+    import graft.sources.bucketed.BucketStore
     val docs = Tables.documents(spark, dir)
     val artifact = s"jaccard_pairs_ext@$dir"
     val indexName = s"minhash_idx_ext@$dir"
@@ -827,8 +826,8 @@ object Dedup {
     // union mixes a branch carrying the store's simulated host
     // preferences (the index scan) with no-preference branches; in
     // local mode that stage shape starves under delay scheduling
-    // unless spark.locality.wait=0 (set by GraftSession/SparkSuite —
-    // see GraftSession for the full story).
+    // unless spark.locality.wait=0 (set by GraftSession, which tells
+    // the full story).
     val candidates = materialize(newOld.union(newNew).distinct(), "incremental_candidates")
     // Join strategy for the verify stage: every semi-join below probes
     // a big side — the raw docs parquet, the df store table, the
@@ -935,8 +934,6 @@ object Dedup {
     */
   def retireFromIndex(spark: SparkSession, docs: DataFrame, idCol: String, textCol: String,
       indexName: String, isDropped: Column, n: Int, numHashes: Int, bands: Int): Unit = {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.bucketed.BucketedCatalog].getName)
     signatureIndexRows(docs.filter(isDropped), idCol, textCol, n, numHashes, bands)
       .createOrReplaceTempView("graft_idx_retire")
     spark.sql(s"MERGE INTO graft.`$indexName` t USING graft_idx_retire s " +
@@ -1697,7 +1694,6 @@ object Dedup {
     import graft.functions.{Fingerprint64, GraftFunctions, Mix64}
     import org.apache.spark.sql.types._
     val H = 64
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType),
       StructField("lang", StringType), StructField("source", StringType),

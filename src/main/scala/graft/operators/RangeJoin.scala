@@ -83,11 +83,7 @@ object RangeJoin {
     * the extra bucket key only orders the merge. Same oracle as q39.
     */
   def attributionBucketedQuery(spark: SparkSession, dir: String): DataFrame = {
-    import graft.sources.bucketed.{BucketStore, BucketedCatalog}
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-    spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    spark.conf.set("spark.sql.sources.v2.bucketing.pushPartValues.enabled", "true")
+    import graft.sources.bucketed.BucketStore
     BucketStore.ensureLoaded(spark, s"events@$dir", dir, "events", "user_id", 16)
     val hourUs = 3600L * 1000000L
     val ev = spark.table(s"graft.`events@$dir`")

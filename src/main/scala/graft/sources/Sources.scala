@@ -158,36 +158,30 @@ object Sources {
     // columns, so malformed rows are never even detected and
     // DROPMALFORMED/FAILFAST silently pass everything — pruning must
     // be off for the modes to mean anything on count-shaped queries.
-    val pruneKey = "spark.sql.csv.parser.columnPruning.enabled"
-    val prunePrev = spark.conf.getOption(pruneKey)
-    spark.conf.set(pruneKey, "false")
-    try {
-      val withBad = spark.read.schema(schema + ", _bad STRING")
-        .option("mode", "PERMISSIVE").option("columnNameOfCorruptRecord", "_bad")
-        .csv(s"$base/dirty_csv")
-        .cache()
-      val nPermissive = withBad.count()
-      val nCorrupt = withBad.filter(col("_bad").isNotNull).count()
-      val nDrop = spark.read.schema(schema).option("mode", "DROPMALFORMED")
-        .csv(s"$base/dirty_csv").count()
-      val failfastThrew =
-        try {
-          spark.read.schema(schema).option("mode", "FAILFAST")
-            .csv(s"$base/dirty_csv").count()
-          false
-        } catch {
-          // ONLY the parser's failure counts — a blanket Throwable
-          // would let an OOM or FS error masquerade as the expected
-          // FAILFAST exception and green the gate without testing it
-          case _: org.apache.spark.SparkException => true
-        }
-      import spark.implicits._
-      Seq((nPermissive, nCorrupt, nDrop, failfastThrew))
-        .toDF("n_permissive", "n_corrupt", "n_dropmalformed", "failfast_threw")
-    } finally prunePrev match {
-      case Some(v) => spark.conf.set(pruneKey, v)
-      case None => spark.conf.unset(pruneKey)
-    }
+    // The per-read `columnPruning` option overrides the session's
+    // `spark.sql.csv.parser.columnPruning.enabled` for these reads only.
+    def dirty(cols: String, mode: String) = spark.read.schema(cols)
+      .option("mode", mode).option("columnPruning", "false")
+    val withBad = dirty(schema + ", _bad STRING", "PERMISSIVE")
+      .option("columnNameOfCorruptRecord", "_bad")
+      .csv(s"$base/dirty_csv")
+      .cache()
+    val nPermissive = withBad.count()
+    val nCorrupt = withBad.filter(col("_bad").isNotNull).count()
+    val nDrop = dirty(schema, "DROPMALFORMED").csv(s"$base/dirty_csv").count()
+    val failfastThrew =
+      try {
+        dirty(schema, "FAILFAST").csv(s"$base/dirty_csv").count()
+        false
+      } catch {
+        // ONLY the parser's failure counts — a blanket Throwable
+        // would let an OOM or FS error masquerade as the expected
+        // FAILFAST exception and green the gate without testing it
+        case _: org.apache.spark.SparkException => true
+      }
+    import spark.implicits._
+    Seq((nPermissive, nCorrupt, nDrop, failfastThrew))
+      .toDF("n_permissive", "n_corrupt", "n_dropmalformed", "failfast_threw")
   }
 
   /** Oracle: every count predicted arithmetically from the clean

@@ -876,7 +876,6 @@ object BucketStore {
             replicated = replicate))
       }
     }
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     df.writeTo(s"graft.`$name`").overwrite(lit(true))
   }
 

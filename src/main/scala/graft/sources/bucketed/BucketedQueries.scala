@@ -157,10 +157,6 @@ object BucketedQueries {
     * story of the reference connector, realized in the planner.
     */
   def copartitionJoinQuery(spark: SparkSession, dir: String): DataFrame = {
-    // Idempotent re-assert for sessions not built via GraftSession
-    // (which already fixes both at session birth — see GraftSession).
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     BucketStore.ensureLoaded(spark, s"lineitem@$dir", dir, "lineitem", "l_orderkey", NumBuckets)
     BucketStore.ensureLoaded(spark, s"orders@$dir", dir, "orders", "o_orderkey", NumBuckets)
     val li = spark.table(s"graft.`lineitem@$dir`")
@@ -188,8 +184,6 @@ object BucketedQueries {
     * cost, no shuffle and no sort anywhere.
     */
   def sortedCopartitionJoinQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     BucketStore.ensureLoaded(spark, s"lineitem_srt@$dir", dir, "lineitem", "l_orderkey",
       NumBuckets, clusterBy = Some("l_orderkey"))
     BucketStore.ensureLoaded(spark, s"orders_srt@$dir", dir, "orders", "o_orderkey",
@@ -361,8 +355,6 @@ object BucketedQueries {
     * (BucketedWriteSpec asserts zero-Exchange against a loaded table).
     */
   def writeRoundtripQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     val src = graft.tables.Tables.lineitem(spark, dir)
       .select(col("l_orderkey"), col("l_quantity"), col("l_returnflag"))
     val tbl = s"graft.`lineitem_w@$dir`"
@@ -395,8 +387,6 @@ object BucketedQueries {
     * the result is read back through the same catalog and aggregated.
     */
   def streamWriteQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     val tbl = s"events_sink@$dir"
     spark.sql(s"DROP TABLE IF EXISTS graft.`$tbl`")
     spark.sql(s"CREATE TABLE graft.`$tbl` (event_id BIGINT, user_id BIGINT, value DOUBLE) " +
@@ -452,8 +442,6 @@ object BucketedQueries {
     * sink all run against the store in one streaming query.
     */
   def streamEtlRoundtripQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     BucketStore.ensureLoaded(spark, s"events@$dir", dir, "events", "user_id", NumBuckets)
     BucketStore.ensureLoaded(spark, s"customer@$dir", dir, "customer", "c_custkey", NumBuckets)
     val sink = s"etl_sink@$dir"
@@ -499,7 +487,6 @@ object BucketedQueries {
     * folding per-bucket deltas instead of rescanning the table.
     */
   def cdcNetQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"events_cdc@$dir"
     // fresh history per run: the CDC replay below must see exactly
     // load → delete → update, not residue from an earlier run
@@ -552,7 +539,6 @@ object BucketedQueries {
     * arrays across versions).
     */
   def timeTravelQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"orders_tt@$dir"
     BucketStore.drop(name)
     BucketStore.load(spark, name, graft.tables.Tables.orders(spark, dir), "o_orderkey", NumBuckets)
@@ -600,7 +586,6 @@ object BucketedQueries {
     * the oracle resolves the same keys with scalar subqueries.
     */
   def morDmlQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"orders_mor@$dir"
     BucketStore.drop(name)
     BucketStore.load(spark, name, graft.tables.Tables.orders(spark, dir), "o_orderkey", NumBuckets)
@@ -642,7 +627,6 @@ object BucketedQueries {
     * oracle replays each state as a plain filtered aggregate.
     */
   def tsTravelQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"orders_tsof@$dir"
     BucketStore.drop(name)
     BucketStore.load(spark, name, graft.tables.Tables.orders(spark, dir), "o_orderkey", NumBuckets)
@@ -695,8 +679,6 @@ object BucketedQueries {
     * cancel exactly).
     */
   def cdcMaterializedViewQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     val src = s"orders_mv@$dir"
     val mv = s"orders_mv_out@$dir"
     BucketStore.drop(src)
@@ -928,7 +910,6 @@ object BucketedQueries {
     * ingesting table schedules, never a correctness event.
     */
   def zorderReorderQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"events_zreorder@$dir"
     if (!BucketStore.exists(name)) {
       val ev = graft.tables.Tables.events(spark, dir)
@@ -964,7 +945,6 @@ object BucketedQueries {
     * bounded job.
     */
   def cdcBatchChangesQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"customer_cdc@$dir"
     BucketStore.drop(name)
     BucketStore.load(spark, name, graft.tables.Tables.customer(spark, dir), "c_custkey",
@@ -991,7 +971,6 @@ object BucketedQueries {
     * proportional to the rows actually back-filled.
     */
   def schemaEvolutionQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"customer_evo@$dir"
     BucketStore.drop(name)
     BucketStore.load(spark, name, graft.tables.Tables.customer(spark, dir), "c_custkey",
@@ -1027,7 +1006,6 @@ object BucketedQueries {
     * Iceberg/Delta COW contract with the bucket as the file group).
     */
   def mergeIntoQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"customer_mrg@$dir"
     BucketStore.drop(name)
     BucketStore.load(spark, name, graft.tables.Tables.customer(spark, dir), "c_custkey",
@@ -1082,7 +1060,6 @@ object BucketedQueries {
     * multiset consumer would fold counts instead, q102/q104/q106).
     */
   def cdcReplicationQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val src = s"customer_rep@$dir"
     val rep = s"customer_rep_out@$dir"
     BucketStore.drop(src)
@@ -1207,7 +1184,6 @@ object BucketedQueries {
   }
 
   def streamCurationQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val tbl = s"docs_curated@$dir"
     spark.sql(s"DROP TABLE IF EXISTS graft.`$tbl`")
     spark.sql(s"CREATE TABLE graft.`$tbl` (fp BIGINT, n_tokens BIGINT) " +
@@ -1231,7 +1207,6 @@ object BucketedQueries {
     * semantic).
     */
   def streamCurationHrwQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val tbl = s"docs_curated_hrw@$dir"
     spark.sql(s"DROP TABLE IF EXISTS graft.`$tbl`")
     spark.sql(s"CREATE TABLE graft.`$tbl` (fp BIGINT, n_tokens BIGINT) " +
@@ -1277,7 +1252,6 @@ object BucketedQueries {
     * outgrown layout, under MVCC so concurrent reads never block.
     */
   def rebucketQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"orders_reb@$dir"
     BucketStore.drop(name)
     BucketStore.load(spark, name, graft.tables.Tables.orders(spark, dir), "o_orderkey",
@@ -1313,7 +1287,6 @@ object BucketedQueries {
     * of everything.
     */
   def rebucketHrwQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"orders_hrw@$dir"
     BucketStore.drop(name)
     BucketStore.load(spark, name, graft.tables.Tables.orders(spark, dir), "o_orderkey", 8)
@@ -1351,7 +1324,6 @@ object BucketedQueries {
     * URL/content-hash keyed corpora could not bucket at all.
     */
   def stringKeyQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"docs_strkey@$dir"
     BucketStore.drop(name)
     BucketStore.load(spark, name,
@@ -1391,7 +1363,6 @@ object BucketedQueries {
     * and every scan folding an unbounded delta history.
     */
   def autoCompactIngestQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"li_autoc@$dir"
     BucketStore.drop(name)
     // first line per order (~1/4 of lineitem): the policy is
@@ -1463,7 +1434,6 @@ object BucketedQueries {
     * explicit ([[BucketedScanBuilder.pushTableSample]]).
     */
   def sampleScanQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     BucketStore.ensureLoaded(spark, s"orders@$dir", dir, "orders", "o_orderkey", NumBuckets)
     spark.sql(
       s"""SELECT o_orderpriority, count(*) AS n,
@@ -1499,7 +1469,6 @@ object BucketedQueries {
     * buckets, binary-searched slices within them.
     */
   def rangeLayoutQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"orders_rng@$dir"
     BucketStore.drop(name)
     BucketStore.load(spark, name, graft.tables.Tables.orders(spark, dir), "o_orderkey",
@@ -1542,7 +1511,6 @@ object BucketedQueries {
     * history as a manifest edit instead of a table rewrite.
     */
   def retentionDeleteQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"orders_retn@$dir"
     BucketStore.drop(name)
     // the raw column is a timestamp; the bucket key domain routes
@@ -1596,7 +1564,6 @@ object BucketedQueries {
     */
   def concurrentRewriteQuery(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.sources.EqualTo
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"cust_ccr@$dir"
     BucketStore.drop(name)
     BucketStore.load(spark, name,
@@ -1661,7 +1628,6 @@ object BucketedQueries {
     * band, published as one O(1) pointer swap, never half-visible.
     */
   def wapCurationQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"docs_wap@$dir"
     BucketStore.drop(name)
     val docs = graft.tables.Tables.documents(spark, dir)
@@ -1715,7 +1681,6 @@ object BucketedQueries {
     * re-ingesting the table.
     */
   def rollbackQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"cust_rb@$dir"
     BucketStore.drop(name)
     BucketStore.load(spark, name,
@@ -1762,7 +1727,6 @@ object BucketedQueries {
     * in O(buckets) identity probes, nothing replays.
     */
   def branchRebaseQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"part_rbs@$dir"
     BucketStore.drop(name)
     BucketStore.load(spark, name,
@@ -1810,7 +1774,6 @@ object BucketedQueries {
     * the version stays retained.
     */
   def trainingRecipeQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"docs_recipe@$dir"
     BucketStore.drop(name)
     val docs = graft.tables.Tables.documents(spark, dir)
@@ -1868,7 +1831,6 @@ object BucketedQueries {
     * identically).
     */
   def statsOnlyAggQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"li_stats@$dir"
     BucketStore.drop(name)
     BucketStore.load(spark, name,
@@ -1917,7 +1879,6 @@ object BucketedQueries {
     * external coordinator: the job just runs again.
     */
   def idempotentAppendQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"ord_txn@$dir"
     BucketStore.drop(name)
     val orders = graft.tables.Tables.orders(spark, dir)
@@ -1974,7 +1935,6 @@ object BucketedQueries {
     * with main.
     */
   def branchGcRestartQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"cust_bgc@$dir"
     BucketStore.drop(name)
     BucketStore.load(spark, name,
@@ -2039,7 +1999,6 @@ object BucketedQueries {
     * vectorized decode at file speed, hot working set untouched.
     */
   def coldColumnarSweepQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"li_cold@$dir"
     BucketStore.drop(name)
     BucketStore.load(spark, name,
@@ -2091,7 +2050,6 @@ object BucketedQueries {
     * BY grp` decodes the grp and x columns and nothing else.
     */
   def coldAggProjectionQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"li_coldagg@$dir"
     BucketStore.drop(name)
     BucketStore.load(spark, name,
@@ -2143,7 +2101,6 @@ object BucketedQueries {
   def commitRaceQuery(spark: SparkSession, dir: String): DataFrame = {
     import java.nio.charset.StandardCharsets.UTF_8
     import java.nio.file.Files
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"cust_race@$dir"
     BucketStore.drop(name)
     BucketStore.load(spark, name,
@@ -2205,7 +2162,6 @@ object BucketedQueries {
     * the vectorized path was built to kill.
     */
   def coldFilteredSweepQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"li_coldfilter@$dir"
     BucketStore.drop(name)
     BucketStore.load(spark, name,
@@ -2266,7 +2222,6 @@ object BucketedQueries {
     * so the double partials are exact and order-independent.
     */
   def coldFilteredAggQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"li_coldfagg@$dir"
     BucketStore.drop(name)
     BucketStore.load(spark, name,
@@ -2320,7 +2275,6 @@ object BucketedQueries {
     */
   def readerRefreshQuery(spark: SparkSession, dir: String): DataFrame = {
     import java.nio.file.Files
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"cust_refresh@$dir"
     BucketStore.drop(name)
     BucketStore.load(spark, name,
@@ -2402,7 +2356,6 @@ object BucketedQueries {
     * pushdown declines and the SCAN path is what's gated.
     */
   def coldMorSweepQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"li_coldmor@$dir"
     BucketStore.drop(name)
     BucketStore.load(spark, name,
@@ -2469,7 +2422,6 @@ object BucketedQueries {
     * own group so the oracle pins both the append and the base.
     */
   def coldAppendQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"cust_coldapp@$dir"
     BucketStore.drop(name)
     BucketStore.load(spark, name,
@@ -2526,7 +2478,6 @@ object BucketedQueries {
     * TWICE (both endpoint snapshots) and bag-diffed them.
     */
   def coldMorCdcQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"cust_morcdc@$dir"
     BucketStore.drop(name)
     BucketStore.load(spark, name,
@@ -2595,7 +2546,6 @@ object BucketedQueries {
     * files mid-scan.
     */
   def vacuumFloorQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"ord_vacuum@$dir"
     BucketStore.drop(name)
     BucketStore.load(spark, name,
@@ -2657,7 +2607,6 @@ object BucketedQueries {
     * the oracle compare.
     */
   def coldDecimalSweepQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"li_colddec@$dir"
     val dec = org.apache.spark.sql.types.DecimalType(18, 2)
     BucketStore.drop(name)
@@ -2717,7 +2666,6 @@ object BucketedQueries {
     * Oracle: the same two aggregates UNION ALL'd, tagged by leg.
     */
   def coldDecimalPruneQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"li_decprune@$dir"
     val dec = org.apache.spark.sql.types.DecimalType(12, 2)
     BucketStore.drop(name)
@@ -2813,7 +2761,6 @@ object BucketedQueries {
     * ride the vectors like strings minus the UTF-8 step.
     */
   def coldBinarySweepQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"doc_blob@$dir"
     BucketStore.drop(name)
     val docs = graft.tables.Tables.documents(spark, dir)
@@ -2992,7 +2939,6 @@ object BucketedQueries {
         Similarity.ivfAssign(emb.filter(!isBatch), "vec_id", "embedding", centroids)
           .select(col("cent_id"), col("id"), col("vec")),
         "cent_id", numBuckets = nlist)
-      spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
       Similarity.ivfAssign(emb.filter(isBatch), "vec_id", "embedding", centroids)
         .select(col("cent_id"), col("id"), col("vec"))
         .writeTo(s"graft.`$name`").append()
@@ -3036,7 +2982,6 @@ object BucketedQueries {
     val nlist = 16
     val name = s"ivf_refresh@$dir"
     val centsName = s"ivf_refresh_cents@$dir"
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val emb = graft.tables.Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("embedding"))
     if (!BucketStore.exists(name)) {
@@ -3124,7 +3069,6 @@ object BucketedQueries {
     * fail this gate, not just a spec.
     */
   def checkConstraintQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"orders_chk@$dir"
     BucketStore.drop(name)
     spark.sql(
@@ -3172,7 +3116,6 @@ object BucketedQueries {
     * 'release-v1'", not "against v83721").
     */
   def taggedTravelQuery(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = s"customer_tag@$dir"
     BucketStore.drop(name)
     BucketStore.load(spark, name, graft.tables.Tables.customer(spark, dir), "c_custkey",

@@ -34,7 +34,6 @@ object StreamOps {
     * or misplace rows.
     */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val tsType = graft.tables.Tables.load(spark, dir, "events").schema("ts").dataType
     val schema = StructType(Seq(
       StructField("event_id", LongType),
@@ -111,26 +110,40 @@ object StreamOps {
     */
   val harnessLock: Object = new Object
 
-  /** Run `body` with the RocksDB state-store provider installed
-    * session-wide, restoring the previous provider after —
-    * `transformWithState` requires RocksDB, every other streaming
-    * query keeps the HDFS-backed default. ONE definition (the
-    * set/try/restore dance was copy-pasted six times before this);
-    * holds [[harnessLock]] because the conf is session-global.
-    * Reentrant: runToMemory inside `body` re-enters the same monitor.
+  /** Run `body` with the session conf `key` set to `value`, restoring
+    * the previous value after, under [[harnessLock]]: the ONE
+    * session-level swap in the engine. Its two users cannot take a
+    * per-query option instead, because a streaming query copies the
+    * session conf when it starts and reads its settings from that
+    * copy, not from the `DataStreamWriter`:
+    *   - [[withRocksDb]]'s state-store provider is read from the
+    *     copy, and Spark offers no per-query option for it;
+    *   - [[runToMemory]]'s shuffle partition count sets the number of
+    *     state stores, which the checkpoint pins at first start.
+    * Reentrant: runToMemory inside a withRocksDb body re-enters the
+    * same monitor.
     */
-  def withRocksDb[A](spark: org.apache.spark.sql.SparkSession)(body: => A): A =
+  private def withSessionConf[A](spark: SparkSession, key: String, value: String)(body: => A): A =
       harnessLock.synchronized {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // an unset key must come back unset: getOption would return its
+    // default, and restoring that would pin it
+    val prev = spark.conf.getAll.get(key)
+    spark.conf.set(key, value)
     try body
     finally prev match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }
   }
+
+  /** Run `body` with the RocksDB state-store provider installed
+    * session-wide, restoring the previous provider after —
+    * `transformWithState` requires RocksDB, every other streaming
+    * query keeps the HDFS-backed default.
+    */
+  def withRocksDb[A](spark: SparkSession)(body: => A): A =
+    withSessionConf(spark, "spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")(body)
 
   private val StatePartitions = 2
 
@@ -152,12 +165,10 @@ object StreamOps {
     * temp view is dropped and its state-store providers are unloaded
     * (`GraftStreamState.unload`); the returned frame holds the rows.
     */
-  def runToMemory(df: DataFrame, outputMode: String): DataFrame = harnessLock.synchronized {
+  def runToMemory(df: DataFrame, outputMode: String): DataFrame =
+      withSessionConf(df.sparkSession, "spark.sql.shuffle.partitions", StatePartitions.toString) {
     val spark = df.sparkSession
     val name = s"graft_sink_${sinkId.incrementAndGet()}"
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, StatePartitions.toString)
     // A memory-sink gate run's checkpoint is EPHEMERAL by contract
     // (Spark itself creates and deletes a temp dir for it), so it goes
     // to tmpfs when available and is deleted after the run; a
@@ -220,7 +231,6 @@ object StreamOps {
       // view keeps the catalog from pinning every finished run's rows.
       spark.table(name)
     } finally {
-      spark.conf.set(key, prev)
       spark.catalog.dropTempView(name)
       // best-effort cleanup of the throwaway tmpfs checkpoint
       ckptDir.foreach(deleteTree)
@@ -271,7 +281,6 @@ object StreamOps {
     * a 0s watermark, append mode.
     */
   def streamingWordCount(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schema = StructType(Seq(
       StructField("doc_id", LongType),
       StructField("text", StringType),

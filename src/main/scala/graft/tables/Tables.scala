@@ -27,29 +27,20 @@ object Tables {
   def part(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "part")
   def nation(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "nation")
   def region(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "region")
-  /** `events.ts` is written as parquet TIMESTAMP(NANOS), which Spark's
-    * vectorized reader rejects ([PARQUET_TYPE_ILLEGAL]). Read nanos as
-    * long (`spark.sql.legacy.parquet.nanosAsLong`) and truncate to a
-    * proper microsecond TimestampType with integral division —
-    * identical truncation to DuckDB's ns→µs cast, and no double
-    * round-trip (ns epochs exceed 2^53).
-    *
-    * The conf set here IS a session-global side effect (later nanos
-    * parquet reads in the same session also decode as long) — kept
-    * deliberately so sessions NOT built via [[graft.GraftSession]]
-    * (which fixes the conf at birth) can still load events; there is
-    * no per-read option form of this setting.
-    */
   /** `ts` is normalized to session-zoned TimestampType whatever shape
-    * the generator wrote: TIMESTAMP(NANOS) arrives as nanos-long (the
-    * legacy flag) and is truncated to micros; TIMESTAMP(MICROS) with
-    * isAdjustedToUTC unset arrives as TIMESTAMP_NTZ and is cast (the
-    * UTC session makes that instant-preserving and oracle-identical).
-    * Downstream code — watermarks, `unix_micros`, the bucket store —
-    * always sees one type.
+    * the generator wrote. TIMESTAMP(NANOS), which Spark's vectorized
+    * reader rejects ([PARQUET_TYPE_ILLEGAL]), arrives as nanos-long
+    * under `spark.sql.legacy.parquet.nanosAsLong` (fixed by
+    * [[graft.GraftSession]]; there is no per-read option form) and is
+    * truncated to micros with integral division — identical to
+    * DuckDB's ns→µs cast, and no double round-trip (ns epochs exceed
+    * 2^53). TIMESTAMP(MICROS) with isAdjustedToUTC unset arrives as
+    * TIMESTAMP_NTZ and is cast (the UTC session makes that
+    * instant-preserving and oracle-identical). Downstream code —
+    * watermarks, `unix_micros`, the bucket store — always sees one
+    * type.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = load(spark, dir, "events")
     df.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

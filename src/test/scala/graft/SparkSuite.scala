@@ -3,19 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs: one lazy SparkSession per suite. */
+/** Shared local session for specs: the engine's own session
+  * ([[GraftSession.builder]]) on 4 local cores.
+  */
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // single node: the bucket store's simulated host preferences can
-    // never be satisfied, and delay scheduling starves mixed-locality
-    // stages on them (see GraftSession for the full story)
-    .config("spark.locality.wait", "0s")
-    .getOrCreate()
+  lazy val spark: SparkSession =
+    GraftSession.builder(getClass.getSimpleName, "local[4]", shufflePartitions = 4).getOrCreate()
 
   val sf: String = "/root/testdata/sf0.001"
 

@@ -324,8 +324,7 @@ class MultimodalSpec extends SparkSuite {
 
   test("the dHash artifact extends incrementally: grown == from-scratch rebuild, decode ∝ batch") {
     import org.apache.spark.sql.functions.col
-    import graft.sources.bucketed.{BucketStore, BucketedCatalog}
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
+    import graft.sources.bucketed.BucketStore
     val name = "dhash_ext_spec"
     BucketStore.drop(name)
     // day 0: the artifact is built over the then-current corpus

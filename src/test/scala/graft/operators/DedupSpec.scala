@@ -97,8 +97,6 @@ class DedupSpec extends SparkSuite {
       col("doc_id") >= 10, 3, 32, 16, 0.8)
     assert(p1.count() === 0, "day 1's batch has no near-dups anywhere")
     // admit day 1's batch: append its signature rows through the catalog
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.bucketed.BucketedCatalog].getName)
     Dedup.signatureIndexRows(day1.filter(col("doc_id") >= 10), "doc_id", "text", 3, 32, 16)
       .writeTo(s"graft.`$idx`").append()
     // day 2: doc 20 arrives; the extended index catches its near-dup of doc 10

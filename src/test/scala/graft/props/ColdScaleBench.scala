@@ -24,8 +24,6 @@ object ColdScaleBench {
       .builder("graft-coldscale", "local[32]", shufflePartitions = 32)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
-
     val base = graft.tables.Tables.lineitem(spark, sfDir)
       .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"),
         col("l_extendedprice"), col("l_shipdate"))

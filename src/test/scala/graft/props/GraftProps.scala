@@ -6,6 +6,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
 
+import graft.GraftSession
 import graft.streaming.CountWindows
 import graft.streaming.CountWindows.{Element, Firing}
 
@@ -17,16 +18,8 @@ object GraftProps extends Properties("graft") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(10)
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    // this builder can win the shared-JVM session race under parallel
-    // suite execution, so it must carry the same single-node locality
-    // setting as SparkSuite (see GraftSession for the starvation story)
-    .config("spark.locality.wait", "0s")
-    .getOrCreate()
+  private lazy val spark: SparkSession =
+    GraftSession.builder("GraftProps", "local[4]", shufflePartitions = 4).getOrCreate()
 
   private def scale4(v: Double): JBigDecimal =
     JBigDecimal.valueOf(v).setScale(4, RoundingMode.HALF_UP)

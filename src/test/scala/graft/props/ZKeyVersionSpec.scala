@@ -107,7 +107,6 @@ class ZKeyVersionSpec extends SparkSuite {
     // the healed layout KEEPS WORKING as a z table: an append linear-
     // merges against the (actually sorted) base and stays in order,
     // and a date-range slice answers exactly
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     spark.sql("INSERT INTO graft.zv0_heal VALUES " +
       "(9001, DATE'2020-03-03', 50, 'new-a'), (9002, DATE'2020-11-20', 5, 'new-b')")
     val t2 = BucketStore.get("zv0_heal")
@@ -143,7 +142,6 @@ class ZKeyVersionSpec extends SparkSuite {
     assertZSorted(t)
     assert(scan("zv0_tt").collect().map(_.getLong(0)).toSet === (0L until 250L).toSet)
     // the PRE-delete snapshot also reopened healed: full row set, sorted
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     assert(spark.sql(s"SELECT * FROM graft.zv0_tt VERSION AS OF $vFull")
       .collect().map(_.getLong(0)).toSet === (0L until 300L).toSet)
     val snapOld = BucketStore.snapshot("zv0_tt", vFull)
@@ -186,7 +184,6 @@ class ZKeyVersionSpec extends SparkSuite {
     // until the sanctioned full re-sort upgrades it
     // the operator-facing signal: DESCRIBE shows the legacy version
     // and names the remedy
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     def keyVersionProp(): String = {
       val t = new BucketedCatalog().loadTable(
         org.apache.spark.sql.connector.catalog.Identifier.of(Array.empty, "zv1_dec"))

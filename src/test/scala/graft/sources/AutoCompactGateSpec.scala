@@ -15,7 +15,6 @@ class AutoCompactGateSpec extends SparkSuite {
   import spark.implicits._
 
   test("q233 shape: batch 1 leaves MoR pending, batch 2 trips the policy and folds, batch 3 rides the fresh base") {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = "autoc_spec"
     BucketStore.drop(name)
     // 2000 rows; policy knobs scaled so the spec mirrors q233's
@@ -60,7 +59,6 @@ class AutoCompactGateSpec extends SparkSuite {
   }
 
   test("policy floor holds: small tables never re-materialize on point DML") {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = "autoc_floor"
     BucketStore.drop(name)
     BucketStore.load(spark, name,

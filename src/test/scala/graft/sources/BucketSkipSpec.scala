@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
-import graft.sources.bucketed.{BucketSkip, BucketStore, BucketedCatalog, ConnectionPool, SampleSpec}
+import graft.sources.bucketed.{BucketSkip, BucketStore, ConnectionPool, SampleSpec}
 
 /** Per-bucket data skipping ([[graft.sources.bucketed.BucketSkip]]):
   * membership sketches prune non-key point lookups, zone maps prune
@@ -37,8 +37,7 @@ class BucketSkipSpec extends SparkSuite {
   }
 
   test("stats-only aggregate: unfiltered count/min/max open no bucket and move no connection") {
-    import graft.sources.bucketed.{BucketedAggPartitionReader, BucketedCatalog}
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
+    import graft.sources.bucketed.BucketedAggPartitionReader
     val df = (1 to 3000).map(i =>
       (i.toLong, i * 1.5, if (i % 10 == 0) null else java.lang.Double.valueOf(i * 2.0)))
       .toDF("k", "price", "opt")
@@ -91,7 +90,6 @@ class BucketSkipSpec extends SparkSuite {
 
   test("cold SUM/group-by aggregate: projected streaming read — no dial, no heap fault (round 16)") {
     import graft.sources.bucketed.{BucketedAggPartitionReader, FileStore}
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val df = (1 to 3000).map(i =>
       (i.toLong, s"pad-$i-${"y" * 30}", i % 7, i * 1.5)).toDF("k", "pad", "grp", "price")
     BucketStore.drop("skip_coldsum")
@@ -148,7 +146,6 @@ class BucketSkipSpec extends SparkSuite {
 
   test("MoR buckets fold INLINE on the cold projected aggregate path (round 17)") {
     import graft.sources.bucketed.FileStore
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val df = (1 to 2000).map(i => (i.toLong, s"pad-$i-${"z" * 20}", i % 5, i * 2.0))
       .toDF("k", "pad", "grp", "price")
     BucketStore.drop("skip_mor_agg")
@@ -201,7 +198,6 @@ class BucketSkipSpec extends SparkSuite {
   }
 
   test("COW maintenance: a rewritten bucket recomputes its sketch, the lookup follows the value") {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val df = (1 to 2000).map(i => (i.toLong, s"name-$i")).toDF("k", "name")
     BucketStore.drop("skip_cow")
     BucketStore.load(spark, "skip_cow", df, "k", 8)
@@ -248,7 +244,6 @@ class BucketSkipSpec extends SparkSuite {
   }
 
   test("commit-time stats: a write warms changed buckets, planning pays ZERO stat passes") {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val df = (1 to 2000).map(i => (i.toLong, s"name-$i")).toDF("k", "name")
     BucketStore.drop("skip_warm")
     BucketStore.load(spark, "skip_warm", df, "k", 8)
@@ -287,7 +282,6 @@ class BucketSkipSpec extends SparkSuite {
   }
 
   test("schema evolution: pre-ALTER short rows count as nulls for the added column, no crash") {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val df = (1 to 500).map(i => (i.toLong, i.toString)).toDF("k", "v")
     BucketStore.drop("skip_evo")
     BucketStore.load(spark, "skip_evo", df, "k", 8)
@@ -302,7 +296,6 @@ class BucketSkipSpec extends SparkSuite {
 
   test("analyze of a NEW column on a COLD reopened table streams projected — zero heap faults") {
     import graft.sources.bucketed.FileStore
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val df = (1 to 2000).map(i =>
       (i.toLong, i * 1.5, if (i % 7 == 0) null else s"w${i % 61}"))
       .toDF("k", "v", "w")

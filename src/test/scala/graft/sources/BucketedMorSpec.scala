@@ -16,9 +16,6 @@ import graft.sources.bucketed._
 class BucketedMorSpec extends SparkSuite {
   import spark.implicits._
 
-  private def cat(): Unit =
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
-
   private def scan(t: String) =
     spark.read.format("graft-buckets").option("table", t).load()
 
@@ -30,7 +27,6 @@ class BucketedMorSpec extends SparkSuite {
   }
 
   test("MOR DELETE: one deletion-vector bit, every base array shared, folded reads exact") {
-    cat()
     mkTable("mor_del")
     val before = BucketStore.get("mor_del")
     spark.sql("DELETE FROM graft.`mor_del` WHERE k = 77")
@@ -56,7 +52,6 @@ class BucketedMorSpec extends SparkSuite {
   }
 
   test("MOR UPDATE via Spark's delta protocol: position delete + delta row, base arrays shared") {
-    cat()
     mkTable("mor_upd")
     val before = BucketStore.get("mor_upd")
     spark.sql("UPDATE graft.`mor_upd` SET v = 'renamed', d = d + 0.5 WHERE k = 123")
@@ -84,7 +79,6 @@ class BucketedMorSpec extends SparkSuite {
   }
 
   test("CDC across MOR commits emits the minimal logical diff (coalesced update, single delete)") {
-    cat()
     mkTable("mor_cdc", rows = 400, buckets = 4)
     val v1 = BucketStore.currentVersion("mor_cdc")
     spark.sql("UPDATE graft.`mor_cdc` SET d = -1.0 WHERE k = 42")
@@ -101,7 +95,6 @@ class BucketedMorSpec extends SparkSuite {
   }
 
   test("CDC over a COLD MoR window serves from MoR state: O(changed rows), zero heap faults") {
-    cat()
     mkTable("mor_cdc_cold", rows = 400, buckets = 4)
     val v1 = BucketStore.currentVersion("mor_cdc_cold")
     spark.sql("UPDATE graft.`mor_cdc_cold` SET d = -1.0 WHERE k = 42")
@@ -126,7 +119,6 @@ class BucketedMorSpec extends SparkSuite {
   }
 
   test("CDC window crossing a compaction still nets to the logical diff — the fold is CDC-invisible") {
-    cat()
     mkTable("mor_cdc_comp", rows = 400, buckets = 4)
     val v1 = BucketStore.currentVersion("mor_cdc_comp")
     spark.sql("UPDATE graft.`mor_cdc_comp` SET d = -1.0 WHERE k = 42")
@@ -146,7 +138,6 @@ class BucketedMorSpec extends SparkSuite {
   }
 
   test("auto-compaction: MoR state past the policy thresholds folds down in-statement") {
-    cat()
     val (prevPct, prevMin) = (BucketStore.autoCompactRatioPct, BucketStore.autoCompactMinRows)
     try {
       // policy: fold when >= 10 pending rows AND pending >= 2% of base
@@ -182,7 +173,6 @@ class BucketedMorSpec extends SparkSuite {
   }
 
   test("compaction of a COLD table folds only MoR buckets — clean buckets never load") {
-    cat()
     mkTable("mor_cmp_cold", rows = 800, buckets = 8)
     spark.sql("DELETE FROM graft.`mor_cmp_cold` WHERE k = 5")
     BucketStore.evictTable("mor_cmp_cold")
@@ -201,7 +191,6 @@ class BucketedMorSpec extends SparkSuite {
   }
 
   test("compact folds deletion vectors back into clean arrays; answers unchanged; no-op is free") {
-    cat()
     mkTable("mor_comp", rows = 500, buckets = 4)
     spark.sql("DELETE FROM graft.`mor_comp` WHERE k <= 10")
     spark.sql("UPDATE graft.`mor_comp` SET d = 0.0 WHERE k = 500")
@@ -225,7 +214,6 @@ class BucketedMorSpec extends SparkSuite {
   }
 
   test("clustered MOR table: folded view keeps cluster order, sliced range reads stay exact") {
-    cat()
     BucketStore.drop("mor_clust")
     val df = (0 until 2000).map(i => ((i % 37).toLong, i.toLong, s"r$i")).toDF("k", "seq", "tag")
     BucketStore.load(spark, "mor_clust", df, "k", 4, clusterBy = Some("seq"))
@@ -247,7 +235,6 @@ class BucketedMorSpec extends SparkSuite {
   }
 
   test("Z-ORDER bucket with LIVE DELTA rides the vectorized path: byte- and ORDER-identity with the fold") {
-    cat()
     val name = "mor_zvec"
     BucketStore.drop(name)
     // two z dimensions of different widths (rank normalization in
@@ -295,7 +282,6 @@ class BucketedMorSpec extends SparkSuite {
   }
 
   test("delta positions are snapshot-pinned: conflicts are row-granular, disjoint interleaves compose") {
-    cat()
     mkTable("mor_race", rows = 100, buckets = 2)
     val t = BucketStore.get("mor_race")
     val staleVersion = t.version
@@ -332,7 +318,6 @@ class BucketedMorSpec extends SparkSuite {
   }
 
   test("concurrent DML writers: every statement either applies exactly or fails loudly — no lost update") {
-    cat()
     mkTable("mor_mt", rows = 100, buckets = 2)
     // 8 threads each delete a DISTINCT key through the full SQL path.
     // Optimistic versioning means a loser whose positions were planned
@@ -367,7 +352,6 @@ class BucketedMorSpec extends SparkSuite {
   }
 
   test("copy-on-write stays the default: UPDATE on a plain table rewrites the bucket, no MOR state") {
-    cat()
     BucketStore.drop("cow_still")
     val df = (1 to 200).map(i => (i.toLong, s"v$i")).toDF("k", "v")
     BucketStore.load(spark, "cow_still", df, "k", 4)
@@ -382,7 +366,6 @@ class BucketedMorSpec extends SparkSuite {
   }
 
   test("TBLPROPERTIES('write.dml.mode') selects the strategy at CREATE; typos are loud") {
-    cat()
     spark.sql("DROP TABLE IF EXISTS graft.`mor_ddl`")
     spark.sql("CREATE TABLE graft.`mor_ddl` (k BIGINT, v STRING) " +
       "PARTITIONED BY (bucket(2, k)) TBLPROPERTIES ('write.dml.mode'='merge-on-read')")

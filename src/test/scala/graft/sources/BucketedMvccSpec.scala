@@ -14,11 +14,6 @@ import graft.sources.bucketed._
   */
 class BucketedMvccSpec extends SparkSuite {
 
-  private def catalogOn(): Unit = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-  }
-
   private def mkTable(name: String, rows: Seq[(Long, String, Double)], buckets: Int = 4): Unit = {
     import spark.implicits._
     BucketStore.drop(name)
@@ -40,7 +35,6 @@ class BucketedMvccSpec extends SparkSuite {
   }
 
   test("SQL VERSION AS OF reads a retained snapshot through the catalog") {
-    catalogOn()
     mkTable("mvcc_tt", Seq((1L, "x", 1.0), (2L, "y", 2.0)))
     val v1 = BucketStore.currentVersion("mvcc_tt")
     BucketStore.deleteWhere("mvcc_tt", _ => true)
@@ -55,7 +49,6 @@ class BucketedMvccSpec extends SparkSuite {
       .format(java.time.Instant.ofEpochSecond(micros / 1000000L, (micros % 1000000L) * 1000L))
 
   test("SQL TIMESTAMP AS OF maps a commit timestamp to the version current then") {
-    catalogOn()
     mkTable("mvcc_ts", Seq((1L, "x", 1.0), (2L, "y", 2.0)))
     val v1 = BucketStore.currentVersion("mvcc_ts")
     val ts1 = BucketStore.commitTimestamp("mvcc_ts", v1)
@@ -84,7 +77,6 @@ class BucketedMvccSpec extends SparkSuite {
   }
 
   test("'timestampasof' scan option: the format path's twin of SQL TIMESTAMP AS OF") {
-    catalogOn()
     mkTable("mvcc_tso", Seq((1L, "x", 1.0), (2L, "y", 2.0)))
     val v1 = BucketStore.currentVersion("mvcc_tso")
     val ts1 = BucketStore.commitTimestamp("mvcc_tso", v1)
@@ -112,7 +104,6 @@ class BucketedMvccSpec extends SparkSuite {
   }
 
   test("TIMESTAMP AS OF under an injected deterministic clock") {
-    catalogOn()
     val saved = BucketStore.clock
     try {
       // logical clock: publishes stamp 1s apart from a fixed epoch —
@@ -131,7 +122,6 @@ class BucketedMvccSpec extends SparkSuite {
   }
 
   test("VERSION AS OF 0 / negative gets the option parser's instructive message") {
-    catalogOn()
     mkTable("mvcc_v0", Seq((1L, "x", 1.0)))
     // '-3' goes through the string overload (a bare negative is a parse error)
     for (bad <- Seq("0", "'-3'")) {
@@ -144,7 +134,6 @@ class BucketedMvccSpec extends SparkSuite {
   }
 
   test("CREATE TABLE rejects unknown TBLPROPERTIES; cluster_by is case-insensitive") {
-    catalogOn()
     BucketStore.drop("props_bad")
     val ex = intercept[Exception] {
       spark.sql("CREATE TABLE graft.props_bad (k BIGINT, v DOUBLE) " +
@@ -162,7 +151,6 @@ class BucketedMvccSpec extends SparkSuite {
   }
 
   test("CREATE TABLE OPTIONS pass through validated; bogus option names rejected") {
-    catalogOn()
     BucketStore.drop("opt_ok")
     // a legal scan option in OPTIONS(...) must not trip the
     // table-property vocabulary (Spark passes it bare AND 'option.'-prefixed)
@@ -233,7 +221,6 @@ class BucketedMvccSpec extends SparkSuite {
   }
 
   test("CDC feed: exact change set across create, insert, delete, and COW update") {
-    catalogOn()
     spark.sql("DROP TABLE IF EXISTS graft.cdc_t")
     spark.sql("CREATE TABLE graft.cdc_t (k BIGINT, tag STRING, v DOUBLE) " +
       "PARTITIONED BY (bucket(4, k))")
@@ -261,7 +248,6 @@ class BucketedMvccSpec extends SparkSuite {
 
   test("CDC minimality: a COW bucket rewrite emits only the changed rows, not the bucket") {
     import spark.implicits._
-    catalogOn()
     // 200 rows on ONE key → one bucket; the UPDATE below rewrites that
     // whole bucket copy-on-write, but the feed must emit just 2 deltas
     BucketStore.drop("cdc_cow")
@@ -306,7 +292,6 @@ class BucketedMvccSpec extends SparkSuite {
   }
 
   test("CDC: a bucket-key-moving UPDATE stays delete+insert (cross-bucket, never coalesced)") {
-    catalogOn()
     spark.sql("DROP TABLE IF EXISTS graft.cdc_mv_k")
     spark.sql("CREATE TABLE graft.cdc_mv_k (k BIGINT, v STRING) PARTITIONED BY (bucket(4, k))")
     spark.sql("INSERT INTO graft.cdc_mv_k VALUES (1, 'a'), (2, 'b')")
@@ -370,7 +355,6 @@ class BucketedMvccSpec extends SparkSuite {
   }
 
   test("ALTER TABLE ADD COLUMN: zero-rewrite evolution, padded reads, DML, CDC, time travel") {
-    catalogOn()
     spark.sql("DROP TABLE IF EXISTS graft.evo_t")
     spark.sql("CREATE TABLE graft.evo_t (k BIGINT, v DOUBLE) PARTITIONED BY (bucket(2, k))")
     spark.sql("INSERT INTO graft.evo_t VALUES (1, 1.0), (2, 2.0)")
@@ -492,7 +476,6 @@ class BucketedMvccSpec extends SparkSuite {
   }
 
   test("catalog surfaces: SHOW TABLES lists store tables, DESCRIBE properties show layout + MVCC state") {
-    catalogOn()
     mkTable("mvcc_cat", Seq((1L, "a", 1.0)))
     val shown = spark.sql("SHOW TABLES IN graft").collect().map(_.getString(1))
     assert(shown.contains("mvcc_cat"))
@@ -510,7 +493,6 @@ class BucketedMvccSpec extends SparkSuite {
   }
 
   test("SQL CALL procedures: history lists retained snapshots, vacuum trims them") {
-    catalogOn()
     mkTable("mvcc_proc", Seq((1L, "a", 1.0), (2L, "b", 2.0)))
     val v1 = BucketStore.currentVersion("mvcc_proc")
     BucketStore.deleteWhere("mvcc_proc", _.getString(1) == "a")
@@ -531,7 +513,6 @@ class BucketedMvccSpec extends SparkSuite {
   }
 
   test("CALL graft.rebucket: new layout under one version, SPJ at the new count, CDC boundary loud") {
-    catalogOn()
     // 2-bucket table with enough keys to populate a 8-bucket layout
     spark.sql("DROP TABLE IF EXISTS graft.reb_t")
     spark.sql("CREATE TABLE graft.reb_t (k BIGINT, v DOUBLE) PARTITIONED BY (bucket(2, k))")
@@ -604,7 +585,6 @@ class BucketedMvccSpec extends SparkSuite {
   }
 
   test("batch change read (table_changes analog): full and sub-windows, stream-identical semantics") {
-    catalogOn()
     spark.sql("DROP TABLE IF EXISTS graft.cdc_b")
     spark.sql("CREATE TABLE graft.cdc_b (k BIGINT, tag STRING, v DOUBLE) " +
       "PARTITIONED BY (bucket(4, k))")

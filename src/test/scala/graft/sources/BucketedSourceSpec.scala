@@ -52,9 +52,6 @@ class BucketedSourceSpec extends SparkSuite {
   }
 
   test("co-partitioned join through the catalog has no Exchange on either side") {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.bucketed.BucketedCatalog].getName)
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     BucketStore.ensureLoaded(spark, s"lineitem@$sf", sf, "lineitem", "l_orderkey", 16)
     val l = spark.table(s"graft.`lineitem@$sf`").select("l_orderkey", "l_quantity")
     val r = spark.table(s"graft.`lineitem@$sf`").select("l_orderkey", "l_extendedprice")

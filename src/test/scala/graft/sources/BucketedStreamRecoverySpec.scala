@@ -32,11 +32,6 @@ import graft.sources.bucketed._
 class BucketedStreamRecoverySpec extends SparkSuite {
   import spark.implicits._
 
-  private def catalogOn(): Unit = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-  }
-
   private val dimRows = (0 until 4).map(i => (i.toLong, s"seg$i"))
 
   private def loadPair(src: String, dim: String, rows: Seq[(Long, Long, String)]): Unit = {
@@ -51,7 +46,6 @@ class BucketedStreamRecoverySpec extends SparkSuite {
   private def enriched(r: (Long, Long, String)) = (r._1, r._2, s"seg${r._2}")
 
   test("q92 shape: each source version is delivered exactly once across a restart") {
-    catalogOn()
     loadPair("rs_events", "rs_dim", b1)
     val ckpt = Files.createTempDirectory("graft_rs_ckpt").toString
     val outDir = Files.createTempDirectory("graft_rs_out").toString
@@ -88,7 +82,6 @@ class BucketedStreamRecoverySpec extends SparkSuite {
   }
 
   test("q101 shape: ETL into a store sink resumes without re-emitting processed versions") {
-    catalogOn()
     loadPair("rs2_src", "rs2_dim", b1)
     spark.sql("DROP TABLE IF EXISTS graft.rs2_sink")
     spark.sql("CREATE TABLE graft.rs2_sink " +
@@ -121,7 +114,6 @@ class BucketedStreamRecoverySpec extends SparkSuite {
   }
 
   test("undrained kills + keyed upsert sink: state converges byte-identical (set semantics)") {
-    catalogOn()
     loadPair("rs3_src", "rs3_dim", b1)
     spark.sql("DROP TABLE IF EXISTS graft.rs3_sink")
     spark.sql("CREATE TABLE graft.rs3_sink " +
@@ -156,7 +148,6 @@ class BucketedStreamRecoverySpec extends SparkSuite {
   }
 
   test("CDC changefeed resumes from its checkpoint against a REOPENED table: no gap, no duplicate") {
-    catalogOn()
     val name = "rs_cdc_boot"
     BucketStore.drop(name)
     BucketStore.load(spark, name,
@@ -208,7 +199,6 @@ class BucketedStreamRecoverySpec extends SparkSuite {
   }
 
   test("CDC changefeed follows a FOREIGN writer's commit under refresh_policy (round 17)") {
-    catalogOn()
     val name = "rs_cdc_foreign"
     BucketStore.drop(name)
     BucketStore.load(spark, name,
@@ -271,7 +261,6 @@ class BucketedStreamRecoverySpec extends SparkSuite {
   }
 
   test("a BATCH changes-read follows a foreign writer under refresh_policy") {
-    catalogOn()
     val name = "rs_cdc_batchf"
     BucketStore.drop(name)
     BucketStore.load(spark, name,
@@ -301,7 +290,6 @@ class BucketedStreamRecoverySpec extends SparkSuite {
   }
 
   test("HRW sink: undrained kills + upsert into a RENDEZVOUS table recover; rows at argmax owners") {
-    catalogOn()
     loadPair("rs4_src", "rs4_dim", b1)
     spark.sql("DROP TABLE IF EXISTS graft.rs4_sink")
     spark.sql("CREATE TABLE graft.rs4_sink " +

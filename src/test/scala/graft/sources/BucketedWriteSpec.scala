@@ -12,13 +12,7 @@ import graft.sources.bucketed._
 class BucketedWriteSpec extends SparkSuite {
   import spark.implicits._
 
-  private def cat(): Unit = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-  }
-
   test("CTAS through the catalog round-trips rows and buckets them byte-identically to load") {
-    cat()
     val src = (1 to 300).map(i => (i.toLong, s"v$i", i * 1.5)).toDF("k", "v", "d")
     spark.sql("DROP TABLE IF EXISTS graft.`w_ctas`")
     src.writeTo("graft.`w_ctas`").partitionedBy(bucket(8, col("k"))).create()
@@ -39,7 +33,6 @@ class BucketedWriteSpec extends SparkSuite {
   }
 
   test("append adds rows under a new version; overwrite replaces them") {
-    cat()
     spark.sql("DROP TABLE IF EXISTS graft.`w_modes`")
     val a = (1 to 50).map(i => (i.toLong, "a")).toDF("k", "v")
     val b = (51 to 70).map(i => (i.toLong, "b")).toDF("k", "v")
@@ -57,7 +50,6 @@ class BucketedWriteSpec extends SparkSuite {
   }
 
   test("a failed write publishes nothing (two-phase commit atomicity)") {
-    cat()
     spark.sql("DROP TABLE IF EXISTS graft.`w_atomic`")
     (1 to 10).map(i => (i.toLong, i)).toDF("k", "n")
       .writeTo("graft.`w_atomic`").partitionedBy(bucket(4, col("k"))).create()
@@ -75,7 +67,6 @@ class BucketedWriteSpec extends SparkSuite {
   }
 
   test("schema mismatch and missing bucket transform are rejected loudly") {
-    cat()
     spark.sql("DROP TABLE IF EXISTS graft.`w_schema`")
     (1 to 5).map(i => (i.toLong, "x")).toDF("k", "v")
       .writeTo("graft.`w_schema`").partitionedBy(bucket(2, col("k"))).create()
@@ -93,7 +84,6 @@ class BucketedWriteSpec extends SparkSuite {
   }
 
   test("streaming write: q98 pipeline equals the batch answer; epoch replay cannot double-append") {
-    cat()
     // e2e through writeStream.toTable (the gated q98 path)
     val got = BucketedQueries.streamWriteQuery(spark, sf).collect().map(_.toSeq).toSet
     val exp = graft.tables.Tables.events(spark, sf)
@@ -120,7 +110,6 @@ class BucketedWriteSpec extends SparkSuite {
   }
 
   test("streaming upsert is exactly-once ACROSS restart: a replayed epoch cannot double-apply") {
-    cat()
     import java.nio.file.{Files, Paths}
     val srcDir = Files.createTempDirectory("graft_ups_src").toString
     val ckpt = Files.createTempDirectory("graft_ups_ckpt").toString
@@ -225,7 +214,6 @@ class BucketedWriteSpec extends SparkSuite {
   }
 
   test("write plans ONE exchange on the catalog's bucket function — each task writes whole buckets") {
-    cat()
     spark.sql("DROP TABLE IF EXISTS graft.`w_plan`")
     spark.sql("CREATE TABLE graft.`w_plan` (k BIGINT, v STRING) PARTITIONED BY (bucket(8, k))")
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -266,7 +254,6 @@ class BucketedWriteSpec extends SparkSuite {
   }
 
   test("DELETE FROM and TRUNCATE TABLE execute store-side under new versions") {
-    cat()
     spark.sql("DROP TABLE IF EXISTS graft.`w_del`")
     (1 to 40).map(i => (i.toLong, i % 4)).toDF("k", "grp")
       .writeTo("graft.`w_del`").partitionedBy(bucket(4, col("k"))).create()
@@ -287,7 +274,6 @@ class BucketedWriteSpec extends SparkSuite {
   }
 
   test("row-level ops: UPDATE, key-moving UPDATE, MERGE INTO, and non-translatable DELETE") {
-    cat()
     spark.sql("DROP TABLE IF EXISTS graft.`w_rlo`")
     (1 to 20).map(i => (i.toLong, s"v$i", i * 10)).toDF("k", "v", "n")
       .writeTo("graft.`w_rlo`").partitionedBy(bucket(4, col("k"))).create()
@@ -334,7 +320,6 @@ class BucketedWriteSpec extends SparkSuite {
   }
 
   test("UPDATE on the bucket key rewrites ~one bucket, not the table (group pruning)") {
-    cat()
     spark.sql("DROP TABLE IF EXISTS graft.`w_prune`")
     (1 to 100).map(i => (i.toLong, s"v$i")).toDF("k", "v")
       .writeTo("graft.`w_prune`").partitionedBy(bucket(8, col("k"))).create()
@@ -351,7 +336,6 @@ class BucketedWriteSpec extends SparkSuite {
   }
 
   test("SQL DML front door: CREATE TABLE / INSERT INTO / INSERT OVERWRITE / DROP") {
-    cat()
     spark.sql("DROP TABLE IF EXISTS graft.`w_sql`")
     spark.sql("CREATE TABLE graft.`w_sql` (k BIGINT, v STRING) PARTITIONED BY (bucket(4, k))")
     spark.sql("INSERT INTO graft.`w_sql` VALUES (1, 'a'), (2, 'b'), (3, 'c')")
@@ -369,7 +353,6 @@ class BucketedWriteSpec extends SparkSuite {
   }
 
   test("a written table joins a loaded table as a storage-partitioned join — zero Exchange") {
-    cat()
     BucketStore.ensureLoaded(spark, s"lineitem@$sf", sf, "lineitem", "l_orderkey", 16)
     spark.sql("DROP TABLE IF EXISTS graft.`w_spj`")
     graft.tables.Tables.lineitem(spark, sf)
@@ -390,7 +373,6 @@ class BucketedWriteSpec extends SparkSuite {
   }
 
   test("MERGE INTO: conditional clauses and WHEN MATCHED DELETE through the COW path") {
-    cat()
     spark.sql("DROP TABLE IF EXISTS graft.`w_mrg2`")
     (1 to 20).map(i => (i.toLong, s"v$i", i * 10)).toDF("k", "v", "n")
       .writeTo("graft.`w_mrg2`").partitionedBy(bucket(4, col("k"))).create()
@@ -420,7 +402,6 @@ class BucketedWriteSpec extends SparkSuite {
   }
 
   test("update-mode upsert rewrites ONLY the buckets owning the epoch's changed keys") {
-    cat()
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     spark.sql("DROP TABLE IF EXISTS graft.`w_ups`")
     spark.sql("CREATE TABLE graft.`w_ups` (k BIGINT, n BIGINT) " +
@@ -465,7 +446,6 @@ class BucketedWriteSpec extends SparkSuite {
   }
 
   test("upsert: a key delivered twice in ONE batch keeps only its last row") {
-    cat()
     spark.sql("DROP TABLE IF EXISTS graft.`w_ups2`")
     spark.sql("CREATE TABLE graft.`w_ups2` (k BIGINT, v STRING) PARTITIONED BY (bucket(4, k))")
     spark.sql("INSERT INTO graft.`w_ups2` VALUES (1, 'seed'), (2, 'keep')")
@@ -479,7 +459,6 @@ class BucketedWriteSpec extends SparkSuite {
   }
 
   test("malformed upsert value is loud on the catalog write path too") {
-    cat()
     spark.sql("DROP TABLE IF EXISTS graft.`w_upsm`")
     spark.sql("CREATE TABLE graft.`w_upsm` (k BIGINT, v STRING) PARTITIONED BY (bucket(4, k))")
     val ex = intercept[Exception] {
@@ -490,7 +469,6 @@ class BucketedWriteSpec extends SparkSuite {
   }
 
   test("upsert sink: restart from checkpoint resumes state; replay is idempotent, keys never duplicate") {
-    cat()
     val srcDir = java.nio.file.Files.createTempDirectory("graft_ups_src").toString
     val ckpt = java.nio.file.Files.createTempDirectory("graft_ups_rec_ckpt").toString
     spark.sql("DROP TABLE IF EXISTS graft.`w_rec`")
@@ -523,7 +501,6 @@ class BucketedWriteSpec extends SparkSuite {
   }
 
   test("update mode without upsert=true is a loud error, not silent duplication") {
-    cat()
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     spark.sql("DROP TABLE IF EXISTS graft.`w_upsx`")
     spark.sql("CREATE TABLE graft.`w_upsx` (k BIGINT, n BIGINT) " +
@@ -545,7 +522,6 @@ class BucketedWriteSpec extends SparkSuite {
 
   test("append to a COLD table faults only the receiving buckets; untouched keep their FILES") {
     import graft.sources.bucketed.FileStore
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     BucketStore.drop("w_coldapp")
     BucketStore.load(spark, "w_coldapp",
       (0 until 1600).map(i => (i.toLong, i * 1.0)).toDF("k", "v"), "k", 8)

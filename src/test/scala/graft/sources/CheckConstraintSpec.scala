@@ -61,8 +61,6 @@ class CheckConstraintSpec extends SparkSuite {
   }
 
   test("constrained table rejects violating MERGE through the DML path") {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.bucketed.BucketedCatalog].getName)
     val name = "chk_dml"
     BucketStore.drop(name)
     BucketStore.load(spark, name, Seq((1L, 5.0), (2L, 7.0)).toDF("k", "v"), "k", numBuckets = 2)
@@ -82,8 +80,6 @@ class CheckConstraintSpec extends SparkSuite {
   }
 
   test("DSv2 catalog append enforces the check task-side") {
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.bucketed.BucketedCatalog].getName)
     val name = "chk_append"
     BucketStore.drop(name)
     BucketStore.load(spark, name, Seq((1L, 5.0)).toDF("k", "v"), "k", numBuckets = 2)

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
-import graft.sources.bucketed.{BucketStore, BucketedCatalog}
+import graft.sources.bucketed.BucketStore
 
 /** Reported per-partition output ordering
   * ([[graft.sources.bucketed.BucketedScan.outputOrdering]]): a
@@ -14,8 +14,6 @@ class ClusteredOrderSpec extends SparkSuite {
   import spark.implicits._
 
   test("key-clustered co-bucketed SMJ: zero Exchange, zero Sort, exact rows") {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     val a = (1 to 500).map(i => (i.toLong, i * 2)).toDF("k", "x")
     val b = (1 to 500).map(i => (i.toLong, s"n$i")).toDF("k", "y")
     BucketStore.drop("ord_a"); BucketStore.drop("ord_b")
@@ -35,7 +33,6 @@ class ClusteredOrderSpec extends SparkSuite {
   }
 
   test("string cluster order is Spark's UTF-8 binary order, not Java's UTF-16 code units") {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     // U+1F600 (surrogate pair) vs U+FFFD: UTF-16 code-unit order puts
     // the pair FIRST (0xD83D < 0xFFFD), Spark's code-point order puts
     // it LAST (0x1F600 > 0xFFFD) — the divergence a lying ordering
@@ -51,8 +48,6 @@ class ClusteredOrderSpec extends SparkSuite {
   }
 
   test("ordering claim guards: unclustered tables keep their Sorts; TopN answers stay exact") {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     val a = (1 to 300).map(i => (i.toLong, i)).toDF("k", "x")
     BucketStore.drop("ord_plain")
     BucketStore.load(spark, "ord_plain", a, "k", 8) // NOT clustered

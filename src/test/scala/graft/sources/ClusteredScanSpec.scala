@@ -67,7 +67,6 @@ class ClusteredScanSpec extends SparkSuite {
   }
 
   test("DML publishes maintain the cluster order (INSERT, UPDATE, DELETE)") {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     spark.sql("DROP TABLE IF EXISTS graft.clust_dml")
     spark.sql("CREATE TABLE graft.clust_dml (k BIGINT, seq BIGINT, tag STRING) " +
       "PARTITIONED BY (bucket(2, k)) TBLPROPERTIES ('cluster_by'='seq')")
@@ -128,7 +127,6 @@ class ClusteredScanSpec extends SparkSuite {
 
   test("APPEND restores cluster order by delta-merge on hash AND range layouts; slices stay effective") {
     import spark.implicits._
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     // — hash-clustered table: bulk load ordered, append a SHUFFLED delta —
     BucketStore.drop("clust_app")
     val base = (0 until 3000).map(i => ((i % 53).toLong, i.toLong, s"r$i")).toDF("k", "seq", "tag")
@@ -183,7 +181,6 @@ class ClusteredScanSpec extends SparkSuite {
 
   test("CALL graft.recluster: an unclustered table gains the sliced range path") {
     import spark.implicits._
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     BucketStore.drop("reclust_t")
     val df = (0 until 2000).map(i => ((i % 31).toLong, i.toLong, s"r$i")).toDF("k", "seq", "tag")
     BucketStore.load(spark, "reclust_t", df, "k", 4) // NOT clustered

@@ -66,7 +66,6 @@ class ColumnarScanSpec extends SparkSuite {
   }
 
   test("merge-on-read state reads identically through the columnar path") {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     loadT()
     BucketStore.drop("colr_mor")
     BucketStore.load(spark, "colr_mor",
@@ -236,7 +235,6 @@ class ColumnarScanSpec extends SparkSuite {
     // computed straight off the vectors (order parity spec-pinned in
     // BucketedMorSpec); here: the shape decodes vectorized and the
     // answer matches the fold
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     BucketStore.drop("colr_vmor")
     BucketStore.load(spark, "colr_vmor",
       (0 until 256).map(i => (i.toLong, i * 1.0, (256 - i) * 1.0)).toDF("k", "x", "y"), "k", 2,
@@ -258,7 +256,6 @@ class ColumnarScanSpec extends SparkSuite {
   }
 
   test("a LEX-CLUSTERED MoR bucket with live delta SORTED-MERGES through the vectorized path") {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     BucketStore.drop("colr_vmrg")
     // cluster on a compound (String, Double) key with nulls in the mix:
     // every comparator branch (UTF8String byte order, IEEE doubles,
@@ -317,7 +314,6 @@ class ColumnarScanSpec extends SparkSuite {
     // KeyOrder.rows over external doubles, the merge through
     // KeyOrder.BatchKey over the vectors; this pins their agreement
     // with live delta rows interleaving among the specials
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     BucketStore.drop("colr_ieee")
     val specials = Array(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
       -0.0, 0.0, 1.5, -1.5)
@@ -362,7 +358,6 @@ class ColumnarScanSpec extends SparkSuite {
     // through ZOrder.dimKey over external doubles, the merge through
     // the vector-side floatingKey(bits) getters; rank normalization
     // (frozen bounds) amplifies any disagreement into a reorder
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = "colr_zieee"
     BucketStore.drop(name)
     val specials = Array(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity,
@@ -403,7 +398,6 @@ class ColumnarScanSpec extends SparkSuite {
   }
 
   test("vectorized merge order parity with the fold under randomized DML (seeded)") {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val rnd = new scala.util.Random(20260816L)
     // both sorted-merge modes: the lexicographic comparator chain and
     // (round 18) the rank-normalized Morton interleave
@@ -445,7 +439,6 @@ class ColumnarScanSpec extends SparkSuite {
     // positional masking preserves ANY serving order, so the ordering
     // contract holds with zero live delta rows — the retention-job
     // shape (bulk DELETE, no updates) never pays the fold
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     BucketStore.drop("colr_vdel")
     BucketStore.load(spark, "colr_vdel",
       (0 until 512).map(i => (i.toLong, (512 - i) * 1.0)).toDF("k", "v"), "k", 2,
@@ -475,7 +468,6 @@ class ColumnarScanSpec extends SparkSuite {
   }
 
   test("a cold NON-clustered MoR bucket rides the vectorized path: deletes mask, delta appends") {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     BucketStore.drop("colr_morv")
     BucketStore.load(spark, "colr_morv",
       (0 until 1024).map(i => (i.toLong, i % 31, i * 1.0, s"t$i")).toDF("k", "m", "v", "tag"),
@@ -587,7 +579,6 @@ class ColumnarScanSpec extends SparkSuite {
     BucketStore.load(spark, name,
       (0 until 1024).map(i => (i.toLong, i * 2.0, s"s$i")).toDF("k", "v", "s"), "k", 4)
     BucketStore.addColumns(name, Seq(StructField("extra", StringType, nullable = true)))
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     // post-ALTER append: the table now MIXES pre-ALTER (short) and
     // post-ALTER (full) file schemas — the 100 TB reality after an
     // ALTER, where only new buckets carry the column physically
@@ -647,8 +638,6 @@ class ColumnarScanSpec extends SparkSuite {
   }
 
   test("a co-bucketed join of two COLD tables: zero Exchange, vectorized both sides, zero faults") {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
     BucketStore.drop("colr_jl")
     BucketStore.drop("colr_jr")
     BucketStore.load(spark, "colr_jl",
@@ -680,7 +669,6 @@ class ColumnarScanSpec extends SparkSuite {
     // TPC-H money columns are DECIMAL — before round 18 any projection
     // containing one demoted the whole scan to the row reader
     import org.apache.spark.sql.types.DecimalType
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = "colr_dec"
     BucketStore.drop(name)
     val df = (0 until 1024).map { i =>
@@ -836,7 +824,6 @@ class ColumnarScanSpec extends SparkSuite {
     // still serves through the vectorized overlay
     BucketStore.setDmlMode("colr_bin", BucketStore.MergeOnRead)
     BucketStore.deleteWhere("colr_bin", _.getLong(0) % 10 == 1L)
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     spark.sql("UPDATE graft.colr_bin SET g = 99 WHERE k % 50 = 2")
     val wantMor = snap(columnar = false)
     assert(wantMor.exists(_._3 == 99) && !wantMor.exists(_._1 == 1L))

@@ -89,7 +89,6 @@ class CompoundClusterSpec extends SparkSuite {
     val first = Seq((1L, "b", 20L), (2L, "a", 10L), (3L, "b", 5L))
       .toDF("k", "tenant", "seq")
     BucketStore.load(spark, "comp_merge", first, "k", 1, clusterBy = Some("tenant,seq"))
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     spark.sql("INSERT INTO graft.comp_merge VALUES (4, 'a', 99), (5, 'a', 1), (6, 'b', 7)")
     val t = BucketStore.get("comp_merge")
     val stored = t.buckets(0).map(r => (r.getString(1), r.getLong(2))).toSeq
@@ -103,7 +102,6 @@ class CompoundClusterSpec extends SparkSuite {
       .toDF("k", "tenant", "seq", "tag")
     BucketStore.load(spark, "comp_mor", df, "k", 1, clusterBy = Some("tenant,seq"))
     BucketStore.setDmlMode("comp_mor", BucketStore.MergeOnRead)
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     // MOR UPDATE: deletion vector + delta row, folded at read
     spark.sql("UPDATE graft.comp_mor SET seq = 20 WHERE tag = 'y'")
     val got = spark.table("graft.comp_mor")
@@ -115,7 +113,6 @@ class CompoundClusterSpec extends SparkSuite {
 
   test("reported ordering is the projected PREFIX of the compound key") {
     loadCompound()
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     // both cluster columns projected → orderBy(tenant, seq) plans no Sort
     val both = spark.table("graft.comp_t").select("tenant", "seq", "tag")
       .orderBy(col("tenant"), col("seq"))
@@ -137,7 +134,6 @@ class CompoundClusterSpec extends SparkSuite {
     val df = (0 until 100).map(i => (i.toLong, s"t${i % 3}", (i % 7).toLong))
       .toDF("k", "tenant", "seq")
     BucketStore.load(spark, "comp_rc", df, "k", 2)
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     spark.sql("CALL graft.recluster('comp_rc', 'tenant,seq')").collect()
     val t = BucketStore.get("comp_rc")
     assert(t.clusterCol === Some("tenant,seq"))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.EqualTo
 
 import graft.SparkSuite
-import graft.sources.bucketed.{BucketFunction, BucketStore, BucketedCatalog}
+import graft.sources.bucketed.{BucketFunction, BucketStore}
 
 /** Optimistic concurrency at the store's commit protocol (gated
   * end-to-end by q249): copy-on-write group replacements carry the
@@ -23,7 +23,6 @@ class ConcurrentWriteSpec extends SparkSuite {
     spark.read.format("graft-buckets").option("table", t).load()
 
   private def freshTable(name: String): Unit = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val df = (1L to 400L).map(k => (k, k * 10.0)).toDF("k", "v")
     BucketStore.drop(name)
     BucketStore.load(spark, name, df, "k", 8)

@@ -14,13 +14,7 @@ import graft.sources.bucketed._
 class DmlLayoutInterleaveSpec extends SparkSuite {
   import spark.implicits._
 
-  private def catalogOn(): Unit = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-  }
-
   test("MERGE INTO a z-ordered merge-on-read table: answers exact, Morton order survives the fold") {
-    catalogOn()
     BucketStore.drop("zmor")
     val base = (0 until 256).map(i => (i.toLong, (i * 37 % 512).toLong, (i * 91 % 512).toLong, 1.0))
     BucketStore.load(spark, "zmor", base.toDF("k", "x", "y", "v"), "k", 2,
@@ -64,7 +58,6 @@ class DmlLayoutInterleaveSpec extends SparkSuite {
   }
 
   test("z-table whose FIRST rows arrive as MoR delta inserts freezes bounds then keeps order") {
-    catalogOn()
     // the advice-4 path: CREATE TABLE commits no rows (zBounds = None);
     // a pure row-level MERGE then delivers the first rows as a DELTA.
     // applyDelta must freeze rank boundaries right there — otherwise a
@@ -105,7 +98,6 @@ class DmlLayoutInterleaveSpec extends SparkSuite {
   }
 
   test("rebucket during an OPEN CDC stream: the running query fails loudly, never emits garbage") {
-    catalogOn()
     BucketStore.drop("cdc_live")
     BucketStore.load(spark, "cdc_live",
       (1 to 16).map(i => (i.toLong, s"t$i")).toDF("k", "tag"), "k", 4)
@@ -136,7 +128,6 @@ class DmlLayoutInterleaveSpec extends SparkSuite {
   }
 
   test("DML on a replicated table: row-level ops work and replication properties survive") {
-    catalogOn()
     BucketStore.drop("repl_dml")
     BucketStore.load(spark, "repl_dml",
       (1 to 32).map(i => (i.toLong, s"seg${i % 4}", i * 1.0)).toDF("k", "seg", "v"),

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
-import graft.sources.bucketed.{BucketStore, BucketedCatalog, FileStore}
+import graft.sources.bucketed.{BucketStore, FileStore}
 
 /** The file substrate under the bucket store
   * ([[graft.sources.bucketed.FileStore]]): a snapshot is a JSON
@@ -18,11 +18,6 @@ import graft.sources.bucketed.{BucketStore, BucketedCatalog, FileStore}
   */
 class FileStoreSpec extends SparkSuite {
   import spark.implicits._
-
-  private def catalogOn(): Unit = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-  }
 
   private def scan(t: String) =
     spark.read.format("graft-buckets").option("table", t).load()
@@ -55,7 +50,6 @@ class FileStoreSpec extends SparkSuite {
   }
 
   test("unload + openFromDisk: a table survives a process restart from its directory alone") {
-    catalogOn()
     spark.sql("DROP TABLE IF EXISTS graft.fs_boot")
     spark.sql("""CREATE TABLE graft.fs_boot (k BIGINT, tag STRING, v DOUBLE)
       PARTITIONED BY (bucket(4, k))

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
-import graft.sources.bucketed.{BucketStore, BucketedCatalog, FileStore}
+import graft.sources.bucketed.{BucketStore, FileStore}
 
 /** Idempotent writes (`txnappid`/`txnversion`, gated end-to-end by
   * q255): a retried batch publishes nothing, the high-water mark per
@@ -19,7 +19,6 @@ class IdempotentWriteSpec extends SparkSuite {
     spark.read.format("graft-buckets").option("table", t).load()
 
   private def mk(name: String): Unit = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     BucketStore.drop(name)
     BucketStore.load(spark, name,
       (1 to 100).map(i => (i.toLong, s"base-$i")).toDF("k", "tag"), "k", 4)

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
-import graft.sources.bucketed.{BucketStore, BucketedCatalog}
+import graft.sources.bucketed.BucketStore
 
 /** Statistics-driven DELETE ([[graft.sources.bucketed.BucketStore.deleteWhereFiltered]],
   * gated end-to-end by q248): on a range layout a retention predicate
@@ -21,7 +21,6 @@ class MetadataDeleteSpec extends SparkSuite {
     spark.read.format("graft-buckets").option("table", t).load()
 
   private def rangeTable(name: String, n: Int = 1600): Unit = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val df = (1 to n).map(i => (i.toLong, s"doc-$i", i % 7)).toDF("k", "name", "grp")
     BucketStore.drop(name)
     BucketStore.load(spark, name, df, "k", 8)
@@ -96,7 +95,6 @@ class MetadataDeleteSpec extends SparkSuite {
   }
 
   test("NULLs block the full-coverage proof: null rows survive a < delete") {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     // a null every 10th row: key-hash spreads them into all 4 buckets
     val df = (1 to 200).map { i =>
       (i.toLong, if (i % 10 == 0) null else java.lang.Long.valueOf(i.toLong))
@@ -116,7 +114,6 @@ class MetadataDeleteSpec extends SparkSuite {
   }
 
   test("CDC: a whole-bucket drop still emits exactly its delete rows") {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val df = (1 to 400).map(i => (i.toLong, s"doc-$i")).toDF("k", "name")
     BucketStore.drop("md_cdc")
     BucketStore.load(spark, "md_cdc", df, "k", 8)
@@ -164,7 +161,6 @@ class MetadataDeleteSpec extends SparkSuite {
 
   test("merge-on-read COLD straddler streams only the filter columns — zero heap faults") {
     import graft.sources.bucketed.FileStore
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val df = (1 to 1600).map(i => (i.toLong, s"doc-$i", i % 7)).toDF("k", "name", "grp")
     BucketStore.drop("md_stream")
     BucketStore.load(spark, "md_stream", df, "k", 8)

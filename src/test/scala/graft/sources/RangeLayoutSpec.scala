@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
-import graft.sources.bucketed.{BucketStore, BucketedCatalog}
+import graft.sources.bucketed.BucketStore
 
 /** RANGE bucket layout (`CALL graft.repartition_range`): boundary
   * routing, zone-map ownership pruning, DML re-routing through the
@@ -35,7 +35,6 @@ class RangeLayoutSpec extends SparkSuite {
   }
 
   test("repartition_range: disjoint key ranges, range scans prune to owning buckets") {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val df = (1 to 4000).map(i => (i.toLong, i % 7)).toDF("k", "grp")
     BucketStore.drop("rng_t")
     BucketStore.load(spark, "rng_t", df, "k", 16)
@@ -53,7 +52,6 @@ class RangeLayoutSpec extends SparkSuite {
   }
 
   test("DML through a range layout routes moved keys by boundary, not hash") {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val df = (1 to 2000).map(i => (i.toLong, s"v$i")).toDF("k", "v")
     BucketStore.drop("rng_dml")
     BucketStore.load(spark, "rng_dml", df, "k", 8)
@@ -71,7 +69,6 @@ class RangeLayoutSpec extends SparkSuite {
   }
 
   test("rebucket is the way back: bounds cleared, hash pruning resumes") {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val df = (1 to 500).map(i => (i.toLong, i)).toDF("k", "x")
     BucketStore.drop("rng_back")
     BucketStore.load(spark, "rng_back", df, "k", 8)
@@ -87,7 +84,6 @@ class RangeLayoutSpec extends SparkSuite {
   }
 
   test("writes into a RANGE table request an ordered (range) distribution, not the hash transform") {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val df = (1 to 300).map(i => (i.toLong, i)).toDF("k", "x")
     BucketStore.drop("rng_wd")
     BucketStore.load(spark, "rng_wd", df, "k", 8)
@@ -104,7 +100,6 @@ class RangeLayoutSpec extends SparkSuite {
   }
 
   test("CDC refuses windows spanning a SAME-count layout change (epoch, not count)") {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val df = (1 to 300).map(i => (i.toLong, i)).toDF("k", "x")
     BucketStore.drop("rng_cdc")
     BucketStore.load(spark, "rng_cdc", df, "k", 8)
@@ -128,7 +123,6 @@ class RangeLayoutSpec extends SparkSuite {
   }
 
   test("same-count rebucket FROM a range layout is the way back to hash") {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val df = (1 to 200).map(i => (i.toLong, i)).toDF("k", "x")
     BucketStore.drop("rng_same")
     BucketStore.load(spark, "rng_same", df, "k", 8)
@@ -142,7 +136,6 @@ class RangeLayoutSpec extends SparkSuite {
   }
 
   test("CALL graft.stats surfaces the layout: overlapping hash ranges become disjoint range ones") {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val df = (1 to 800).map(i => (i.toLong, i)).toDF("k", "x")
     BucketStore.drop("rng_stats")
     BucketStore.load(spark, "rng_stats", df, "k", 4)
@@ -170,7 +163,6 @@ class RangeLayoutSpec extends SparkSuite {
   }
 
   test("streaming keyed upsert into a RANGE table routes by boundary") {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val df = (1 to 400).map(i => (i.toLong, s"v$i")).toDF("k", "v")
     BucketStore.drop("rng_ups")
     BucketStore.load(spark, "rng_ups", df, "k", 8)
@@ -196,7 +188,6 @@ class RangeLayoutSpec extends SparkSuite {
   }
 
   test("zone-pruned GLOBAL pushed aggregate still answers count=0, not NULL") {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val df = (1 to 300).map(i => (i.toLong, i * 1.0)).toDF("k", "price")
     BucketStore.drop("skip_agg")
     BucketStore.load(spark, "skip_agg", df, "k", 8)
@@ -211,7 +202,6 @@ class RangeLayoutSpec extends SparkSuite {
   }
 
   test("repartition_range refuses an empty table; empty buckets under skew are fine") {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     BucketStore.drop("rng_skew")
     // all keys identical: every row lands in bucket 0, others stay empty
     val df = (1 to 100).map(_ => (42L, 1)).toDF("k", "x")

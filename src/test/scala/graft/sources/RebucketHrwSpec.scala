@@ -17,11 +17,6 @@ import graft.sources.bucketed._
 class RebucketHrwSpec extends SparkSuite {
   import spark.implicits._
 
-  private def catalogOn(): Unit = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
-    spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
-  }
-
   private def mk(name: String, nKeys: Int, buckets: Int): Unit = {
     BucketStore.drop(name)
     BucketStore.load(spark, name,
@@ -112,7 +107,6 @@ class RebucketHrwSpec extends SparkSuite {
   }
 
   test("CALL graft.rebucket_hrw reports untouched buckets; scans, writes, and pruning follow HRW") {
-    catalogOn()
     spark.sql("DROP TABLE IF EXISTS graft.hrw_sql")
     spark.sql("CREATE TABLE graft.hrw_sql (k BIGINT, v DOUBLE) PARTITIONED BY (bucket(16, k))")
     spark.sql("INSERT INTO graft.hrw_sql SELECT id, id * 0.5 FROM range(1, 61)")
@@ -173,7 +167,6 @@ class RebucketHrwSpec extends SparkSuite {
   }
 
   test("HRW resize materializes pending MoR state (no stale deltas survive the layout change)") {
-    catalogOn()
     spark.sql("DROP TABLE IF EXISTS graft.hrw_mor")
     spark.sql("CREATE TABLE graft.hrw_mor (k BIGINT, v DOUBLE) PARTITIONED BY (bucket(8, k))")
     spark.sql("INSERT INTO graft.hrw_mor SELECT id, CAST(id AS DOUBLE) FROM range(1, 41)")
@@ -194,7 +187,6 @@ class RebucketHrwSpec extends SparkSuite {
   }
 
   test("STRING keys: route, point-lookup prune to one bucket, and HRW-grow legally — both layouts") {
-    catalogOn()
     val name = "str_key"
     BucketStore.drop(name)
     BucketStore.load(spark, name,

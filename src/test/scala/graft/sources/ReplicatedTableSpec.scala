@@ -104,8 +104,6 @@ class ReplicatedTableSpec extends SparkSuite {
     BucketStore.load(spark, scratch,
       graft.tables.Tables.load(spark, sf, "region"), "r_regionkey",
       numBuckets = 1, replicate = true)
-    spark.conf.set("spark.sql.catalog.graft",
-      classOf[graft.sources.bucketed.BucketedCatalog].getName)
     val before = spark.table(s"graft.`$scratch`").count()
     graft.tables.Tables.load(spark, sf, "region")
       .withColumn("r_regionkey", col("r_regionkey") + 100)

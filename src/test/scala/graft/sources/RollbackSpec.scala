@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
-import graft.sources.bucketed.{BucketStore, BucketedCatalog}
+import graft.sources.bucketed.BucketStore
 
 /** Snapshot rollback ([[graft.sources.bucketed.BucketStore.rollback]],
   * gated end-to-end by q251): reinstate a retained version as the new
@@ -20,7 +20,6 @@ class RollbackSpec extends SparkSuite {
     spark.read.format("graft-buckets").option("table", t).load()
 
   private def mk(name: String, n: Int = 600): Long = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     BucketStore.drop(name)
     BucketStore.load(spark, name,
       (1 to n).map(i => (i.toLong, s"d-$i", i % 5)).toDF("k", "tag", "grp"), "k", 8)

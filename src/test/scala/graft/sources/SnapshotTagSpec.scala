@@ -3,14 +3,13 @@ package graft.sources
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
-import graft.sources.bucketed.{BucketStore, BucketedCatalog}
+import graft.sources.bucketed.BucketStore
 
 /** Named snapshot tags: `CALL graft.tag` + symbolic `VERSION AS OF`. */
 class SnapshotTagSpec extends SparkSuite {
   import spark.implicits._
 
   private def init(): String = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = "tagged"
     BucketStore.drop(name)
     BucketStore.load(spark, name, Seq((1L, "a"), (2L, "b")).toDF("k", "s"), "k", numBuckets = 2)

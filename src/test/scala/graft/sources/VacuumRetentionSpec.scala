@@ -138,7 +138,6 @@ class VacuumRetentionSpec extends SparkSuite {
   }
 
   test("a TABLE-LEVEL floor (TBLPROPERTIES vacuum.min_age_ms) guards automatic retention GC too") {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = "vac_prop"
     BucketStore.drop(name)
     spark.sql(s"CREATE TABLE graft.`$name` (k BIGINT, v DOUBLE) " +
@@ -178,7 +177,6 @@ class VacuumRetentionSpec extends SparkSuite {
     // directory) must not delete files younger than the base's floor
     // even with an explicit zero — only a table's OWN floor is
     // overridable per call
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = "vac_share"
     BucketStore.drop(name)
     BucketStore.load(spark, name,
@@ -213,7 +211,6 @@ class VacuumRetentionSpec extends SparkSuite {
     // with a real engine-produced manifest withheld across a rewind
     // and landed back while the local heap is stale
     import java.nio.file.Files
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = "vac_race"
     BucketStore.drop(name)
     BucketStore.load(spark, name,
@@ -242,7 +239,6 @@ class VacuumRetentionSpec extends SparkSuite {
   }
 
   test("CALL graft.retention sets/clears the floor for existing tables") {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = "vac_retproc"
     BucketStore.drop(name)
     BucketStore.load(spark, name,
@@ -260,7 +256,6 @@ class VacuumRetentionSpec extends SparkSuite {
   }
 
   test("CALL graft.vacuum accepts the optional min_age_ms argument") {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val name = "vac_call"
     BucketStore.drop(name)
     BucketStore.load(spark, name,

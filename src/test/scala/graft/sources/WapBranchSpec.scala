@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
-import graft.sources.bucketed.{BucketStore, BucketedCatalog, FileStore}
+import graft.sources.bucketed.{BucketStore, FileStore}
 
 /** WAP branches (write-audit-publish, gated end-to-end by q250):
   * `CALL graft.branch` forks the head as `base#branch` — a zero-copy
@@ -19,7 +19,6 @@ class WapBranchSpec extends SparkSuite {
     spark.read.format("graft-buckets").option("table", t).load()
 
   private def mk(name: String, n: Int = 800): Unit = {
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     BucketStore.drop(name)
     BucketStore.load(spark, name,
       (1 to n).map(i => (i.toLong, s"d-$i", i % 5)).toDF("k", "tag", "grp"), "k", 8)

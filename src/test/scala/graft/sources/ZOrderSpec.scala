@@ -162,7 +162,6 @@ class ZOrderSpec extends SparkSuite {
 
   test("no reported ordering: sortWithinPartitions on the z-columns really sorts") {
     loadPair()
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     val sorted = spark.read.format("graft-buckets").option("table", "z_t").load()
       .select("x", "y")
       .sortWithinPartitions("x", "y")
@@ -190,7 +189,6 @@ class ZOrderSpec extends SparkSuite {
     val first = Seq((1L, 3000L, 3000L), (2L, 10L, 10L), (3L, 2000L, 100L))
       .toDF("k", "x", "y")
     BucketStore.load(spark, "z_merge", first, "k", 1, clusterBy = Some("zorder(x,y)"))
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     spark.sql("INSERT INTO graft.z_merge VALUES (4, 5, 5), (5, 3500, 3500)")
     val t = BucketStore.get("z_merge")
     // the table's EFFECTIVE key (rank-normalized once bounds froze at
@@ -226,7 +224,6 @@ class ZOrderSpec extends SparkSuite {
     }
     BucketStore.load(spark, "z_drift", base.toDF("k", "x", "y"), "k", 2,
       clusterBy = Some("zorder(x,y)"))
-    spark.conf.set("spark.sql.catalog.graft", classOf[BucketedCatalog].getName)
     drift.grouped(8192).foreach { g =>
       g.toDF("k", "x", "y").writeTo("graft.z_drift").append()
     }
