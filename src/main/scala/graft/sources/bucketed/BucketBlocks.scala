@@ -83,13 +83,16 @@ object BlockCache {
   }
 
   /** Estimated JVM heap footprint of a loaded row array, from a
-    * 64-row sample (evenly strided). External `Row`s hold boxed
-    * values, so the constants model object headers + boxing, not
-    * encoded widths — intentionally a HEAP model, which is what the
-    * budget protects. The decoders share equal immutable values across
-    * rows ([[ValueSharing]]), so a value INSTANCE that recurs within
-    * the sample is charged once; the row shells and the instances seen
-    * once are extrapolated to the array's length. Deterministic, so a
+    * 64-row sample (evenly strided). Plain `Row`s hold boxed values, so
+    * the constants model object headers + boxing, not encoded widths —
+    * intentionally a HEAP model, which is what the budget protects. A
+    * [[RowView]] is charged as its shell plus its row's share of its
+    * chunk's column arrays; only the values of its object columns are
+    * sampled (reading a primitive cell would box a fresh object). The
+    * decoders share equal immutable values across rows
+    * ([[ValueSharing]]), so a value INSTANCE that recurs within the
+    * sample is charged once; the row shells and the instances seen once
+    * are extrapolated to the array's length. Deterministic, so a
     * block's charge is stable across reloads.
     */
   private[bucketed] def heapSizeEstimate(rows: Array[Row]): Long = {
@@ -98,19 +101,24 @@ object BlockCache {
     val step = math.max(1, rows.length / sample)
     // sampled value instance → whether it recurs within the sample
     val recurs = new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]()
-    var perRow = 0L
+    def sampled(v: AnyRef): Unit =
+      if (v != null) recurs.put(v, java.lang.Boolean.valueOf(recurs.containsKey(v)))
+    var perRow = 0.0
     var n = 0
     var i = 0
     while (i < rows.length && n < sample) {
-      val r = rows(i)
-      perRow += rowShellBytes(r)
-      var j = 0
-      while (j < r.length) {
-        if (!r.isNullAt(j)) {
-          val v = r.get(j).asInstanceOf[AnyRef]
-          recurs.put(v, java.lang.Boolean.valueOf(recurs.containsKey(v)))
-        }
-        j += 1
+      rows(i) match {
+        case v: RowView =>
+          perRow += v.fixedBytes
+          var j = 0
+          while (j < v.length) { sampled(v.storedRef(j)); j += 1 }
+        case r =>
+          perRow += rowShellBytes(r)
+          var j = 0
+          while (j < r.length) {
+            if (!r.isNullAt(j)) sampled(r.get(j).asInstanceOf[AnyRef])
+            j += 1
+          }
       }
       n += 1; i += step
     }
@@ -118,7 +126,7 @@ object BlockCache {
     recurs.forEach { (v, again) =>
       if (again) shared += valueBytes(v) else perRow += valueBytes(v)
     }
-    math.round(perRow.toDouble / n * rows.length) + shared
+    math.round(perRow / n * rows.length) + shared
   }
 
   // GenericRow + its value ref array
@@ -166,22 +174,20 @@ object BlockCache {
 
 /** Decode-scoped value sharing. The store's two row decoders
   * ([[RowPayloadCodec.read]] and [[FileStore.readBlock]]) pass every
-  * decoded value through one of these, column by column, so equal
-  * values of an immutable type become ONE instance across the rows of
-  * that decode. Five distinct flag strings, ~2.5k ship dates or a few
-  * dozen distinct quantities then cost one object each, not one per
-  * row.
+  * decoded value of an object column through one of these, column by
+  * column, so equal values of an immutable type become ONE instance
+  * across the rows of that decode. Five distinct flag strings or ~2.5k
+  * ship dates then cost one object each, not one per row. (Primitive
+  * columns hold no objects: they decode into a [[ColumnChunk]]'s typed
+  * arrays.)
   *
-  * Shared: `String`, `LocalDateTime`, `LocalDate`, `Instant`,
-  * `java.math.BigDecimal` (its `equals` tells `1.0` from `1.00`) and
-  * boxed integral, `Float` and `Double` values (boxed `equals`
-  * compares bits, so `-0.0` and `0.0` stay apart). NaN is never
-  * shared: boxed `equals` folds NaN payloads together. The mutable
-  * `java.sql.Timestamp`, `java.sql.Date` and `Array[Byte]` values and
-  * nested values are never shared. A column whose dictionary passes
-  * [[ValueSharing.MaxEntries]] stops sharing for the rest of the
-  * decode, so high-cardinality keys pay only a short probe. Nothing
-  * outlives the decode: no global state, no lock.
+  * Shared: `String`, `LocalDateTime`, `LocalDate`, `Instant` and
+  * `java.math.BigDecimal` (its `equals` tells `1.0` from `1.00`). The
+  * mutable `java.sql.Timestamp`, `java.sql.Date` and `Array[Byte]`
+  * values, nested values and boxed numbers are never shared. A column
+  * whose dictionary passes [[ValueSharing.MaxEntries]] stops sharing for
+  * the rest of the decode, so high-cardinality keys pay only a short
+  * probe. Nothing outlives the decode: no global state, no lock.
   */
 private[bucketed] final class ValueSharing(arity: Int) {
   private val dicts = Array.fill(arity)(new java.util.HashMap[AnyRef, AnyRef]())
@@ -207,11 +213,8 @@ private[bucketed] object ValueSharing {
   val MaxEntries = 4096
 
   private def shareable(v: Any): Boolean = v match {
-    case _: String | _: java.lang.Long | _: java.lang.Integer | _: java.math.BigDecimal |
-         _: java.time.LocalDateTime | _: java.time.LocalDate | _: java.time.Instant |
-         _: java.lang.Short | _: java.lang.Byte => true
-    case d: java.lang.Double => !d.isNaN
-    case f: java.lang.Float => !f.isNaN
+    case _: String | _: java.math.BigDecimal |
+         _: java.time.LocalDateTime | _: java.time.LocalDate | _: java.time.Instant => true
     case _ => false
   }
 }
@@ -234,11 +237,15 @@ private[bucketed] object ValueSharing {
   *     a table opened from disk ([[BucketStore.openFromDisk]]) starts
   *     in: the driver holds file REFERENCES, never the table.
   *
-  * Values in a block's rows may be shared with other rows, of this
-  * block and of others decoded from the same payload: both decoders
-  * hand out one instance per distinct immutable value
-  * ([[ValueSharing]]). Stored rows and their values are never mutated;
-  * a commit builds new rows.
+  * A decoded block's rows are [[RowView]]s of one [[ColumnChunk]]
+  * (the payload decoder makes one chunk per bucket, [[FileStore.readBlock]]
+  * one per file). A view pins its chunk: the chunk lives while any
+  * view of it lives, so a block that a commit built from some rows of
+  * an older block keeps that block's whole chunk reachable even after
+  * the older block is evicted or dropped. Values of object columns may
+  * be shared with other rows, of this block and of others decoded from
+  * the same payload ([[ValueSharing]]). Stored rows and their values
+  * are never mutated; a commit builds new rows.
   */
 final class BucketBlock private (
     @volatile private var mem: Array[Row],

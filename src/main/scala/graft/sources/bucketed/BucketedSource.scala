@@ -1281,20 +1281,21 @@ object BucketedAggPartitionReader {
   */
 private[bucketed] final class PartialFold(spec: AggSpec, schema: StructType) {
   import AggSpec._
-  import org.apache.spark.sql.types.DoubleType
+  import org.apache.spark.sql.types._
 
   private val aggs = spec.aggs.toArray
   private val n = aggs.length
 
   /** One group's state: COUNT and integral SUM in `longs`, floating SUM
-    * in `doubles`, MIN/MAX in `values`; `summed(i)` marks a SUM that met
-    * a non-null value (a SUM over none is NULL). `key` holds the group
-    * columns' first-seen values, the ones emitted.
+    * in `doubles`, MIN/MAX as the row holding the extreme in `best`;
+    * `summed(i)` marks a SUM that met a non-null value (a SUM over none
+    * is NULL). `key` holds the group columns' first-seen values, the
+    * ones emitted.
     */
   private final class Acc(val key: Array[Any]) {
     val longs = new Array[Long](n)
     val doubles = new Array[Double](n)
-    val values = new Array[Any](n)
+    val best = new Array[Row](n)
     val summed = new Array[Boolean](n)
   }
 
@@ -1313,39 +1314,45 @@ private[bucketed] final class PartialFold(spec: AggSpec, schema: StructType) {
     case PMin(c) => extreme(c, i, -1)
     case PMax(c) => extreme(c, i, 1)
     // SUM over zero non-null rows stays NULL (Spark's sum semantics);
-    // integral adds wrap like Spark's non-ANSI sum
+    // integral adds wrap like Spark's non-ANSI sum; cells are read
+    // through the column's typed getter, so no value boxes per row
     case PSum(c) if sumIsDouble(i) =>
       val j = schema.fieldIndex(c)
-      (g, r) => {
-        val v = r.get(j)
-        if (v != null) {
-          val d = v.asInstanceOf[Number].doubleValue
-          g.doubles(i) = if (g.summed(i)) g.doubles(i) + d else d
-          g.summed(i) = true
-        }
+      def add(g: Acc, d: Double): Unit = {
+        g.doubles(i) = if (g.summed(i)) g.doubles(i) + d else d
+        g.summed(i) = true
       }
+      if (schema(j).dataType == FloatType) (g, r) => { if (!r.isNullAt(j)) add(g, r.getFloat(j).toDouble) }
+      else (g, r) => { if (!r.isNullAt(j)) add(g, r.getDouble(j)) }
     case PSum(c) =>
       val j = schema.fieldIndex(c)
-      (g, r) => {
-        val v = r.get(j)
-        if (v != null) {
-          g.longs(i) += v.asInstanceOf[Number].longValue
-          g.summed(i) = true
-        }
+      def add(g: Acc, x: Long): Unit = { g.longs(i) += x; g.summed(i) = true }
+      schema(j).dataType match {
+        case LongType => (g, r) => { if (!r.isNullAt(j)) add(g, r.getLong(j)) }
+        case IntegerType => (g, r) => { if (!r.isNullAt(j)) add(g, r.getInt(j).toLong) }
+        case ShortType => (g, r) => { if (!r.isNullAt(j)) add(g, r.getShort(j).toLong) }
+        case _ => (g, r) => { if (!r.isNullAt(j)) add(g, r.getByte(j).toLong) }
       }
   }
 
-  /** MIN (`sign` -1) or MAX (`sign` 1) under the column's ordering. */
+  /** MIN (`sign` -1) or MAX (`sign` 1) under the column's ordering; the
+    * first of equal extremes is kept.
+    */
   private def extreme(c: String, i: Int, sign: Int): Update = {
     val j = schema.fieldIndex(c)
-    val ord = KeyOrder.of(schema(j).dataType)
+    val cells = KeyOrder.cells(schema(j).dataType, j)
     (g, r) => {
-      val v = r.get(j)
-      if (v != null && (g.values(i) == null || ord.compare(v, g.values(i)) * sign > 0)) g.values(i) = v
+      if (!r.isNullAt(j) && (g.best(i) == null || cells.compare(r, g.best(i)) * sign > 0)) g.best(i) = r
     }
   }
 
   private val updates: Array[Update] = Array.tabulate(n)(i => update(aggs(i), i))
+
+  private val extremeCol: Array[Int] = aggs.map {
+    case PMin(c) => schema.fieldIndex(c)
+    case PMax(c) => schema.fieldIndex(c)
+    case _ => -1
+  }
 
   private val gIdx = spec.groupCols.map(schema.fieldIndex).toArray
   private val canon: Array[Any => Any] = gIdx.map(j => PartialFold.groupKey(schema(j).dataType))
@@ -1382,7 +1389,7 @@ private[bucketed] final class PartialFold(spec: AggSpec, schema: StructType) {
       while (i < n) {
         out(g.key.length + i) = aggs(i) match {
           case PCountStar | PCount(_) => g.longs(i)
-          case PMin(_) | PMax(_) => g.values(i)
+          case PMin(_) | PMax(_) => if (g.best(i) == null) null else g.best(i).get(extremeCol(i))
           case PSum(_) if !g.summed(i) => null
           case PSum(_) => if (sumIsDouble(i)) g.doubles(i) else g.longs(i)
         }
@@ -1853,10 +1860,7 @@ class BucketedColumnarPartitionReader(p: BucketInputPartition, required: StructT
       case n =>
         val i = stream.fullSchema.fieldIndex(n)
         val put = BucketedColumnarPartitionReader.filler(f.dataType)
-        (v, r, _, slot) => {
-          val x = if (i < r.size) r.get(i) else null
-          if (x == null) v.putNull(slot) else put(v, slot, x)
-        }
+        (v, r, _, slot) => if (i >= r.size || r.isNullAt(i)) v.putNull(slot) else put(v, slot, r, i)
     }
 
   private lazy val fillers = required.fields.map(fill)
@@ -1965,7 +1969,7 @@ private[bucketed] final class VectorizedColdScan(
     required.fields.zipWithIndex.map { case (f, i) =>
       val put = BucketedColumnarPartitionReader.filler(f.dataType)
       (v: OnHeapColumnVector, slot: Int, r: Row) =>
-        if (i >= r.size || r.isNullAt(i)) v.putNull(slot) else put(v, slot, r.get(i))
+        if (i >= r.size || r.isNullAt(i)) v.putNull(slot) else put(v, slot, r, i)
     }
 
   def nextBatch(): Boolean = {
@@ -2472,14 +2476,30 @@ object BucketedColumnarPartitionReader {
     case _ => false
   }
 
-  private[bucketed] def filler(t: DataType): (OnHeapColumnVector, Int, Any) => Unit = t match {
-    case LongType => (v, s, x) => v.putLong(s, x.asInstanceOf[Long])
-    case IntegerType => (v, s, x) => v.putInt(s, x.asInstanceOf[Int])
-    case ShortType => (v, s, x) => v.putShort(s, x.asInstanceOf[Short])
-    case ByteType => (v, s, x) => v.putByte(s, x.asInstanceOf[Byte])
-    case DoubleType => (v, s, x) => v.putDouble(s, x.asInstanceOf[Double])
-    case FloatType => (v, s, x) => v.putFloat(s, x.asInstanceOf[Float])
-    case BooleanType => (v, s, x) => v.putBoolean(s, x.asInstanceOf[Boolean])
+  /** Writes non-null cell `i` of a row into vector slot `slot`. */
+  private[bucketed] trait Put {
+    def apply(v: OnHeapColumnVector, slot: Int, r: Row, i: Int): Unit
+  }
+
+  /** The [[Put]] of a column type: primitive cells through the row's
+    * typed getters (no box per cell), the rest from `get`.
+    */
+  private[bucketed] def filler(t: DataType): Put = t match {
+    case LongType => (v, s, r, i) => v.putLong(s, r.getLong(i))
+    case IntegerType => (v, s, r, i) => v.putInt(s, r.getInt(i))
+    case ShortType => (v, s, r, i) => v.putShort(s, r.getShort(i))
+    case ByteType => (v, s, r, i) => v.putByte(s, r.getByte(i))
+    case DoubleType => (v, s, r, i) => v.putDouble(s, r.getDouble(i))
+    case FloatType => (v, s, r, i) => v.putFloat(s, r.getFloat(i))
+    case BooleanType => (v, s, r, i) => v.putBoolean(s, r.getBoolean(i))
+    case other =>
+      val put = boxedFiller(other)
+      (v, s, r, i) => put(v, s, r.get(i))
+  }
+
+  private trait PutValue { def apply(v: OnHeapColumnVector, slot: Int, x: Any): Unit }
+
+  private def boxedFiller(t: DataType): PutValue = t match {
     case StringType => (v, s, x) => {
       val b = x.asInstanceOf[String].getBytes(java.nio.charset.StandardCharsets.UTF_8)
       v.putByteArray(s, b, 0, b.length); ()
@@ -2537,7 +2557,10 @@ object BucketedColumnarPartitionReader {
   * Each leaf resolves its column index and its comparator once, when
   * the scan compiles its filters; a row then runs with no name lookup
   * and no allocation. Comparisons are the column type's
-  * [[KeyOrder.of]], the order the store sorts and prunes by.
+  * [[KeyOrder.of]], the order the store sorts and prunes by; a
+  * primitive column against a literal of its own class compares
+  * through the row's typed getter ([[KeyOrder.cellVs]]), boxing
+  * nothing.
   */
 object FilterEval {
   import org.apache.spark.sql.catalyst.util.DateTimeUtils
@@ -2550,6 +2573,9 @@ object FilterEval {
 
   /** A compiled three-valued predicate over one external row. */
   private trait Pred3 { def apply(r: Row): Int }
+
+  /** A non-null cell of a row as a long, read with no box. */
+  private trait LongCell { def apply(r: Row): Long }
 
   def supports(schema: StructType, f: Filter): Boolean = f match {
     case EqualTo(c, v) => comparable(schema, c, v)
@@ -2668,9 +2694,14 @@ object FilterEval {
   private def comparison(schema: StructType, c: String, v: Any, op: Int,
       nullSafe: Boolean): Pred3 = {
     val i = schema.fieldIndex(c)
-    val holds = valueTest(schema(i).dataType, v, op)
+    val dt = schema(i).dataType
     val onNull = if (nullSafe) False else Unknown
-    r => { val x = r.get(i); if (x == null) onNull else bool(holds(x)) }
+    KeyOrder.cellVs(dt, i, v) match {
+      case Some(sign) => r => if (r.isNullAt(i)) onNull else bool((signBit(sign(r)) & op) != 0)
+      case None =>
+        val holds = valueTest(dt, v, op)
+        r => { val x = r.get(i); if (x == null) onNull else bool(holds(x)) }
+    }
   }
 
   /** `x op v` for the non-null values `x` of a column of type `dt`. */
@@ -2697,14 +2728,24 @@ object FilterEval {
       case Some(probe) => probe
       case None if vs.isEmpty => _ => False
       case None =>
-        val tests = vs.map(valueTest(dt, _, Eq))
-        r => {
-          val x = r.get(i)
-          if (x == null) Unknown
-          else {
+        val signs = vs.map(KeyOrder.cellVs(dt, i, _))
+        if (signs.forall(_.isDefined)) {
+          val typed = signs.map(_.get)
+          r => if (r.isNullAt(i)) Unknown else {
             var k = 0
-            while (k < tests.length && !tests(k)(x)) k += 1
-            bool(k < tests.length)
+            while (k < typed.length && typed(k)(r) != 0) k += 1
+            bool(k < typed.length)
+          }
+        } else {
+          val tests = vs.map(valueTest(dt, _, Eq))
+          r => {
+            val x = r.get(i)
+            if (x == null) Unknown
+            else {
+              var k = 0
+              while (k < tests.length && !tests(k)(x)) k += 1
+              bool(k < tests.length)
+            }
           }
         }
     }
@@ -2730,7 +2771,7 @@ object FilterEval {
     * simply leaves the set).
     */
   private def inProbeExternal(dt: DataType, i: Int, vs: Array[Any]): Option[Pred3] = {
-    def longProbe(lit: Any => Option[Long], get: Row => Long): Option[Pred3] = {
+    def longProbe(lit: Any => Option[Long], get: LongCell): Option[Pred3] = {
       val conv = vs.map(lit)
       if (conv.contains(None)) None
       else {
@@ -2753,14 +2794,22 @@ object FilterEval {
       case x => x.asInstanceOf[Number].longValue
     }
     dt match {
-      case ByteType | ShortType | IntegerType | LongType =>
-        longProbe(integral, r => r.get(i).asInstanceOf[Number].longValue)
+      case LongType => longProbe(integral, _.getLong(i))
+      case IntegerType => longProbe(integral, _.getInt(i).toLong)
+      case ShortType => longProbe(integral, _.getShort(i).toLong)
+      case ByteType => longProbe(integral, _.getByte(i).toLong)
       // literal width must MATCH the column width (KeyOrder.internal has
       // no form for another width): the exact order can rate a Float
       // literal equal to a Double value the canonical bits would reject
       // (0.1f vs 0.1d) — the mixed-width pairing stays on the exact
       // per-literal path
-      case DoubleType | FloatType | DateType | TimestampType | TimestampNTZType =>
+      case DoubleType =>
+        longProbe(v => Option(KeyOrder.internal(dt, v)).map(key),
+          r => VectorFilterEval.canonicalBits(r.getDouble(i)))
+      case FloatType =>
+        longProbe(v => Option(KeyOrder.internal(dt, v)).map(key),
+          r => VectorFilterEval.canonicalBits(r.getFloat(i).toDouble))
+      case DateType | TimestampType | TimestampNTZType =>
         longProbe(v => Option(KeyOrder.internal(dt, v)).map(key),
           r => key(KeyOrder.internal(dt, r.get(i))))
       case dt: DecimalType if dt.precision <= Decimal.MAX_LONG_DIGITS =>

@@ -287,10 +287,13 @@ object BucketWriteCommit {
   * Doubles and floats travel as their raw bits, so a NaN keeps its
   * payload (the streams' own `writeDouble` canonicalizes it).
   *
-  * [[read]] shares values across the rows it decodes
-  * ([[ValueSharing]]): equal immutable values come back as ONE
-  * instance, so a decoded row's values may be held by other rows too.
-  * Stored values are never mutated, which is what makes that safe.
+  * [[read]] decodes each bucket column-major into one
+  * [[ColumnChunk]] and returns its rows as [[RowView]]s: primitive
+  * values land in typed arrays, and the other values are shared across
+  * the rows it decodes ([[ValueSharing]]), so a decoded row's values
+  * may be held by other rows too. Stored values are never mutated,
+  * which is what makes that safe. A view pins its chunk: the chunk
+  * lives while any view of it lives.
   */
 private[bucketed] object RowPayloadCodec {
   import org.apache.spark.sql.catalyst.util.DateTimeUtils
@@ -403,16 +406,14 @@ private[bucketed] object RowPayloadCodec {
     val share = new ValueSharing(types.length)
     Array.tabulate(n) { _ =>
       val count = in.int()
-      val rows = new Array[Row](count)
+      val chunk = new ColumnChunk.Builder(schema, count, share)
       var i = 0
       while (i < count) {
-        val vals = new Array[Any](types.length)
         var f = 0
-        while (f < types.length) { vals(f) = share(f, readValue(in, types(f))); f += 1 }
-        rows(i) = new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(vals, schema)
+        while (f < types.length) { readValue(in, types(f), chunk, f, i); f += 1 }
         i += 1
       }
-      rows
+      chunk.result()
     }
   }
 
@@ -451,29 +452,30 @@ private[bucketed] object RowPayloadCodec {
     }
   }
 
-  private def readValue(in: In, dt: DataType): Any = in.byte() match {
-    case Null => null
-    case Fallback => in.obj()
-    case _ => dt match {
-      case LongType => in.long()
-      case IntegerType => in.int()
-      case DoubleType => in.double()
-      case FloatType => in.float()
-      case BooleanType => in.byte() != 0
-      case ShortType => in.int().toShort
-      case ByteType => in.byte()
-      case StringType => in.string()
-      case TimestampType => DateTimeUtils.toJavaTimestamp(in.long())
-      case TimestampNTZType => DateTimeUtils.microsToLocalDateTime(in.long())
-      case DateType => DateTimeUtils.toJavaDate(in.int())
-      case _: DecimalType =>
-        val scale = in.int()
-        new java.math.BigDecimal(new java.math.BigInteger(in.bytes(in.int())), scale)
-      case BinaryType => in.bytes(in.int())
-      case other => throw new IllegalStateException(
-        s"fast marker for unencodable type $other — writer/reader version skew")
+  private def readValue(in: In, dt: DataType, out: ColumnChunk.Builder, c: Int, r: Int): Unit =
+    in.byte() match {
+      case Null => out.setNull(c, r)
+      case Fallback => out.set(c, r, in.obj())
+      case _ => dt match {
+        case LongType => out.setLong(c, r, in.long())
+        case IntegerType => out.setInt(c, r, in.int())
+        case DoubleType => out.setDouble(c, r, in.double())
+        case FloatType => out.setFloat(c, r, in.float())
+        case BooleanType => out.setBoolean(c, r, in.byte() != 0)
+        case ShortType => out.setShort(c, r, in.int().toShort)
+        case ByteType => out.setByte(c, r, in.byte())
+        case StringType => out.set(c, r, in.string())
+        case TimestampType => out.set(c, r, DateTimeUtils.toJavaTimestamp(in.long()))
+        case TimestampNTZType => out.set(c, r, DateTimeUtils.microsToLocalDateTime(in.long()))
+        case DateType => out.set(c, r, DateTimeUtils.toJavaDate(in.int()))
+        case _: DecimalType =>
+          val scale = in.int()
+          out.set(c, r, new java.math.BigDecimal(new java.math.BigInteger(in.bytes(in.int())), scale))
+        case BinaryType => out.set(c, r, in.bytes(in.int()))
+        case other => throw new IllegalStateException(
+          s"fast marker for unencodable type $other — writer/reader version skew")
+      }
     }
-  }
 }
 
 class BucketedDataWriter(schema: StructType, keyCol: String, numBuckets: Int,

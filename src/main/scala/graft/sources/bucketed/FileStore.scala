@@ -13,11 +13,11 @@ import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetWriteSupport}
 import org.apache.spark.sql.internal.{LegacyBehaviorPolicy, SQLConf}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, DoubleType, FloatType,
+  IntegerType, LongType, ShortType, StructType}
 
 /** The bucket store's FILE substrate: one immutable parquet file per
   * bucket per rewrite, one JSON manifest per MVCC version referencing
@@ -254,9 +254,12 @@ object FileStore {
   /** Read a block file back into rows, using the Spark schema the file
     * itself carries (footer metadata) — self-describing, so a file
     * written under an older (narrower) schema reads back in its stored
-    * short form and the fetch path pads, like heap always did. Equal
-    * immutable values come back as one instance across the block's
-    * rows ([[ValueSharing]]), as they do from the commit payload.
+    * short form and the fetch path pads, like heap always did. The
+    * block decodes column-major into one [[ColumnChunk]] (primitive
+    * columns straight from the parquet row's typed getters, equal
+    * immutable values of the other columns as one instance,
+    * [[ValueSharing]]), and its rows are views of that chunk: the chunk
+    * lives while any of them lives.
     */
   private[bucketed] def readBlock(f: BlockFile): Array[Row] = {
     if (f.rows == 0 || f.path.isEmpty) return Array.empty[Row]
@@ -275,24 +278,34 @@ object FileStore {
     val reader = ParquetReader.builder[InternalRow](support, hp).withConf(conf).build()
     val types = schema.fields.map(_.dataType)
     val toScala = types.map(CatalystTypeConverters.createToScalaConverter)
-    val share = new ValueSharing(types.length)
-    val out = new Array[Row](f.rows)
+    val out = new ColumnChunk.Builder(schema, f.rows, new ValueSharing(types.length))
     try {
       var i = 0
       var r = reader.read()
       while (r != null) {
-        require(i < out.length, s"block ${f.path} holds more rows than its manifest count ${f.rows}")
-        val vals = new Array[Any](types.length)
+        require(i < f.rows, s"block ${f.path} holds more rows than its manifest count ${f.rows}")
         var c = 0
-        while (c < types.length) { vals(c) = share(c, toScala(c)(r.get(c, types(c)))); c += 1 }
-        out(i) = new GenericRowWithSchema(vals, schema)
+        while (c < types.length) {
+          if (r.isNullAt(c)) out.setNull(c, i)
+          else types(c) match {
+            case LongType => out.setLong(c, i, r.getLong(c))
+            case IntegerType => out.setInt(c, i, r.getInt(c))
+            case DoubleType => out.setDouble(c, i, r.getDouble(c))
+            case FloatType => out.setFloat(c, i, r.getFloat(c))
+            case ShortType => out.setShort(c, i, r.getShort(c))
+            case ByteType => out.setByte(c, i, r.getByte(c))
+            case BooleanType => out.setBoolean(c, i, r.getBoolean(c))
+            case dt => out.set(c, i, toScala(c)(r.get(c, dt)))
+          }
+          c += 1
+        }
         i += 1
         r = reader.read()
       }
-      require(i == out.length, s"block ${f.path} holds $i rows, manifest says ${f.rows}")
+      require(i == f.rows, s"block ${f.path} holds $i rows, manifest says ${f.rows}")
     } finally reader.close()
     filesRead.incrementAndGet()
-    out
+    out.result()
   }
 
   /** Stream a block file as EXTERNAL rows projected to `wanted` —

@@ -196,6 +196,49 @@ object KeyOrder {
     Integer.compare(x.length - i, y.length - j)
   }
 
+  /** A compare of two rows' non-null cells of one column. */
+  trait Cells { def compare(a: Row, b: Row): Int }
+
+  /** The sign of one row's non-null cell against a fixed literal. */
+  trait CellSign { def apply(r: Row): Int }
+
+  /** [[of]]`(dt)` on the non-null cells `i` of two rows. The primitive
+    * types read through `Row`'s typed getters, which a [[RowView]]
+    * answers from its chunk's arrays with no box; every other type
+    * compares the values `get` returns.
+    */
+  def cells(dt: DataType, i: Int): Cells = dt match {
+    case LongType => (a, b) => java.lang.Long.compare(a.getLong(i), b.getLong(i))
+    case IntegerType => (a, b) => Integer.compare(a.getInt(i), b.getInt(i))
+    case ShortType => (a, b) => Integer.compare(a.getShort(i), b.getShort(i))
+    case ByteType => (a, b) => Integer.compare(a.getByte(i), b.getByte(i))
+    case DoubleType => (a, b) => compareDoubles(a.getDouble(i), b.getDouble(i))
+    case FloatType => (a, b) => compareDoubles(a.getFloat(i).toDouble, b.getFloat(i).toDouble)
+    case _ =>
+      val ord = of(dt)
+      (a, b) => ord.compare(a.get(i), b.get(i))
+  }
+
+  /** [[of]]`(dt)` of a row's non-null cell `i` against the literal `v`,
+    * through the cell's typed getter, for a primitive column and a
+    * literal of the column's own boxed class. None otherwise: a literal
+    * of another class (an Int on a LONG column, a decimal on a DOUBLE
+    * one) compares exactly through [[of]] on the boxed value.
+    */
+  def cellVs(dt: DataType, i: Int, v: Any): Option[CellSign] =
+    if (internal(dt, v) == null) None
+    else dt match {
+      case LongType => val l = v.asInstanceOf[Long]; Some(r => java.lang.Long.compare(r.getLong(i), l))
+      case IntegerType => val l = v.asInstanceOf[Int]; Some(r => Integer.compare(r.getInt(i), l))
+      case ShortType => val l = v.asInstanceOf[Short]; Some(r => Integer.compare(r.getShort(i), l))
+      case ByteType => val l = v.asInstanceOf[Byte]; Some(r => Integer.compare(r.getByte(i), l))
+      case DoubleType => val l = v.asInstanceOf[Double]; Some(r => compareDoubles(r.getDouble(i), l))
+      case FloatType =>
+        val l = v.asInstanceOf[Float].toDouble
+        Some(r => compareDoubles(r.getFloat(i).toDouble, l))
+      case _ => None
+    }
+
   /** The cluster order of rows over the columns at `idxs`:
     * lexicographic, ascending, nulls first.
     */
@@ -206,22 +249,23 @@ object KeyOrder {
     * column descending where `desc` says so and with its NULLs first
     * or last as `nullsFirst` says (independent of the direction, as in
     * SQL). A row shorter than an index reads that column as NULL.
+    * Non-null cells compare through [[cells]].
     */
   def rows(schema: StructType, idxs: Array[Int], desc: Array[Boolean],
       nullsFirst: Array[Boolean]): Ordering[Row] = {
-    val ords = idxs.map(i => of(schema(i).dataType))
+    val cs = idxs.map(i => cells(schema(i).dataType, i))
     new Ordering[Row] {
       def compare(a: Row, b: Row): Int = {
         var k = 0
         while (k < idxs.length) {
           val i = idxs(k)
-          val x = if (i < a.length) a.get(i) else null
-          val y = if (i < b.length) b.get(i) else null
+          val xNull = i >= a.length || a.isNullAt(i)
+          val yNull = i >= b.length || b.isNullAt(i)
           val c =
-            if (x == null) { if (y == null) 0 else if (nullsFirst(k)) -1 else 1 }
-            else if (y == null) { if (nullsFirst(k)) 1 else -1 }
-            else if (desc(k)) -ords(k).compare(x, y)
-            else ords(k).compare(x, y)
+            if (xNull) { if (yNull) 0 else if (nullsFirst(k)) -1 else 1 }
+            else if (yNull) { if (nullsFirst(k)) 1 else -1 }
+            else if (desc(k)) -cs(k).compare(a, b)
+            else cs(k).compare(a, b)
           if (c != 0) return c
           k += 1
         }

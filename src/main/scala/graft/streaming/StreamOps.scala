@@ -25,8 +25,9 @@ object StreamOps {
     * explicit, and the generator has shipped `ts` in two parquet
     * shapes — TIMESTAMP(NANOS) (readable only as nanos-long under the
     * legacy flag) and TIMESTAMP(MICROS)/NTZ — so the footer is probed
-    * with a batch read first and the declared schema + conversion
-    * follow it, normalizing to the same microsecond TimestampType as
+    * with a batch read first (once per file version, [[eventsTsType]])
+    * and the declared schema + conversion follow it, normalizing to
+    * the same microsecond TimestampType as
     * [[graft.tables.Tables.events]]. Probing with the WRONG declared
     * type would not error: parquet micros forced into a LongType
     * column yields raw micros, `div 1000` would shift every event to
@@ -34,7 +35,7 @@ object StreamOps {
     * or misplace rows.
     */
   def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    val tsType = graft.tables.Tables.load(spark, dir, "events").schema("ts").dataType
+    val tsType = eventsTsType(spark, dir)
     val schema = StructType(Seq(
       StructField("event_id", LongType),
       StructField("ts", tsType),
@@ -53,6 +54,30 @@ object StreamOps {
       case _ => raw
     }
   }
+
+  /** `ts`'s type in `dir`'s events file as the session's parquet reader
+    * infers it: probed with a batch read once per file version, keyed
+    * by the file's path, length and modification time and by the two
+    * session keys that decide the inference. A rewrite that changes
+    * the file's length or modification time (millisecond resolution)
+    * is probed again.
+    */
+  private def eventsTsType(spark: SparkSession, dir: String): DataType = {
+    val path = new org.apache.hadoop.fs.Path(graft.tables.Tables.path(dir, "events"))
+    val file = path.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(path)
+    val key = (file.getPath.toString, file.getLen, file.getModificationTime,
+      spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false"),
+      spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled", "true"))
+    tsTypes.computeIfAbsent(key, _ => {
+      tsProbes.incrementAndGet()
+      graft.tables.Tables.load(spark, dir, "events").schema("ts").dataType
+    })
+  }
+
+  private val tsTypes = new java.util.concurrent.ConcurrentHashMap[AnyRef, DataType]()
+
+  /** Batch reads [[eventsStream]] ran to learn `ts`'s type — spec hook. */
+  val tsProbes = new AtomicLong()
 
   private val sinkId = new AtomicLong()
 

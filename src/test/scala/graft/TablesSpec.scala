@@ -52,6 +52,36 @@ class TablesSpec extends SparkSuite {
     }
   }
 
+  test("eventsStream probes a file's ts type once, and again once the file is rewritten") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-events-probe")
+    val file = dir.resolve("events.parquet")
+    def put(shape: String): Unit = java.nio.file.Files.copy(
+      java.nio.file.Paths.get(fixture(shape), "events.parquet"), file,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    def hours(): Seq[String] = graft.streaming.StreamOps.runToMemory(
+        graft.streaming.StreamOps.eventsStream(spark, dir.toString)
+          .select(col("event_id"), col("ts")), "append")
+      .select(date_format(col("ts"), "yyyy-MM-dd HH:mm:ss"))
+      .collect().map(_.getString(0)).sorted.toSeq
+    try {
+      put("nanos")
+      val p0 = graft.streaming.StreamOps.tsProbes.get()
+      assert(hours() === expectedHours)
+      assert(hours() === expectedHours)
+      assert(graft.streaming.StreamOps.tsProbes.get() - p0 === 1,
+        "a second stream build over the same file must not probe again")
+      // the other shape in the same path: a stale TIMESTAMP(NANOS) answer
+      // would read its micros as nanos and shift every event to ~1970
+      put("micros")
+      assert(hours() === expectedHours)
+      assert(graft.streaming.StreamOps.tsProbes.get() - p0 === 2)
+    } finally {
+      val files = java.nio.file.Files.list(dir)
+      try files.forEach(f => java.nio.file.Files.delete(f)) finally files.close()
+      java.nio.file.Files.delete(dir)
+    }
+  }
+
   test("the two fixture shapes agree row-for-row after normalization") {
     val a = graft.tables.Tables.events(spark, fixture("nanos"))
       .withColumn("ts_us", unix_micros(col("ts"))).drop("ts")

@@ -462,6 +462,56 @@ object GraftProps extends Properties("graft") {
     }
   }
 
+  /** Each primitive type's edge values, present in every case: NaN (a
+    * non-canonical payload too), ±0.0, infinities, and the type's min
+    * and max.
+    */
+  private val primEdges: Seq[(SqlType, Seq[Any], Gen[Any])] = {
+    import org.apache.spark.sql.types._
+    val oddNaN = java.lang.Double.longBitsToDouble(0x7ff8000000000001L)
+    Seq(
+      (ByteType, Seq[Any](Byte.MinValue, Byte.MaxValue, 0.toByte),
+        Gen.choose(Byte.MinValue, Byte.MaxValue).map(b => b: Any)),
+      (ShortType, Seq[Any](Short.MinValue, Short.MaxValue, 0.toShort),
+        Gen.choose(Short.MinValue, Short.MaxValue).map(v => v: Any)),
+      (IntegerType, Seq[Any](Int.MinValue, Int.MaxValue, 0), Gen.choose(-5, 5).map(v => v: Any)),
+      (LongType, Seq[Any](Long.MinValue, Long.MaxValue, 0L), koLongs.map(v => v: Any)),
+      (FloatType, Seq[Any](Float.NaN, java.lang.Float.intBitsToFloat(0x7fc00001), 0.0f, -0.0f,
+        Float.MinValue, Float.MaxValue, Float.PositiveInfinity, Float.NegativeInfinity),
+        koDoubles.map(d => d.toFloat: Any)),
+      (DoubleType, Seq[Any](Double.NaN, oddNaN, 0.0, -0.0, Double.MinValue, Double.MaxValue,
+        Double.PositiveInfinity, Double.NegativeInfinity), koDoubles.map(d => d: Any)))
+  }
+
+  /** The typed compares `KeyOrder` exposes for the primitive types —
+    * [[graft.sources.bucketed.KeyOrder.cells]] between two rows and
+    * [[graft.sources.bucketed.KeyOrder.cellVs]] against a literal of the
+    * column's class — give `KeyOrder.of(dt)`'s answer on the boxed
+    * values, on plain rows and on the store's decoded views.
+    */
+  property("KeyOrder's typed cell compares equal KeyOrder.of on the boxed values") =
+    forAll(Gen.sequence[Seq[(SqlType, Seq[Any])], (SqlType, Seq[Any])](primEdges.map {
+      case (dt, edges, gv) => Gen.listOfN(8, gv).map(vs => (dt, edges ++ vs))
+    })) { cases =>
+      import graft.sources.bucketed.{DecodedRows, KeyOrder}
+      import org.apache.spark.sql.Row
+      import org.apache.spark.sql.types.{StructField, StructType}
+      cases.forall { case (dt, vs) =>
+        val ord = KeyOrder.of(dt)
+        val cells = KeyOrder.cells(dt, 0)
+        val schema = StructType(Seq(StructField("c", dt)))
+        val rows: Seq[Array[Row]] = Seq(vs.map(v => Row(v)).toArray,
+          DecodedRows.viaPayload(schema, vs.map(Seq(_))))
+        rows.forall { rs =>
+          vs.indices.forall(a => vs.indices.forall { b =>
+            val want = sign(ord.compare(vs(a), vs(b)))
+            sign(cells.compare(rs(a), rs(b))) == want &&
+              KeyOrder.cellVs(dt, 0, vs(b)).exists(s => sign(s(rs(a))) == want)
+          })
+        }
+      }
+    }
+
   // ——— clustered-bucket range slice (pure, no Spark) ———
 
   /** The sliceable column types: integral, floating point with its

@@ -133,7 +133,7 @@ object VectorFilterProps extends Properties("graft.vectorfilter") {
     rows.zipWithIndex.foreach { case (r, slot) =>
       schema.indices.foreach { c =>
         if (r.isNullAt(c)) vectors(c).putNull(slot)
-        else fillers(c)(vectors(c), slot, r.get(c))
+        else fillers(c)(vectors(c), slot, r, c)
       }
     }
     val b = new ColumnarBatch(vectors.map(_.asInstanceOf[ColumnVector]))

@@ -78,7 +78,7 @@ object ZBatchKeyProps extends Properties("graft.zbatchkey") {
     rows.zipWithIndex.foreach { case (r, slot) =>
       schema.indices.foreach { c =>
         if (r.isNullAt(c)) vectors(c).putNull(slot)
-        else fillers(c)(vectors(c), slot, r.get(c))
+        else fillers(c)(vectors(c), slot, r, c)
       }
     }
     val b = new ColumnarBatch(vectors.map(_.asInstanceOf[ColumnVector]))

@@ -128,16 +128,27 @@ class BlockCacheSpec extends SparkSuite {
     BucketStore.load(spark, distinct,
       (1 to 4000).map(i => (i.toLong, s"distinct-$i-${"y" * 20}", i * 1.5 + 0.1))
         .toDF("k", "s", "v"), "k", 4)
-    Seq(shared, distinct).foreach { name =>
+    // the loads' blocks come from the commit payload decoder; after
+    // evictTable, the same blocks reload through the block-file decoder
+    def check(decoder: String): Unit = Seq(shared, distinct).foreach { name =>
       val t = BucketStore.get(name)
       (0 until t.buckets.length).foreach { b =>
         val rows = t.buckets(b)
+        assert(rows.forall(_.isInstanceOf[RowView]), s"$name bucket $b ($decoder)")
         val est = BlockCache.heapSizeEstimate(rows).toDouble
         val real = org.apache.spark.util.SizeEstimator.estimate(rows).toDouble
         assert(est <= 2 * real && real <= 2 * est,
-          s"$name bucket $b: estimate $est B against SizeEstimator $real B")
+          s"$name bucket $b ($decoder): estimate $est B against SizeEstimator $real B")
       }
     }
+    check("payload")
+    Seq(shared, distinct).foreach { name =>
+      BucketStore.evictTable(name)
+      assert(BucketStore.get(name).buckets.loadedCount === 0)
+    }
+    val reads0 = FileStore.filesRead.get()
+    check("file")
+    assert(FileStore.filesRead.get() - reads0 === 8, "every block must reload from its file")
     Seq(shared, distinct).foreach(BucketStore.drop)
   }
 

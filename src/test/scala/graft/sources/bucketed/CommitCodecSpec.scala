@@ -76,7 +76,7 @@ class CommitCodecSpec extends AnyFunSuite {
           case (a, b) => assert(a === b, s"field $f")
         }
       }
-      assert(g.asInstanceOf[GenericRowWithSchema].schema === schema)
+      assert(g.schema === schema)
     }
   }
 
