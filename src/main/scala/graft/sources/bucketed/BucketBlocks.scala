@@ -11,7 +11,7 @@ import org.apache.spark.sql.Row
   * bounded heap instead of accreting the whole table. Blocks are
   * charged at an ESTIMATED HEAP size (round 17): a 64-row sample of
   * the loaded array, with the row shells and unshared values
-  * extrapolated and the values the decoders share across rows charged
+  * extrapolated and the values the chunk fill shares across rows charged
   * once ([[heapSizeEstimate]]) — so the budget bounds what it claims
   * to bound. File-size charging under-protected exactly when
   * compression was best (a heap-relative default charged in snappy'd
@@ -89,7 +89,7 @@ object BlockCache {
     * [[RowView]] is charged as its shell plus its row's share of its
     * chunk's column arrays; only the values of its object columns are
     * sampled (reading a primitive cell would box a fresh object). The
-    * decoders share equal immutable values across rows
+    * chunk fill shares equal immutable values across rows
     * ([[ValueSharing]]), so a value INSTANCE that recurs within the
     * sample is charged once; the row shells and the instances seen once
     * are extrapolated to the array's length. Deterministic, so a
@@ -172,13 +172,15 @@ object BlockCache {
   }
 }
 
-/** Decode-scoped value sharing. The store's two row decoders
-  * ([[RowPayloadCodec.read]] and [[FileStore.readBlock]]) pass every
-  * decoded value of an object column through one of these, column by
-  * column, so equal values of an immutable type become ONE instance
-  * across the rows of that decode. Five distinct flag strings or ~2.5k
+/** Fill-scoped value sharing. The store's one chunk fill
+  * ([[ColumnChunk.Builder.fill]]) passes every value of an object column
+  * through one of these, column by column, so equal values of an
+  * immutable type become ONE instance across the rows it fills: every
+  * bucket of one write task ([[BucketStaging]]; the serializer keeps
+  * the sharing across the wire), or one block file
+  * ([[FileStore.readBlock]]). Five distinct flag strings or ~2.5k
   * ship dates then cost one object each, not one per row. (Primitive
-  * columns hold no objects: they decode into a [[ColumnChunk]]'s typed
+  * columns hold no objects: they fill a [[ColumnChunk]]'s typed
   * arrays.)
   *
   * Shared: `String`, `LocalDateTime`, `LocalDate`, `Instant` and
@@ -186,8 +188,8 @@ object BlockCache {
   * mutable `java.sql.Timestamp`, `java.sql.Date` and `Array[Byte]`
   * values, nested values and boxed numbers are never shared. A column
   * whose dictionary passes [[ValueSharing.MaxEntries]] stops sharing for
-  * the rest of the decode, so high-cardinality keys pay only a short
-  * probe. Nothing outlives the decode: no global state, no lock.
+  * the rest of the fill, so high-cardinality keys pay only a short
+  * probe. Nothing outlives the fill: no global state, no lock.
   */
 private[bucketed] final class ValueSharing(arity: Int) {
   private val dicts = Array.fill(arity)(new java.util.HashMap[AnyRef, AnyRef]())
@@ -238,13 +240,13 @@ private[bucketed] object ValueSharing {
   *     in: the driver holds file REFERENCES, never the table.
   *
   * A decoded block's rows are [[RowView]]s of one [[ColumnChunk]]
-  * (the payload decoder makes one chunk per bucket, [[FileStore.readBlock]]
+  * (a write task makes one chunk per bucket, [[FileStore.readBlock]]
   * one per file). A view pins its chunk: the chunk lives while any
   * view of it lives, so a block that a commit built from some rows of
   * an older block keeps that block's whole chunk reachable even after
   * the older block is evicted or dropped. Values of object columns may
-  * be shared with other rows, of this block and of others decoded from
-  * the same payload ([[ValueSharing]]). Stored rows and their values
+  * be shared with other rows, of this block and of others filled by
+  * the same write task ([[ValueSharing]]). Stored rows and their values
   * are never mutated; a commit builds new rows.
   */
 final class BucketBlock private (

@@ -129,6 +129,14 @@ object BucketStore {
     */
   final case class BucketMor(deleted: java.util.BitSet, delta: Array[Row]) {
     def liveCount(baseLen: Int): Int = baseLen + delta.length - deleted.cardinality()
+
+    /** The live delta rows in delta order, NULL-padded to `arity` (a
+      * delta row written before an ADD COLUMN is short). Delta row `j`
+      * is deleted when bit `baseLen + j` is set, the positions
+      * [[BucketStore.folded]] gives it.
+      */
+    def liveDelta(baseLen: Int, arity: Int): Iterator[Row] =
+      delta.indices.iterator.filter(j => !deleted.get(baseLen + j)).map(j => pad(delta(j), arity))
   }
 
   /** A folded (read-time materialized) bucket: `rows` are the live
@@ -375,7 +383,6 @@ object BucketStore {
         refreshFromDisk(name): Unit
         throw e
       case scala.util.control.NonFatal(e) =>
-        if (sys.props.contains("graft.debug.spill")) e.printStackTrace()
         heapOnly.add(name)
         System.err.println(s"[graft-buckets] file backing disabled for '$name': " +
           s"${e.getClass.getSimpleName}: ${e.getMessage} — table is heap-only from here")

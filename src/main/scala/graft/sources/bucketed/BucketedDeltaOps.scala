@@ -95,7 +95,7 @@ class BucketedDeltaWrite(name: String, schema: StructType, keyCol: String, numBu
           var b = 0
           while (b < numBuckets) {
             dels(b) ++= m.deletes(b)
-            ins(b) ++= m.inserts(b)
+            ins(b) ++= m.inserts(b).rows
             b += 1
           }
         case other => throw new IllegalStateException(s"unexpected commit message $other")
@@ -121,57 +121,12 @@ class BucketedDeltaWriterFactory(schema: StructType, keyCol: String, numBuckets:
     new BucketedDeltaWriter(schema, keyCol, numBuckets, rangeBounds, hrw)
 }
 
-/** Typed-codec serialization for the same reason as
-  * [[BucketWriteCommit]]: the staged insert rows dominate the message,
-  * and the generic serializers pay per-value class tags and reflection
-  * for them — see [[RowPayloadCodec]].
+/** Commit message of one delta task: the deleted positions and one
+  * [[ColumnChunk]] of new images per bucket, plain serializable data
+  * like [[BucketWriteCommit]].
   */
-final case class BucketDeltaCommit(var deletes: Array[Array[Int]], var inserts: Array[Array[Row]])
-  extends WriterCommitMessage with java.io.Externalizable
-  with com.esotericsoftware.kryo.KryoSerializable {
-
-  def this() = this(null, null) // Externalizable/Kryo instantiation hook
-
-  private def writeDeletes(out: RowPayloadCodec.Out): Unit = {
-    out.int(deletes.length)
-    deletes.foreach { d =>
-      out.int(d.length)
-      var i = 0
-      while (i < d.length) { out.int(d(i)); i += 1 }
-    }
-  }
-
-  private def readDeletes(in: RowPayloadCodec.In): Array[Array[Int]] =
-    Array.tabulate(in.int()) { _ =>
-      val n = in.int()
-      val a = new Array[Int](n)
-      var i = 0
-      while (i < n) { a(i) = in.int(); i += 1 }
-      a
-    }
-
-  override def writeExternal(o: java.io.ObjectOutput): Unit = {
-    val out = new RowPayloadCodec.JavaOut(o)
-    writeDeletes(out); RowPayloadCodec.write(inserts, out)
-  }
-
-  override def readExternal(i: java.io.ObjectInput): Unit = {
-    val in = new RowPayloadCodec.JavaIn(i)
-    deletes = readDeletes(in); inserts = RowPayloadCodec.read(in)
-  }
-
-  override def write(kryo: com.esotericsoftware.kryo.Kryo,
-      o: com.esotericsoftware.kryo.io.Output): Unit = {
-    val out = new RowPayloadCodec.KryoOut(kryo, o)
-    writeDeletes(out); RowPayloadCodec.write(inserts, out)
-  }
-
-  override def read(kryo: com.esotericsoftware.kryo.Kryo,
-      i: com.esotericsoftware.kryo.io.Input): Unit = {
-    val in = new RowPayloadCodec.KryoIn(kryo, i)
-    deletes = readDeletes(in); inserts = RowPayloadCodec.read(in)
-  }
-}
+final class BucketDeltaCommit(private[bucketed] val deletes: Array[Array[Int]],
+    private[bucketed] val inserts: Array[ColumnChunk]) extends WriterCommitMessage
 
 /** Stages typed deltas per bucket. Row ids arrive as the projection of
   * the [[BucketedDeltaOperation.rowId]] attributes IN DECLARED ORDER:
@@ -182,26 +137,8 @@ final case class BucketDeltaCommit(var deletes: Array[Array[Int]], var inserts: 
 class BucketedDeltaWriter(schema: StructType, keyCol: String, numBuckets: Int,
     rangeBounds: Option[Array[Any]], hrw: Boolean = false) extends DeltaWriter[InternalRow] {
 
-  private val fieldConverters = schema.fields.map(f =>
-    org.apache.spark.sql.catalyst.CatalystTypeConverters.createToScalaConverter(f.dataType))
-  private val keyIdx = schema.fieldIndex(keyCol)
-  private val keyType = schema(keyIdx).dataType
   private val dels = Array.fill(numBuckets)(Vector.newBuilder[Int])
-  private val ins = Array.fill(numBuckets)(Vector.newBuilder[Row])
-
-  private def toRow(record: InternalRow): Row = {
-    require(record.numFields == schema.length,
-      s"delta writer got ${record.numFields} fields for ${schema.length}-column schema")
-    val vals = new Array[Any](schema.length)
-    var i = 0
-    while (i < schema.length) {
-      vals(i) =
-        if (record.isNullAt(i)) null
-        else fieldConverters(i)(record.get(i, schema(i).dataType))
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(vals, schema)
-  }
+  private val ins = new BucketStaging(schema, keyCol, numBuckets, rangeBounds, hrw)
 
   private def recordDelete(id: InternalRow): Unit = {
     val b = id.getInt(0)
@@ -217,13 +154,13 @@ class BucketedDeltaWriter(schema: StructType, keyCol: String, numBuckets: Int,
   }
 
   override def insert(row: InternalRow): Unit = {
-    val r = toRow(row)
-    ins(BucketStore.routeBucket(rangeBounds, keyType, numBuckets, hrw = hrw, v =
-      if (r.isNullAt(keyIdx)) null else r.get(keyIdx))) += r
+    require(row.numFields == schema.length,
+      s"delta writer got ${row.numFields} fields for ${schema.length}-column schema")
+    ins.add(row, 0)
   }
 
   override def commit(): WriterCommitMessage =
-    BucketDeltaCommit(dels.map(_.result().toArray), ins.map(_.result().toArray))
+    new BucketDeltaCommit(dels.map(_.result().toArray), ins.chunks())
 
   override def abort(): Unit = ()
   override def close(): Unit = ()

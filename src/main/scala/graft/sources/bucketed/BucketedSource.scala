@@ -1131,20 +1131,11 @@ class BucketedAggPartitionReader(p: BucketInputPartition, spec: AggSpec,
           .distinct.toSet
         val proj = org.apache.spark.sql.types.StructType(
           fullSchema.fields.filter(fd => names.contains(fd.name)))
-        // LIVE delta rows projected to the same shape: the deletion
-        // bitmap covers delta positions too (a delta row deleted by a
-        // later MoR delete sits at bit baseLen + j — same arithmetic
-        // as [[BucketStore.folded]]); pre-ALTER short delta rows
-        // NULL-pad, the standing fetch-path contract
+        // LIVE delta rows projected to the same shape
         def deltaRows(baseLen: Int): Iterator[Row] = morState match {
           case Some(m) if m.delta.nonEmpty =>
-            val idx = proj.fieldNames.map(fullSchema.fieldIndex)
-            m.delta.indices.iterator
-              .filter(j => !m.deleted.get(baseLen + j))
-              .map { j =>
-                val dr = m.delta(j)
-                Row.fromSeq(idx.toIndexedSeq.map(i => if (i < dr.length) dr.get(i) else null))
-              }
+            val idx = proj.fieldNames.map(fullSchema.fieldIndex).toIndexedSeq
+            m.liveDelta(baseLen, fullSchema.length).map(r => Row.fromSeq(idx.map(r.get)))
           case _ => Iterator.empty
         }
         blk.file.filter(_.path.nonEmpty) match {
@@ -1162,16 +1153,8 @@ class BucketedAggPartitionReader(p: BucketInputPartition, spec: AggSpec,
             // appends projected + pre-filtered.
             locally {
               val overlay = morState.map { m =>
-                val live = m.delta.indices.iterator
-                  .filter(j => !m.deleted.get(blk.rowCount + j))
-                  .map { j =>
-                    val dr = m.delta(j)
-                    if (dr.size >= fullSchema.length) dr
-                    else Row.fromSeq((0 until fullSchema.length).map(i =>
-                      if (i < dr.size) dr.get(i) else null))
-                  }
-                  .filter(FilterEval.compile(fullSchema, filters))
-                (m.deleted, live)
+                (m.deleted, m.liveDelta(blk.rowCount, fullSchema.length)
+                  .filter(FilterEval.compile(fullSchema, filters)))
               }
               VectorizedColdScan.open(f.path, fullSchema, proj, filters, 4096,
                 overlay = overlay) match {
@@ -1808,30 +1791,19 @@ class BucketedColumnarPartitionReader(p: BucketInputPartition, required: StructT
       // the rank-normalized Morton key — base keys computed straight
       // off the vectors ([[VectorizedColdScan.zBatchKey]]), delta
       // keys by the store's own zKeyOf, byte-parity spec-pinned.
-      def liveDelta(m: BucketStore.BucketMor): Boolean =
-        m.delta.indices.exists(j => !m.deleted.get(blk.rowCount + j))
       val lexCols = BucketStore.lexClusterColsOf(t.clusterCol)
       val zCols: Option[Seq[String]] =
         if (BucketStore.isZOrder(t.clusterCol)) t.clusterCol.flatMap(ZOrder.colsOf)
         else None
       if (blk.isLoaded) None
       else blk.file.filter(f => f.path.nonEmpty && f.rows > 0).flatMap { f =>
+        // pre-ALTER short delta rows NULL-pad to full arity so the scan
+        // filters see every referenced column
         val overlay = morState.map { m =>
-          val full = t.schema
-          val live = m.delta.indices.iterator
-            .filter(j => !m.deleted.get(blk.rowCount + j))
-            .map { j =>
-              val dr = m.delta(j)
-              if (dr.size >= full.length) dr
-              // pre-ALTER short delta rows NULL-pad to full arity so
-              // the scan filters see every referenced column
-              else Row.fromSeq((0 until full.length).map(i =>
-                if (i < dr.size) dr.get(i) else null))
-            }
-            .filter(FilterEval.compile(full, filters))
-          (m.deleted, live)
+          (m.deleted, m.liveDelta(blk.rowCount, t.schema.length)
+            .filter(FilterEval.compile(t.schema, filters)))
         }
-        val merging = morState.exists(liveDelta)
+        val merging = morState.exists(_.liveDelta(blk.rowCount, t.schema.length).hasNext)
         val mergeCols = if (lexCols.nonEmpty && merging) lexCols else Seq.empty[String]
         val zMerge = zCols.filter(_ => merging)
           .map(cs => (cs, t.zBounds, BucketStore.zKeyOf(t), t.zKeyVersion))
@@ -2227,12 +2199,8 @@ private[bucketed] object VectorizedColdScan {
     // output vectors)
     if ((filters.nonEmpty && filterFn == null) ||
       ((filters.nonEmpty || limit.nonEmpty || overlay.nonEmpty) &&
-        !required.fields.forall(f => copierSupported(f.dataType)))) {
-      if (sys.props.contains("graft.debug.vector"))
-        System.err.println(s"[graft-vector] ineligible: compile=${filterFn != null} " +
-          s"filters=${filters.mkString(",")} required=${required.fieldNames.mkString(",")}")
+        !required.fields.forall(f => copierSupported(f.dataType))))
       return None
-    }
     // sorted-merge machinery: the cluster order between a base row's
     // vectors and a delta row. A key column without a vector compare
     // falls back to the fold path before a reader is opened.
@@ -2319,8 +2287,7 @@ private[bucketed] object VectorizedColdScan {
       // predicate/physical-type pairing: the row path serves it with
       // the standing NULL-pad fetch — but never leak the half-open
       // reader's input stream
-      case scala.util.control.NonFatal(e) =>
-        if (sys.props.contains("graft.debug.vector")) e.printStackTrace()
+      case scala.util.control.NonFatal(_) =>
         if (r != null) {
           try r.close() catch { case scala.util.control.NonFatal(_) => () }
         }

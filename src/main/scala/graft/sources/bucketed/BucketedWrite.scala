@@ -1,7 +1,8 @@
 package graft.sources.bucketed
 
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, SortOrder}
 import org.apache.spark.sql.connector.write._
@@ -228,254 +229,67 @@ class BucketedStreamingWriterFactory(schema: StructType, keyCol: String, numBuck
     new BucketedDataWriter(schema, keyCol, numBuckets, rangeBounds, tableName, checkExpr, hrw)
 }
 
-/** Commit message staging each task's per-bucket rows. Serialization
-  * is CUSTOM (both the Kryo session serializer and plain Java):
-  * generic object graphs pay per-value class tags, reference tracking
-  * and boxed-field reflection — measured 2.4 s to serialize one
-  * 600k-row load's staged rows. The payload codec below writes the
-  * schema json ONCE per message and then raw typed values (guide §2.3
-  * "shuffle fewer bytes" applied to the task-result hop), with a
-  * per-value fallback marker so any value representation the fast
-  * path doesn't recognize (array/map/struct columns, java-8 time
-  * types) still round-trips through the generic serializer.
+/** Commit message of one write task: one [[ColumnChunk]] per bucket,
+  * built on the executor by the task's [[BucketStaging]]. It is plain
+  * serializable data, so the session's serializer writes it on the
+  * task-result hop: Kryo in every `GraftSession`, Java serialization
+  * elsewhere. Both keep the values the executor shared as one instance
+  * ([[ValueSharing]]) shared, since both track references. Java
+  * serialization folds a NaN's payload bits to the canonical NaN; Kryo
+  * keeps them.
   */
-final case class BucketWriteCommit(var rowsByBucket: Array[Array[Row]])
-  extends WriterCommitMessage with java.io.Externalizable
-  with com.esotericsoftware.kryo.KryoSerializable {
-
-  def this() = this(null) // Externalizable/Kryo instantiation hook
-
-  override def writeExternal(out: java.io.ObjectOutput): Unit =
-    RowPayloadCodec.write(rowsByBucket, new RowPayloadCodec.JavaOut(out))
-
-  override def readExternal(in: java.io.ObjectInput): Unit =
-    rowsByBucket = RowPayloadCodec.read(new RowPayloadCodec.JavaIn(in))
-
-  override def write(kryo: com.esotericsoftware.kryo.Kryo,
-      output: com.esotericsoftware.kryo.io.Output): Unit =
-    RowPayloadCodec.write(rowsByBucket, new RowPayloadCodec.KryoOut(kryo, output))
-
-  override def read(kryo: com.esotericsoftware.kryo.Kryo,
-      input: com.esotericsoftware.kryo.io.Input): Unit =
-    rowsByBucket = RowPayloadCodec.read(new RowPayloadCodec.KryoIn(kryo, input))
-}
+final class BucketWriteCommit(private[bucketed] val chunks: Array[ColumnChunk])
+  extends WriterCommitMessage
 
 object BucketWriteCommit {
   /** Merge the tasks' staged per-bucket rows — the one commit-side
     * merge shared by the batch, streaming, and replace-groups writes.
+    * The rows are [[RowView]]s of the tasks' chunks.
     */
   def merge(messages: Array[WriterCommitMessage], numBuckets: Int): Array[Array[Row]] = {
     val merged = Array.fill(numBuckets)(Vector.newBuilder[Row])
     messages.foreach {
       case m: BucketWriteCommit =>
         var b = 0
-        while (b < numBuckets) { merged(b) ++= m.rowsByBucket(b); b += 1 }
+        while (b < numBuckets) { merged(b) ++= m.chunks(b).rows; b += 1 }
       case other => throw new IllegalStateException(s"unexpected commit message $other")
     }
     merged.map(_.result().toArray)
   }
 }
 
-/** Typed row-payload codec shared by the Java and Kryo serialization
-  * hooks of [[BucketWriteCommit]]. Format:
-  * `numBuckets | hasSchema | schema.json | (count | rows...)*` with one
-  * marker byte per value: 0 = null, 1 = fast typed encoding for the
-  * field's declared type, 2 = generic object fallback. The fast set is
-  * exactly the external-Row representations
-  * [[BucketedDataWriter.toRow]]'s converters produce; anything else
-  * (array/map/struct columns, java-8 time objects) takes marker 2.
-  * Doubles and floats travel as their raw bits, so a NaN keeps its
-  * payload (the streams' own `writeDouble` canonicalizes it).
-  *
-  * [[read]] decodes each bucket column-major into one
-  * [[ColumnChunk]] and returns its rows as [[RowView]]s: primitive
-  * values land in typed arrays, and the other values are shared across
-  * the rows it decodes ([[ValueSharing]]), so a decoded row's values
-  * may be held by other rows too. Stored values are never mutated,
-  * which is what makes that safe. A view pins its chunk: the chunk
-  * lives while any view of it lives.
+/** A write task's rows, staged per bucket: each record is routed by its
+  * key cell alone ([[BucketStore.routeBucket]]) and kept as a copy
+  * (Spark reuses the InternalRow buffer between calls). [[chunks]]
+  * builds one [[ColumnChunk]] per bucket at commit, with one
+  * [[ValueSharing]] for the whole task. `offset` = 1 marks a record
+  * that carries one extra leading field before the table's columns.
   */
-private[bucketed] object RowPayloadCodec {
-  import org.apache.spark.sql.catalyst.util.DateTimeUtils
-  import org.apache.spark.sql.types._
+private[bucketed] final class BucketStaging(schema: StructType, keyCol: String,
+    numBuckets: Int, rangeBounds: Option[Array[Any]], hrw: Boolean) {
+  private val keyIdx = schema.fieldIndex(keyCol)
+  private val keyType = schema(keyIdx).dataType
+  private val keyToScala = CatalystTypeConverters.createToScalaConverter(keyType)
+  private val staged = Array.fill(numBuckets)(new scala.collection.mutable.ArrayBuffer[InternalRow])
 
-  sealed trait Out {
-    def byte(b: Int): Unit; def int(i: Int): Unit; def long(l: Long): Unit
-    def double(d: Double): Unit; def float(f: Float): Unit
-    def bytes(a: Array[Byte]): Unit; def string(s: String): Unit
-    def obj(o: AnyRef): Unit
-  }
-  sealed trait In {
-    def byte(): Byte; def int(): Int; def long(): Long
-    def double(): Double; def float(): Float
-    def bytes(n: Int): Array[Byte]; def string(): String
-    def obj(): AnyRef
+  def add(record: InternalRow, offset: Int): Unit = {
+    val k = keyIdx + offset
+    val key = if (record.isNullAt(k)) null else keyToScala(record.get(k, keyType))
+    staged(BucketStore.routeBucket(rangeBounds, keyType, numBuckets, key, hrw)) += record.copy()
   }
 
-  final class JavaOut(o: java.io.ObjectOutput) extends Out {
-    def byte(b: Int): Unit = o.writeByte(b)
-    def int(i: Int): Unit = o.writeInt(i)
-    def long(l: Long): Unit = o.writeLong(l)
-    def double(d: Double): Unit = o.writeLong(java.lang.Double.doubleToRawLongBits(d))
-    def float(f: Float): Unit = o.writeInt(java.lang.Float.floatToRawIntBits(f))
-    def bytes(a: Array[Byte]): Unit = { o.writeInt(a.length); o.write(a) }
-    def string(s: String): Unit = bytes(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    def obj(x: AnyRef): Unit = o.writeObject(x)
-  }
-  final class JavaIn(i: java.io.ObjectInput) extends In {
-    def byte(): Byte = i.readByte()
-    def int(): Int = i.readInt()
-    def long(): Long = i.readLong()
-    def double(): Double = java.lang.Double.longBitsToDouble(i.readLong())
-    def float(): Float = java.lang.Float.intBitsToFloat(i.readInt())
-    def bytes(n: Int): Array[Byte] = { val a = new Array[Byte](n); i.readFully(a); a }
-    def string(): String = new String(bytes(int()), java.nio.charset.StandardCharsets.UTF_8)
-    def obj(): AnyRef = i.readObject()
-  }
-  final class KryoOut(k: com.esotericsoftware.kryo.Kryo,
-      o: com.esotericsoftware.kryo.io.Output) extends Out {
-    def byte(b: Int): Unit = o.writeByte(b)
-    def int(i: Int): Unit = o.writeInt(i)
-    def long(l: Long): Unit = o.writeLong(l)
-    def double(d: Double): Unit = o.writeLong(java.lang.Double.doubleToRawLongBits(d))
-    def float(f: Float): Unit = o.writeInt(java.lang.Float.floatToRawIntBits(f))
-    def bytes(a: Array[Byte]): Unit = { o.writeInt(a.length); o.writeBytes(a) }
-    def string(s: String): Unit = o.writeString(s)
-    def obj(x: AnyRef): Unit = k.writeClassAndObject(o, x)
-  }
-  final class KryoIn(k: com.esotericsoftware.kryo.Kryo,
-      i: com.esotericsoftware.kryo.io.Input) extends In {
-    def byte(): Byte = i.readByte()
-    def int(): Int = i.readInt()
-    def long(): Long = i.readLong()
-    def double(): Double = java.lang.Double.longBitsToDouble(i.readLong())
-    def float(): Float = java.lang.Float.intBitsToFloat(i.readInt())
-    def bytes(n: Int): Array[Byte] = i.readBytes(n)
-    def string(): String = i.readString()
-    def obj(): AnyRef = k.readClassAndObject(i)
-  }
-
-  private val Null: Byte = 0
-  private val Fast: Byte = 1
-  private val Fallback: Byte = 2
-
-  // one parse per distinct schema json per JVM (16 task messages per
-  // commit share it), and one shared StructType instance so every
-  // reconstructed row points at the same schema object
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[String, StructType]()
-
-  def write(rowsByBucket: Array[Array[Row]], out: Out): Unit = {
-    if (rowsByBucket == null) { out.int(-1); return }
-    out.int(rowsByBucket.length)
-    val firstRow = rowsByBucket.iterator.flatMap(_.headOption).nextOption()
-    firstRow match {
-      case None => // no rows anywhere: counts only (all zero, keeps shape)
-        out.byte(0)
-        rowsByBucket.foreach(b => out.int(b.length))
-      case Some(r0) =>
-        out.byte(1)
-        val schema = r0.schema
-        require(schema != null, "staged rows must carry a schema")
-        out.string(schema.json)
-        val types = schema.fields.map(_.dataType)
-        rowsByBucket.foreach { bucket =>
-          out.int(bucket.length)
-          var i = 0
-          while (i < bucket.length) {
-            val row = bucket(i)
-            var f = 0
-            while (f < types.length) {
-              writeValue(out, types(f), if (row.isNullAt(f)) null else row.get(f))
-              f += 1
-            }
-            i += 1
-          }
-        }
-    }
-  }
-
-  def read(in: In): Array[Array[Row]] = {
-    val n = in.int()
-    if (n < 0) return null
-    val hasSchema = in.byte()
-    if (hasSchema == 0) return Array.tabulate(n)(_ => { in.int(); Array.empty[Row] })
-    val json = in.string()
-    val schema = schemaCache.computeIfAbsent(json,
-      j => DataType.fromJson(j).asInstanceOf[StructType])
-    val types = schema.fields.map(_.dataType)
-    val share = new ValueSharing(types.length)
-    Array.tabulate(n) { _ =>
-      val count = in.int()
-      val chunk = new ColumnChunk.Builder(schema, count, share)
+  def chunks(): Array[ColumnChunk] = {
+    val share = new ValueSharing(schema.length)
+    staged.map { rows =>
+      val out = new ColumnChunk.Builder(schema, rows.length, share)
       var i = 0
-      while (i < count) {
-        var f = 0
-        while (f < types.length) { readValue(in, types(f), chunk, f, i); f += 1 }
+      while (i < rows.length) {
+        out.fill(i, rows(i), rows(i).numFields - schema.length)
         i += 1
       }
-      chunk.result()
+      out.result()
     }
   }
-
-  private def writeValue(out: Out, dt: DataType, v: Any): Unit = {
-    if (v == null) { out.byte(Null); return }
-    dt match {
-      case LongType if v.isInstanceOf[Long] =>
-        out.byte(Fast); out.long(v.asInstanceOf[Long])
-      case IntegerType if v.isInstanceOf[Int] =>
-        out.byte(Fast); out.int(v.asInstanceOf[Int])
-      case DoubleType if v.isInstanceOf[Double] =>
-        out.byte(Fast); out.double(v.asInstanceOf[Double])
-      case FloatType if v.isInstanceOf[Float] =>
-        out.byte(Fast); out.float(v.asInstanceOf[Float])
-      case BooleanType if v.isInstanceOf[Boolean] =>
-        out.byte(Fast); out.byte(if (v.asInstanceOf[Boolean]) 1 else 0)
-      case ShortType if v.isInstanceOf[Short] =>
-        out.byte(Fast); out.int(v.asInstanceOf[Short].toInt)
-      case ByteType if v.isInstanceOf[Byte] =>
-        out.byte(Fast); out.byte(v.asInstanceOf[Byte].toInt)
-      case StringType if v.isInstanceOf[String] =>
-        out.byte(Fast); out.string(v.asInstanceOf[String])
-      case TimestampType if v.isInstanceOf[java.sql.Timestamp] =>
-        out.byte(Fast); out.long(DateTimeUtils.fromJavaTimestamp(v.asInstanceOf[java.sql.Timestamp]))
-      case TimestampNTZType if v.isInstanceOf[java.time.LocalDateTime] =>
-        out.byte(Fast); out.long(DateTimeUtils.localDateTimeToMicros(v.asInstanceOf[java.time.LocalDateTime]))
-      case DateType if v.isInstanceOf[java.sql.Date] =>
-        out.byte(Fast); out.int(DateTimeUtils.fromJavaDate(v.asInstanceOf[java.sql.Date]))
-      case _: DecimalType if v.isInstanceOf[java.math.BigDecimal] =>
-        val d = v.asInstanceOf[java.math.BigDecimal]
-        out.byte(Fast); out.int(d.scale); out.bytes(d.unscaledValue().toByteArray)
-      case BinaryType if v.isInstanceOf[Array[Byte]] =>
-        out.byte(Fast); out.bytes(v.asInstanceOf[Array[Byte]])
-      case _ =>
-        out.byte(Fallback); out.obj(v.asInstanceOf[AnyRef])
-    }
-  }
-
-  private def readValue(in: In, dt: DataType, out: ColumnChunk.Builder, c: Int, r: Int): Unit =
-    in.byte() match {
-      case Null => out.setNull(c, r)
-      case Fallback => out.set(c, r, in.obj())
-      case _ => dt match {
-        case LongType => out.setLong(c, r, in.long())
-        case IntegerType => out.setInt(c, r, in.int())
-        case DoubleType => out.setDouble(c, r, in.double())
-        case FloatType => out.setFloat(c, r, in.float())
-        case BooleanType => out.setBoolean(c, r, in.byte() != 0)
-        case ShortType => out.setShort(c, r, in.int().toShort)
-        case ByteType => out.setByte(c, r, in.byte())
-        case StringType => out.set(c, r, in.string())
-        case TimestampType => out.set(c, r, DateTimeUtils.toJavaTimestamp(in.long()))
-        case TimestampNTZType => out.set(c, r, DateTimeUtils.microsToLocalDateTime(in.long()))
-        case DateType => out.set(c, r, DateTimeUtils.toJavaDate(in.int()))
-        case _: DecimalType =>
-          val scale = in.int()
-          out.set(c, r, new java.math.BigDecimal(new java.math.BigInteger(in.bytes(in.int())), scale))
-        case BinaryType => out.set(c, r, in.bytes(in.int()))
-        case other => throw new IllegalStateException(
-          s"fast marker for unencodable type $other — writer/reader version skew")
-      }
-    }
 }
 
 class BucketedDataWriter(schema: StructType, keyCol: String, numBuckets: Int,
@@ -483,56 +297,43 @@ class BucketedDataWriter(schema: StructType, keyCol: String, numBuckets: Int,
     tableName: String = "", checkExpr: Option[String] = None, hrw: Boolean = false)
   extends DataWriter[InternalRow] {
 
-  private val fieldConverters = schema.fields.map(f =>
-    org.apache.spark.sql.catalyst.CatalystTypeConverters.createToScalaConverter(f.dataType))
-  private val keyIdx = schema.fieldIndex(keyCol)
-  private val keyType = schema(keyIdx).dataType
-  private val buf = Array.fill(numBuckets)(Vector.newBuilder[Row])
-  // CHECK constraint, compiled task-side from the string (expressions
-  // never serialize; the parser and registry are executor-local)
-  private val check: Option[Row => Boolean] =
-    checkExpr.map(e => CheckConstraint.compile(schema, e))
+  private val staging = new BucketStaging(schema, keyCol, numBuckets, rangeBounds, hrw)
+  // CHECK constraint, bound task-side from the string (expressions
+  // never serialize; the parser and registry are executor-local), at
+  // both field offsets a record can carry
+  private val check: Array[Expression] = checkExpr.map { e =>
+    val bound = CheckConstraint.bind(schema, e)
+    Array(bound, bound.transform { case r: BoundReference => r.copy(ordinal = r.ordinal + 1) })
+  }.orNull
 
-  /** Values are extracted eagerly (Spark reuses the InternalRow buffer
-    * between calls). `offset` = 1 strips the `__row_operation` prefix
-    * group-based row-level rewrites carry: Spark's plain writing task
-    * hands that column through when the operation declares no metadata
-    * attributes (the declared `LogicalWriteInfo.schema()` stays the
-    * table schema), so the writer detects it structurally — exactly
-    * one extra leading field.
+  /** `offset` = 1 strips the `__row_operation` prefix group-based
+    * row-level rewrites carry: Spark's plain writing task hands that
+    * column through when the operation declares no metadata attributes
+    * (the declared `LogicalWriteInfo.schema()` stays the table schema),
+    * so the writer detects it structurally — exactly one extra leading
+    * field.
     */
-  private def toRow(record: InternalRow, offset: Int): Row = {
-    val vals = new Array[Any](schema.length)
-    var i = 0
-    while (i < schema.length) {
-      vals(i) =
-        if (record.isNullAt(i + offset)) null
-        else fieldConverters(i)(record.get(i + offset, schema(i).dataType))
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema(vals, schema)
-  }
-
   override def write(record: InternalRow): Unit = {
     val offset =
       if (record.numFields == schema.length + 1) 1
       else if (record.numFields == schema.length) 0
       else throw new IllegalStateException(
         s"writer got ${record.numFields} fields for ${schema.length}-column schema")
-    val row = toRow(record, offset)
     // task-side CHECK enforcement: the violating TASK fails before
     // anything stages, and two-phase commit guarantees the whole
-    // violating batch publishes NOTHING
-    check.foreach { pass =>
-      if (!pass(row))
-        throw new IllegalArgumentException(
-          s"CHECK constraint violation on '$tableName': (${checkExpr.get}) is false for row " +
-            row.toString.take(200))
+    // violating batch publishes NOTHING. NULL passes, as in SQL.
+    if (check != null && check(offset).eval(record) == false) {
+      val row = Row.fromSeq(schema.fields.indices.map(i =>
+        CatalystTypeConverters.convertToScala(
+          record.get(i + offset, schema(i).dataType), schema(i).dataType)))
+      throw new IllegalArgumentException(
+        s"CHECK constraint violation on '$tableName': (${checkExpr.get}) is false for row " +
+          row.toString.take(200))
     }
-    buf(BucketStore.routeBucket(rangeBounds, keyType, numBuckets, row.get(keyIdx), hrw)) += row
+    staging.add(record, offset)
   }
 
-  override def commit(): WriterCommitMessage = BucketWriteCommit(buf.map(_.result().toArray))
+  override def commit(): WriterCommitMessage = new BucketWriteCommit(staging.chunks())
   override def abort(): Unit = ()
   override def close(): Unit = ()
 }

@@ -21,10 +21,12 @@ import org.apache.spark.sql.types.{BooleanType, StructType}
   * Compilation is self-contained (no SparkSession): the expression
   * string parses through [[CatalystSqlParser]], attributes bind by
   * name against the table schema, function calls resolve against the
-  * builtin registry, and evaluation is the bound expression over the
-  * Catalyst-converted row. The STRING travels to executors and
-  * compiles once per writer task — expressions never serialize, and a
-  * task needs nothing from the driver but the schema it already has.
+  * builtin registry, and evaluation is the bound expression over a
+  * Catalyst row: the record itself in a writer task
+  * ([[BucketedDataWriter]]), the converted row in [[validate]]. The
+  * STRING travels to executors and binds once per writer task —
+  * expressions never serialize, and a task needs nothing from the
+  * driver but the schema it already has.
   */
 object CheckConstraint {
 

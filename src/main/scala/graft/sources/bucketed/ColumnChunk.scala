@@ -1,32 +1,37 @@
 package graft.sources.bucketed
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.GenericRowWithSchema
 import org.apache.spark.sql.types._
 
-/** One decoded bucket segment, held column-major: a `long[]`, `int[]`,
+/** One bucket segment, held column-major: a `long[]`, `int[]`,
   * `double[]`, `float[]`, `short[]`, `byte[]` or `boolean[]` per
   * primitive column (plus a null bit mask once the column meets a
   * NULL), and an `Object[]` of [[ValueSharing]]-shared values for every
-  * other column. The store's two row decoders ([[RowPayloadCodec.read]]
-  * and [[FileStore.readBlock]]) write one chunk per decoded bucket and
-  * hand out its rows as [[RowView]]s, so a primitive value is 8 bytes
-  * or fewer in an array, not a 16-24 byte box behind a reference.
+  * other column. One fill, [[ColumnChunk.Builder.fill]], makes every
+  * chunk from Catalyst rows: the writers' per-bucket commit payloads
+  * ([[BucketedDataWriter]], [[BucketedDeltaWriter]]) and the block-file
+  * reader ([[FileStore.readBlock]]). A chunk's rows are handed out as
+  * [[RowView]]s, so a primitive value is 8 bytes or fewer in an array,
+  * not a 16-24 byte box behind a reference.
   *
   * A chunk is immutable once built. It lives while any view of it
   * lives: a commit that keeps some rows of a block keeps their views,
-  * and with them the whole chunk they index.
+  * and with them the whole chunk they index. It is plain serializable
+  * data, so a writer's chunk travels to the driver as it is.
   */
 private[bucketed] final class ColumnChunk private (
     val schema: StructType,
     private[bucketed] val cols: Array[ColumnChunk.Col],
-    val numRows: Int) {
+    val numRows: Int) extends Serializable {
 
   /** Heap bytes per row of the column arrays and null masks: what each
     * of its views pins beyond its own shell.
     */
   private[bucketed] val bytesPerRow: Double = cols.map(_.bytesPerRow).sum
 
+  /** The chunk's rows, one [[RowView]] each. */
   private[bucketed] def rows: Array[Row] = {
     val out = new Array[Row](numRows)
     var i = 0
@@ -42,7 +47,7 @@ private[bucketed] object ColumnChunk {
     * primitive column overrides its own getter with an array read.
     * NULL cells are the caller's to check ([[RowView]] does).
     */
-  sealed abstract class Col {
+  sealed abstract class Col extends Serializable {
     def isNull(r: Int): Boolean
     def get(r: Int): Any
     def bytesPerRow: Double
@@ -90,22 +95,23 @@ private[bucketed] object ColumnChunk {
     override def getBoolean(r: Int): Boolean = v(r)
   }
 
-  /** Values held as objects: every non-primitive column, and a primitive
-    * column that met a value of another class than its own.
-    */
+  /** Values held as objects: every non-primitive column. */
   final class Refs(private[bucketed] val v: Array[AnyRef]) extends Col {
     def isNull(r: Int): Boolean = v(r) == null
     def get(r: Int): Any = v(r)
     def bytesPerRow: Double = 8.0
   }
 
-  /** Fills a chunk of `n` rows cell by cell, in any order, each cell
-    * once. A primitive column takes its own boxed class unboxed; a value
-    * of any other class widens that column to boxed values for the rest
-    * of the chunk, so every decoded value comes back exactly as written.
+  /** Fills a chunk of `n` rows from Catalyst rows, one row per [[fill]]
+    * call, in any order. A primitive column reads the row's typed getter
+    * into its array; every other column goes through its Scala converter
+    * and `share`, so equal immutable values become one instance across
+    * every chunk built with the same `share`.
     */
   final class Builder(schema: StructType, n: Int, share: ValueSharing) {
-    private val slots: Array[AnyRef] = schema.fields.map(f => f.dataType match {
+    private val types = schema.fields.map(_.dataType)
+    private val toScala = types.map(CatalystTypeConverters.createToScalaConverter)
+    private val slots: Array[AnyRef] = types.map {
       case LongType => new Array[Long](n)
       case IntegerType => new Array[Int](n)
       case DoubleType => new Array[Double](n)
@@ -114,63 +120,34 @@ private[bucketed] object ColumnChunk {
       case ByteType => new Array[Byte](n)
       case BooleanType => new Array[Boolean](n)
       case _ => new Array[AnyRef](n)
-    })
+    }
     private val masks = new Array[Array[Long]](slots.length)
 
-    def setNull(c: Int, r: Int): Unit = slots(c) match {
-      case a: Array[AnyRef] => a(r) = null
-      case _ =>
-        if (masks(c) == null) masks(c) = new Array[Long]((n + 63) >>> 6)
-        masks(c)(r >>> 6) |= 1L << r
-    }
-
-    def setLong(c: Int, r: Int, x: Long): Unit = slots(c) match {
-      case a: Array[Long] => a(r) = x
-      case _ => set(c, r, x)
-    }
-    def setInt(c: Int, r: Int, x: Int): Unit = slots(c) match {
-      case a: Array[Int] => a(r) = x
-      case _ => set(c, r, x)
-    }
-    def setDouble(c: Int, r: Int, x: Double): Unit = slots(c) match {
-      case a: Array[Double] => a(r) = x
-      case _ => set(c, r, x)
-    }
-    def setFloat(c: Int, r: Int, x: Float): Unit = slots(c) match {
-      case a: Array[Float] => a(r) = x
-      case _ => set(c, r, x)
-    }
-    def setShort(c: Int, r: Int, x: Short): Unit = slots(c) match {
-      case a: Array[Short] => a(r) = x
-      case _ => set(c, r, x)
-    }
-    def setByte(c: Int, r: Int, x: Byte): Unit = slots(c) match {
-      case a: Array[Byte] => a(r) = x
-      case _ => set(c, r, x)
-    }
-    def setBoolean(c: Int, r: Int, x: Boolean): Unit = slots(c) match {
-      case a: Array[Boolean] => a(r) = x
-      case _ => set(c, r, x)
-    }
-
-    /** A value of any class (null included). */
-    def set(c: Int, r: Int, v: Any): Unit =
-      if (v == null) setNull(c, r)
-      else slots(c) match {
-        case a: Array[AnyRef] => a(r) = share(c, v).asInstanceOf[AnyRef]
-        case a: Array[Long] if v.isInstanceOf[java.lang.Long] => a(r) = v.asInstanceOf[Long]
-        case a: Array[Int] if v.isInstanceOf[java.lang.Integer] => a(r) = v.asInstanceOf[Int]
-        case a: Array[Double] if v.isInstanceOf[java.lang.Double] => a(r) = v.asInstanceOf[Double]
-        case a: Array[Float] if v.isInstanceOf[java.lang.Float] => a(r) = v.asInstanceOf[Float]
-        case a: Array[Short] if v.isInstanceOf[java.lang.Short] => a(r) = v.asInstanceOf[Short]
-        case a: Array[Byte] if v.isInstanceOf[java.lang.Byte] => a(r) = v.asInstanceOf[Byte]
-        case a: Array[Boolean] if v.isInstanceOf[java.lang.Boolean] => a(r) = v.asInstanceOf[Boolean]
-        case _ =>
-          val col = column(c)
-          slots(c) = Array.tabulate[AnyRef](n)(i => col.get(i).asInstanceOf[AnyRef])
-          masks(c) = null
-          set(c, r, v)
+    /** Row `r` of the chunk: fields `offset ..` of `row`, one per column. */
+    def fill(r: Int, row: InternalRow, offset: Int = 0): Unit = {
+      var c = 0
+      while (c < slots.length) {
+        val f = c + offset
+        if (row.isNullAt(f)) slots(c) match {
+          case _: Array[AnyRef] => // already null
+          case _ =>
+            if (masks(c) == null) masks(c) = new Array[Long]((n + 63) >>> 6)
+            masks(c)(r >>> 6) |= 1L << r
+        }
+        else slots(c) match {
+          case a: Array[Long] => a(r) = row.getLong(f)
+          case a: Array[Int] => a(r) = row.getInt(f)
+          case a: Array[Double] => a(r) = row.getDouble(f)
+          case a: Array[Float] => a(r) = row.getFloat(f)
+          case a: Array[Short] => a(r) = row.getShort(f)
+          case a: Array[Byte] => a(r) = row.getByte(f)
+          case a: Array[Boolean] => a(r) = row.getBoolean(f)
+          case a: Array[AnyRef] =>
+            a(r) = share(c, toScala(c)(row.get(f, types(c)))).asInstanceOf[AnyRef]
+        }
+        c += 1
       }
+    }
 
     private def column(c: Int): Col = slots(c) match {
       case a: Array[Long] => new Longs(a, masks(c))
@@ -183,10 +160,7 @@ private[bucketed] object ColumnChunk {
       case a: Array[AnyRef] => new Refs(a)
     }
 
-    /** The chunk's rows, one [[RowView]] each. */
-    def result(): Array[Row] =
-      if (n == 0) Array.empty[Row]
-      else new ColumnChunk(schema, Array.tabulate(slots.length)(column), n).rows
+    def result(): ColumnChunk = new ColumnChunk(schema, Array.tabulate(slots.length)(column), n)
   }
 }
 

@@ -16,7 +16,7 @@ import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, ParquetWriteSupport}
 import org.apache.spark.sql.internal.{LegacyBehaviorPolicy, SQLConf}
-import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, DoubleType, FloatType,
+import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType,
   IntegerType, LongType, ShortType, StructType}
 
 /** The bucket store's FILE substrate: one immutable parquet file per
@@ -255,16 +255,14 @@ object FileStore {
     * itself carries (footer metadata) — self-describing, so a file
     * written under an older (narrower) schema reads back in its stored
     * short form and the fetch path pads, like heap always did. The
-    * block decodes column-major into one [[ColumnChunk]] (primitive
-    * columns straight from the parquet row's typed getters, equal
-    * immutable values of the other columns as one instance,
-    * [[ValueSharing]]), and its rows are views of that chunk: the chunk
-    * lives while any of them lives.
+    * block decodes into one [[ColumnChunk]] through the writers' own
+    * fill ([[ColumnChunk.Builder.fill]]: primitive columns from the
+    * parquet row's typed getters, equal immutable values of the other
+    * columns as one instance, [[ValueSharing]]), and its rows are views
+    * of that chunk: the chunk lives while any of them lives.
     */
   private[bucketed] def readBlock(f: BlockFile): Array[Row] = {
     if (f.rows == 0 || f.path.isEmpty) return Array.empty[Row]
-    if (sys.props.contains("graft.debug.read"))
-      new Exception(s"readBlock ${f.path}").printStackTrace()
     requirePresent(f)
     val hp = new HPath(f.path)
     val footer = ParquetFileReader.open(HadoopInputFile.fromPath(hp, new Configuration()))
@@ -276,36 +274,20 @@ object FileStore {
     val support = new ParquetReadSupport(None, enableVectorizedReader = false,
       corrected, corrected)
     val reader = ParquetReader.builder[InternalRow](support, hp).withConf(conf).build()
-    val types = schema.fields.map(_.dataType)
-    val toScala = types.map(CatalystTypeConverters.createToScalaConverter)
-    val out = new ColumnChunk.Builder(schema, f.rows, new ValueSharing(types.length))
+    val out = new ColumnChunk.Builder(schema, f.rows, new ValueSharing(schema.length))
     try {
       var i = 0
       var r = reader.read()
       while (r != null) {
         require(i < f.rows, s"block ${f.path} holds more rows than its manifest count ${f.rows}")
-        var c = 0
-        while (c < types.length) {
-          if (r.isNullAt(c)) out.setNull(c, i)
-          else types(c) match {
-            case LongType => out.setLong(c, i, r.getLong(c))
-            case IntegerType => out.setInt(c, i, r.getInt(c))
-            case DoubleType => out.setDouble(c, i, r.getDouble(c))
-            case FloatType => out.setFloat(c, i, r.getFloat(c))
-            case ShortType => out.setShort(c, i, r.getShort(c))
-            case ByteType => out.setByte(c, i, r.getByte(c))
-            case BooleanType => out.setBoolean(c, i, r.getBoolean(c))
-            case dt => out.set(c, i, toScala(c)(r.get(c, dt)))
-          }
-          c += 1
-        }
+        out.fill(i, r)
         i += 1
         r = reader.read()
       }
       require(i == f.rows, s"block ${f.path} holds $i rows, manifest says ${f.rows}")
     } finally reader.close()
     filesRead.incrementAndGet()
-    out.result()
+    out.result().rows
   }
 
   /** Stream a block file as EXTERNAL rows projected to `wanted` —

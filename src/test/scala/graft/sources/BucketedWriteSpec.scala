@@ -101,8 +101,10 @@ class BucketedWriteSpec extends SparkSuite {
     spark.sql("DROP TABLE IF EXISTS graft.`w_epoch`")
     BucketStore.createEmpty("w_epoch", schema, "k", 2)
     val sw = new BucketedStreamingWrite("w_epoch", schema, truncate = false, "k", 2)
-    val msg = BucketWriteCommit(Array(
-      Array(org.apache.spark.sql.Row(0L, "a")), Array.empty[org.apache.spark.sql.Row]))
+    val writer = new BucketedDataWriter(schema, "k", 2)
+    writer.write(org.apache.spark.sql.catalyst.InternalRow(
+      0L, org.apache.spark.unsafe.types.UTF8String.fromString("a")))
+    val msg = writer.commit()
     sw.commit(7L, Array(msg))
     sw.commit(7L, Array(msg)) // replayed epoch
     assert(BucketStore.get("w_epoch").buckets.map(_.length).sum === 1,

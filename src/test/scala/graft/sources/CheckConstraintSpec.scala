@@ -96,6 +96,51 @@ class CheckConstraintSpec extends SparkSuite {
     BucketStore.drop(name)
   }
 
+  test("the writer evaluates the check on the Catalyst row it holds, plain and offset records") {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.sources.bucketed.{BucketWriteCommit, BucketedDataWriter}
+    def plain(k: Long, v: java.lang.Double, s: String): InternalRow =
+      InternalRow(k, v, UTF8String.fromString(s))
+    // a group-based row-level rewrite's record: `__row_operation` first
+    def offset(k: Long, v: java.lang.Double, s: String): InternalRow =
+      new GenericInternalRow(Array[Any](1, k, v, UTF8String.fromString(s)))
+    Seq[(String, (Long, java.lang.Double, String) => InternalRow)](
+      "plain" -> plain, "offset" -> offset).foreach { case (name, rec) =>
+      val w = new BucketedDataWriter(schema, "k", 2, tableName = "chk_w",
+        checkExpr = Some("v > 0"))
+      val e = intercept[IllegalArgumentException](w.write(rec(7L, -9.0, "x")))
+      assert(e.getMessage ===
+        "CHECK constraint violation on 'chk_w': (v > 0) is false for row [7,-9.0,x]", name)
+      w.write(rec(8L, null, "n")) // NULL passes
+      w.write(rec(9L, 2.0, "ok"))
+      val staged = BucketWriteCommit.merge(Array(w.commit()), 2).flatten
+        .map(r => (r.getLong(0), Option(r.get(1)), r.getString(2))).toSet
+      assert(staged === Set((8L, None, "n"), (9L, Some(2.0), "ok")), name)
+    }
+  }
+
+  test("a copy-on-write UPDATE that violates the check fails with the row; NULL passes") {
+    val name = "chk_cow"
+    BucketStore.drop(name)
+    BucketStore.load(spark, name,
+      Seq((1L, Option(5.0)), (2L, Option(7.0))).toDF("k", "v"), "k", numBuckets = 2)
+    BucketStore.setCheck(name, "v > 0")
+    val e = intercept[Throwable] {
+      spark.sql(s"UPDATE graft.`$name` SET v = -1.0 WHERE k = 2")
+    }
+    val msgs = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(m => Option(m.getMessage).getOrElse("")).mkString(" | ")
+    assert(msgs.contains(
+      s"CHECK constraint violation on '$name': (v > 0) is false for row [2,-1.0]"),
+      s"wrong failure: $msgs")
+    spark.sql(s"UPDATE graft.`$name` SET v = NULL WHERE k = 2")
+    assert(spark.table(s"graft.`$name`").collect().map(r => (r.getLong(0), Option(r.get(1))))
+      .toSet === Set((1L, Some(5.0)), (2L, None)))
+    BucketStore.drop(name)
+  }
+
   test("ADD CONSTRAINT on a COLD table streams only the expression's columns — zero faults") {
     import graft.sources.bucketed.FileStore
     val name = "chk_cold"

@@ -8,9 +8,9 @@ import org.apache.spark.sql.types._
 
 import graft.SparkSuite
 
-/** The store's row decoders share equal immutable values across the
-  * rows of one decode ([[ValueSharing]]): the commit payload codec
-  * ([[RowPayloadCodec.read]]) and the block-file reader
+/** The store's chunk fill shares equal immutable values across the
+  * rows it builds ([[ValueSharing]]): in a write task, whose sharing the
+  * serializer carries to the driver, and in the block-file reader
   * ([[FileStore.readBlock]]). Sharing must never change a value
   * (signed zeros, NaN payloads and decimal scales come back exact),
   * must never hand out a mutable value twice, and must stop per column
@@ -77,14 +77,26 @@ class ValueSharingSpec extends SparkSuite {
       Seq.fill(schema.length)(null))
     val back = decode(schema, rows)
     assert(back.length === rows.length)
+    // the write path holds a decimal at its column's scale, as Spark
+    // does: 1.0 written to a DECIMAL(12, 2) column comes back as 1.00
+    def atColumnScale(v: Seq[Any]): Seq[Any] =
+      v.updated(11, Option(v(11)).map(_.asInstanceOf[BigDecimal].setScale(2)).orNull)
     back.zip(rows).zipWithIndex.foreach { case ((got, want), i) =>
-      assert(got.toSeq.map(bits) === want.map(bits), s"row $i")
+      assert(got.toSeq.map(bits) === atColumnScale(want).map(bits), s"row $i")
       assert(got.schema === schema)
     }
-    // equal under compareTo, never folded: 1.0 and 1.00 keep their scales
-    assert(back.map(_.getDecimal(11)).take(4).map(_.scale).toSeq === Seq(1, 2, 1, 2))
+    assert(back.map(_.getDecimal(11)).take(4).map(_.scale).toSeq === Seq(2, 2, 2, 2))
     // Double.equals folds NaN payloads: a shared NaN would show here
     assert(ref(back(3), 2) ne ref(back(4), 2))
+  }
+
+  test("decimals equal under compareTo are never folded: 1.0 and 1.00 keep their scales") {
+    val share = new ValueSharing(1)
+    def shared(d: String): BigDecimal = share(0, new BigDecimal(d)).asInstanceOf[BigDecimal]
+    val (one, oneOO) = (shared("1.0"), shared("1.00"))
+    assert(one.scale === 1 && oneOO.scale === 2)
+    assert(shared("1.0") eq one)
+    assert(shared("1.00") eq oneOO)
   }
 
   test("low-cardinality strings and TIMESTAMP_NTZ values come back as one instance each") {
