@@ -103,24 +103,14 @@ object BucketedQueries {
     """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
       |FROM lineitem WHERE l_returnflag = 'R' AND l_quantity >= 30.0""".stripMargin
 
-  /** q198 — the hot relational pushdown scan (q27's shape) through the
-    * COLUMNAR read path: `columnar=true` makes the connector hand Spark
-    * `ColumnarBatch`es (one allocation-free vector fill per page)
-    * instead of per-row `InternalRow`s; every projected column is a
-    * fixed-width numeric so the whole scan stays vectorized end to end.
-    * Same pushed filter, same projection, same oracle as q27 — the gate
-    * pins that the batch path and the row path cannot diverge, and the
-    * plan (asserted in PlanAuditSpec) shows the `ColumnarToRow` bridge
-    * that proves batches actually flowed.
+  /** q198 — q27's hot pushdown scan, kept as the gate of the batch
+    * read: each page of kept rows reaches Spark as a `ColumnarBatch`
+    * view ([[RowColumnVector]]s over the stored rows). The plan audit
+    * (PlanAuditSpec) pins the `ColumnarToRow` bridge that proves
+    * batches actually flowed.
     */
-  def columnarPushdownQuery(spark: SparkSession, dir: String): DataFrame = {
-    BucketStore.ensureLoaded(spark, s"lineitem@$dir", dir, "lineitem", "l_orderkey", NumBuckets)
-    spark.read.format("graft-buckets").option("table", s"lineitem@$dir")
-      .option("columnar", "true").load()
-      .filter(col("l_returnflag") === "R" && col("l_quantity") >= 30.0)
-      .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
-        col("l_extendedprice"))
-  }
+  def columnarPushdownQuery(spark: SparkSession, dir: String): DataFrame =
+    pushdownQuery(spark, dir)
 
   /** Pushed-aggregate scan: COUNT/MIN/MAX with a GROUP BY evaluated
     * inside the per-bucket reader ([[BucketedAggPartitionReader]]) —

@@ -94,20 +94,23 @@ class BucketedRowLevelOperation(name: String, cmd: RowLevelOperation.Command)
         // epoch rides to commit so a rebucket/repartition_range landing
         // mid-rewrite fails loudly instead of mis-routing the rewrite
         new BucketedReplaceGroupsWrite(name, t.schema, t.keyCol, t.buckets.length,
-          BucketedRowLevelOperation.this, t.rangeBounds, t.layoutEpoch)
+          BucketedRowLevelOperation.this, t.rangeBounds, t.layoutEpoch,
+          BucketStore.checkOf(name), t.hrw)
       }
     }
 
   override def description(): String = s"graft-buckets:$name $cmd (copy-on-write per bucket)"
 }
 
-/** The replacement write: same bucket-clustered distribution and
-  * staged two-phase commit as the normal write path, but commit swaps
-  * exactly the scanned groups.
+/** The replacement write: the normal write path's routing (hash,
+  * range or HRW), staged two-phase commit and task-side CHECK, but
+  * commit swaps exactly the scanned groups. The bucket-clustered
+  * distribution is a locality hint; the writer routes every row.
   */
 class BucketedReplaceGroupsWrite(name: String, schema: StructType, keyCol: String,
     numBuckets: Int, op: BucketedRowLevelOperation,
-    rangeBounds: Option[Array[Any]], layoutEpoch: Long)
+    rangeBounds: Option[Array[Any]], layoutEpoch: Long, checkExpr: Option[String],
+    hrw: Boolean)
   extends Write with RequiresDistributionAndOrdering {
 
   override def requiredDistribution(): Distribution =
@@ -117,7 +120,7 @@ class BucketedReplaceGroupsWrite(name: String, schema: StructType, keyCol: Strin
 
   override def toBatch: BatchWrite = new BatchWrite {
     override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-      new BucketedWriterFactory(schema, keyCol, numBuckets, rangeBounds)
+      new BucketedWriterFactory(schema, keyCol, numBuckets, rangeBounds, name, checkExpr, hrw)
 
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
       // a rewrite whose scan never planned (pure-insert MERGE) read no

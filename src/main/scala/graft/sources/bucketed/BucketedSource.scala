@@ -70,8 +70,14 @@ import scala.jdk.CollectionConverters._
   *     deltas whose commit version lands in (changesStart,
   *     changesEnd] (stream offset semantics; changesStart 0 = from
   *     the beginning of retained history, changesEnd defaults to
-  *     current).
+  *     current);
+  *   - `timestampasof`: time travel by commit time (micros since the
+  *     epoch), resolved to a pinned version when the table is opened;
+  *   - `upsert`, `txnappid`, `txnversion`: write-side only (keyed
+  *     upsert and idempotent replay, see [[BucketedWriteBuilder]]).
   *
+  * No option picks the read path: a scan reads `ColumnarBatch`es
+  * whenever its projected types allow ([[BucketedReaderFactory]]).
   * Unknown options are REJECTED with the full vocabulary in the
   * message: a typo like `fetchSize=10.5` or `fechsize` must fail the
   * query, not silently run with defaults.
@@ -79,17 +85,11 @@ import scala.jdk.CollectionConverters._
 final case class ConnectorOptions(table: String, fetchSize: Int, numPartitions: Option[Int],
     versionAsOf: Option[Long] = None, cdc: Boolean = false,
     changesStart: Option[Long] = None, changesEnd: Option[Long] = None,
-    upsert: Boolean = false, timestampAsOf: Option[Long] = None,
-    // columnar is the DEFAULT on every surface: the option parse
-    // (getOrElse(true)) AND this case-class default, which is what the
-    // CATALOG path (`spark.table("graft.x")`, SQL, DML scans) builds
-    // from via Defaults.copy — before round 16 the two disagreed and
-    // catalog reads silently took the row path
-    columnar: Boolean = true)
+    upsert: Boolean = false, timestampAsOf: Option[Long] = None)
 
 object ConnectorOptions {
   val Known: Set[String] = Set("table", "fetchsize", "numpartitions", "versionasof", "mode",
-    "changesstart", "changesend", "upsert", "timestampasof", "columnar",
+    "changesstart", "changesend", "upsert", "timestampasof",
     // write-side idempotence (read paths ignore them): see
     // BucketedWriteBuilder.txn
     "txnappid", "txnversion")
@@ -178,19 +178,8 @@ object ConnectorOptions {
       "graft-buckets: 'timestampasof' cannot combine with 'versionasof' or mode=cdc")
     require(!(upsert && timestampAsOf.isDefined),
       "graft-buckets: 'upsert' is a write option and cannot combine with 'timestampasof'")
-    // default ON (round 11): measured no-worse-to-faster locally (q26
-    // shape: ~0.93x, filter-scan: ~0.88x vs the row path at sf0.1) and
-    // types without a vector filler fall back per-scan automatically
-    val columnar = Option(ci.get("columnar")).map { raw =>
-      raw.toLowerCase(java.util.Locale.ROOT) match {
-        case "true" => true
-        case "false" => false
-        case other => throw new IllegalArgumentException(
-          s"graft-buckets: option 'columnar' must be true or false, got '$other'")
-      }
-    }.getOrElse(true)
     ConnectorOptions(table, posInt("fetchsize", Some(1000)).get, posInt("numpartitions", None),
-      versionAsOf, cdc, changesStart, changesEnd, upsert, timestampAsOf, columnar)
+      versionAsOf, cdc, changesStart, changesEnd, upsert, timestampAsOf)
   }
 }
 
@@ -544,7 +533,7 @@ class BucketedScanBuilder(name: String, opts: ConnectorOptions = ConnectorOption
       case None =>
         new BucketedScan(name, required, pushed, t.version, opts.fetchSize, limit, topN,
           planListener, pruneOnlyFilters, timeTravel = opts.versionAsOf.isDefined,
-          sample = sample, columnar = opts.columnar)
+          sample = sample)
     }
   }
 }
@@ -747,8 +736,7 @@ class BucketedScan(name: String, required: StructType, filters: Array[Filter], v
     onPlan: Option[Array[Int] => Unit] = None,
     pruneOnly: Array[Filter] = Array.empty,
     timeTravel: Boolean = false,
-    sample: Option[SampleSpec] = None,
-    columnar: Boolean = false)
+    sample: Option[SampleSpec] = None)
   extends Scan with Batch with SupportsReportPartitioning with SupportsRuntimeFiltering
     with SupportsReportStatistics
     with org.apache.spark.sql.connector.read.SupportsReportOrdering {
@@ -891,7 +879,7 @@ class BucketedScan(name: String, required: StructType, filters: Array[Filter], v
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new BucketedReaderFactory(required, filters, fetchSize, limit, topN, sample, columnar)
+    new BucketedReaderFactory(required, filters, fetchSize, limit, topN, sample)
 }
 
 /** One split per live bucket, after key-equality bucket pruning: a
@@ -1533,23 +1521,19 @@ private[bucketed] object BucketReaderSupport {
 
 class BucketedReaderFactory(required: StructType, filters: Array[Filter], fetchSize: Int = 1000,
     limit: Option[Int] = None, topN: Option[TopNSpec] = None,
-    sample: Option[SampleSpec] = None, columnar: Boolean = false)
+    sample: Option[SampleSpec] = None)
   extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[BucketInputPartition]
     new BucketedPartitionReader(p, required, filters, fetchSize, limit, topN, sample)
   }
 
-  /** Columnar handoff (round 11, measured): the DEFAULT
-    * ([[ConnectorOptions]]`.columnar`; `option("columnar", "false")`
-    * turns it off), taken when every projected type has a vector
-    * filler. A projected type without one falls back to the row reader
-    * for the whole scan, never mid-stream. See
-    * [[BucketedColumnarPartitionReader]] for the measurements.
+  /** Batches whenever every projected type has a [[RowColumnVector]];
+    * a projected nested type takes the row reader for the whole scan,
+    * never mid-stream. See [[BucketedColumnarPartitionReader]].
     */
   override def supportColumnarReads(partition: InputPartition): Boolean =
-    columnar && required.fields.forall(f =>
-      BucketedColumnarPartitionReader.supported(f.dataType))
+    required.fields.forall(f => RowColumnVector.supported(f.dataType))
 
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
@@ -1708,25 +1692,16 @@ object BucketedPartitionReader {
   private[bucketed] trait Cell { def apply(r: Row, pos: Int): Any }
 }
 
-/** COLUMNAR read path (round 11, the DEFAULT): the same
-  * [[BucketRowStream]], transposed into `OnHeapColumnVector` batches
-  * so downstream whole-stage codegen consumes vectors through the
-  * standard `ColumnarToRow` bridge instead of per-row
-  * `CatalystTypeConverters` dispatch.
-  *
-  * Measured at sf0.1 (min of 5, local[32]): the q26-shaped
-  * scan+aggregate runs at ~0.93x the row path and a pushed-filter
-  * full scan at ~0.88x — batched vector fills beat per-row boxed
-  * converter dispatch even though the in-JVM store is ROW-oriented
-  * (`Array[Row]` buckets, the harness's simulation seam) and this
-  * path pays an explicit row→column transpose. A production
-  * deployment serving columnar pages (parquet row groups / Arrow)
-  * over the wire hands vectors through near-zero-copy, so the gap
-  * only widens at scale — SURVEY §1.2's "columnar for free" now
-  * reaches the scan boundary. `option("columnar", "false")` restores
-  * the row reader; a projected type without a vector filler falls
-  * back automatically per scan (`supportColumnarReads`), never
-  * mid-stream.
+/** The scan's batch reader: every scan whose projected types all have
+  * a [[RowColumnVector]] reads here, and Spark consumes the batches
+  * through its `ColumnarToRow` bridge. A cold clean bucket decodes its
+  * block file straight into vectors ([[VectorizedColdScan]]). Every
+  * other bucket streams through the same [[BucketRowStream]] as the
+  * row reader, and each page of up to `batchSize` kept rows is handed
+  * on as a view: the page holds references to the stored rows, each
+  * data column is a [[RowColumnVector]] over them, and `_bucket` /
+  * `_pos` are int columns (the bucket, and each row's position). No
+  * cell is copied.
   */
 class BucketedColumnarPartitionReader(p: BucketInputPartition, required: StructType,
     filters: Array[Filter], fetchSize: Int = 1000,
@@ -1734,8 +1709,7 @@ class BucketedColumnarPartitionReader(p: BucketInputPartition, required: StructT
     sample: Option[SampleSpec] = None, batchSize: Int = 4096)
   extends PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
 
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.vectorized.ColumnarBatch
+  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
   /** DIRECT VECTORIZED path (round 16; filters admitted round 17): a
     * COLD (evicted/reopened), clean bucket reads its parquet block
@@ -1758,7 +1732,7 @@ class BucketedColumnarPartitionReader(p: BucketInputPartition, required: StructT
     * a Z-ordered bucket with live delta, an already-loaded block (the
     * in-heap transpose is cheaper than re-reading the file), or a
     * filter shape the vector evaluator can't compile falls back to
-    * the row-stream transpose. PRE-ALTER FILES ARE ADMITTED: the
+    * the row-stream pages. PRE-ALTER FILES ARE ADMITTED: the
     * reader initializes with the TABLE's requested schema, so parquet
     * schema evolution serves a column the file lacks as a null
     * vector — the NULL-pad contract at vector speed — and one
@@ -1813,46 +1787,33 @@ class BucketedColumnarPartitionReader(p: BucketInputPartition, required: StructT
     }
   }
 
-  // — row-transpose fallback (lazy: the vectorized path must not dial
-  //   a store connection or allocate transpose vectors) —
+  // — row-stream pages (lazy: the vectorized path must not dial a
+  //   store connection) —
 
   private lazy val stream = new BucketRowStream(p, filters, fetchSize, limit, topN, sample)
 
-  private lazy val vectors = OnHeapColumnVector.allocateColumns(batchSize, required)
-  private lazy val batch = new ColumnarBatch(
-    vectors.map(_.asInstanceOf[org.apache.spark.sql.vectorized.ColumnVector]))
-
-  /** One filler per output column, writing a fetched row (at its
-    * physical position) into a vector slot.
-    */
-  private def fill(f: org.apache.spark.sql.types.StructField): BucketedColumnarPartitionReader.Fill =
+  private lazy val page = new Array[Row](batchSize)
+  private lazy val positions = new Array[Int](batchSize)
+  private lazy val batch = new ColumnarBatch(required.fields.map[ColumnVector] { f =>
     f.name match {
-      case BucketedTable.MetaBucket => (v, _, _, slot) => v.putInt(slot, p.bucket)
-      case BucketedTable.MetaPos => (v, _, pos, slot) => v.putInt(slot, pos)
-      case n =>
-        val i = stream.fullSchema.fieldIndex(n)
-        val put = BucketedColumnarPartitionReader.filler(f.dataType)
-        (v, r, _, slot) => if (i >= r.size || r.isNullAt(i)) v.putNull(slot) else put(v, slot, r, i)
+      case BucketedTable.MetaBucket => new IntsVector(Array.fill(batchSize)(p.bucket))
+      case BucketedTable.MetaPos => new IntsVector(positions)
+      case n => new RowColumnVector(f.dataType, page, stream.fullSchema.fieldIndex(n))
     }
-
-  private lazy val fillers = required.fields.map(fill)
+  })
 
   override def next(): Boolean = vectorized match {
     case Some(v) => v.nextBatch()
     case None =>
       val it = stream.it
-      if (!it.hasNext) return false
       var n = 0
-      vectors.foreach(_.reset())
       while (n < batchSize && it.hasNext) {
-        val r = it.next()
-        val pos = it.pos
-        var c = 0
-        while (c < fillers.length) { fillers(c)(vectors(c), r, pos, n); c += 1 }
+        page(n) = it.next()
+        positions(n) = it.pos
         n += 1
       }
       batch.setNumRows(n)
-      true
+      n > 0
   }
 
   override def get(): ColumnarBatch = vectorized match {
@@ -1908,7 +1869,7 @@ private[bucketed] final class VectorizedColdScan(
     zDelta: Iterator[(Row, Array[Long])] = Iterator.empty) {
 
   import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.vectorized.ColumnarBatch
+  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
   // compaction state exists only on the filtered/limited path, and
   // only allocates when a batch is actually partial
@@ -1932,17 +1893,25 @@ private[bucketed] final class VectorizedColdScan(
   private var filePos = 0
   private var inDelta = false
 
-  /** One filler per output column for DELTA rows (external Row →
-    * vector); rows arrive already projected to `required`, so the
-    * field index is the row index. Short rows NULL-pad (pre-ALTER
-    * delta rows — the standing fetch-path contract).
+  /** DELTA rows as a batch: a page of rows already projected to
+    * `required` (so the field index is the row index), read in place
+    * through [[RowColumnVector]]s. The appended tail hands it on as it
+    * is; the merge copies one row at a time out of it.
     */
-  private lazy val rowFillers: Array[(OnHeapColumnVector, Int, Row) => Unit] =
-    required.fields.zipWithIndex.map { case (f, i) =>
-      val put = BucketedColumnarPartitionReader.filler(f.dataType)
-      (v: OnHeapColumnVector, slot: Int, r: Row) =>
-        if (i >= r.size || r.isNullAt(i)) v.putNull(slot) else put(v, slot, r, i)
+  private lazy val deltaPage = new Array[Row](batchSize)
+  private lazy val deltaBatch = new ColumnarBatch(required.fields.zipWithIndex.map[ColumnVector] {
+    case (f, i) => new RowColumnVector(f.dataType, deltaPage, i)
+  })
+
+  /** Copy row `r` of `in` into output slot `k`. */
+  private def copyRow(in: ColumnarBatch, r: Int, k: Int): Unit = {
+    var c = 0
+    while (c < copiers.length) {
+      val src = in.column(c)
+      if (src.isNullAt(r)) outVectors(c).putNull(k) else copiers(c)(src, r, outVectors(c), k)
+      c += 1
     }
+  }
 
   def nextBatch(): Boolean = {
     if (mergeKey != null || zBaseKey != null) return mergedBatch()
@@ -1950,7 +1919,7 @@ private[bucketed] final class VectorizedColdScan(
       if (baseBatch()) return true
       inDelta = true
     }
-    deltaBatch()
+    deltaTail()
   }
 
   // — sorted-merge state (merge mode only) —
@@ -2009,9 +1978,8 @@ private[bucketed] final class VectorizedColdScan(
   }
 
   /** Emit one merged batch: base survivors and live delta rows
-    * interleaved in cluster order (ties: base first), assembling into
-    * the output vectors via the existing copiers (vector→vector) and
-    * rowFillers (external row→vector).
+    * interleaved in cluster order (ties: base first), each copied into
+    * the output vectors by the copiers.
     */
   private def mergedBatch(): Boolean = {
     if (!deltaInit) { advanceDelta(); deltaInit = true }
@@ -2032,17 +2000,11 @@ private[bucketed] final class VectorizedColdScan(
           c <= 0 // ties: base first, the fold's stable-sort order
         }
         if (haveBase && (pendingDelta == null || baseFirst)) {
-          val r = sel(curSelPos)
+          copyRow(curIn, sel(curSelPos), k)
           curSelPos += 1
-          var c = 0
-          while (c < copiers.length) {
-            val src = curIn.column(c)
-            if (src.isNullAt(r)) outVectors(c).putNull(k) else copiers(c)(src, r, outVectors(c), k)
-            c += 1
-          }
         } else {
-          var c = 0
-          while (c < rowFillers.length) { rowFillers(c)(outVectors(c), k, pendingDelta); c += 1 }
+          deltaPage(0) = pendingDelta
+          copyRow(deltaBatch, 0, k)
           advanceDelta()
         }
         k += 1
@@ -2115,21 +2077,17 @@ private[bucketed] final class VectorizedColdScan(
     * ([[BucketStore.folded]] appends live delta after live base), so
     * the vectorized MoR scan is row-for-row the row path.
     */
-  private def deltaBatch(): Boolean = {
+  private def deltaTail(): Boolean = {
     if (remaining <= 0 || !delta.hasNext) return false
-    outVectors.foreach(_.reset())
-    usedOut = true
     var k = 0
     val cap = math.min(batchSize, remaining)
     while (k < cap && delta.hasNext) {
-      val r = delta.next()
-      var c = 0
-      while (c < rowFillers.length) { rowFillers(c)(outVectors(c), k, r); c += 1 }
+      deltaPage(k) = delta.next()
       k += 1
     }
-    outBatch.setNumRows(k)
+    deltaBatch.setNumRows(k)
     remaining -= k
-    current = outBatch
+    current = deltaBatch
     k > 0
   }
 
@@ -2199,7 +2157,7 @@ private[bucketed] object VectorizedColdScan {
     // output vectors)
     if ((filters.nonEmpty && filterFn == null) ||
       ((filters.nonEmpty || limit.nonEmpty || overlay.nonEmpty) &&
-        !required.fields.forall(f => copierSupported(f.dataType))))
+        !required.fields.forall(f => RowColumnVector.supported(f.dataType))))
       return None
     // sorted-merge machinery: the cluster order between a base row's
     // vectors and a delta row. A key column without a vector compare
@@ -2294,9 +2252,6 @@ private[bucketed] object VectorizedColdScan {
         None
     }
   }
-
-  private[bucketed] def copierSupported(t: org.apache.spark.sql.types.DataType): Boolean =
-    BucketedColumnarPartitionReader.supported(t)
 
   /** Per-dimension Morton raw key from VECTOR values (round 18 — the
     * z-order sorted-merge's base side): must produce the SAME unsigned
@@ -2409,99 +2364,6 @@ private[bucketed] object VectorizedColdScan {
         (s, sr, d, dr) => d.putDecimal(dr, s.getDecimal(sr, dt.precision, dt.scale), dt.precision)
       case other => throw new IllegalStateException(s"no vector copier for $other")
     }
-  }
-}
-
-object BucketedColumnarPartitionReader {
-  import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
-  import org.apache.spark.sql.types._
-  import org.apache.spark.sql.catalyst.util.DateTimeUtils
-
-  /** Writes one output column of a fetched row at physical `pos` into
-    * vector slot `slot`.
-    */
-  private[bucketed] trait Fill {
-    def apply(v: OnHeapColumnVector, r: Row, pos: Int, slot: Int): Unit
-  }
-
-  /** Types with a direct vector filler — anything else falls back to
-    * the row reader at `supportColumnarReads` time (never mid-scan).
-    * DecimalType joined in round 18: TPC-H-shaped corpora carry
-    * money columns as DECIMAL, and excluding them demoted every scan
-    * projecting one to the row reader.
-    */
-  def supported(t: DataType): Boolean = t match {
-    case LongType | IntegerType | ShortType | ByteType | DoubleType | FloatType |
-         BooleanType | StringType | TimestampType | TimestampNTZType | DateType => true
-    case _: DecimalType => true
-    // BinaryType joined in round 20: multimodal corpora carry content
-    // (image/audio bytes) as BINARY, and excluding it demoted every
-    // scan projecting one — the dominant multimodal scan shape — to
-    // the row reader. No pruning story (zone maps stay None); the
-    // bytes just ride the vectors like strings minus the UTF-8 step.
-    case BinaryType => true
-    case _ => false
-  }
-
-  /** Writes non-null cell `i` of a row into vector slot `slot`. */
-  private[bucketed] trait Put {
-    def apply(v: OnHeapColumnVector, slot: Int, r: Row, i: Int): Unit
-  }
-
-  /** The [[Put]] of a column type: primitive cells through the row's
-    * typed getters (no box per cell), the rest from `get`.
-    */
-  private[bucketed] def filler(t: DataType): Put = t match {
-    case LongType => (v, s, r, i) => v.putLong(s, r.getLong(i))
-    case IntegerType => (v, s, r, i) => v.putInt(s, r.getInt(i))
-    case ShortType => (v, s, r, i) => v.putShort(s, r.getShort(i))
-    case ByteType => (v, s, r, i) => v.putByte(s, r.getByte(i))
-    case DoubleType => (v, s, r, i) => v.putDouble(s, r.getDouble(i))
-    case FloatType => (v, s, r, i) => v.putFloat(s, r.getFloat(i))
-    case BooleanType => (v, s, r, i) => v.putBoolean(s, r.getBoolean(i))
-    case other =>
-      val put = boxedFiller(other)
-      (v, s, r, i) => put(v, s, r.get(i))
-  }
-
-  private trait PutValue { def apply(v: OnHeapColumnVector, slot: Int, x: Any): Unit }
-
-  private def boxedFiller(t: DataType): PutValue = t match {
-    case StringType => (v, s, x) => {
-      val b = x.asInstanceOf[String].getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      v.putByteArray(s, b, 0, b.length); ()
-    }
-    case BinaryType => (v, s, x) => {
-      val b = x.asInstanceOf[Array[Byte]]
-      v.putByteArray(s, b, 0, b.length); ()
-    }
-    case TimestampType => (v, s, x) => x match {
-      case ts: java.sql.Timestamp => v.putLong(s, DateTimeUtils.fromJavaTimestamp(ts))
-      case ins: java.time.Instant => v.putLong(s, DateTimeUtils.instantToMicros(ins))
-      case other => throw new IllegalStateException(
-        s"unexpected external timestamp value ${other.getClass}")
-    }
-    case TimestampNTZType => (v, s, x) => x match {
-      case ldt: java.time.LocalDateTime => v.putLong(s, DateTimeUtils.localDateTimeToMicros(ldt))
-      case other => throw new IllegalStateException(
-        s"unexpected external timestamp_ntz value ${other.getClass}")
-    }
-    case DateType => (v, s, x) => x match {
-      case d: java.sql.Date => v.putInt(s, DateTimeUtils.fromJavaDate(d))
-      case ld: java.time.LocalDate => v.putInt(s, ld.toEpochDay.toInt)
-      case other => throw new IllegalStateException(
-        s"unexpected external date value ${other.getClass}")
-    }
-    case dt: DecimalType => (v, s, x) => {
-      val d = x match {
-        case b: java.math.BigDecimal => Decimal(b, dt.precision, dt.scale)
-        case b: scala.math.BigDecimal => Decimal(b.bigDecimal, dt.precision, dt.scale)
-        case other => throw new IllegalStateException(
-          s"unexpected external decimal value ${other.getClass}")
-      }
-      v.putDecimal(s, d, dt.precision)
-    }
-    case other => throw new IllegalStateException(s"no columnar filler for $other")
   }
 }
 

@@ -277,11 +277,12 @@ object KeyOrder {
   /** The vector form of a non-null external value or literal for a `dt`
     * column — the representation a `ColumnarBatch` holds it in: epoch
     * days for dates, epoch micros for timestamps (both external
-    * flavors), `UTF8String` for strings, the `java.math.BigDecimal` for
-    * decimals (whose compact vectors then take the unscaled long at the
-    * column's scale, [[unscaledExact]]), and the value itself for the
-    * other numerics. Null when `v` is not of the class a `dt` value
-    * has, so no vector compare of the same width exists.
+    * flavors), `UTF8String` for strings, the byte array for binaries,
+    * the `java.math.BigDecimal` for decimals (whose compact vectors then
+    * take the unscaled long at the column's scale, [[unscaledExact]]),
+    * and the value itself for the other numerics. Null when `v` is not
+    * of the class a `dt` value has, so no vector compare of the same
+    * width exists.
     */
   def internal(dt: DataType, v: Any): Any = dt match {
     case IntegerType => if (v.isInstanceOf[java.lang.Integer]) v else null
@@ -292,6 +293,10 @@ object KeyOrder {
     case FloatType => if (v.isInstanceOf[java.lang.Float]) v else null
     case StringType => v match {
       case s: String => UTF8String.fromString(s)
+      case _ => null
+    }
+    case BinaryType => v match {
+      case b: Array[Byte] => b
       case _ => null
     }
     case DateType => v match {
@@ -329,8 +334,8 @@ object KeyOrder {
     * the precision dispatch `WritableColumnVector.getDecimal` performs
     * internally (int storage ≤ 9 digits, long ≤ 18) without the per-row
     * `Decimal` wrapper. Every batch the store compares comes from the
-    * vectorized parquet reader or the merge fillers, which both store
-    * compact decimals that way.
+    * vectorized parquet reader, the merge's output vectors or a
+    * [[RowColumnVector]], which all answer compact decimals that way.
     */
   def unscaledGetter(i: Int, dt: DecimalType): (ColumnarBatch, Int) => Long =
     if (dt.precision <= Decimal.MAX_INT_DIGITS) (b, r) => b.column(i).getInt(r).toLong

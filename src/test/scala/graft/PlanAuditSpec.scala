@@ -324,7 +324,7 @@ class PlanAuditSpec extends SparkSuite {
   test("q198: the gated columnar scan plans a ColumnarToRow bridge over the pushed scan") {
     val p = plan("q198_columnar_pushdown")
     assert(p.contains("ColumnarToRow"),
-      s"columnar=true gate must actually plan columnar batches:\n${p.take(900)}")
+      s"the q198 gate must actually plan columnar batches:\n${p.take(900)}")
     assert(p.contains("pushed=[") && p.contains("GreaterThanOrEqual(l_quantity,30.0)"),
       "the columnar path must keep q27's filter pushdown")
   }

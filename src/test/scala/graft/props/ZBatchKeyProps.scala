@@ -1,7 +1,6 @@
 package graft.sources.bucketed
 
 import org.apache.spark.sql.Row
-import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
 import org.scalacheck.{Gen, Properties, Test}
@@ -71,18 +70,15 @@ object ZBatchKeyProps extends Properties("graft.zbatchkey") {
       .map(u => new java.math.BigDecimal(java.math.BigInteger.valueOf(u), 2)))
   } yield Row(l, i, d, f, s, t, dt, b, nt, dec)
 
-  /** Transpose through the SAME fillers the columnar reader uses. */
+  /** The rows as a batch read in place through [[RowColumnVector]]s:
+    * the hot reader's pages.
+    */
   private def toBatch(rows: Seq[Row]): ColumnarBatch = {
-    val vectors = OnHeapColumnVector.allocateColumns(rows.length, schema)
-    val fillers = schema.fields.map(f => BucketedColumnarPartitionReader.filler(f.dataType))
-    rows.zipWithIndex.foreach { case (r, slot) =>
-      schema.indices.foreach { c =>
-        if (r.isNullAt(c)) vectors(c).putNull(slot)
-        else fillers(c)(vectors(c), slot, r, c)
-      }
-    }
-    val b = new ColumnarBatch(vectors.map(_.asInstanceOf[ColumnVector]))
-    b.setNumRows(rows.length)
+    val page = rows.toArray
+    val b = new ColumnarBatch(schema.fields.zipWithIndex.map[ColumnVector] {
+      case (f, c) => new RowColumnVector(f.dataType, page, c)
+    })
+    b.setNumRows(page.length)
     b
   }
 

@@ -21,13 +21,11 @@ class BlockCacheSpec extends SparkSuite {
   private def scan(t: String) =
     spark.read.format("graft-buckets").option("table", t).load()
 
-  // the ROW reader: loads blocks into heap (the cache's client). The
-  // columnar/aggregate COLD paths deliberately bypass the heap cache
+  // the ROW stream: loads blocks into heap (the cache's client). The
+  // vectorized/aggregate COLD paths deliberately bypass the heap cache
   // (they stream the file), so this spec pins the cache through the
   // path that actually uses it.
-  private def rowScan(t: String) =
-    spark.read.format("graft-buckets").option("table", t)
-      .option("columnar", "false").load()
+  private def rowScan(t: String) = ScanReference.loadingScan(spark, t)
 
   /** Per-block estimated heap charge (loads every block first). */
   private def heapSizes(name: String): Seq[Long] = {
@@ -43,9 +41,9 @@ class BlockCacheSpec extends SparkSuite {
       "k", 8)
     // plain row collects: aggregates would push down and take the
     // stats-served / cold-projected paths, which never touch the cache
-    val want = rowScan(name).collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet
-    assert(want.size === 8000)
+    val want = (1 to 8000).map(i => (i.toLong, s"tag-$i-${"x" * 40}", i * 1.5)).toSet
+    assert(rowScan(name).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getDouble(2))).toSet === want)
 
     val sizes = heapSizes(name).sorted
     assert(sizes.length === 8)
@@ -89,8 +87,8 @@ class BlockCacheSpec extends SparkSuite {
     BucketStore.load(spark, name,
       (1 to 4000).map(i => (i.toLong, "x" * 1990 + i)).toDF("k", "pad"), "k", 8)
     // collect, not count: a pushed count(*) is stats-served and never
-    // touches a block — the cache's client is the row reader
-    val want = rowScan(name).collect().length
+    // touches a block — the cache's client is the row stream
+    assert(rowScan(name).collect().length === 4000)
     val dir = BucketStore.tableDir(name)
     val fileSum = FileStore.readManifests(dir).last.buckets
       .filter(_.path.nonEmpty)
@@ -106,7 +104,7 @@ class BlockCacheSpec extends SparkSuite {
       BlockCache.budgetBytes = budget
       BucketStore.evictTable(name)
       val ev0 = BlockCache.evictions.get()
-      assert(rowScan(name).collect().length === want)
+      assert(rowScan(name).collect().length === 4000)
       assert(BlockCache.evictions.get() > ev0,
         "heap charging must evict where file-size charging would have accreted the table")
       assert(BucketStore.get(name).buckets.loadedCount < 8)

@@ -133,9 +133,9 @@ class BucketSkipSpec extends SparkSuite {
     val (createdF, reusedF) = ConnectionPool.stats
     assert(createdF + reusedF === 0, "the filtered projected path must not dial a connection")
     // hot blocks also keep the connection path (heap beats a re-read):
-    // warm every bucket through the row reader first
-    assert(spark.read.format("graft-buckets").option("table", "skip_coldsum")
-      .option("columnar", "false").load().collect().length === 3000)
+    // warm every bucket through the row stream first
+    assert(graft.sources.bucketed.ScanReference.loadingScan(spark, "skip_coldsum")
+      .collect().length === 3000)
     val pr2 = FileStore.projectedReads.get()
     assert(spark.sql("SELECT sum(price) FROM graft.`skip_coldsum`").head.getDouble(0)
       === (1 to 3000).map(_ * 1.5).sum)

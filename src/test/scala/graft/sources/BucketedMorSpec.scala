@@ -255,27 +255,25 @@ class BucketedMorSpec extends SparkSuite {
     assert(t.mor.exists { case (b, m) =>
       m.delta.indices.exists(j => !m.deleted.get(t.buckets.block(b).rowCount + j))
     }, "the DML must leave live delta rows")
-    def rd(columnar: Boolean) = spark.read.format("graft-buckets")
-      .option("table", name).option("columnar", columnar.toString).load()
+    def rd() = spark.read.format("graft-buckets").option("table", name).load()
     // ORDER matters: compare per-bucket sequences, not sets — the
     // vectorized merge must reproduce the fold's Morton serving order
     // exactly, ties included (base before delta)
-    BucketStore.evictTable(name)
-    val want = rd(columnar = false).collect().map(_.toSeq).toSeq
+    val fold = ScanReference.fold(spark, name)
+    val want = fold.collect().map(_.toSeq).toSeq
     BucketStore.evictTable(name)
     val (vr0, fr0) = (FileStore.vectorReads.get(), FileStore.filesRead.get())
-    val got = rd(columnar = true).collect().map(_.toSeq).toSeq
+    val got = rd().collect().map(_.toSeq).toSeq
     assert(got === want, "vectorized z-merge must be order-identical to the fold")
     assert(FileStore.vectorReads.get() - vr0 === t.buckets.length.toLong,
       "every z-ordered MoR bucket must decode vectorized")
     assert(FileStore.filesRead.get() === fr0, "no bucket may row-materialize")
     assert(BucketStore.get(name).buckets.loadedCount === 0, "nothing may fault into the heap")
     // filtered + projected through the same z-merge
-    BucketStore.evictTable(name)
-    val wantF = rd(columnar = false).filter(col("x") === 9999L)
+    val wantF = fold.filter(col("x") === 9999L)
       .select(col("k"), col("tag")).collect().map(_.toSeq).toSeq
     BucketStore.evictTable(name)
-    val gotF = rd(columnar = true).filter(col("x") === 9999L)
+    val gotF = rd().filter(col("x") === 9999L)
       .select(col("k"), col("tag")).collect().map(_.toSeq).toSeq
     assert(gotF === wantF)
     BucketStore.drop(name)

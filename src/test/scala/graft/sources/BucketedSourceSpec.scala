@@ -574,6 +574,12 @@ class BucketedSourceSpec extends SparkSuite {
     assert(unknown.getMessage.contains("unknown option") &&
       unknown.getMessage.contains("fechsize") && unknown.getMessage.contains("fetchsize"),
       unknown.getMessage)
+    // no option picks the read path
+    val readPath = intercept[Exception] {
+      spark.read.format("graft-buckets")
+        .option("table", s"lineitem@$sf").option("columnar", "false").load()
+    }
+    assert(readPath.getMessage.contains("unknown option(s) 'columnar'"), readPath.getMessage)
     val bad = intercept[Exception] {
       spark.read.format("graft-buckets")
         .option("table", s"lineitem@$sf").option("fetchsize", "zero").load()

@@ -57,14 +57,10 @@ class BucketedStreamSpec extends SparkSuite {
         .collect().map(_.toSeq).toSet
       assert(got === exp)
       assert(got.nonEmpty)
-      // listener delivery is async — poll briefly for the batch plan
-      def findPlan(): Option[String] = plans.toArray(Array.empty[String])
+      // listener delivery is async: wait for the bus to deliver every plan
+      org.apache.spark.sql.ListenerBusTestBridge.drain(spark)
+      val batchPlan = plans.toArray(Array.empty[String])
         .find(p => p.contains("MicroBatchScan") && p.contains("graft-buckets"))
-      val deadline = System.currentTimeMillis() + 15000
-      var batchPlan = findPlan()
-      while (batchPlan.isEmpty && System.currentTimeMillis() < deadline) {
-        Thread.sleep(100); batchPlan = findPlan()
-      }
       assert(batchPlan.isDefined, "expected a micro-batch execution over the bucket stream")
       val p = batchPlan.get
       assert(p.contains("BroadcastHashJoin"), p.take(1200))
@@ -87,6 +83,15 @@ class BucketedStreamSpec extends SparkSuite {
         q.processAllAvailable()
         assert(spark.table("stream_failover_sink").count() === 40,
           "every row must arrive exactly once via the replica chain")
+        // a flat table's micro-batches read ColumnarBatches: the bridge
+        // sits right above the scan
+        val plan = q.asInstanceOf[
+          org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+          .streamingQuery.lastExecution.executedPlan.toString
+        val tree = plan.linesIterator.toIndexedSeq
+        val scanAt = tree.indexWhere(_.contains("MicroBatchScan"))
+        assert(scanAt > 0 && tree(scanAt - 1).contains("ColumnarToRow"),
+          s"a micro-batch must read ColumnarBatches\n${plan.take(1200)}")
       } finally q.stop()
     } finally BucketServers.revive("host-1")
   }

@@ -231,14 +231,10 @@ class BucketedWriteSpec extends SparkSuite {
     try {
       (1 to 100).map(i => (i.toLong, s"v$i")).toDF("k", "v")
         .writeTo("graft.`w_plan`").append()
-      def findPlan(): Option[String] = plans.toArray(Array.empty[String])
+      org.apache.spark.sql.ListenerBusTestBridge.drain(spark)
+      val plan = plans.toArray(Array.empty[String])
         .find(p => p.contains("AppendData") && p.contains("w_plan") ||
           p.contains("AppendData") && p.contains("BucketedWrite"))
-      val deadline = System.currentTimeMillis() + 15000
-      var plan = findPlan()
-      while (plan.isEmpty && System.currentTimeMillis() < deadline) {
-        Thread.sleep(100); plan = findPlan()
-      }
       assert(plan.isDefined, "expected a captured AppendData plan")
       val p = plan.get
       // the RequiresDistributionAndOrdering contract, realized: Spark

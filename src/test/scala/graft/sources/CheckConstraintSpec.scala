@@ -127,14 +127,29 @@ class CheckConstraintSpec extends SparkSuite {
     BucketStore.load(spark, name,
       Seq((1L, Option(5.0)), (2L, Option(7.0))).toDF("k", "v"), "k", numBuckets = 2)
     BucketStore.setCheck(name, "v > 0")
-    val e = intercept[Throwable] {
+    // the write task rejects the row; the driver's commit never sees it
+    val failedTasks = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        e.reason match {
+          case f: org.apache.spark.ExceptionFailure => failedTasks.add(f.toErrorString); ()
+          case _ => ()
+        }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val e = try intercept[Throwable] {
       spark.sql(s"UPDATE graft.`$name` SET v = -1.0 WHERE k = 2")
+    } finally {
+      org.apache.spark.sql.ListenerBusTestBridge.drain(spark)
+      spark.sparkContext.removeSparkListener(listener)
     }
     val msgs = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
       .map(m => Option(m.getMessage).getOrElse("")).mkString(" | ")
     assert(msgs.contains(
       s"CHECK constraint violation on '$name': (v > 0) is false for row [2,-1.0]"),
       s"wrong failure: $msgs")
+    assert(failedTasks.toArray.exists(_.toString.contains("CHECK constraint violation")),
+      s"a write task must fail on the row, not the driver's commit: $msgs")
     spark.sql(s"UPDATE graft.`$name` SET v = NULL WHERE k = 2")
     assert(spark.table(s"graft.`$name`").collect().map(r => (r.getLong(0), Option(r.get(1))))
       .toSet === Set((1L, Some(5.0)), (2L, None)))

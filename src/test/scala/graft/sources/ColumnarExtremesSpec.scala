@@ -5,11 +5,11 @@ import org.apache.spark.sql.functions._
 import graft.SparkSuite
 import graft.sources.bucketed._
 
-/** Columnar fillers under extreme values: IEEE specials, integral
+/** The batch read paths under extreme values: IEEE specials, integral
   * extrema, empty/multibyte strings, epoch-boundary timestamps — the
-  * row and columnar paths must agree bit-for-bit on all of them
-  * (NaN bits included: both paths read the same stored Row, so a
-  * mismatch means a filler bug, not data ambiguity).
+  * hot page views and the cold vectorized decode must both agree
+  * bit-for-bit with the store's own fold ([[ScanReference]]), NaN bits
+  * included.
   */
 class ColumnarExtremesSpec extends SparkSuite {
   import spark.implicits._
@@ -29,14 +29,13 @@ class ColumnarExtremesSpec extends SparkSuite {
         new java.sql.Timestamp(1700000000123L)))
     BucketStore.load(spark, "colx_t",
       rows.toDF("k", "d", "l", "s", "b", "ts"), "k", 2)
-    def read(columnar: Boolean) =
-      spark.read.format("graft-buckets").option("table", "colx_t")
-        .option("columnar", columnar.toString).load()
-        .orderBy("k").collect().map(_.toSeq)
-    val viaRow = read(columnar = false)
-    val viaCol = read(columnar = true)
+    def scan() = spark.read.format("graft-buckets").option("table", "colx_t").load()
+    def read() = scan().orderBy("k").collect().map(_.toSeq)
+    def fold() = ScanReference.fold(spark, "colx_t")
+    val want = fold().orderBy("k").collect().map(_.toSeq)
+    val viaCol = read()
     assert(viaCol.length === 5)
-    viaRow.zip(viaCol).zipWithIndex.foreach { case ((r, c), i) =>
+    want.zip(viaCol).zipWithIndex.foreach { case ((r, c), i) =>
       r.zip(c).foreach {
         case (a: Double, b: Double) =>
           assert(java.lang.Double.doubleToRawLongBits(a) ===
@@ -45,22 +44,17 @@ class ColumnarExtremesSpec extends SparkSuite {
       }
     }
     // and a filter over the specials agrees (NaN semantics ride the
-    // engine, not the reader — both paths must feed it identical bits)
-    def nanCount(columnar: Boolean) =
-      spark.read.format("graft-buckets").option("table", "colx_t")
-        .option("columnar", columnar.toString).load()
-        .filter(isnan(col("d"))).count()
-    assert(nanCount(columnar = true) === nanCount(columnar = false))
+    // engine, not the reader — the scan must feed it identical bits)
+    assert(scan().filter(isnan(col("d"))).count() === fold().filter(isnan(col("d"))).count())
 
     // COLD: the DIRECT vectorized parquet path must hand back the same
     // bits (different decode entirely — parquet pages, not the heap
-    // transpose), unfiltered and with pushed filters over the specials
-    val want = read(columnar = false)
+    // page views), unfiltered and with pushed filters over the specials
     BucketStore.registerStatColumns("colx_t", Seq("d", "l", "s"))
     BucketStore.refreshManifestStats("colx_t")
     BucketStore.evictTable("colx_t")
     val vr0 = FileStore.vectorReads.get()
-    val cold = read(columnar = true)
+    val cold = read()
     assert(FileStore.vectorReads.get() > vr0, "the cold read must be vectorized")
     want.zip(cold).foreach { case (r, c) =>
       r.zip(c).foreach {
@@ -74,9 +68,7 @@ class ColumnarExtremesSpec extends SparkSuite {
     // SQL comparisons, NaN matches nothing ordered, byte-order strings
     def coldFiltered(p: org.apache.spark.sql.Column): Set[Long] = {
       BucketStore.evictTable("colx_t")
-      spark.read.format("graft-buckets").option("table", "colx_t")
-        .option("columnar", "true").load().filter(p)
-        .collect().map(_.getLong(0)).toSet
+      scan().filter(p).collect().map(_.getLong(0)).toSet
     }
     assert(coldFiltered(col("d") === 0.0) === Set(3L), "-0.0 must equal 0.0 on the cold path")
     assert(coldFiltered(col("d") > 0.0) === Set(0L, 1L, 4L),

@@ -1,16 +1,18 @@
 package graft.sources
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 
 import graft.SparkSuite
 import graft.sources.bucketed._
 
-/** The columnar read path (the DEFAULT; `option("columnar", "false")`
-  * restores the row reader): byte-identical results to the row path
-  * across types, filters, pushdown, MoR state, and metadata columns;
-  * a genuinely columnar plan (the scan feeds a `ColumnarToRow`
-  * bridge); loud fallback rules (unsupported projected type → row
-  * reader, never mid-scan).
+/** The batch read path: hot pages as views of the stored rows and
+  * cold buckets decoded straight from their block files, both
+  * byte-identical to the store's own fold ([[ScanReference]], read
+  * through no reader) across types, filters, pushdown, MoR state, and
+  * metadata columns; a genuinely columnar plan (the scan feeds a
+  * `ColumnarToRow` bridge); loud fallback rules (unsupported projected
+  * type → row reader, never mid-scan).
   */
 class ColumnarScanSpec extends SparkSuite {
   import spark.implicits._
@@ -33,36 +35,33 @@ class ColumnarScanSpec extends SparkSuite {
     }
   }
 
-  private def read(columnar: Boolean) =
-    spark.read.format("graft-buckets").option("table", "colr_t")
-      .option("columnar", columnar.toString).load()
+  private def read() = spark.read.format("graft-buckets").option("table", "colr_t").load()
+
+  private def fold(name: String) = ScanReference.fold(spark, name)
+
+  private def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+    df.collect().map(_.toSeq).toSet
 
   test("columnar scan returns byte-identical rows across all supported types") {
     loadT()
-    val row = read(columnar = false).collect().map(_.toSeq).toSet
-    val col = read(columnar = true).collect().map(_.toSeq).toSet
-    assert(col === row)
-    assert(col.size === 4096)
+    val got = rows(read())
+    assert(got === rows(fold("colr_t")))
+    assert(got.size === 4096)
   }
 
   test("the columnar plan really is columnar: ColumnarToRow above the scan") {
     loadT()
-    val plan = read(columnar = true).filter(col("m") === 7).queryExecution.executedPlan.toString
+    val plan = read().filter(col("m") === 7).queryExecution.executedPlan.toString
     assert(plan.contains("ColumnarToRow"),
-      s"columnar=true must plan a ColumnarToRow bridge:\n${plan.take(900)}")
-    val rowPlan = read(columnar = false).filter(col("m") === 7)
-      .queryExecution.executedPlan.toString
-    assert(!rowPlan.contains("ColumnarToRow"),
-      "the default row path must not pay a columnar bridge")
+      s"the scan must plan a ColumnarToRow bridge:\n${plan.take(900)}")
   }
 
   test("pushdown, projection, and aggregation agree between the two paths") {
     loadT()
-    def agg(columnar: Boolean) =
-      read(columnar).filter(col("m") < 10 && col("flag"))
-        .groupBy(col("m")).agg(count(lit(1)).as("n"), sum(col("v")).as("s"))
-        .collect().map(_.toSeq).toSet
-    assert(agg(columnar = true) === agg(columnar = false))
+    def agg(df: org.apache.spark.sql.DataFrame) =
+      rows(df.filter(col("m") < 10 && col("flag"))
+        .groupBy(col("m")).agg(count(lit(1)).as("n"), sum(col("v")).as("s")))
+    assert(agg(read()) === agg(fold("colr_t")))
   }
 
   test("merge-on-read state reads identically through the columnar path") {
@@ -73,56 +72,44 @@ class ColumnarScanSpec extends SparkSuite {
     BucketStore.setDmlMode("colr_mor", BucketStore.MergeOnRead)
     spark.sql("DELETE FROM graft.colr_mor WHERE k % 16 = 0")
     spark.sql("UPDATE graft.colr_mor SET v = v + 1000 WHERE k % 16 = 1")
-    def readM(columnar: Boolean) =
-      spark.read.format("graft-buckets").option("table", "colr_mor")
-        .option("columnar", columnar.toString).load().collect().map(_.toSeq).toSet
-    val viaRow = readM(columnar = false)
-    assert(viaRow.size === 240)
-    assert(readM(columnar = true) === viaRow)
+    val want = rows(fold("colr_mor"))
+    assert(want.size === 240)
+    assert(rows(spark.read.format("graft-buckets").option("table", "colr_mor").load()) === want)
   }
 
   test("a bucket larger than one batch reads across batch boundaries (vector reset path)") {
     // 10000 rows in ONE bucket = 3 ColumnarBatches per partition: the
-    // second and third exercise OnHeapColumnVector.reset() + refill,
-    // which the 4-bucket fixture (1024 rows/bucket) never reaches
+    // second and third refill the reused page, which the 4-bucket
+    // fixture (1024 rows/bucket) never reaches
     BucketStore.drop("colr_big")
     val df = (0 until 10000).map(i => (i.toLong, s"s$i", i * 0.5)).toDF("k", "s", "v")
     BucketStore.load(spark, "colr_big", df, "k", 1)
-    def read(columnar: Boolean) =
-      spark.read.format("graft-buckets").option("table", "colr_big")
-        .option("columnar", columnar.toString).load()
-    assert(read(columnar = true).count() === 10000L)
-    val got = read(columnar = true).agg(
-      sum(col("k")), sum(col("v")), count(col("s"))).head()
-    val exp = read(columnar = false).agg(
-      sum(col("k")), sum(col("v")), count(col("s"))).head()
-    assert(got === exp)
+    def read() = spark.read.format("graft-buckets").option("table", "colr_big").load()
+    assert(read().count() === 10000L)
+    val got = read().agg(sum(col("k")), sum(col("v")), count(col("s"))).head()
+    assert(got === Row((0L until 10000L).sum, (0 until 10000).map(_ * 0.5).sum, 10000L))
     // row identity across the boundary rows specifically
-    val boundary = read(columnar = true)
-      .filter(col("k").isin(4095L, 4096L, 8191L, 8192L, 9999L))
-      .collect().map(_.toSeq).toSet
-    assert(boundary === read(columnar = false)
-      .filter(col("k").isin(4095L, 4096L, 8191L, 8192L, 9999L))
-      .collect().map(_.toSeq).toSet)
-    assert(boundary.size === 5)
+    val boundary = rows(read().filter(col("k").isin(4095L, 4096L, 8191L, 8192L, 9999L)))
+    assert(boundary === Set(4095, 4096, 8191, 8192, 9999).map(i => Seq(i.toLong, s"s$i", i * 0.5)))
+    assert(rows(read()) === (0 until 10000).map(i => Seq(i.toLong, s"s$i", i * 0.5)).toSet)
     // and COLD: the same >1-batch bucket through the DIRECT vectorized
     // reader (nextBatch loops over the file's pages) stays identical
-    val want = read(columnar = false).collect().map(_.toSeq).toSet
+    val want = rows(fold("colr_big"))
     BucketStore.evictTable("colr_big")
     val vr0 = FileStore.vectorReads.get()
-    val cold = read(columnar = true).collect().map(_.toSeq).toSet
+    val cold = rows(read())
     assert(cold === want, "a multi-batch cold vectorized scan must be byte-identical")
     assert(FileStore.vectorReads.get() - vr0 === 1L)
   }
 
   test("a COLD scan takes the direct vectorized parquet path: byte-identical, zero heap faults") {
     loadT()
-    val want = read(columnar = false).collect().map(_.toSeq).toSet
+    val want = rows(fold("colr_t"))
     BucketStore.evictTable("colr_t")
     assert(BucketStore.get("colr_t").buckets.loadedCount === 0)
     val (vr0, fr0) = (FileStore.vectorReads.get(), FileStore.filesRead.get())
-    val got = read(columnar = true).collect().map(_.toSeq).toSet
-    assert(got === want, "the vectorized cold path must be byte-identical to the row path")
+    val got = rows(read())
+    assert(got === want, "the vectorized cold path must be byte-identical to the fold")
     assert(FileStore.vectorReads.get() - vr0 >= 4L,
       "every cold clean bucket must take the vectorized path")
     assert(FileStore.filesRead.get() === fr0,
@@ -131,8 +118,7 @@ class ColumnarScanSpec extends SparkSuite {
       "a cold analytical sweep must not fault blocks into the heap cache")
     // projection pruning: a 2-column read decodes only those columns —
     // still vectorized, still identical
-    val narrow = read(columnar = true).select(col("k"), col("v")).collect()
-      .map(_.toSeq).toSet
+    val narrow = rows(read().select(col("k"), col("v")))
     assert(narrow === want.map(s => Seq(s.head, s(2))))
   }
 
@@ -140,8 +126,7 @@ class ColumnarScanSpec extends SparkSuite {
     loadT()
     // every filter shape the vector evaluator compiles, across types,
     // nulls (every 13th row), strings, timestamps, and compositions —
-    // each compared byte-for-byte against the row path on the SAME
-    // cold state
+    // each compared byte-for-byte against the fold filtered by Spark
     val preds: Seq[(String, org.apache.spark.sql.Column)] = Seq(
       "key point" -> (col("k") === 77L),
       "int range" -> (col("m") > 80 && col("m") <= 90),
@@ -164,15 +149,14 @@ class ColumnarScanSpec extends SparkSuite {
     // first pass warms the plan-time skip stats (never-committed stats
     // now build from a projected single-column stream — cold-safe —
     // and cache by file path, so later passes pay nothing)
-    preds.foreach { case (_, p) => read(columnar = true).filter(p).collect() }
+    preds.foreach { case (_, p) => read().filter(p).collect() }
     preds.foreach { case (name, p) =>
-      BucketStore.evictTable("colr_t")
-      val want = read(columnar = false).filter(p).collect().map(_.toSeq).toSet
+      val want = rows(fold("colr_t").filter(p))
       BucketStore.evictTable("colr_t")
       assert(BucketStore.get("colr_t").buckets.loadedCount === 0)
       val (vr0, fr0) = (FileStore.vectorReads.get(), FileStore.filesRead.get())
-      val got = read(columnar = true).filter(p).collect().map(_.toSeq).toSet
-      assert(got === want, s"[$name] filtered cold vectorized scan must match the row path")
+      val got = rows(read().filter(p))
+      assert(got === want, s"[$name] filtered cold vectorized scan must match the fold")
       assert(FileStore.vectorReads.get() > vr0,
         s"[$name] a filtered cold scan must take the vectorized path")
       assert(FileStore.filesRead.get() === fr0,
@@ -184,18 +168,15 @@ class ColumnarScanSpec extends SparkSuite {
     // PLAN TIME — no partition, no read of any kind, empty answer
     BucketStore.evictTable("colr_t")
     val (vrZ, frZ) = (FileStore.vectorReads.get(), FileStore.filesRead.get())
-    assert(read(columnar = true).filter(col("m") === 9999).collect().isEmpty)
+    assert(read().filter(col("m") === 9999).collect().isEmpty)
     assert(FileStore.vectorReads.get() === vrZ && FileStore.filesRead.get() === frZ,
       "a provably-empty filter must prune every bucket before any read path runs")
     // filter column NOT in the projection: the read schema widens, the
     // output stays pruned, answers still match
-    BucketStore.evictTable("colr_t")
-    val wantNarrow = read(columnar = false).filter(col("m") < 5)
-      .select(col("k"), col("tag")).collect().map(_.toSeq).toSet
+    val wantNarrow = rows(fold("colr_t").filter(col("m") < 5).select(col("k"), col("tag")))
     BucketStore.evictTable("colr_t")
     val vrN = FileStore.vectorReads.get()
-    val gotNarrow = read(columnar = true).filter(col("m") < 5)
-      .select(col("k"), col("tag")).collect().map(_.toSeq).toSet
+    val gotNarrow = rows(read().filter(col("m") < 5).select(col("k"), col("tag")))
     assert(gotNarrow === wantNarrow)
     assert(FileStore.vectorReads.get() > vrN)
   }
@@ -204,20 +185,20 @@ class ColumnarScanSpec extends SparkSuite {
     loadT()
     BucketStore.evictTable("colr_t")
     val (vr0, fr0) = (FileStore.vectorReads.get(), FileStore.filesRead.get())
-    val all = read(columnar = false).collect().map(_.toSeq).toSet
+    val all = rows(fold("colr_t"))
     BucketStore.evictTable("colr_t")
-    val got = read(columnar = true).limit(37).collect().map(_.toSeq)
+    val got = read().limit(37).collect().map(_.toSeq)
     assert(got.length === 37)
     assert(got.toSet.subsetOf(all), "limited rows must be real table rows")
     assert(FileStore.vectorReads.get() > vr0, "a cold LIMIT must take the vectorized path")
     assert(BucketStore.get("colr_t").buckets.loadedCount === 0)
     // filtered + limited composes: filter first, then the cap
     BucketStore.evictTable("colr_t")
-    val fl = read(columnar = true).filter(col("m") < 50).limit(20).collect()
+    val fl = read().filter(col("m") < 50).limit(20).collect()
     assert(fl.length === 20)
     assert(fl.forall(r => !r.isNullAt(1) && r.getInt(1) < 50))
     assert(FileStore.filesRead.get() === fr0 + 4L,
-      "only the warm-up row collect may row-materialize blocks")
+      "only the fold of the reference may row-materialize blocks")
     BucketStore.evictTable("colr_t")
   }
 
@@ -225,9 +206,9 @@ class ColumnarScanSpec extends SparkSuite {
     loadT()
     BucketStore.evictTable("colr_t")
     val vr0 = FileStore.vectorReads.get()
-    // warm every block through the row path: hot blocks serve from heap
-    assert(read(columnar = false).collect().length === 4096)
-    val full = read(columnar = true).collect()
+    // warm every block through the row stream: hot blocks serve from heap
+    assert(ScanReference.loadingScan(spark, "colr_t").collect().length === 4096)
+    val full = read().collect()
     assert(full.length === 4096)
     assert(FileStore.vectorReads.get() === vr0, "hot blocks must serve from heap, not the file")
     // Z-ORDER bucket with LIVE delta (round 18): no longer a fold
@@ -242,12 +223,10 @@ class ColumnarScanSpec extends SparkSuite {
     BucketStore.setDmlMode("colr_vmor", BucketStore.MergeOnRead)
     spark.sql("DELETE FROM graft.colr_vmor WHERE k % 16 = 0")
     spark.sql("UPDATE graft.colr_vmor SET x = x + 1000 WHERE k % 16 = 1")
-    val want = spark.read.format("graft-buckets").option("table", "colr_vmor")
-      .option("columnar", "false").load().collect().map(_.toSeq).toSeq
+    val want = ScanReference.buckets(spark, "colr_vmor").flatten
     BucketStore.evictTable("colr_vmor")
     val vr1 = FileStore.vectorReads.get()
-    val got = spark.read.format("graft-buckets").option("table", "colr_vmor")
-      .option("columnar", "true").load().collect()
+    val got = spark.read.format("graft-buckets").option("table", "colr_vmor").load().collect()
     assert(got.length === 240)
     assert(got.map(_.toSeq).toSeq === want, "z-merge must match the fold, order included")
     assert(FileStore.vectorReads.get() - vr1 === 2L,
@@ -274,20 +253,15 @@ class ColumnarScanSpec extends SparkSuite {
     // place each delta row at its new sorted position, not append it
     spark.sql("UPDATE graft.colr_vmrg SET g = concat('g', CAST(CAST(k % 11 AS INT) AS STRING)) " +
       "WHERE k % 16 = 1")
-    def readM(columnar: Boolean) =
-      spark.read.format("graft-buckets").option("table", "colr_vmrg")
-        .option("columnar", columnar.toString).load()
-    BucketStore.evictTable("colr_vmrg")
+    def readM() = spark.read.format("graft-buckets").option("table", "colr_vmrg").load()
     require(BucketStore.get("colr_vmrg").mor.nonEmpty)
     // EXACT PER-PARTITION SEQUENCES, not sets: the merge order must be
     // row-for-row the fold's serving order (the scan claims cluster
     // ordering and the planner elides Sorts above it)
-    val wantSeq = readM(columnar = false).rdd
-      .mapPartitions(it => Iterator.single(it.map(_.toSeq).toVector))
-      .collect().toSeq
+    val wantSeq = ScanReference.buckets(spark, "colr_vmrg")
     BucketStore.evictTable("colr_vmrg")
     val (vr0, fr0) = (FileStore.vectorReads.get(), FileStore.filesRead.get())
-    val gotSeq = readM(columnar = true).rdd
+    val gotSeq = readM().rdd
       .mapPartitions(it => Iterator.single(it.map(_.toSeq).toVector))
       .collect().toSeq
     assert(gotSeq.map(_.size).sum === 960)
@@ -298,12 +272,9 @@ class ColumnarScanSpec extends SparkSuite {
     assert(FileStore.filesRead.get() === fr0)
     assert(BucketStore.get("colr_vmrg").buckets.loadedCount === 0)
     // the ordering claim composes: a filtered read stays merged-ordered
+    val wantF = rows(fold("colr_vmrg").filter(col("v") < 512.0))
     BucketStore.evictTable("colr_vmrg")
-    val wantF = readM(columnar = false).filter(col("v") < 512.0)
-      .collect().map(_.toSeq).toSet
-    BucketStore.evictTable("colr_vmrg")
-    val gotF = readM(columnar = true).filter(col("v") < 512.0)
-      .collect().map(_.toSeq).toSet
+    val gotF = rows(readM().filter(col("v") < 512.0))
     assert(gotF === wantF, "filtered vectorized merge must match the fold path")
     BucketStore.drop("colr_vmrg")
   }
@@ -330,18 +301,12 @@ class ColumnarScanSpec extends SparkSuite {
     // via 0/0 is not expressible in SQL literals — use v-driven picks)
     spark.sql("UPDATE graft.colr_ieee SET c = CAST('NaN' AS DOUBLE) WHERE k % 16 = 3")
     spark.sql("UPDATE graft.colr_ieee SET c = CAST('-0.0' AS DOUBLE) WHERE k % 16 = 4")
-    def readI(columnar: Boolean) =
-      spark.read.format("graft-buckets").option("table", "colr_ieee")
-        .option("columnar", columnar.toString).load()
-    BucketStore.evictTable("colr_ieee")
-    val want = readI(columnar = false).rdd
-      .mapPartitions(it => Iterator.single(it.map(r =>
-        r.toSeq.map { case d: Double => java.lang.Double.doubleToRawLongBits(d); case x => x })
-        .toVector))
-      .collect().toSet
+    val want = ScanReference.buckets(spark, "colr_ieee").map(_.map(_.map {
+      case d: Double => java.lang.Double.doubleToRawLongBits(d); case x => x
+    }).toVector).toSet
     BucketStore.evictTable("colr_ieee")
     val vr0 = FileStore.vectorReads.get()
-    val got = readI(columnar = true).rdd
+    val got = spark.read.format("graft-buckets").option("table", "colr_ieee").load().rdd
       .mapPartitions(it => Iterator.single(it.map(r =>
         r.toSeq.map { case d: Double => java.lang.Double.doubleToRawLongBits(d); case x => x })
         .toVector))
@@ -376,20 +341,14 @@ class ColumnarScanSpec extends SparkSuite {
     spark.sql(s"UPDATE graft.`$name` SET x = CAST('NaN' AS DOUBLE) WHERE k % 16 = 3")
     spark.sql(s"UPDATE graft.`$name` SET x = CAST('-0.0' AS DOUBLE) WHERE k % 16 = 4")
     spark.sql(s"UPDATE graft.`$name` SET x = CAST('Infinity' AS DOUBLE) WHERE k % 16 = 5")
-    def readZ(columnar: Boolean) =
-      spark.read.format("graft-buckets").option("table", name)
-        .option("columnar", columnar.toString).load()
-    def bitsOf(columnar: Boolean) = {
-      BucketStore.evictTable(name)
-      readZ(columnar).rdd
-        .mapPartitions(it => Iterator.single(it.map(r =>
-          r.toSeq.map { case d: Double => java.lang.Double.doubleToRawLongBits(d); case x => x })
-          .toVector))
-        .collect().toSet
-    }
-    val want = bitsOf(columnar = false)
+    def bits(r: Seq[Any]): Vector[Any] =
+      r.map { case d: Double => java.lang.Double.doubleToRawLongBits(d); case x => x }.toVector
+    val want = ScanReference.buckets(spark, name).map(_.map(bits).toVector).toSet
+    BucketStore.evictTable(name)
     val vr0 = FileStore.vectorReads.get()
-    val got = bitsOf(columnar = true)
+    val got = spark.read.format("graft-buckets").option("table", name).load().rdd
+      .mapPartitions(it => Iterator.single(it.map(r => bits(r.toSeq)).toVector))
+      .collect().toSet
     assert(got === want,
       "z-merge over IEEE specials must be bit- and order-identical to the fold")
     assert(FileStore.vectorReads.get() > vr0,
@@ -416,16 +375,10 @@ class ColumnarScanSpec extends SparkSuite {
       val updMod = 3 + rnd.nextInt(5)
       spark.sql(s"DELETE FROM graft.colr_prop WHERE k % 24 = $delMod")
       spark.sql(s"UPDATE graft.colr_prop SET c = (k * 7) % 50 WHERE k % 24 = ${delMod + updMod}")
-      def readP(columnar: Boolean) =
-        spark.read.format("graft-buckets").option("table", "colr_prop")
-          .option("columnar", columnar.toString).load()
-      BucketStore.evictTable("colr_prop")
-      val want = readP(columnar = false).rdd
-        .mapPartitions(it => Iterator.single(it.map(_.toSeq).toVector))
-        .collect().toSet
+      val want = ScanReference.buckets(spark, "colr_prop").map(_.toVector).toSet
       BucketStore.evictTable("colr_prop")
       val vr0 = FileStore.vectorReads.get()
-      val got = readP(columnar = true).rdd
+      val got = spark.read.format("graft-buckets").option("table", "colr_prop").load().rdd
         .mapPartitions(it => Iterator.single(it.map(_.toSeq).toVector))
         .collect().toSet
       assert(got === want,
@@ -445,21 +398,18 @@ class ColumnarScanSpec extends SparkSuite {
       clusterBy = Some("v"))
     BucketStore.setDmlMode("colr_vdel", BucketStore.MergeOnRead)
     spark.sql("DELETE FROM graft.colr_vdel WHERE k % 8 = 0")
-    def readD(columnar: Boolean) =
-      spark.read.format("graft-buckets").option("table", "colr_vdel")
-        .option("columnar", columnar.toString).load()
-    BucketStore.evictTable("colr_vdel")
-    val want = readD(columnar = false).collect().map(_.toSeq).toSet
+    def readD() = spark.read.format("graft-buckets").option("table", "colr_vdel").load()
+    val want = rows(fold("colr_vdel"))
     assert(want.size === 448)
     BucketStore.evictTable("colr_vdel")
     val vr0 = FileStore.vectorReads.get()
-    val got = readD(columnar = true).collect().map(_.toSeq).toSet
+    val got = rows(readD())
     assert(got === want)
     assert(FileStore.vectorReads.get() - vr0 === 2L,
       "a delete-only clustered MoR bucket must decode vectorized")
     // the ordering contract survives: rows of each bucket arrive in
     // cluster order (ascending v) with the deleted positions masked
-    val perPart = readD(columnar = true).select(col("v"))
+    val perPart = readD().select(col("v"))
       .queryExecution.toRdd.mapPartitions(it =>
         Iterator.single(it.map(_.getDouble(0)).toArray)).collect()
     perPart.foreach(a => assert(a.sameElements(a.sorted),
@@ -476,19 +426,16 @@ class ColumnarScanSpec extends SparkSuite {
     // positional deletes + delta rows (UPDATE = delete bit + delta row)
     spark.sql("DELETE FROM graft.colr_morv WHERE k % 16 = 0")
     spark.sql("UPDATE graft.colr_morv SET v = v + 10000 WHERE k % 16 = 1")
-    def readM(columnar: Boolean) =
-      spark.read.format("graft-buckets").option("table", "colr_morv")
-        .option("columnar", columnar.toString).load()
-    BucketStore.evictTable("colr_morv")
-    val want = readM(columnar = false).collect().map(_.toSeq).toSet
+    def readM() = spark.read.format("graft-buckets").option("table", "colr_morv").load()
+    val want = rows(fold("colr_morv"))
     assert(want.size === 960)
     assert(want.count(_(2).asInstanceOf[Double] >= 10000.0) === 64)
     require(BucketStore.get("colr_morv").mor.nonEmpty, "MoR state must be pending")
     BucketStore.evictTable("colr_morv")
     assert(BucketStore.get("colr_morv").buckets.loadedCount === 0)
     val (vr0, fr0) = (FileStore.vectorReads.get(), FileStore.filesRead.get())
-    val got = readM(columnar = true).collect().map(_.toSeq).toSet
-    assert(got === want, "the vectorized MoR scan must be byte-identical to the fold path")
+    val got = rows(readM())
+    assert(got === want, "the vectorized MoR scan must be byte-identical to the fold")
     assert(FileStore.vectorReads.get() - vr0 === 4L,
       "every cold NON-clustered MoR bucket must decode vectorized")
     assert(FileStore.filesRead.get() === fr0,
@@ -499,42 +446,35 @@ class ColumnarScanSpec extends SparkSuite {
     // FILTERED: base rows filter batch-side (no parquet-mr predicate —
     // the deletion bitmap is positional), delta rows filter row-side;
     // deleted rows must never resurface through either branch
-    BucketStore.evictTable("colr_morv")
-    val wantF = readM(columnar = false).filter(col("v") >= 9999.0)
-      .collect().map(_.toSeq).toSet
+    val wantF = rows(fold("colr_morv").filter(col("v") >= 9999.0))
     BucketStore.evictTable("colr_morv")
     val vrF = FileStore.vectorReads.get()
-    val gotF = readM(columnar = true).filter(col("v") >= 9999.0)
-      .collect().map(_.toSeq).toSet
-    assert(gotF === wantF, "filtered vectorized MoR must match the fold path")
+    val gotF = rows(readM().filter(col("v") >= 9999.0))
+    assert(gotF === wantF, "filtered vectorized MoR must match the fold")
     assert(gotF.size === 64, "exactly the updated delta rows match the filter")
     assert(FileStore.vectorReads.get() > vrF)
 
     // a filter selecting ONLY base survivors: delta rows all fail it
+    val wantB = rows(fold("colr_morv").filter(col("v") < 100.0 && col("m") === 3))
     BucketStore.evictTable("colr_morv")
-    val wantB = readM(columnar = false)
-      .filter(col("v") < 100.0 && col("m") === 3).collect().map(_.toSeq).toSet
-    BucketStore.evictTable("colr_morv")
-    val gotB = readM(columnar = true)
-      .filter(col("v") < 100.0 && col("m") === 3).collect().map(_.toSeq).toSet
+    val gotB = rows(readM().filter(col("v") < 100.0 && col("m") === 3))
     assert(gotB === wantB)
 
     // LIMIT composes: n live rows, never a deleted one
     BucketStore.evictTable("colr_morv")
-    val lim = readM(columnar = true).limit(50).collect().map(_.toSeq)
+    val lim = readM().limit(50).collect().map(_.toSeq)
     assert(lim.length === 50)
     assert(lim.toSet.subsetOf(want), "limited rows must be LIVE rows (no deleted resurface)")
 
     // pushed AGGREGATE over the cold MoR table: the projected fast
     // path now decodes vectorized too (order-insensitive, so even
     // clustered tables would qualify) — grouped sum equals the fold
-    BucketStore.evictTable("colr_morv")
-    val wantA = readM(columnar = false).groupBy(col("m"))
+    val wantA = fold("colr_morv").groupBy(col("m"))
       .agg(count(lit(1)).as("n"), sum(col("v")).as("s"))
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSet
     BucketStore.evictTable("colr_morv")
     val vrA = FileStore.vectorReads.get()
-    val gotA = readM(columnar = true).groupBy(col("m"))
+    val gotA = readM().groupBy(col("m"))
       .agg(count(lit(1)).as("n"), sum(col("v")).as("s"))
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getDouble(2))).toSet
     assert(gotA === wantA, "the vectorized MoR pushed aggregate must match the fold")
@@ -553,22 +493,17 @@ class ColumnarScanSpec extends SparkSuite {
         org.apache.spark.sql.types.StringType, nullable = true)))
     BucketStore.evictTable("colr_alter")
     val vr0 = FileStore.vectorReads.get()
-    val df = spark.read.format("graft-buckets").option("table", "colr_alter")
-      .option("columnar", "true").load()
-    val rows = df.collect()
-    assert(rows.length === 128)
-    assert(rows.forall(_.isNullAt(2)), "pre-ALTER rows must NULL-pad the added column")
+    val got = spark.read.format("graft-buckets").option("table", "colr_alter").load().collect()
+    assert(got.length === 128)
+    assert(got.forall(_.isNullAt(2)), "pre-ALTER rows must NULL-pad the added column")
     // round 17: the reader is initialized with the TABLE's requested
     // schema, so parquet schema evolution serves the missing column as
     // a null vector — no fallback, no row materialization
     assert(FileStore.vectorReads.get() > vr0,
       "a projected post-ALTER column must NULL-pad through the vectorized path")
     assert(BucketStore.get("colr_alter").buckets.loadedCount === 0)
-    // identical rows through the row path (option columnar=false)
-    BucketStore.evictTable("colr_alter")
-    val viaRow = spark.read.format("graft-buckets").option("table", "colr_alter")
-      .option("columnar", "false").load().collect().map(_.toSeq).toSet
-    assert(rows.map(_.toSeq).toSet === viaRow)
+    // identical rows to the store's fold, NULL-padded
+    assert(got.map(_.toSeq).toSet === rows(fold("colr_alter")))
     BucketStore.drop("colr_alter")
   }
 
@@ -584,8 +519,7 @@ class ColumnarScanSpec extends SparkSuite {
     // ALTER, where only new buckets carry the column physically
     Seq((9000L, 1.0, "s9000", "E")).toDF("k", "v", "s", "extra")
       .writeTo(s"graft.`$name`").append()
-    def rd(columnar: Boolean) = spark.read.format("graft-buckets")
-      .option("table", name).option("columnar", columnar.toString).load()
+    def rd() = spark.read.format("graft-buckets").option("table", name).load()
     // (filter, minimum buckets the zone maps cannot prune)
     val shapes: Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)] =
       Seq(
@@ -595,12 +529,11 @@ class ColumnarScanSpec extends SparkSuite {
         ("project-new-filter-old", _.filter(col("k") < 100).select(col("extra"), col("v"))),
         ("filter-new-col-eq", _.filter(col("extra") === "E")))
     shapes.foreach { case (label, shape) =>
-      BucketStore.evictTable(name)
-      val want = shape(rd(columnar = false)).collect().map(_.toSeq).toSet
+      val want = rows(shape(fold(name)))
       BucketStore.evictTable(name)
       val (vr0, fr0) = (FileStore.vectorReads.get(), FileStore.filesRead.get())
-      val got = shape(rd(columnar = true)).collect().map(_.toSeq).toSet
-      assert(got === want, s"$label: vectorized answer must be row-path identical")
+      val got = rows(shape(rd()))
+      assert(got === want, s"$label: vectorized answer must equal the fold's")
       assert(FileStore.filesRead.get() === fr0,
         s"$label: an evolved cold scan must not row-materialize any block")
       assert(FileStore.vectorReads.get() > vr0,
@@ -612,25 +545,23 @@ class ColumnarScanSpec extends SparkSuite {
     // one ALTER must not demote a single bucket to the row path
     BucketStore.evictTable(name)
     val vrAll = FileStore.vectorReads.get()
-    val rows = rd(columnar = true).filter(col("k") >= 0).collect()
-    assert(rows.length === 1025)
+    assert(rd().filter(col("k") >= 0).collect().length === 1025)
     assert(FileStore.vectorReads.get() - vrAll ===
       BucketStore.get(name).buckets.length.toLong,
       "every bucket of the evolved table must ride the vectorized path")
     // the cold PUSHED AGGREGATE path with a filter on the ADDED column:
     // pre-ALTER files serve the missing column as nulls, post-ALTER
-    // files their values — grouped sum equals the row path, cold
-    BucketStore.evictTable(name)
-    val wantAgg = rd(columnar = false).filter(col("extra").isNull)
+    // files their values — grouped sum equals the fold's, cold
+    val wantAgg = fold(name).filter(col("extra").isNull)
       .agg(count(lit(1)).as("n"), sum(col("v")).as("s"))
       .collect().map(_.toSeq).toSeq
     BucketStore.evictTable(name)
     val frAgg = FileStore.filesRead.get()
-    val gotAgg = rd(columnar = true).filter(col("extra").isNull)
+    val gotAgg = rd().filter(col("extra").isNull)
       .agg(count(lit(1)).as("n"), sum(col("v")).as("s"))
       .collect().map(_.toSeq).toSeq
     assert(gotAgg === wantAgg,
-      "the cold pushed aggregate filtered on the ADDED column must match the row path")
+      "the cold pushed aggregate filtered on the ADDED column must match the fold")
     assert(FileStore.filesRead.get() === frAgg,
       "the evolved cold aggregate must not row-materialize any block")
     assert(BucketStore.get(name).buckets.loadedCount === 0)
@@ -679,38 +610,33 @@ class ColumnarScanSpec extends SparkSuite {
     }.toDF("k", "price", "v")
       .withColumn("price", col("price").cast(DecimalType(18, 2)))
     BucketStore.load(spark, name, df, "k", 4, clusterBy = Some("price"))
-    def rd(columnar: Boolean) = spark.read.format("graft-buckets").option("table", name)
-      .option("columnar", columnar.toString).load()
+    def rd() = spark.read.format("graft-buckets").option("table", name).load()
     // clean cold scan: vectorized, byte-identical, zero faults
-    BucketStore.evictTable(name)
-    val want = rd(columnar = false).collect().map(_.toSeq).toSet
+    val want = rows(fold(name))
     BucketStore.evictTable(name)
     val (vr0, fr0) = (FileStore.vectorReads.get(), FileStore.filesRead.get())
-    val got = rd(columnar = true).collect().map(_.toSeq).toSet
+    val got = rows(rd())
     assert(got === want)
     assert(FileStore.vectorReads.get() - vr0 === 4L, "every bucket must decode vectorized")
     assert(FileStore.filesRead.get() === fr0)
     assert(BucketStore.get(name).buckets.loadedCount === 0)
     // pushed DECIMAL comparison through the compiled vector evaluator
-    BucketStore.evictTable(name)
     val cut = new java.math.BigDecimal("250.00")
-    val wantF = rd(columnar = false).filter(col("price") > cut).collect().map(_.toSeq).toSet
+    val wantF = rows(fold(name).filter(col("price") > cut))
     BucketStore.evictTable(name)
     val vrF = FileStore.vectorReads.get()
-    val gotF = rd(columnar = true).filter(col("price") > cut).collect().map(_.toSeq).toSet
-    assert(gotF === wantF, "a pushed decimal filter must match the row path")
+    val gotF = rows(rd().filter(col("price") > cut))
+    assert(gotF === wantF, "a pushed decimal filter must match the fold")
     assert(FileStore.vectorReads.get() > vrF, "the filtered decimal scan must stay vectorized")
     // DECIMAL-clustered MoR with live delta: the sorted merge compares
     // vector decimals against external BigDecimals (scale-insensitive)
     BucketStore.setDmlMode(name, BucketStore.MergeOnRead)
     spark.sql(s"DELETE FROM graft.`$name` WHERE k % 16 = 2")
     spark.sql(s"UPDATE graft.`$name` SET price = CAST('999.99' AS DECIMAL(18,2)) WHERE k % 16 = 3")
-    BucketStore.evictTable(name)
-    val wantM = rd(columnar = false).rdd
-      .mapPartitions(it => Iterator.single(it.map(_.toSeq).toVector)).collect().toSet
+    val wantM = ScanReference.buckets(spark, name).map(_.toVector).toSet
     BucketStore.evictTable(name)
     val vrM = FileStore.vectorReads.get()
-    val gotM = rd(columnar = true).rdd
+    val gotM = rd().rdd
       .mapPartitions(it => Iterator.single(it.map(_.toSeq).toVector)).collect().toSet
     assert(gotM === wantM, "the decimal-clustered MoR merge must be order-identical to the fold")
     assert(FileStore.vectorReads.get() > vrM)
@@ -735,23 +661,21 @@ class ColumnarScanSpec extends SparkSuite {
         (i.toLong, java.math.BigDecimal.valueOf((i * 2654435761L) % 1000000L, 2))
       }.toDF("k", "price").withColumn("price", col("price").cast(DecimalType(12, 2)))
       BucketStore.load(spark, name, df, "k", 2, clusterBy = Some("price"))
-      def rd(columnar: Boolean) = spark.read.format("graft-buckets").option("table", name)
-        .option("columnar", columnar.toString).load()
+      def rd() = spark.read.format("graft-buckets").option("table", name).load()
       // control: an unfiltered cold sweep decodes every row group
       // (collect, not count — count() is served stats-only)
       BucketStore.evictTable(name)
       val rd0 = FileStore.vectorRowsDecoded.get()
-      assert(rd(columnar = true).collect().length === n)
+      assert(rd().collect().length === n)
       val fullDecoded = FileStore.vectorRowsDecoded.get() - rd0
       assert(fullDecoded >= n.toLong, s"control sweep must decode all rows, got $fullDecoded")
       // selective range on the cluster column: ~1% of values
       val cut = new java.math.BigDecimal("100.00")
-      BucketStore.evictTable(name)
-      val want = rd(columnar = false).filter(col("price") < cut).collect().map(_.toSeq).toSet
+      val want = rows(fold(name).filter(col("price") < cut))
       BucketStore.evictTable(name)
       val (vr1, rd1) = (FileStore.vectorReads.get(), FileStore.vectorRowsDecoded.get())
-      val got = rd(columnar = true).filter(col("price") < cut).collect().map(_.toSeq).toSet
-      assert(got === want, "the pruned decimal scan must match the row path exactly")
+      val got = rows(rd().filter(col("price") < cut))
+      assert(got === want, "the pruned decimal scan must match the fold exactly")
       assert(FileStore.vectorReads.get() - vr1 >= 2L,
         "the decimal-predicated scan must stay vectorized (a rejected parquet " +
           "predicate would demote it)")
@@ -761,14 +685,11 @@ class ColumnarScanSpec extends SparkSuite {
       // decimal IN: the >32-literal list keeps a min/max row-group
       // bound and the unscaled set probe enforces exact membership
       val lits = (0 until 64).map(j => java.math.BigDecimal.valueOf(j * 100L + 25L, 2))
-      BucketStore.evictTable(name)
-      val wantIn = rd(columnar = false).filter(col("price").isin(lits: _*))
-        .collect().map(_.toSeq).toSet
+      val wantIn = rows(fold(name).filter(col("price").isin(lits: _*)))
       BucketStore.evictTable(name)
       val (vr2, rd2) = (FileStore.vectorReads.get(), FileStore.vectorRowsDecoded.get())
-      val gotIn = rd(columnar = true).filter(col("price").isin(lits: _*))
-        .collect().map(_.toSeq).toSet
-      assert(gotIn === wantIn, "the decimal In probe must match the row path exactly")
+      val gotIn = rows(rd().filter(col("price").isin(lits: _*)))
+      assert(gotIn === wantIn, "the decimal In probe must match the fold exactly")
       assert(FileStore.vectorReads.get() - vr2 >= 2L)
       assert(FileStore.vectorRowsDecoded.get() - rd2 < n.toLong / 4,
         "the In range bound must keep pruning row groups")
@@ -790,34 +711,34 @@ class ColumnarScanSpec extends SparkSuite {
         Array.tabulate[Byte](8 + i % 64)(j => ((i * 31 + j) % 251).toByte), i % 7)
     }.toDF("k", "content", "g")
     BucketStore.load(spark, "colr_bin", df, "k", 4)
-    def snap(columnar: Boolean, g: Option[Int] = None) = {
-      val base = spark.read.format("graft-buckets").option("table", "colr_bin")
-        .option("columnar", columnar.toString).load()
-      g.fold(base)(x => base.filter(col("g") === x)).collect()
-        .map(r => (r.getLong(0),
-          Option(r.getAs[Array[Byte]]("content")).map(_.toSeq), r.getInt(2))).toSet
+    def snapOf(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), Option(r.getAs[Array[Byte]]("content")).map(_.toSeq), r.getInt(2)))
+      .toSet
+    def snap(g: Option[Int] = None) = {
+      val base = spark.read.format("graft-buckets").option("table", "colr_bin").load()
+      snapOf(g.fold(base)(x => base.filter(col("g") === x)))
     }
-    val want = snap(columnar = false)
+    val want = snapOf(fold("colr_bin"))
     assert(want.size === 2048 && want.exists(_._2.isEmpty))
 
     // cold sweep: fully vectorized, zero row-materialized blocks, zero heap faults
     BucketStore.evictTable("colr_bin")
     val (vr0, fr0) = (FileStore.vectorReads.get(), FileStore.filesRead.get())
-    assert(snap(columnar = true) === want,
-      "the vectorized binary path must be byte-identical to the row path")
+    assert(snap() === want,
+      "the vectorized binary path must be byte-identical to the fold")
     assert(FileStore.vectorReads.get() - vr0 >= 4L,
       "every cold bucket of a binary projection must take the vectorized path")
     assert(FileStore.filesRead.get() === fr0,
       "a binary projection must not row-materialize any block")
     assert(BucketStore.get("colr_bin").buckets.loadedCount === 0)
-    val plan = spark.read.format("graft-buckets").option("table", "colr_bin")
-      .option("columnar", "true").load().queryExecution.executedPlan.toString
+    val plan = spark.read.format("graft-buckets").option("table", "colr_bin").load()
+      .queryExecution.executedPlan.toString
     assert(plan.contains("ColumnarToRow"), "binary projections now plan columnar")
 
     // a filtered scan carries binary through the compaction copier
     BucketStore.evictTable("colr_bin")
     val fr1 = FileStore.filesRead.get()
-    assert(snap(columnar = true, g = Some(3)) === want.filter(_._3 === 3))
+    assert(snap(g = Some(3)) === want.filter(_._3 === 3))
     assert(FileStore.filesRead.get() === fr1, "filtered binary scan stays vectorized")
 
     // merge-on-read state (deleted mask + delta rows holding binary)
@@ -825,11 +746,11 @@ class ColumnarScanSpec extends SparkSuite {
     BucketStore.setDmlMode("colr_bin", BucketStore.MergeOnRead)
     BucketStore.deleteWhere("colr_bin", _.getLong(0) % 10 == 1L)
     spark.sql("UPDATE graft.colr_bin SET g = 99 WHERE k % 50 = 2")
-    val wantMor = snap(columnar = false)
+    val wantMor = snapOf(fold("colr_bin"))
     assert(wantMor.exists(_._3 == 99) && !wantMor.exists(_._1 == 1L))
     BucketStore.evictTable("colr_bin")
     val (vr2, fr2) = (FileStore.vectorReads.get(), FileStore.filesRead.get())
-    assert(snap(columnar = true) === wantMor,
+    assert(snap() === wantMor,
       "binary MoR overlay must match the fold exactly")
     assert(FileStore.vectorReads.get() - vr2 > 0L)
     assert(FileStore.filesRead.get() === fr2)
@@ -840,9 +761,8 @@ class ColumnarScanSpec extends SparkSuite {
     BucketStore.drop("colr_arr")
     BucketStore.load(spark, "colr_arr",
       Seq((1L, Seq(1.0, 2.0)), (2L, Seq(3.0))).toDF("k", "arr"), "k", 2)
-    val df = spark.read.format("graft-buckets").option("table", "colr_arr")
-      .option("columnar", "true").load()
-    // ArrayType has no vector filler: supportColumnarReads says no and
+    val df = spark.read.format("graft-buckets").option("table", "colr_arr").load()
+    // ArrayType has no row-backed vector: supportColumnarReads says no and
     // the scan runs row-at-a-time — same rows, no ColumnarToRow
     assert(!df.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
     assert(df.collect().map(_.getLong(0)).sorted.toSeq === Seq(1L, 2L))

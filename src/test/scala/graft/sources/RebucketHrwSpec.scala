@@ -186,6 +186,18 @@ class RebucketHrwSpec extends SparkSuite {
     }
   }
 
+  test("a copy-on-write UPDATE on an HRW table keeps every row in its HRW bucket") {
+    mk("hrw_cow", 200, 8)
+    BucketStore.rebucket("hrw_cow", 8, hrw = true)
+    spark.sql("UPDATE graft.hrw_cow SET tag = 'u' WHERE k % 10 = 3")
+    val t = BucketStore.get("hrw_cow")
+    t.buckets.indices.foreach(b => t.buckets(b).foreach(r => assert(hrwOf(r.getLong(0), 8) === b)))
+    // a point lookup prunes to the key's HRW bucket and finds the row
+    assert(spark.sql("SELECT tag FROM graft.hrw_cow WHERE k = 13").collect().map(_.getString(0))
+      .toSeq === Seq("u"))
+    assert(spark.table("graft.hrw_cow").count() === 200L)
+  }
+
   test("STRING keys: route, point-lookup prune to one bucket, and HRW-grow legally — both layouts") {
     val name = "str_key"
     BucketStore.drop(name)

@@ -161,8 +161,7 @@ class RowViewSpec extends SparkSuite {
     val padded = BucketStore.pad(stored(0), 3)
     assert(padded.length === 3 && padded.isNullAt(2))
     assert(padded === Row(stored(0).getLong(0), stored(0).getDouble(1), null))
-    val got = spark.read.format("graft-buckets").option("table", name)
-      .option("columnar", "false").load().collect()
+    val got = spark.read.format("graft-buckets").option("table", name).load().collect()
     assert(got.length === 200 && got.forall(_.isNullAt(2)))
     assert(got.map(r => (r.getLong(0), r.getDouble(1))).toSet ===
       (1 to 200).map(i => (i.toLong, i * 0.5)).toSet)
@@ -182,8 +181,7 @@ class RowViewSpec extends SparkSuite {
     assert(allViews(), "the payload decoder must hand out views")
     BucketStore.evictTable(name)
     assert(BucketStore.get(name).buckets.loadedCount === 0)
-    assert(spark.read.format("graft-buckets").option("table", name)
-      .option("columnar", "false").load().collect().length === 3000)
+    assert(ScanReference.loadingScan(spark, name).collect().length === 3000)
     assert(BucketStore.get(name).buckets.loadedCount === 4)
     assert(allViews(), "the block-file decoder must hand out views")
     BucketStore.drop(name)
