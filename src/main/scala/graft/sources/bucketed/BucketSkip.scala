@@ -466,7 +466,8 @@ object BucketSkip {
     * additionally requires a null-free column (`nullCount == 0`).
     * Bounds proofs use the same [[KeyOrder]] total order the
     * row-level filter uses — NaN-as-largest included — so a proof here
-    * can never disagree with [[FilterEval.eval]] on any row.
+    * can never disagree with the pushed filter ([[VectorFilterEval]])
+    * on any row.
     *
     * Parts compose by CONJUNCTION (every part must be fully covered —
     * base and merge-on-read delta alike); a statistics-over-physical-

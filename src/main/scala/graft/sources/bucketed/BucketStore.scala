@@ -2424,10 +2424,10 @@ object BucketStore {
     }
     var deleted = 0L
     var evaluated = 0L
-    val keepFull = FilterEval.compile(schema, filters) // In probes convert once
+    val keepFull = VectorFilterEval.rows(schema, filters) // In probes convert once
     def matches(r: Row): Boolean = {
       evaluated += 1
-      keepFull(pad(r, schema.length))
+      keepFull(r)
     }
     if (dmlModeOf(name) == MergeOnRead) {
       // straddlers keep the O(matches)-bits publish (their BASE block
@@ -2456,7 +2456,7 @@ object BucketStore {
                   var bits: java.util.BitSet = null
                   var pos = 0
                   var dLocal = 0L
-                  val keepProj = FilterEval.compile(proj, filters)
+                  val keepProj = VectorFilterEval.rows(proj, filters)
                   val it = FileStore.readBlockProjected(bf, proj)
                   while (it.hasNext) {
                     val r = it.next()

@@ -2205,7 +2205,7 @@ object BucketedQueries {
     * its parquet block — no connection dial, no full-row
     * materialization, zero blocks resident afterwards. The filter
     * evaluates against the projected schema inside the reader
-    * ([[FilterEval]] over the pruned row shape). q258 covered the
+    * ([[VectorFilterEval]] over the projected batch). q258 covered the
     * unfiltered case; this is the everyday shape at 100 TB — a
     * predicated rollup over a cold table that never touches a
     * connection or the heap cache. The sum column is integer-valued,

@@ -9,8 +9,8 @@ import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
 /** COPY_ON_WRITE row-level operations (SQL UPDATE / MERGE INTO, and
-  * the fallback path for DELETEs whose predicate [[FilterEval]] cannot
-  * enforce store-side): the GROUP is the bucket.
+  * the fallback path for DELETEs whose predicate the store does not
+  * claim, [[VectorFilterEval.supports]]): the GROUP is the bucket.
   *
   * Spark's rewrite reads the affected rows through [[newScanBuilder]]
   * — static filter pushdown AND the runtime group-filter subquery
@@ -60,7 +60,7 @@ class BucketedRowLevelOperation(name: String, cmd: RowLevelOperation.Command)
         */
       override def pushFilters(filters: Array[org.apache.spark.sql.sources.Filter])
           : Array[org.apache.spark.sql.sources.Filter] = {
-        pruneFilters = filters.filter(FilterEval.supports(
+        pruneFilters = filters.filter(VectorFilterEval.supports(
           BucketStore.getWithRetry(name).schema, _))
         filters // ALL residual — Spark re-evaluates every one
       }

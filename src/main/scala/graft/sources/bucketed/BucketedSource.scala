@@ -262,13 +262,14 @@ class BucketedTable(name: String, opts: ConnectorOptions = ConnectorOptions.Defa
       new BucketedDeltaOperationBuilder(name, info)
     else new BucketedRowLevelOperationBuilder(name, info)
 
-  /** `DELETE FROM graft.t WHERE …`: accepted only when [[FilterEval]]
-    * enforces the whole predicate exactly (same supports/eval lockstep
-    * as the read path) — Spark falls back with a clear error
-    * otherwise. Executes store-side per bucket under one new version.
+  /** `DELETE FROM graft.t WHERE …`: accepted only when the store
+    * claims every conjunct ([[VectorFilterEval.supports]], the read
+    * path's claim rule) and so enforces the whole predicate exactly —
+    * Spark falls back to the copy-on-write rewrite otherwise. Executes
+    * store-side per bucket under one new version.
     */
   override def canDeleteWhere(filters: Array[org.apache.spark.sql.sources.Filter]): Boolean =
-    filters.forall(FilterEval.supports(t.schema, _))
+    filters.forall(VectorFilterEval.supports(t.schema, _))
 
   /** Statistics-driven: buckets the zone maps prove fully-covered drop
     * whole (no row read), provably-untouched buckets keep their
@@ -382,7 +383,7 @@ class BucketedTable(name: String, opts: ConnectorOptions = ConnectorOptions.Defa
   }
 }
 
-/** Pushdown: accepts the filter subset [[FilterEval]] can enforce
+/** Pushdown: accepts the filter subset [[VectorFilterEval]] enforces
   * exactly; everything else is left for Spark to evaluate post-scan.
   * Aggregates (COUNT/MIN/MAX, optionally grouped) push down as
   * PARTIALS — the reference pins buckets to push computation to the
@@ -417,7 +418,7 @@ class BucketedScanBuilder(name: String, opts: ConnectorOptions = ConnectorOption
   private var sample: Option[SampleSpec] = None
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (supported, rejected) = filters.partition(FilterEval.supports(full, _))
+    val (supported, rejected) = filters.partition(VectorFilterEval.supports(full, _))
     pushed = supported
     rejected
   }
@@ -1093,10 +1094,9 @@ class BucketedAggPartitionReader(p: BucketInputPartition, spec: AggSpec,
     // EXACTLY its input columns — aggregate inputs PLUS the filters'
     // referenced columns — from the parquet block: no connection dial,
     // no full-row materialization, no heap-cache fault. Pushed filters
-    // evaluate against the projected schema ([[FilterEval]] takes an
-    // arbitrary schema), and plan-time zone-map pruning
-    // ([[BucketSplits.plan]]) already dropped buckets that provably
-    // hold no match. A bucket with pending merge-on-read state folds
+    // evaluate against the projected schema, and plan-time zone-map
+    // pruning ([[BucketSplits.plan]]) already dropped buckets that
+    // provably hold no match. A bucket with pending merge-on-read state folds
     // INLINE: the deletion bitmap is positional and the projected
     // stream preserves file order, so deleted positions drop as they
     // pass, and the delta rows (always in heap — they load eagerly at
@@ -1104,8 +1104,7 @@ class BucketedAggPartitionReader(p: BucketInputPartition, spec: AggSpec,
     // is the SUM/group-by analog of the stats-served fast path above:
     // at 100 TB, `SELECT grp, sum(x) WHERE region = 'EU'` on a cold
     // table decodes grp, x, and region — nothing else, through no
-    // connection, write-heavy MoR tables included. Any open failure
-    // falls through loudly-cheaply to the connection path.
+    // connection, write-heavy MoR tables included.
     if (!p.prunedEmpty) {
       val blk = table.buckets.block(p.bucket)
       val morState = table.mor.get(p.bucket)
@@ -1142,7 +1141,7 @@ class BucketedAggPartitionReader(p: BucketInputPartition, spec: AggSpec,
             locally {
               val overlay = morState.map { m =>
                 (m.deleted, m.liveDelta(blk.rowCount, fullSchema.length)
-                  .filter(FilterEval.compile(fullSchema, filters)))
+                  .filter(VectorFilterEval.rows(fullSchema, filters)))
               }
               VectorizedColdScan.open(f.path, fullSchema, proj, filters, 4096,
                 overlay = overlay) match {
@@ -1167,31 +1166,25 @@ class BucketedAggPartitionReader(p: BucketInputPartition, spec: AggSpec,
                     // batch evaluator — no re-check
                     return aggregateRows(rows, proj)
                   } finally scan.close()
-                case None => () // unsupported pairing: record reader below
+                // a projected type without a RowColumnVector (a nested
+                // column, read under filters or a MoR overlay) or a
+                // reader that failed to open: the record reader below
+                case None => ()
               }
             }
-            try {
-              val base0 = FileStore.readBlockProjected(f, proj)
-              val base = morState match {
-                case Some(m) => base0.zipWithIndex.collect {
-                  case (r, pos) if !m.deleted.get(pos) => r
-                }
-                case None => base0
+            val base0 = FileStore.readBlockProjected(f, proj)
+            val base = morState match {
+              case Some(m) => base0.zipWithIndex.collect {
+                case (r, pos) if !m.deleted.get(pos) => r
               }
-              val all = base ++ deltaRows(blk.rowCount)
-              val kept =
-                if (filters.isEmpty) all
-                else all.filter(FilterEval.compile(proj, filters))
-              return aggregateRows(kept, proj)
-            } catch { case scala.util.control.NonFatal(_) => () }
+              case None => base0
+            }
+            val all = base ++ deltaRows(blk.rowCount)
+            return aggregateRows(all.filter(VectorFilterEval.rows(proj, filters)), proj)
           case None if blk.rowCount == 0 && blk.file.isDefined =>
             // manifest-only empty base: only the (possibly empty)
             // delta contributes
-            val live = deltaRows(0)
-            val kept =
-              if (filters.isEmpty) live
-              else live.filter(FilterEval.compile(proj, filters))
-            return aggregateRows(kept, proj)
+            return aggregateRows(deltaRows(0).filter(VectorFilterEval.rows(proj, filters)), proj)
           case None => ()
         }
       }
@@ -1203,7 +1196,7 @@ class BucketedAggPartitionReader(p: BucketInputPartition, spec: AggSpec,
         (null, RowCursor.over(Iterator.empty)) // empty aggregate, read nothing
       else BucketReaderSupport.openWithFailover(p, fetchSize, range, blockFilters = filters)
     conn = c
-    aggregateRows(rows.filter(FilterEval.compile(fullSchema, filters)), fullSchema)
+    aggregateRows(rows.filter(VectorFilterEval.rows(fullSchema, filters)), fullSchema)
   }
 
   /** Fold `rows` (already filtered, at `schema` arity) into the pushed
@@ -1607,7 +1600,7 @@ private[bucketed] final class BucketRowStream(p: BucketInputPartition,
     conn = c
     // pushed TABLESAMPLE evaluates here, before limit/top-N, so both
     // apply to the sampled stream (the plan order they replaced)
-    val pred = FilterEval.compile(fullSchema, filters)
+    val pred = VectorFilterEval.rows(fullSchema, filters)
     val keep: Row => Boolean = sample match {
       case Some(s) =>
         val keyIdx = fullSchema.fieldIndex(table.keyCol)
@@ -1727,12 +1720,15 @@ class BucketedColumnarPartitionReader(p: BucketInputPartition, required: StructT
     * scan, the dominant shape at 100 TB, no longer pays the
     * row-materializing fallback. Pushed per-bucket LIMITs ride too
     * (decode stops after n qualifying rows — a cold `LIMIT 10` reads
-    * ~one batch per bucket). Eligibility is decided at open,
-    * never mid-stream: sample/top-N pushdown, metadata columns,
-    * a Z-ordered bucket with live delta, an already-loaded block (the
-    * in-heap transpose is cheaper than re-reading the file), or a
-    * filter shape the vector evaluator can't compile falls back to
-    * the row-stream pages. PRE-ALTER FILES ARE ADMITTED: the
+    * ~one batch per bucket). Eligibility is decided at open, never
+    * mid-stream, and never by a filter's shape: every claimed filter
+    * compiles. The row-stream pages serve sample/top-N pushdown,
+    * metadata columns, an empty projection, an already-loaded block
+    * (its pages are views of the rows in the heap), a bucket with no
+    * block file, and the declines of [[VectorizedColdScan.open]]: a
+    * projected type with no [[RowColumnVector]] under filters, a limit
+    * or an overlay, a merge key without a vector compare, and a reader
+    * that fails to open. PRE-ALTER FILES ARE ADMITTED: the
     * reader initializes with the TABLE's requested schema, so parquet
     * schema evolution serves a column the file lacks as a null
     * vector — the NULL-pad contract at vector speed — and one
@@ -1775,7 +1771,7 @@ class BucketedColumnarPartitionReader(p: BucketInputPartition, required: StructT
         // filters see every referenced column
         val overlay = morState.map { m =>
           (m.deleted, m.liveDelta(blk.rowCount, t.schema.length)
-            .filter(FilterEval.compile(t.schema, filters)))
+            .filter(VectorFilterEval.rows(t.schema, filters)))
         }
         val merging = morState.exists(_.liveDelta(blk.rowCount, t.schema.length).hasNext)
         val mergeCols = if (lexCols.nonEmpty && merging) lexCols else Seq.empty[String]
@@ -1839,7 +1835,7 @@ class BucketedColumnarPartitionReader(p: BucketInputPartition, required: StructT
 private[bucketed] final class VectorizedColdScan(
     reader: org.apache.spark.sql.execution.datasources.parquet.VectorizedParquetRecordReader,
     readStruct: StructType, required: StructType,
-    filterFn: (org.apache.spark.sql.vectorized.ColumnarBatch, Int) => Boolean,
+    filterFn: KeyOrder.BatchTest,
     batchSize: Int, limit: Option[Int],
     // merge-on-read overlay (round 17): `deleted` masks base rows by
     // FILE position (null ⇔ no positional deletes — the caller passes
@@ -2103,11 +2099,15 @@ private[bucketed] object VectorizedColdScan {
   import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
   import org.apache.spark.sql.vectorized.ColumnVector
 
-  /** Open the vectorized reader over one block file, or None when the
-    * projection/filter set is outside this path's reach (the row path
-    * serves it). On ANY init failure the partially-initialized reader
-    * is CLOSED before falling back — a dropped open parquet reader
-    * leaks its input stream.
+  /** Open the vectorized reader over one block file, or None (the row
+    * path serves it) when: filters, a limit or an overlay need the
+    * compaction copiers and a projected type has no [[RowColumnVector]]
+    * (a nested type); a merge column has no vector compare, or a z
+    * dimension no vector key; or the reader fails to initialize. The
+    * filters are claimed ones ([[VectorFilterEval.supports]]), so they
+    * always compile. On ANY init failure the partially-initialized
+    * reader is CLOSED before falling back — a dropped open parquet
+    * reader leaks its input stream.
     */
   def open(path: String, fullSchema: StructType, required: StructType,
       filters: Array[Filter], batchSize: Int,
@@ -2151,13 +2151,11 @@ private[bucketed] object VectorizedColdScan {
       else StructType(required.fields ++ extras.map(fullSchema(_)))
     val filterFn =
       if (filters.isEmpty) null
-      else VectorFilterEval.compile(readStruct, filters).orNull
-    // filters must compile; filters OR a limit need the compaction
-    // copiers (a truncated/partial batch re-materializes into the
-    // output vectors)
-    if ((filters.nonEmpty && filterFn == null) ||
-      ((filters.nonEmpty || limit.nonEmpty || overlay.nonEmpty) &&
-        !required.fields.forall(f => RowColumnVector.supported(f.dataType))))
+      else VectorFilterEval.compile(readStruct, filters)
+    // filters, a limit or an overlay need the compaction copiers (a
+    // truncated/partial batch re-materializes into the output vectors)
+    if ((filters.nonEmpty || limit.nonEmpty || overlay.nonEmpty) &&
+      !required.fields.forall(f => RowColumnVector.supported(f.dataType)))
       return None
     // sorted-merge machinery: the cluster order between a base row's
     // vectors and a delta row. A key column without a vector compare
@@ -2363,327 +2361,6 @@ private[bucketed] object VectorizedColdScan {
       case dt: DecimalType =>
         (s, sr, d, dr) => d.putDecimal(dr, s.getDecimal(sr, dt.precision, dt.scale), dt.precision)
       case other => throw new IllegalStateException(s"no vector copier for $other")
-    }
-  }
-}
-
-/** Exact evaluation of the pushed-down filter subset over external
-  * rows: comparisons on int/long/double/string/timestamp, null checks,
-  * IN, string predicates, AND/OR/NOT. [[compile]] is the one row
-  * evaluator: a filter is claimed (`supports`) only if `compile` has a
-  * case for it, and `compile` throws on any other shape.
-  *
-  * Evaluation is TRI-STATE (`True`, `False`, `Unknown` = SQL
-  * unknown) with Kleene connective semantics, because Spark trusts a
-  * claimed filter completely — there is no residual Filter re-check
-  * above this scan (that absence is exactly what the q27 plan audit
-  * asserts). A boolean evaluator here silently broke `NOT` over NULLs:
-  * `Not(EqualTo(c, v))` on a NULL `c` evaluated `!false = true` and
-  * EMITTED the row, where SQL's unknown must DROP it. Unknown
-  * propagates through NOT (¬unknown = unknown), AND (false dominates),
-  * and OR (true dominates), and only a final `True` keeps a row.
-  *
-  * Each leaf resolves its column index and its comparator once, when
-  * the scan compiles its filters; a row then runs with no name lookup
-  * and no allocation. Comparisons are the column type's
-  * [[KeyOrder.of]], the order the store sorts and prunes by; a
-  * primitive column against a literal of its own class compares
-  * through the row's typed getter ([[KeyOrder.cellVs]]), boxing
-  * nothing.
-  */
-object FilterEval {
-  import org.apache.spark.sql.catalyst.util.DateTimeUtils
-  import org.apache.spark.sql.types._
-
-  // outcomes of a compiled predicate (VectorFilterEval.Pred's encoding)
-  private final val True = 1
-  private final val False = 0
-  private final val Unknown = -1
-
-  /** A compiled three-valued predicate over one external row. */
-  private trait Pred3 { def apply(r: Row): Int }
-
-  /** A non-null cell of a row as a long, read with no box. */
-  private trait LongCell { def apply(r: Row): Long }
-
-  def supports(schema: StructType, f: Filter): Boolean = f match {
-    case EqualTo(c, v) => comparable(schema, c, v)
-    case EqualNullSafe(c, v) => comparable(schema, c, v)
-    case GreaterThan(c, v) => comparable(schema, c, v)
-    case GreaterThanOrEqual(c, v) => comparable(schema, c, v)
-    case LessThan(c, v) => comparable(schema, c, v)
-    case LessThanOrEqual(c, v) => comparable(schema, c, v)
-    case IsNull(c) => schema.fieldNames.contains(c)
-    case IsNotNull(c) => schema.fieldNames.contains(c)
-    case In(c, vs) => vs.forall(comparable(schema, c, _))
-    case StringStartsWith(c, _) => stringCol(schema, c)
-    case StringEndsWith(c, _) => stringCol(schema, c)
-    case StringContains(c, _) => stringCol(schema, c)
-    case AlwaysTrue() | AlwaysFalse() => true
-    case And(l, r) => supports(schema, l) && supports(schema, r)
-    case Or(l, r) => supports(schema, l) && supports(schema, r)
-    case Not(x) => supports(schema, x)
-    case _ => false
-  }
-
-  /** A comparison is claimed only when the column's order compares the
-    * literal: the column TYPE decides as much as the literal's class (an
-    * Int literal on a BOOLEAN, BINARY or STRING column stays with
-    * Spark's post-scan Filter).
-    */
-  private def comparable(schema: StructType, c: String, v: Any): Boolean =
-    schema.fieldNames.contains(c) && KeyOrder.compares(schema(c).dataType, v)
-
-  private def stringCol(schema: StructType, c: String): Boolean =
-    schema.fieldNames.contains(c) &&
-      schema(c).dataType == org.apache.spark.sql.types.StringType
-
-  /** True iff the filter definitely holds: SQL WHERE keeps a row only
-    * when the predicate is true, so unknown drops it.
-    */
-  def eval(schema: StructType, f: Filter, row: Row): Boolean =
-    compile(schema, Array(f))(row)
-
-  /** The conjunction of `filters`, compiled once for a per-row loop: a
-    * row passes only when every conjunct is true.
-    */
-  def compile(schema: StructType, filters: Array[Filter]): Row => Boolean = {
-    val fs = filters.map(compileOne(schema, _))
-    fs.length match {
-      case 0 => _ => true
-      case 1 => val f0 = fs(0); r => f0(r) == True
-      case n => r => {
-        var i = 0
-        while (i < n && fs(i)(r) == True) i += 1
-        i == n
-      }
-    }
-  }
-
-  // a comparison operator is the mask of the comparison signs it admits
-  private final val Lt = 1
-  private final val Eq = 2
-  private final val Gt = 4
-
-  private def signBit(c: Int): Int = if (c < 0) Lt else if (c == 0) Eq else Gt
-
-  private def bool(b: Boolean): Int = if (b) True else False
-
-  private def compileOne(schema: StructType, f: Filter): Pred3 = f match {
-    case EqualTo(c, v) => comparison(schema, c, v, Eq, nullSafe = false)
-    // <=> is the one comparison that is never unknown: NULL <=> x is
-    // definitively false (true only if the literal were null, which
-    // Catalyst rewrites to IsNull before pushdown)
-    case EqualNullSafe(c, v) => comparison(schema, c, v, Eq, nullSafe = true)
-    case GreaterThan(c, v) => comparison(schema, c, v, Gt, nullSafe = false)
-    case GreaterThanOrEqual(c, v) => comparison(schema, c, v, Gt | Eq, nullSafe = false)
-    case LessThan(c, v) => comparison(schema, c, v, Lt, nullSafe = false)
-    case LessThanOrEqual(c, v) => comparison(schema, c, v, Lt | Eq, nullSafe = false)
-    case IsNull(c) =>
-      val i = schema.fieldIndex(c)
-      r => bool(r.isNullAt(i))
-    case IsNotNull(c) =>
-      val i = schema.fieldIndex(c)
-      r => bool(!r.isNullAt(i))
-    case In(c, vs) => in(schema, c, vs)
-    case StringStartsWith(c, v) => string(schema, c)(_.startsWith(v))
-    case StringEndsWith(c, v) => string(schema, c)(_.endsWith(v))
-    case StringContains(c, v) => string(schema, c)(_.contains(v))
-    case AlwaysTrue() => _ => True
-    case AlwaysFalse() => _ => False
-    case And(l, r) =>
-      val lf = compileOne(schema, l)
-      val rf = compileOne(schema, r)
-      row => {
-        val a = lf(row)
-        if (a == False) False
-        else {
-          val b = rf(row)
-          if (b == False) False else if (a == True && b == True) True else Unknown
-        }
-      }
-    case Or(l, r) =>
-      val lf = compileOne(schema, l)
-      val rf = compileOne(schema, r)
-      row => {
-        val a = lf(row)
-        if (a == True) True
-        else {
-          val b = rf(row)
-          if (b == True) True else if (a == False && b == False) False else Unknown
-        }
-      }
-    case Not(x) =>
-      val xf = compileOne(schema, x)
-      row => { val a = xf(row); if (a == Unknown) Unknown else True - a }
-    case _ => throw new IllegalStateException(s"unsupported pushed filter $f")
-  }
-
-  /** `c op v`; a NULL `c` is unknown, or false under `nullSafe` (<=>). */
-  private def comparison(schema: StructType, c: String, v: Any, op: Int,
-      nullSafe: Boolean): Pred3 = {
-    val i = schema.fieldIndex(c)
-    val dt = schema(i).dataType
-    val onNull = if (nullSafe) False else Unknown
-    KeyOrder.cellVs(dt, i, v) match {
-      case Some(sign) => r => if (r.isNullAt(i)) onNull else bool((signBit(sign(r)) & op) != 0)
-      case None =>
-        val holds = valueTest(dt, v, op)
-        r => { val x = r.get(i); if (x == null) onNull else bool(holds(x)) }
-    }
-  }
-
-  /** `x op v` for the non-null values `x` of a column of type `dt`. */
-  private def valueTest(dt: DataType, v: Any, op: Int): Any => Boolean = {
-    val ord = KeyOrder.of(dt)
-    v match {
-      // String.equals decides equality exactly as the code-point compare does
-      case s: String if op == Eq => {
-        case x: String => x.equals(s)
-        case x => ord.compare(x, v) == 0
-      }
-      case _ => x => (signBit(ord.compare(x, v)) & op) != 0
-    }
-  }
-
-  /** SQL IN: true if any literal matches; if none match but the column
-    * was null, unknown. An empty list is false on every row.
-    */
-  private def in(schema: StructType, c: String, vs: Array[Any]): Pred3 = {
-    val i = schema.fieldIndex(c)
-    val dt = schema(i).dataType
-    // tiny lists: dispatch cost ≈ probe cost
-    (if (vs.length > 4) inProbeExternal(dt, i, vs) else None) match {
-      case Some(probe) => probe
-      case None if vs.isEmpty => _ => False
-      case None =>
-        val signs = vs.map(KeyOrder.cellVs(dt, i, _))
-        if (signs.forall(_.isDefined)) {
-          val typed = signs.map(_.get)
-          r => if (r.isNullAt(i)) Unknown else {
-            var k = 0
-            while (k < typed.length && typed(k)(r) != 0) k += 1
-            bool(k < typed.length)
-          }
-        } else {
-          val tests = vs.map(valueTest(dt, _, Eq))
-          r => {
-            val x = r.get(i)
-            if (x == null) Unknown
-            else {
-              var k = 0
-              while (k < tests.length && !tests(k)(x)) k += 1
-              bool(k < tests.length)
-            }
-          }
-        }
-    }
-  }
-
-  private def string(schema: StructType, c: String)(p: String => Boolean): Pred3 = {
-    val i = schema.fieldIndex(c)
-    r => { val x = r.get(i); if (x == null) Unknown else bool(p(x.asInstanceOf[String])) }
-  }
-
-  /** External-value membership probe over a pre-converted canonical
-    * key set (round 19), the external-value flavor of
-    * [[VectorFilterEval.inProbe]]: `In` literal lists convert ONCE into
-    * a sorted canonical-key array / hash set instead of paying a
-    * per-literal compare — and, for a mixed-width pair, TWO BigDecimal
-    * constructions — per row. None when any literal/type pairing falls
-    * outside the canonicalizer; the per-literal test keeps exactness
-    * then. Canonical keys mirror [[KeyOrder]] equality: dates/
-    * timestamps through epoch days/micros ([[KeyOrder.internal]]),
-    * floats through [[VectorFilterEval.canonicalBits]] (-0.0 == 0.0,
-    * NaN == NaN), compact decimals through the unscaled long at the
-    * column scale (an unrepresentable literal matches nothing and
-    * simply leaves the set).
-    */
-  private def inProbeExternal(dt: DataType, i: Int, vs: Array[Any]): Option[Pred3] = {
-    def longProbe(lit: Any => Option[Long], get: LongCell): Option[Pred3] = {
-      val conv = vs.map(lit)
-      if (conv.contains(None)) None
-      else {
-        val arr: Array[Long] = conv.map(_.get).distinct.sorted
-        Some(r => if (r.isNullAt(i)) Unknown
-        else bool(java.util.Arrays.binarySearch(arr, get(r)) >= 0))
-      }
-    }
-    val integral: Any => Option[Long] = {
-      case x: java.lang.Byte => Some(x.longValue)
-      case x: java.lang.Short => Some(x.longValue)
-      case x: java.lang.Integer => Some(x.longValue)
-      case x: java.lang.Long => Some(x.longValue)
-      case _ => None // fractional literals keep the order's BigDecimal exactness
-    }
-    // the probe key of a vector form: floats by their canonical bits
-    def key(n: Any): Long = n match {
-      case d: java.lang.Double => VectorFilterEval.canonicalBits(d)
-      case f: java.lang.Float => VectorFilterEval.canonicalBits(f.toDouble)
-      case x => x.asInstanceOf[Number].longValue
-    }
-    dt match {
-      case LongType => longProbe(integral, _.getLong(i))
-      case IntegerType => longProbe(integral, _.getInt(i).toLong)
-      case ShortType => longProbe(integral, _.getShort(i).toLong)
-      case ByteType => longProbe(integral, _.getByte(i).toLong)
-      // literal width must MATCH the column width (KeyOrder.internal has
-      // no form for another width): the exact order can rate a Float
-      // literal equal to a Double value the canonical bits would reject
-      // (0.1f vs 0.1d) — the mixed-width pairing stays on the exact
-      // per-literal path
-      case DoubleType =>
-        longProbe(v => Option(KeyOrder.internal(dt, v)).map(key),
-          r => VectorFilterEval.canonicalBits(r.getDouble(i)))
-      case FloatType =>
-        longProbe(v => Option(KeyOrder.internal(dt, v)).map(key),
-          r => VectorFilterEval.canonicalBits(r.getFloat(i).toDouble))
-      case DateType | TimestampType | TimestampNTZType =>
-        longProbe(v => Option(KeyOrder.internal(dt, v)).map(key),
-          r => key(KeyOrder.internal(dt, r.get(i))))
-      case dt: DecimalType if dt.precision <= Decimal.MAX_LONG_DIGITS =>
-        val conv = vs.map(v => Option(KeyOrder.internal(dt, v)).map(x =>
-          KeyOrder.unscaledExact(x.asInstanceOf[java.math.BigDecimal], dt.scale)))
-        if (conv.contains(None)) None
-        else {
-          val arr: Array[Long] = conv.flatMap(_.get).distinct.sorted
-          Some(r => if (r.isNullAt(i)) Unknown
-          else bool(
-            // heap/delta rows can carry a FINER scale than the column
-            // declares (the cold path normalizes, the heap path does
-            // not): a value whose rescale to the column scale is
-            // inexact — or whose unscaled overflows a long — is not
-            // representable at that scale, so it cannot equal any
-            // of the (exactly rescaled) list members: definitively
-            // false, never an exception
-            try java.util.Arrays.binarySearch(arr,
-              r.getDecimal(i).setScale(dt.scale).unscaledValue().longValueExact()) >= 0
-            catch { case _: ArithmeticException => false }))
-        }
-      case _: DecimalType =>
-        // FLBA precisions (> 18): value-canonical set membership, the
-        // row twin of the vector probe — still O(1) per row where the
-        // per-literal test is O(|list|) BigDecimal compares
-        val setD = new java.util.HashSet[java.math.BigDecimal](vs.length * 2)
-        var okD = true
-        vs.foreach {
-          case x: java.math.BigDecimal => setD.add(x.stripTrailingZeros()); ()
-          case x: scala.math.BigDecimal => setD.add(x.bigDecimal.stripTrailingZeros()); ()
-          case _ => okD = false
-        }
-        if (!okD) None
-        else Some(r => if (r.isNullAt(i)) Unknown
-        else bool(setD.contains(r.getDecimal(i).stripTrailingZeros())))
-      case StringType =>
-        val set = new java.util.HashSet[String](vs.length * 2)
-        var ok = true
-        vs.foreach {
-          case s: String => set.add(s): Unit
-          case _ => ok = false
-        }
-        if (!ok) None
-        else Some(r => if (r.isNullAt(i)) Unknown else bool(set.contains(r.getString(i))))
-      case _ => None
     }
   }
 }

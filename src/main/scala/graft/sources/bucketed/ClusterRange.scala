@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{DataType, NullType, StructType}
   * cluster-range slicing bounds WHERE IN a sorted bucket a range
   * predicate's rows can live. Both are strictly conservative fetch
   * optimizations: every fetched row is still evaluated against the
-  * full pushed-filter set ([[FilterEval]]), so correctness never
+  * full pushed-filter set ([[VectorFilterEval]]), so correctness never
   * depends on the slice — only pages moved do.
   *
   * At 100 TB this is the clustered-index scan: a time-series table
@@ -75,7 +75,7 @@ object ClusterRange {
     * O(log n) comparisons, never a scan. A defined lower bound also
     * excludes the null prefix (NULL never satisfies a range
     * predicate); with only an upper bound the nulls stay in the slice
-    * and [[FilterEval]] drops them per row (conservative, simple).
+    * and the pushed filter drops them per row (conservative, simple).
     */
   def sliceSorted(rows: Array[Row], schema: StructType, i: Int, range: ClusterRange): (Int, Int) =
     sliceSortedCompound(rows, schema, Array(i), Seq(range))

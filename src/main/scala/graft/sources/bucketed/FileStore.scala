@@ -181,6 +181,14 @@ object FileStore {
   /** Write `rows` (all at schema arity) as one parquet file; returns
     * the block ref. Files are write-once: the name carries the version
     * that created them and is never reused.
+    *
+    * A block file keeps every DOUBLE/FLOAT value's NaN-ness and signed
+    * zeros, but not a NaN's payload bits: parquet's plain encoder
+    * (`PlainValuesWriter` → `LittleEndianDataOutputStream.writeDouble` /
+    * `writeFloat`, parquet 1.16.0) writes `Double.doubleToLongBits` /
+    * `Float.floatToIntBits`, which turn every NaN into the canonical
+    * one, and the dictionary pages go through the same encoder. No
+    * writer setting keeps them; the heap rows do.
     */
   private def writeBlock(dir: Path, fileName: String, schema: StructType,
       rows: Array[Row]): BlockFile = {

@@ -9,12 +9,12 @@ import org.apache.spark.unsafe.types.UTF8String
 /** The store's one value order. Every part of the store that sorts,
   * slices, prunes, routes or merges by value — the cluster sort and
   * merges, [[ClusterRange]] slicing, [[BucketSkip]] zone maps, range
-  * routing, the row predicate ([[FilterEval]]), the pushed MIN/MAX and
-  * TopN, and the vectorized scan's filters and sorted merge — takes
-  * its comparator from here, resolved once per column type, so all of
-  * them agree by construction. The order is Spark's own
-  * (`PhysicalDataType(dt).ordering` over Catalyst values, pinned by
-  * the `KeyOrder.of equals Spark's ordering` property):
+  * routing, the pushed filters ([[VectorFilterEval]], through
+  * [[cell]]), the pushed MIN/MAX and TopN, and the vectorized scan's
+  * sorted merge — takes its comparator from here, resolved once per
+  * column type, so all of them agree by construction. The order is
+  * Spark's own (`PhysicalDataType(dt).ordering` over Catalyst values,
+  * pinned by the `KeyOrder.of equals Spark's ordering` property):
   *
   *  - NULL is outside [[of]]: the row orders ([[rows]]) place it first
   *    or last per column, and a row shorter than a column index (a row
@@ -199,9 +199,6 @@ object KeyOrder {
   /** A compare of two rows' non-null cells of one column. */
   trait Cells { def compare(a: Row, b: Row): Int }
 
-  /** The sign of one row's non-null cell against a fixed literal. */
-  trait CellSign { def apply(r: Row): Int }
-
   /** [[of]]`(dt)` on the non-null cells `i` of two rows. The primitive
     * types read through `Row`'s typed getters, which a [[RowView]]
     * answers from its chunk's arrays with no box; every other type
@@ -218,26 +215,6 @@ object KeyOrder {
       val ord = of(dt)
       (a, b) => ord.compare(a.get(i), b.get(i))
   }
-
-  /** [[of]]`(dt)` of a row's non-null cell `i` against the literal `v`,
-    * through the cell's typed getter, for a primitive column and a
-    * literal of the column's own boxed class. None otherwise: a literal
-    * of another class (an Int on a LONG column, a decimal on a DOUBLE
-    * one) compares exactly through [[of]] on the boxed value.
-    */
-  def cellVs(dt: DataType, i: Int, v: Any): Option[CellSign] =
-    if (internal(dt, v) == null) None
-    else dt match {
-      case LongType => val l = v.asInstanceOf[Long]; Some(r => java.lang.Long.compare(r.getLong(i), l))
-      case IntegerType => val l = v.asInstanceOf[Int]; Some(r => Integer.compare(r.getInt(i), l))
-      case ShortType => val l = v.asInstanceOf[Short]; Some(r => Integer.compare(r.getShort(i), l))
-      case ByteType => val l = v.asInstanceOf[Byte]; Some(r => Integer.compare(r.getByte(i), l))
-      case DoubleType => val l = v.asInstanceOf[Double]; Some(r => compareDoubles(r.getDouble(i), l))
-      case FloatType =>
-        val l = v.asInstanceOf[Float].toDouble
-        Some(r => compareDoubles(r.getFloat(i).toDouble, l))
-      case _ => None
-    }
 
   /** The cluster order of rows over the columns at `idxs`:
     * lexicographic, ascending, nulls first.
@@ -330,6 +307,15 @@ object KeyOrder {
     try Some(x.setScale(scale).unscaledValue().longValueExact())
     catch { case _: ArithmeticException => None }
 
+  /** A compiled read of batch row `r`, as an Int: a sign, or a
+    * pushed filter's three-valued truth. A trait and not a `Function2`,
+    * so a call boxes neither the row index nor the result; so are
+    * [[BatchLong]] and [[BatchTest]].
+    */
+  trait BatchInt { def apply(b: ColumnarBatch, r: Int): Int }
+  trait BatchLong { def apply(b: ColumnarBatch, r: Int): Long }
+  trait BatchTest { def apply(b: ColumnarBatch, r: Int): Boolean }
+
   /** Allocation-free unscaled-long read of a COMPACT decimal vector:
     * the precision dispatch `WritableColumnVector.getDecimal` performs
     * internally (int storage ≤ 9 digits, long ≤ 18) without the per-row
@@ -337,7 +323,7 @@ object KeyOrder {
     * vectorized parquet reader, the merge's output vectors or a
     * [[RowColumnVector]], which all answer compact decimals that way.
     */
-  def unscaledGetter(i: Int, dt: DecimalType): (ColumnarBatch, Int) => Long =
+  def unscaledGetter(i: Int, dt: DecimalType): BatchLong =
     if (dt.precision <= Decimal.MAX_INT_DIGITS) (b, r) => b.column(i).getInt(r).toLong
     else (b, r) => b.column(i).getLong(r)
 
@@ -345,12 +331,14 @@ object KeyOrder {
     * in this order, as a closure over primitive reads: `v` is converted
     * once to the [[internal]] form. A compact decimal compares unscaled
     * longs — `v` floored to the column's scale, an inexact `v` sitting
-    * strictly above its floor. None when `v`'s class has no vector
-    * compare for the column's type (a literal of another width).
+    * strictly above its floor. A numeric literal of another class than
+    * the column's (an Int on a LONG column, a decimal on a DOUBLE one)
+    * has no internal form: the cell is boxed and compared exactly
+    * through [[of]]. None when [[compares]] is false for the pair.
     */
-  def cell(dt: DataType, i: Int, v: Any): Option[(ColumnarBatch, Int) => Int] = {
+  def cell(dt: DataType, i: Int, v: Any): Option[BatchInt] = {
     val n = internal(dt, v)
-    if (n == null) None
+    if (n == null) boxedCell(dt, i, v)
     else dt match {
       case IntegerType =>
         val l = n.asInstanceOf[Int]; Some((b, r) => Integer.compare(b.column(i).getInt(r), l))
@@ -366,14 +354,17 @@ object KeyOrder {
         val l = n.asInstanceOf[Float].toDouble
         Some((b, r) => compareDoubles(b.column(i).getFloat(r).toDouble, l))
       case StringType =>
-        val l = n.asInstanceOf[UTF8String]; Some((b, r) => b.column(i).getUTF8String(r).compareTo(l))
+        // binaryCompare: Spark 4's compareTo reads an environment
+        // variable on every call before it delegates here
+        val l = n.asInstanceOf[UTF8String]
+        Some((b, r) => b.column(i).getUTF8String(r).binaryCompare(l))
       case DateType =>
         val l = n.asInstanceOf[Int]; Some((b, r) => Integer.compare(b.column(i).getInt(r), l))
       case TimestampType | TimestampNTZType =>
         val l = n.asInstanceOf[Long]; Some((b, r) => java.lang.Long.compare(b.column(i).getLong(r), l))
       case dt: DecimalType =>
         val x = n.asInstanceOf[java.math.BigDecimal]
-        val fast: Option[(ColumnarBatch, Int) => Int] =
+        val fast: Option[BatchInt] =
           if (dt.precision > Decimal.MAX_LONG_DIGITS) None
           else try {
             val floored = x.setScale(dt.scale, java.math.RoundingMode.FLOOR)
@@ -391,6 +382,22 @@ object KeyOrder {
     }
   }
 
+  private def boxedCell(dt: DataType, i: Int, v: Any): Option[BatchInt] = {
+    val get: (ColumnarBatch, Int) => Any = dt match {
+      case _ if !compares(dt, v) => return None
+      case LongType => (b, r) => b.column(i).getLong(r)
+      case IntegerType => (b, r) => b.column(i).getInt(r)
+      case ShortType => (b, r) => b.column(i).getShort(r)
+      case ByteType => (b, r) => b.column(i).getByte(r)
+      case DoubleType => (b, r) => b.column(i).getDouble(r)
+      case FloatType => (b, r) => b.column(i).getFloat(r)
+      case d: DecimalType => (b, r) => b.column(i).getDecimal(r, d.precision, d.scale).toJavaBigDecimal
+      case _ => return None
+    }
+    val ord = of(dt)
+    Some((b, r) => ord.compare(get(b, r), v))
+  }
+
   /** The vector side of the cluster order: a batch row's cells at
     * `idxs` against one external key row of the same layout, nulls
     * first per column, non-null pairs through [[cell]] — the outcomes
@@ -398,7 +405,7 @@ object KeyOrder {
     * key; [[compare]] then reads the batch with no allocation.
     */
   final class BatchKey(schema: StructType, idxs: Array[Int]) {
-    private val cells = new Array[(ColumnarBatch, Int) => Int](idxs.length)
+    private val cells = new Array[BatchInt](idxs.length)
 
     def set(key: Row): Unit = {
       var k = 0

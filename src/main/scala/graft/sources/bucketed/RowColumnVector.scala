@@ -17,7 +17,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * micros), and a compact decimal's unscaled value at the column's
   * scale through `getInt` (precision ≤ 9) or `getLong` (≤ 18), as
   * [[KeyOrder.unscaledGetter]] reads it. A row shorter than `i + 1`
-  * (written before an ADD COLUMN) reads as NULL there.
+  * (written before an ADD COLUMN) reads as NULL there. The vector
+  * memoizes recent conversions, so, like its page, it belongs to one
+  * reader thread.
   */
 final class RowColumnVector(dt: DataType, rows: Array[Row], i: Int) extends ColumnVector(dt) {
   override def close(): Unit = ()
@@ -57,11 +59,25 @@ final class RowColumnVector(dt: DataType, rows: Array[Row], i: Int) extends Colu
   override def getMap(r: Int): ColumnarMap = RowColumnVector.nested(dt)
   override def getChild(ordinal: Int): ColumnVector = RowColumnVector.nested(dt)
 
+  // the internal forms of the stored objects read last, by identity, in
+  // 16 slots picked by identity hash: the store shares repeated values
+  // (ValueSharing), so a low-cardinality column converts each distinct
+  // value about once per vector, not once per cell
+  private val memoKeys = new Array[AnyRef](16)
+  private val memoVals = new Array[Any](16)
+
   private def internal(r: Int): Any = {
-    val v = rows(r).get(i)
-    val x = KeyOrder.internal(dt, v)
-    if (x == null) throw new IllegalStateException(s"a ${v.getClass.getName} in a $dt column")
-    x
+    val v = rows(r).get(i).asInstanceOf[AnyRef]
+    val slot = System.identityHashCode(v) & 15
+    if (v == null) null
+    else if (memoKeys(slot) eq v) memoVals(slot)
+    else {
+      val x = KeyOrder.internal(dt, v)
+      if (x == null) throw new IllegalStateException(s"a ${v.getClass.getName} in a $dt column")
+      memoKeys(slot) = v
+      memoVals(slot) = x
+      x
+    }
   }
 
   private def unscaled(r: Int): Long = {

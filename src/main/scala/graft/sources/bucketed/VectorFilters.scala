@@ -1,108 +1,162 @@
 package graft.sources.bucketed
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.vectorized.ColumnarBatch
+import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Pushed-filter evaluation DIRECTLY over `ColumnarBatch` vectors —
-  * what lets the cold vectorized scan ([[BucketedColumnarPartitionReader]])
-  * admit filtered scans instead of bailing to the row-materializing
-  * path. The scan CLAIMS its pushed filters (so aggregate/limit/top-N
-  * pushdown keep composing above it — returning them as residuals
-  * would put a Catalyst `Filter` between `Aggregate` and the relation
-  * and kill aggregate pushdown for every filtered aggregate), which
-  * means it must enforce them exactly; this evaluator enforces them at
-  * vector speed: literals are pre-converted ONCE to the vector's
-  * internal representation (UTF8String bytes, date days, timestamp
-  * micros) and each conjunct compiles to a primitive comparison
-  * closure — no per-row boxing, no `Row` materialization, and only the
-  * filter's referenced columns are ever decoded.
+/** The store's one pushed-filter evaluator: the claim rule
+  * ([[supports]]) and the compiler ([[compile]]) for every filter a
+  * scan, a pushed aggregate, a merge-on-read overlay or a
+  * `DELETE … WHERE` enforces. The scan CLAIMS its pushed filters (so
+  * aggregate/limit/top-N pushdown keep composing above it — returning
+  * them as residuals would put a Catalyst `Filter` between `Aggregate`
+  * and the relation and kill aggregate pushdown for every filtered
+  * aggregate), and Spark plans no re-check above a claimed filter, so
+  * each one must be enforced exactly.
   *
-  * Three-valued SQL semantics, byte-for-byte consistent with the row
-  * path's compiled predicate ([[FilterEval.compile]], the same
-  * true/false/unknown encoding): a NULL operand yields UNKNOWN and a
-  * row is kept only when every conjunct is definitely true. Every
-  * comparison is [[KeyOrder.cell]], the vector side of the store's one
-  * value order (UTF8String's byte order is the code-point order
-  * [[KeyOrder]] gives external strings). A filter
-  * shape or literal/column type pairing this compiler can't express
-  * returns None and the scan falls back to the row path — eligibility
-  * is decided at open, never mid-stream.
+  * Predicates run over `ColumnarBatch` rows: a cold bucket's decoded
+  * parquet vectors, or stored rows read in place through
+  * [[RowColumnVector]]s ([[rows]] is the per-row adapter). Literals
+  * convert ONCE to the vector's internal form (UTF8String bytes, date
+  * days, timestamp micros, a compact decimal's unscaled long) and each
+  * conjunct compiles to a primitive comparison closure; only the
+  * filter's referenced columns are ever read.
+  *
+  * Evaluation is three-valued (1 = true, 0 = false, −1 = unknown) with
+  * Kleene connectives: a NULL operand is unknown, unknown propagates
+  * through NOT (¬unknown = unknown), AND (false dominates) and OR (true
+  * dominates), and a row is kept only when every conjunct is definitely
+  * true. `c IN ()` is false on every row, NULL included — Spark's
+  * answer with `spark.sql.legacy.nullInEmptyListBehavior` at its
+  * default — so `NOT (c IN ())` keeps a NULL row. Every comparison is
+  * [[KeyOrder.cell]], the vector side of the store's one value order
+  * (UTF8String's byte order is the code-point order [[KeyOrder]] gives
+  * external strings; a numeric literal of another class than the
+  * column's compares exactly through [[KeyOrder.of]]).
   */
-private[bucketed] object VectorFilterEval {
+object VectorFilterEval {
+
+  import KeyOrder.{BatchInt, BatchLong, BatchTest}
 
   /** 1 = true, 0 = false, -1 = unknown (NULL operand). */
-  type Pred = (ColumnarBatch, Int) => Int
+  type Pred = BatchInt
 
-  /** Compile the conjunction, or None if any conjunct is inexpressible. */
-  def compile(schema: StructType, filters: Array[Filter]): Option[(ColumnarBatch, Int) => Boolean] = {
-    val compiled = filters.map(compileOne(schema, _))
-    if (compiled.exists(_.isEmpty)) None
-    else {
-      val ps: Array[Pred] = compiled.map(_.get)
-      Some { (b, r) =>
-        var i = 0
-        var ok = true
-        while (ok && i < ps.length) { ok = ps(i)(b, r) == 1; i += 1 }
-        ok
-      }
+  /** Whether the store enforces `f` exactly over a `schema` row: the one
+    * claim rule of the scan's pushdown, `canDeleteWhere` and the
+    * row-level prune. A comparison is claimed only when the column's
+    * order compares the literal ([[KeyOrder.compares]]): the column TYPE
+    * decides as much as the literal's class (an Int literal on a
+    * BOOLEAN, BINARY or STRING column stays with Spark's post-scan
+    * Filter).
+    */
+  def supports(schema: StructType, f: Filter): Boolean = f match {
+    case EqualTo(c, v) => comparable(schema, c, v)
+    case EqualNullSafe(c, v) => comparable(schema, c, v)
+    case GreaterThan(c, v) => comparable(schema, c, v)
+    case GreaterThanOrEqual(c, v) => comparable(schema, c, v)
+    case LessThan(c, v) => comparable(schema, c, v)
+    case LessThanOrEqual(c, v) => comparable(schema, c, v)
+    case IsNull(c) => schema.fieldNames.contains(c)
+    case IsNotNull(c) => schema.fieldNames.contains(c)
+    case In(c, vs) => vs.forall(comparable(schema, c, _))
+    case StringStartsWith(c, _) => stringCol(schema, c)
+    case StringEndsWith(c, _) => stringCol(schema, c)
+    case StringContains(c, _) => stringCol(schema, c)
+    case AlwaysTrue() | AlwaysFalse() => true
+    case And(l, r) => supports(schema, l) && supports(schema, r)
+    case Or(l, r) => supports(schema, l) && supports(schema, r)
+    case Not(x) => supports(schema, x)
+    case _ => false
+  }
+
+  private def comparable(schema: StructType, c: String, v: Any): Boolean =
+    schema.fieldNames.contains(c) && KeyOrder.compares(schema(c).dataType, v)
+
+  private def stringCol(schema: StructType, c: String): Boolean =
+    schema.fieldNames.contains(c) && schema(c).dataType == StringType
+
+  /** The conjunction of `filters` over a batch row: true only when every
+    * conjunct is true. Total on claimed filters; a filter [[supports]]
+    * does not claim throws.
+    */
+  def compile(schema: StructType, filters: Array[Filter]): BatchTest = {
+    val ps: Array[Pred] = filters.map { f =>
+      if (!supports(schema, f)) throw new IllegalStateException(s"unsupported pushed filter $f")
+      compileOne(schema, f)
+    }
+    (b, r) => {
+      var i = 0
+      while (i < ps.length && ps(i)(b, r) == 1) i += 1
+      i == ps.length
     }
   }
 
-  private def compileOne(schema: StructType, f: Filter): Option[Pred] = f match {
+  /** [[compile]] as a row predicate: each row is read as a one-row page
+    * of [[RowColumnVector]]s. The predicate reuses that page, so it
+    * belongs to one thread.
+    */
+  def rows(schema: StructType, filters: Array[Filter]): Row => Boolean =
+    if (filters.isEmpty) _ => true
+    else {
+      val page = new Array[Row](1)
+      val batch = new ColumnarBatch(schema.fields.zipWithIndex.map[ColumnVector] {
+        case (f, i) => new RowColumnVector(f.dataType, page, i)
+      })
+      batch.setNumRows(1)
+      val keep = compile(schema, filters)
+      r => { page(0) = r; keep(batch, 0) }
+    }
+
+  private def compileOne(schema: StructType, f: Filter): Pred = f match {
     case EqualTo(c, v) => nullAwareCmp(schema, c, v)(_ == 0)
     case EqualNullSafe(c, v) =>
       // <=> is never unknown: NULL <=> literal is definitively false
       // (a null literal is rewritten to IsNull before pushdown)
-      cmpFn(schema, c, v).map { cf =>
-        val i = schema.fieldIndex(c)
-        (b, r) => if (b.column(i).isNullAt(r)) 0 else if (cf(b, r) == 0) 1 else 0
-      }
+      val i = schema.fieldIndex(c)
+      val cf = cmpFn(schema, i, v)
+      (b, r) => if (b.column(i).isNullAt(r)) 0 else if (cf(b, r) == 0) 1 else 0
     case GreaterThan(c, v) => nullAwareCmp(schema, c, v)(_ > 0)
     case GreaterThanOrEqual(c, v) => nullAwareCmp(schema, c, v)(_ >= 0)
     case LessThan(c, v) => nullAwareCmp(schema, c, v)(_ < 0)
     case LessThanOrEqual(c, v) => nullAwareCmp(schema, c, v)(_ <= 0)
-    case IsNull(c) => fieldIdx(schema, c).map(i =>
-      (b, r) => if (b.column(i).isNullAt(r)) 1 else 0)
-    case IsNotNull(c) => fieldIdx(schema, c).map(i =>
-      (b, r) => if (b.column(i).isNullAt(r)) 0 else 1)
+    case IsNull(c) =>
+      val i = schema.fieldIndex(c)
+      (b, r) => if (b.column(i).isNullAt(r)) 1 else 0
+    case IsNotNull(c) =>
+      val i = schema.fieldIndex(c)
+      (b, r) => if (b.column(i).isNullAt(r)) 0 else 1
+    case In(_, vs) if vs.isEmpty => (_, _) => 0
     case In(c, vs) =>
-      fieldIdx(schema, c).flatMap { i =>
-        // fast path (round 18): pre-convert the literal list ONCE into
-        // a type-specialized sorted array / hash set and probe in
-        // O(log n)/O(1) — the per-literal closure loop was O(|list|)
-        // PER ROW, linear-in-list for the common `k IN (<hundreds of
-        // ids>)` pushdown
-        val fast: Option[Pred] = inProbe(schema, i, vs).map { probe =>
+      val i = schema.fieldIndex(c)
+      // a type-specialized probe over the literal list converted ONCE
+      // (round 18): O(log n)/O(1) per row where a per-literal loop is
+      // O(|list|), linear-in-list for `k IN (<hundreds of ids>)`
+      inProbe(schema, i, vs) match {
+        case Some(probe) =>
           (b, r) => if (b.column(i).isNullAt(r)) -1 else if (probe(b, r)) 1 else 0
-        }
-        fast.orElse {
-          // fallback: per-literal compare closures (mixed-width
-          // numeric or exotic literals keep cmpFn's exact semantics)
-          val cfs = vs.map(cmpFn(schema, c, _))
-          if (cfs.exists(_.isEmpty)) None
-          else {
-            val arr = cfs.map(_.get)
-            Some { (b, r) =>
-              if (b.column(i).isNullAt(r)) -1
-              else {
-                var k = 0
-                var hit = false
-                while (!hit && k < arr.length) { hit = arr(k)(b, r) == 0; k += 1 }
-                if (hit) 1 else 0
-              }
+        case None =>
+          // a literal of another class than the column's: per-literal
+          // compares through cmpFn's exact path
+          val arr = vs.map(cmpFn(schema, i, _))
+          (b, r) =>
+            if (b.column(i).isNullAt(r)) -1
+            else {
+              var k = 0
+              while (k < arr.length && arr(k)(b, r) != 0) k += 1
+              if (k < arr.length) 1 else 0
             }
-          }
-        }
       }
     case StringStartsWith(c, v) => stringPred(schema, c, UTF8String.fromString(v))(_.startsWith(_))
     case StringEndsWith(c, v) => stringPred(schema, c, UTF8String.fromString(v))(_.endsWith(_))
     case StringContains(c, v) => stringPred(schema, c, UTF8String.fromString(v))(_.contains(_))
-    case AlwaysTrue() => Some((_, _) => 1)
-    case AlwaysFalse() => Some((_, _) => 0)
+    case AlwaysTrue() => (_, _) => 1
+    case AlwaysFalse() => (_, _) => 0
     case And(l, r) =>
-      for (lp <- compileOne(schema, l); rp <- compileOne(schema, r)) yield { (b, row) =>
+      val lp = compileOne(schema, l)
+      val rp = compileOne(schema, r)
+      (b, row) => {
         val x = lp(b, row)
         if (x == 0) 0
         else {
@@ -111,7 +165,9 @@ private[bucketed] object VectorFilterEval {
         }
       }
     case Or(l, r) =>
-      for (lp <- compileOne(schema, l); rp <- compileOne(schema, r)) yield { (b, row) =>
+      val lp = compileOne(schema, l)
+      val rp = compileOne(schema, r)
+      (b, row) => {
         val x = lp(b, row)
         if (x == 1) 1
         else {
@@ -119,33 +175,28 @@ private[bucketed] object VectorFilterEval {
           if (y == 1) 1 else if (x == 0 && y == 0) 0 else -1
         }
       }
-    case Not(x) => compileOne(schema, x).map(p => (b, r) => p(b, r) match {
-      case 1 => 0
-      case 0 => 1
-      case other => other
-    })
-    case _ => None
+    case Not(x) =>
+      val p = compileOne(schema, x)
+      (b, r) => { val a = p(b, r); if (a == -1) -1 else 1 - a }
+    case _ => throw new IllegalStateException(s"unsupported pushed filter $f")
   }
-
-  private def fieldIdx(schema: StructType, c: String): Option[Int] =
-    if (schema.fieldNames.contains(c)) Some(schema.fieldIndex(c)) else None
 
   /** Type-specialized membership probe over a PRE-CONVERTED literal
     * set for `In`: primitive-backed types probe a sorted long array
     * (binary search, zero boxing) of the literals' [[KeyOrder.internal]]
     * forms, strings probe a UTF8String hash set. None when any literal
-    * has no internal form — the caller's per-literal closure fallback
-    * (and ultimately the row path) keeps the semantics. Floating point
+    * has no internal form (a literal of another class than the
+    * column's): the caller's per-literal compares keep the semantics
+    * then. Floating point
     * probes by [[canonicalBits]] so membership matches
     * [[KeyOrder.compareDoubles]] equality exactly: -0.0 == 0.0 and
     * NaN == NaN.
     */
   private def inProbe(schema: StructType, i: Int, vs: Array[Any])
-      : Option[(ColumnarBatch, Int) => Boolean] = {
+      : Option[BatchTest] = {
     val dt = schema(i).dataType
     val lits = vs.map(KeyOrder.internal(dt, _))
-    def longSet(key: Any => Long, get: (ColumnarBatch, Int) => Long)
-        : Option[(ColumnarBatch, Int) => Boolean] = {
+    def longSet(key: Any => Long, get: BatchLong): Option[BatchTest] = {
       val arr: Array[Long] = lits.map(key).distinct.sorted
       Some((b, r) => java.util.Arrays.binarySearch(arr, get(b, r)) >= 0)
     }
@@ -201,30 +252,26 @@ private[bucketed] object VectorFilterEval {
   private[bucketed] def canonicalBits(d: Double): Long =
     java.lang.Double.doubleToLongBits(if (d == 0.0) 0.0 else d)
 
-  private def nullAwareCmp(schema: StructType, c: String, v: Any)(
-      sign: Int => Boolean): Option[Pred] =
-    cmpFn(schema, c, v).map { cf =>
-      val i = schema.fieldIndex(c)
-      (b, r) => if (b.column(i).isNullAt(r)) -1 else if (sign(cf(b, r))) 1 else 0
-    }
+  private def nullAwareCmp(schema: StructType, c: String, v: Any)(sign: Int => Boolean): Pred = {
+    val i = schema.fieldIndex(c)
+    val cf = cmpFn(schema, i, v)
+    (b, r) => if (b.column(i).isNullAt(r)) -1 else if (sign(cf(b, r))) 1 else 0
+  }
 
   private def stringPred(schema: StructType, c: String, lit: UTF8String)(
-      test: (UTF8String, UTF8String) => Boolean): Option[Pred] =
-    fieldIdx(schema, c).filter(i => schema(i).dataType == StringType).map { i =>
-      (b, r) =>
-        if (b.column(i).isNullAt(r)) -1
-        else if (test(b.column(i).getUTF8String(r), lit)) 1 else 0
-    }
+      test: (UTF8String, UTF8String) => Boolean): Pred = {
+    val i = schema.fieldIndex(c)
+    (b, r) =>
+      if (b.column(i).isNullAt(r)) -1
+      else if (test(b.column(i).getUTF8String(r), lit)) 1 else 0
+  }
 
-  /** Sign-of-comparison closure for a non-null vector value against a
-    * literal ([[KeyOrder.cell]]), or None when the (column type,
-    * literal class) pairing has no exact primitive comparison —
-    * mixed-width numeric literals keep the row path's exact semantics
-    * by falling back entirely.
+  /** Sign-of-comparison closure for a non-null cell of column `i`
+    * against a claimed literal ([[KeyOrder.cell]]).
     */
-  private def cmpFn(schema: StructType, c: String, v: Any): Option[(ColumnarBatch, Int) => Int] =
-    if (v == null) None
-    else fieldIdx(schema, c).flatMap(i => KeyOrder.cell(schema(i).dataType, i, v))
+  private def cmpFn(schema: StructType, i: Int, v: Any): BatchInt =
+    KeyOrder.cell(schema(i).dataType, i, v).getOrElse(
+      throw new IllegalStateException(s"no compare for ${v.getClass} in column ${schema(i).name}"))
 }
 
 /** Conservative parquet row-group/page pruning predicates from pushed

@@ -60,7 +60,7 @@ class SimilaritySpec extends SparkSuite {
       s"iters=3 centroids must be a materialized snapshot, got:\n${plan.take(600)}")
     assert(c3.count() === 16)
     // effect: job count grows ~linearly in iters (re-derivation grew
-    // the work superlinearly). Counted via listener, polled to quiesce.
+    // the work superlinearly). Counted via listener once the bus drains.
     def countJobs(iters: Int): Int = {
       val counter = new java.util.concurrent.atomic.AtomicInteger()
       val l = new org.apache.spark.scheduler.SparkListener {
@@ -71,11 +71,8 @@ class SimilaritySpec extends SparkSuite {
       spark.sparkContext.addSparkListener(l)
       try {
         Similarity.kmeansCentroids(emb, "vec_id", "embedding", 16, iters).count()
-        var prev = -1
-        var cur = counter.get()
-        var spins = 0
-        while (cur != prev && spins < 50) { Thread.sleep(100); prev = cur; cur = counter.get(); spins += 1 }
-        cur
+        org.apache.spark.sql.ListenerBusTestBridge.drain(spark)
+        counter.get()
       } finally spark.sparkContext.removeSparkListener(l)
     }
     val j1 = countJobs(1)
@@ -100,11 +97,8 @@ class SimilaritySpec extends SparkSuite {
       spark.sparkContext.addSparkListener(l)
       try {
         body
-        var prev = -1
-        var cur = counter.get()
-        var spins = 0
-        while (cur != prev && spins < 50) { Thread.sleep(100); prev = cur; cur = counter.get(); spins += 1 }
-        cur
+        org.apache.spark.sql.ListenerBusTestBridge.drain(spark)
+        counter.get()
       } finally spark.sparkContext.removeSparkListener(l)
     }
     // below τ: probe only — no Lloyd refit, no quantizer republish

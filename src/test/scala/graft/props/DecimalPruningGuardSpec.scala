@@ -36,24 +36,26 @@ class DecimalPruningGuardSpec extends AnyFunSuite {
   }
 
   test("compiled decimal In probe never throws on finer-than-column-scale heap rows") {
-    // heap/delta rows can carry a finer scale than the column declares;
-    // an unguarded setScale(s) would throw ArithmeticException mid-scan
-    // where the exact evaluator (scale-insensitive cmp) answers fine
+    // a row holding a finer scale than the column declares reads as the
+    // scan serves it: rounded HALF_UP to the column scale, as Spark's
+    // own conversion of the stored value rounds it (the store's writers
+    // take Spark's rows, whose decimals are already at the column scale)
     val s18 = StructType(Seq(StructField("p", DecimalType(18, 2))))
-    val probe = FilterEval.compile(s18, Array(In("p", Array(bd("1.00"), bd("2.00")))))
+    val probe = VectorFilterEval.rows(s18, Array(In("p", Array(bd("1.00"), bd("2.00")))))
     assert(!probe(org.apache.spark.sql.Row(bd("1.005"))),
-      "1.005 is not representable at scale 2 — definitively not in the list")
+      "1.005 reads as 1.01 — not in the list")
     assert(probe(org.apache.spark.sql.Row(bd("2.000"))),
       "a finer REPRESENTATION of a member (2.000) still matches")
-    // out-of-precision magnitude: unscaled overflows a long — not in the list, no crash
-    assert(!probe(org.apache.spark.sql.Row(new java.math.BigDecimal("9" * 25 + ".00"))))
+    assert(VectorFilterEval.rows(s18, Array(In("p", Array(bd("1.01")))))(
+      org.apache.spark.sql.Row(bd("1.005"))), "the filter sees the value the scan serves")
+    // the column's widest value: an unscaled long near its limit
+    assert(!probe(org.apache.spark.sql.Row(bd("9999999999999999.99"))))
   }
 
   test("FLBA decimals (p > 18) probe In by canonical value — row path, wide scales, big unscaled") {
     val s25 = StructType(Seq(StructField("bm", DecimalType(25, 4))))
     val big = new java.math.BigDecimal("123456789012345678901.2345")
-    val probe = FilterEval.compile(s25,
-      Array(In("bm", Array(big, bd("7.0000"))))): org.apache.spark.sql.Row => Boolean
+    val probe = VectorFilterEval.rows(s25, Array(In("bm", Array(big, bd("7.0000")))))
     assert(probe(org.apache.spark.sql.Row(big)))
     // value-equal at a WIDER representation scale is still a member
     assert(probe(org.apache.spark.sql.Row(big.setScale(8))))

@@ -3,8 +3,9 @@ package graft.props
 import java.math.{BigDecimal => JBigDecimal, RoundingMode}
 
 import org.apache.spark.sql.SparkSession
-import org.scalacheck.{Gen, Properties, Test}
+import org.scalacheck.{Gen, Prop, Properties, Test}
 import org.scalacheck.Prop.forAll
+import org.scalacheck.util.Pretty
 
 import graft.GraftSession
 import graft.streaming.CountWindows
@@ -103,7 +104,7 @@ object GraftProps extends Properties("graft") {
       h(a + b) == h(a) * p + h(b)
     }
 
-  // ——— FilterEval three-valued logic ≡ Spark's own WHERE semantics ———
+  // ——— pushed-filter three-valued logic ≡ Spark's own WHERE semantics ———
 
   private val fe3Schema = {
     import org.apache.spark.sql.types._
@@ -170,31 +171,6 @@ object GraftProps extends Properties("graft") {
       2 -> Gen.lzy(genFilter(depth - 1).map(Not(_))))
   }
 
-  private def filterToColumn(f: org.apache.spark.sql.sources.Filter): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{col, lit}
-    import org.apache.spark.sql.sources._
-    f match {
-      case EqualTo(c, v) => col(c) === lit(v)
-      case EqualNullSafe(c, v) => col(c) <=> lit(v)
-      case GreaterThan(c, v) => col(c) > lit(v)
-      case GreaterThanOrEqual(c, v) => col(c) >= lit(v)
-      case LessThan(c, v) => col(c) < lit(v)
-      case LessThanOrEqual(c, v) => col(c) <= lit(v)
-      case IsNull(c) => col(c).isNull
-      case IsNotNull(c) => col(c).isNotNull
-      case In(c, vs) => col(c).isin(vs.toIndexedSeq: _*)
-      case StringStartsWith(c, v) => col(c).startsWith(v)
-      case StringEndsWith(c, v) => col(c).endsWith(v)
-      case StringContains(c, v) => col(c).contains(v)
-      case AlwaysTrue() => lit(true)
-      case AlwaysFalse() => lit(false)
-      case And(l, r) => filterToColumn(l) && filterToColumn(r)
-      case Or(l, r) => filterToColumn(l) || filterToColumn(r)
-      case Not(x) => !filterToColumn(x)
-      case other => throw new IllegalArgumentException(other.toString)
-    }
-  }
-
   private val genRow: Gen[org.apache.spark.sql.Row] = for {
     id <- Gen.choose(0, 1000000)
     v <- Gen.option(fe3Strs)
@@ -204,27 +180,37 @@ object GraftProps extends Properties("graft") {
   } yield org.apache.spark.sql.Row(id, v.orNull, w.map(Int.box).orNull,
     d.map(Double.box).orNull, l.map(Long.box).orNull)
 
+  /** `p` checked at `n` cases, above this suite's default for
+    * Spark-backed properties: the property is proved once that check
+    * passes, and a failure reports the inner check's counterexample.
+    */
+  private def atCases(n: Int)(p: Prop): Prop = Prop { _ =>
+    val r = Test.check(Test.Parameters.default.withMinSuccessfulTests(n), p)
+    Prop.Result(if (r.passed) Prop.Proof else Prop.False).label(Pretty.pretty(r))
+  }
+
   /** The pushdown evaluator must agree with Spark's own WHERE on every
     * filter tree over NULL-bearing rows — the three-valued-logic
     * contract that lets the DSv2 source CLAIM filters (Spark plans no
     * residual re-check above a claimed filter). The columns cover every
     * comparator the compiled predicate picks: strings past the BMP,
     * doubles holding NaN, ±0.0 and ±Inf, and a long column compared
-    * with int and long literals. Each case checks ten filters.
+    * with int and long literals. Each row goes through the evaluator's
+    * row adapter, as the hot stream, the overlays and DELETE use it;
+    * each of the 300 cases checks ten filters.
     */
-  property("FilterEval 3VL equals Spark WHERE semantics") =
+  property("FilterEval 3VL equals Spark WHERE semantics") = atCases(300) {
     forAll(Gen.listOfN(10, genFilter(2)), Gen.listOfN(12, genRow)) { (fs, rows) =>
-      val distinctRows = rows.distinctBy(_.getInt(0))
-      val df = spark.createDataFrame(spark.sparkContext.parallelize(distinctRows, 2), fe3Schema)
-      fs.forall { f =>
-        val sparkKept = df.filter(filterToColumn(f))
-          .select("id").collect().map(_.getInt(0)).toSet
-        val keep = graft.sources.bucketed.FilterEval.compile(fe3Schema, Array(f))
-        val feKept = distinctRows.filter(keep).map(_.getInt(0)).toSet
-        if (sparkKept != feKept) println(s"DIVERGE f=$f spark=$sparkKept compiled=$feKept")
-        sparkKept == feKept
+      import graft.sources.bucketed.VectorFilterEval
+      val sparkKept = SparkWhere.kept(spark, fe3Schema, rows, fs)
+      fs.indices.forall { k =>
+        val keep = VectorFilterEval.rows(fe3Schema, Array(fs(k)))
+        val got = rows.map(keep).toIndexedSeq
+        if (got != sparkKept(k)) println(s"DIVERGE f=${fs(k)} spark=${sparkKept(k)} compiled=$got")
+        got == sparkKept(k)
       }
     }
+  }
 
   // — pushed TopN vs Spark's own sort (null orderings, NaN/Inf, ties) —
 
@@ -483,11 +469,10 @@ object GraftProps extends Properties("graft") {
         Double.PositiveInfinity, Double.NegativeInfinity), koDoubles.map(d => d: Any)))
   }
 
-  /** The typed compares `KeyOrder` exposes for the primitive types —
-    * [[graft.sources.bucketed.KeyOrder.cells]] between two rows and
-    * [[graft.sources.bucketed.KeyOrder.cellVs]] against a literal of the
-    * column's class — give `KeyOrder.of(dt)`'s answer on the boxed
-    * values, on plain rows and on the store's decoded views.
+  /** The typed compare `KeyOrder` exposes for the primitive types —
+    * [[graft.sources.bucketed.KeyOrder.cells]] between two rows — gives
+    * `KeyOrder.of(dt)`'s answer on the boxed values, on plain rows and
+    * on the store's decoded views.
     */
   property("KeyOrder's typed cell compares equal KeyOrder.of on the boxed values") =
     forAll(Gen.sequence[Seq[(SqlType, Seq[Any])], (SqlType, Seq[Any])](primEdges.map {
@@ -505,8 +490,7 @@ object GraftProps extends Properties("graft") {
         rows.forall { rs =>
           vs.indices.forall(a => vs.indices.forall { b =>
             val want = sign(ord.compare(vs(a), vs(b)))
-            sign(cells.compare(rs(a), rs(b))) == want &&
-              KeyOrder.cellVs(dt, 0, vs(b)).exists(s => sign(s(rs(a))) == want)
+            sign(cells.compare(rs(a), rs(b))) == want
           })
         }
       }
@@ -539,7 +523,7 @@ object GraftProps extends Properties("graft") {
 
   /** The binary-searched slice must MISS NOTHING: every row outside
     * [start, end) must fail the range (the slice may conservatively
-    * include extra rows — FilterEval re-checks them — but a dropped
+    * include extra rows — the pushed filter re-checks them — but a dropped
     * qualifying row is silent data loss). Random (rows, bounds)
     * layouts per column type, sorted — and the range decided — by
     * Spark's own ordering (nulls first, the store's cluster order),
@@ -720,9 +704,9 @@ object GraftProps extends Properties("graft") {
     */
   property("BucketSkip never prunes a bucket holding a matching row") =
     forAll(Gen.listOf(genSkipRow), genSkipFilter) { (rowsL, f) =>
-      import graft.sources.bucketed.{BucketSkip, FilterEval}
+      import graft.sources.bucketed.{BucketSkip, VectorFilterEval}
       val rows = rowsL.toArray
-      val anyMatch = rows.exists(r => FilterEval.eval(skipSchema, f, r))
+      val anyMatch = rows.exists(VectorFilterEval.rows(skipSchema, Array(f)))
       !anyMatch || BucketSkip.mayMatch(skipSchema, rows, f)
     }
 
@@ -734,10 +718,10 @@ object GraftProps extends Properties("graft") {
     */
   property("BucketSkip.mustMatchAll never over-claims: a proof covers every row") =
     forAll(Gen.listOf(genSkipRow), genSkipFilter) { (rowsL, f) =>
-      import graft.sources.bucketed.{BucketSkip, FilterEval}
+      import graft.sources.bucketed.{BucketSkip, VectorFilterEval}
       val rows = rowsL.toArray
       !BucketSkip.mustMatchAll(skipSchema, rows, f) ||
-        rows.forall(r => FilterEval.eval(skipSchema, f, r))
+        rows.forall(VectorFilterEval.rows(skipSchema, Array(f)))
     }
 
   /** The pushed sample must keep EXACTLY the rows the plain-SQL

@@ -7,21 +7,28 @@ import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
 
-/** The vectorized cold path's filter evaluator ([[VectorFilterEval]])
-  * must agree with the row path's ([[FilterEval]]) on EVERY filter
-  * shape and operand the scan can claim — the two enforce the same
-  * claimed pushdown on different representations, and a disagreement
-  * is a silent wrong answer on whichever path a bucket happens to
-  * take. Property-checked over adversarial pools: NaN / ±0.0 / ±Inf
-  * doubles, integral extremes, empty and multi-code-point strings
-  * (surrogate pairs — UTF8String byte order vs code-point order),
-  * timestamps/dates, NULLs in both operand positions, and composed
-  * And/Or/Not/In/prefix shapes.
+import graft.GraftSession
+import graft.props.SparkWhere
+
+/** The store's pushed-filter evaluator ([[VectorFilterEval]]) must keep
+  * exactly the rows Spark's own WHERE keeps, on EVERY filter shape and
+  * operand the scan can claim: Spark plans no re-check above a claimed
+  * filter, so a disagreement is a silent wrong answer. Property-checked
+  * over adversarial pools: NaN / ±0.0 / ±Inf doubles, integral
+  * extremes, empty and multi-code-point strings (surrogate pairs —
+  * UTF8String byte order vs code-point order), timestamps/dates in
+  * both external classes, compact and FLBA (p > 18) decimals, numeric
+  * literals of another class than the column's, NULLs in both operand
+  * positions, and composed And/Or/Not/In/prefix shapes. The rows are
+  * read in place through [[RowColumnVector]]s, as hot pages are.
   */
 object VectorFilterProps extends Properties("graft.vectorfilter") {
 
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(300)
+
+  private lazy val spark =
+    GraftSession.builder("VectorFilterProps", "local[2]", shufflePartitions = 2).getOrCreate()
 
   private val schema = StructType(Seq(
     StructField("i", IntegerType), StructField("l", LongType),
@@ -85,15 +92,23 @@ object VectorFilterProps extends Properties("graft.vectorfilter") {
     dec <- opt(genDecVal); big <- opt(genBigVal)
   } yield Row(i, l, d, s, t, dt, dec, big)
 
+  /** A literal for column `c`: mostly of the column's own class, and
+    * otherwise one the column's order also compares — another numeric
+    * class (widened exactly by Spark's coercion: an Int on LONG, a Long
+    * on INT, short decimals or Ints on DOUBLE, any number on the
+    * compact decimal) or the `java.time` class of a date/time.
+    */
   private def lit(c: String): Gen[Any] = c match {
-    case "i" => genInt.map(x => x: Any)
-    case "l" => genLong.map(x => x: Any)
-    case "d" => genDouble.map(x => x: Any)
+    case "i" => Gen.frequency(3 -> genInt.map(x => x: Any), 1 -> genLong.map(x => x: Any))
+    case "l" => Gen.frequency(3 -> genLong.map(x => x: Any), 1 -> genInt.map(x => x: Any))
+    case "d" => Gen.frequency(4 -> genDouble.map(x => x: Any), 1 -> genInt.map(x => x: Any),
+      1 -> genDecVal.map(x => x: Any))
     case "s" => genString.map(x => x: Any)
-    case "ts" => genTs.map(x => x: Any)
-    case "dec" => genDecLit.map(x => x: Any)
+    case "ts" => Gen.frequency(3 -> genTs.map(x => x: Any), 1 -> genTs.map(_.toInstant: Any))
+    case "dec" => Gen.frequency(4 -> genDecLit.map(x => x: Any), 1 -> genInt.map(x => x: Any),
+      1 -> genLong.map(x => x: Any), 1 -> genDouble.map(x => x: Any))
     case "big" => genBigLit.map(x => x: Any)
-    case _ => genDate.map(x => x: Any)
+    case _ => Gen.frequency(3 -> genDate.map(x => x: Any), 1 -> genDate.map(_.toLocalDate: Any))
   }
 
   private val genCol: Gen[String] = Gen.oneOf("i", "l", "d", "s", "ts", "dt", "dec", "big")
@@ -135,48 +150,44 @@ object VectorFilterProps extends Properties("graft.vectorfilter") {
     b
   }
 
-  private def parity(rows: List[Row], f: Filter): Boolean =
-    !FilterEval.supports(schema, f) ||
-      (VectorFilterEval.compile(schema, Array(f)) match {
-        case None => true // inexpressible pairings fall back to the row path by design
-        case Some(fn) =>
-          val batch = toBatch(rows)
-          val rowFn = FilterEval.compile(schema, Array(f))
-          try rows.indices.forall { r =>
-            val row = rowFn(rows(r))
-            val vec = fn(batch, r)
-            if (row != vec) println(s"DIVERGE f=$f row=${rows(r)} rowEval=$row vecEval=$vec")
-            row == vec
-          } finally batch.close()
-      })
+  /** The evaluator over a batch keeps exactly the rows Spark keeps. */
+  private def parity(rows: List[Row], f: Filter): Boolean = {
+    val batch = toBatch(rows)
+    val want = SparkWhere.kept(spark, schema, rows, Seq(f)).head
+    val keep = VectorFilterEval.compile(schema, Array(f))
+    try VectorFilterEval.supports(schema, f) && rows.indices.forall { r =>
+      val got = keep(batch, r)
+      if (got != want(r)) println(s"DIVERGE f=$f row=${rows(r)} spark=${want(r)} store=$got")
+      got == want(r)
+    } finally batch.close()
+  }
 
-  property("vector evaluator == row evaluator on every claimable filter and operand") =
+  property("vector evaluator == Spark WHERE on every claimable filter and operand") =
     forAll(Gen.nonEmptyListOf(genRow), genFilter(2))(parity)
 
-  /** Large-list In rides the type-specialized set probe (round 18);
-    * parity must hold there too — including the IEEE specials pool
-    * (NaN/±0.0 membership through canonical bits) and surrogate-pair
-    * strings through the UTF8String hash set.
+  /** Large-list In rides the type-specialized set probe (round 18); it
+    * must keep Spark's rows there too — including the IEEE specials
+    * pool (NaN/±0.0 membership through canonical bits) and
+    * surrogate-pair strings through the UTF8String hash set.
     */
-  property("In over a 1000-element literal list: set probe == row evaluator") =
+  property("In over a 1000-element literal list: set probe == Spark WHERE") =
     forAll(Gen.nonEmptyListOf(genRow),
       genCol.flatMap(c => Gen.listOfN(1000, lit(c)).map(vs => In(c, vs.toArray): Filter)))(parity)
 
-  /** Every leaf the scan claims must also be vector-compilable when
-    * the literal's class matches the column type — otherwise the cold
-    * path silently loses eligibility for a shape it used to serve.
+  /** Every leaf the scan claims compiles: no claimed shape or literal
+    * class sends a bucket to another path.
     */
   property("claimable type-matched leaves always compile") =
     forAll(genLeaf) { f =>
-      !FilterEval.supports(schema, f) || VectorFilterEval.compile(schema, Array(f)).isDefined
+      !VectorFilterEval.supports(schema, f) ||
+        scala.util.Try(VectorFilterEval.compile(schema, Array(f))).isSuccess
     }
 
-  /** The ROW path's compiled conjunction (round 19 — In literal sets
-    * pre-converted once, the external-value probe) must agree with the
-    * same filters compiled one by one with every In spelled as an OR of
-    * equalities, which takes the per-literal comparison path and never
-    * the probe — on every composed shape, including large In lists over
-    * every column type.
+  /** The compiled conjunction (In literal sets converted once into a
+    * probe) must agree with the same filters compiled one by one with
+    * every In spelled as an OR of equalities, which takes the
+    * per-literal comparison path and never the probe — on every
+    * composed shape, including large In lists over every column type.
     */
   private val genBigIn: Gen[Filter] =
     genCol.flatMap(c => Gen.listOfN(300, lit(c)).map(vs => In(c, vs.toArray): Filter))
@@ -189,17 +200,18 @@ object VectorFilterProps extends Properties("graft.vectorfilter") {
     case other => other
   }
 
-  property("FilterEval.compile == per-row eval on composed shapes and large In lists") =
+  property("In probe == OR of equalities on composed shapes and large In lists") =
     forAll(Gen.nonEmptyListOf(genRow),
       Gen.listOfN(2, Gen.frequency(3 -> genFilter(2), 2 -> genBigIn))) { (rows, filters) =>
-      val fs = filters.filter(FilterEval.supports(schema, _)).toArray
-      val compiled = FilterEval.compile(schema, fs)
-      val oneByOne = fs.map(f => FilterEval.compile(schema, Array(perLiteral(f))))
-      rows.forall { r =>
-        val want = oneByOne.forall(_(r))
-        val got = compiled(r)
-        if (want != got) println(s"DIVERGE fs=${fs.toSeq} row=$r want=$want got=$got")
+      val fs = filters.toArray
+      val batch = toBatch(rows)
+      val compiled = VectorFilterEval.compile(schema, fs)
+      val oneByOne = fs.map(f => VectorFilterEval.compile(schema, Array(perLiteral(f))))
+      try rows.indices.forall { r =>
+        val want = oneByOne.forall(_(batch, r))
+        val got = compiled(batch, r)
+        if (want != got) println(s"DIVERGE fs=${fs.toSeq} row=${rows(r)} want=$want got=$got")
         want == got
-      }
+      } finally batch.close()
     }
 }

@@ -79,7 +79,7 @@ class BucketedSourceSpec extends SparkSuite {
     val s = spark.read.format("graft-buckets").option("table", "nulls_t").load()
     val q = s.filter(col("v") =!= "a" || col("w") > 5).select("id")
     // the disjunction must be fully consumed by the source (no residual
-    // Filter) — otherwise this test proves nothing about FilterEval
+    // Filter) — otherwise this test proves nothing about the store's evaluator
     val plan = q.queryExecution.executedPlan.toString
     assert(plan.contains("pushed=[Or("), plan)
     // a residual Filter renders as "+- Filter (...)", "*(1) Filter (...)"
@@ -426,7 +426,7 @@ class BucketedSourceSpec extends SparkSuite {
     val schema = StructType(Seq(StructField("v", StringType, nullable = true),
       StructField("w", IntegerType, nullable = false)))
     val nullRow = Row(null, 1)
-    def e(f: Filter, r: Row = nullRow): Boolean = FilterEval.eval(schema, f, r)
+    def e(f: Filter, r: Row = nullRow): Boolean = VectorFilterEval.rows(schema, Array(f))(r)
     // unknown drops the row through every connective
     assert(!e(EqualTo("v", "a")))
     assert(!e(Not(EqualTo("v", "a")))) // THE bug: used to emit
@@ -447,6 +447,20 @@ class BucketedSourceSpec extends SparkSuite {
     assert(!e(Not(StringEndsWith("v", "c")), row))
   }
 
+  test("an empty IN is false on a NULL cell and its negation true, as in Spark's WHERE") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.sources._
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("v", StringType, nullable = true)))
+    val rows = Seq(Row(null), Row("a"))
+    val fs = Seq[Filter](In("v", Array.empty[Any]), Not(In("v", Array.empty[Any])))
+    val sparkKept = graft.props.SparkWhere.kept(spark, schema, rows, fs)
+    fs.zip(sparkKept).foreach { case (f, want) =>
+      assert(rows.map(VectorFilterEval.rows(schema, Array(f))) === want, f.toString)
+    }
+    assert(sparkKept === Seq(Seq(false, false), Seq(true, true)))
+  }
+
   test("FilterEval claims a comparison only when the column's type orders the literal") {
     import org.apache.spark.sql.sources._
     import org.apache.spark.sql.types._
@@ -458,14 +472,20 @@ class BucketedSourceSpec extends SparkSuite {
       LessThan("id", new java.math.BigDecimal("3")), In("id", Array(1, 2L)), EqualTo("s", "x"),
       GreaterThan("d", java.sql.Date.valueOf("2020-01-01")),
       LessThan("ts", java.time.Instant.EPOCH), IsNull("b"), IsNotNull("arr"))
-    claimed.foreach(f => assert(FilterEval.supports(schema, f), s"$f must be claimed"))
+    claimed.foreach { f =>
+      assert(VectorFilterEval.supports(schema, f), s"$f must be claimed")
+      VectorFilterEval.compile(schema, Array(f)) // every claimed filter compiles
+    }
     // each of these compiled predicates would throw on its first row
     val refused = Seq[Filter](EqualTo("b", 1), EqualTo("b", true), EqualTo("bin", 1),
       EqualTo("bin", Array[Byte](1)), EqualTo("s", 1), In("s", Array("a", 1)),
       EqualTo("arr", 1), EqualTo("id", "1"),
       GreaterThan("d", java.sql.Timestamp.valueOf("2020-01-01 00:00:00")),
       Not(EqualTo("b", 1)), Or(EqualTo("id", 1), EqualTo("b", 1)))
-    refused.foreach(f => assert(!FilterEval.supports(schema, f), s"$f must not be claimed"))
+    refused.foreach { f =>
+      assert(!VectorFilterEval.supports(schema, f), s"$f must not be claimed")
+      intercept[IllegalStateException](VectorFilterEval.compile(schema, Array(f)))
+    }
   }
 
   test("an unclaimed comparison stays with Spark's post-scan Filter and returns the right rows") {

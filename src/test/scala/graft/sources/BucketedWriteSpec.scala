@@ -262,7 +262,7 @@ class BucketedWriteSpec extends SparkSuite {
     assert(spark.table("graft.`w_del`").filter(col("grp") === 2).count() === 0)
     assert(BucketStore.get("w_del").version > v0, "delete must publish a new version")
     // three-valued logic holds for DML too: NULL-safe semantics come
-    // from the same FilterEval the read path uses
+    // from the same pushed-filter evaluator the read path uses
     spark.sql("DELETE FROM graft.`w_del` WHERE k >= 30")
     assert(spark.table("graft.`w_del`").count() ===
       (1 to 29).count(i => i % 4 != 2).toLong)
@@ -309,7 +309,7 @@ class BucketedWriteSpec extends SparkSuite {
       .select("v").as[String].head() === "inserted")
     assert(spark.table("graft.`w_rlo`").count() === 21)
 
-    // a DELETE FilterEval cannot enforce store-side falls back to the
+    // a DELETE the store does not claim falls back to the
     // copy-on-write rewrite instead of erroring
     spark.sql("DELETE FROM graft.`w_rlo` WHERE k % 2 = 0 AND k < 20")
     val remaining = spark.table("graft.`w_rlo`").select("k").as[Long].collect().toSet

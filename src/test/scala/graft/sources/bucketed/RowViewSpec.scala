@@ -142,8 +142,10 @@ class RowViewSpec extends SparkSuite {
     // get() boxes the same bits
     assert(back.map(r => java.lang.Double.doubleToRawLongBits(
       r.get(0).asInstanceOf[java.lang.Double])).toSeq === want.map(_._1))
-    // a block file keeps the signed zeros; parquet's dictionary encoding
-    // folds NaN payloads to the canonical NaN before any row decodes
+    // a block file keeps NaN-ness and the signed zeros, not NaN payload
+    // bits: parquet's plain encoder writes Double.doubleToLongBits /
+    // Float.floatToIntBits, which canonicalize every NaN
+    // (FileStore.writeBlock's contract)
     val fromFile = DecodedRows.viaFile(dSchema, rows)
     assert(fromFile.forall(_.isInstanceOf[RowView]))
     assert(Seq(fromFile(0), fromFile(3)).map(bits) === Seq(want(0), want(3)))
